@@ -1,0 +1,26 @@
+"""Order statistics shared by the runner, the suite and compare mode."""
+
+from __future__ import annotations
+
+import statistics
+
+
+def median(values) -> float:
+    return float(statistics.median(values))
+
+
+def quartiles(values) -> tuple[float, float, float]:
+    """(q1, median, q3) as ``statistics.quantiles(values, n=4)`` gives
+    them; a single value is its own quartiles."""
+    values = list(values)
+    if len(values) < 2:
+        v = float(values[0])
+        return v, v, v
+    q1, q2, q3 = statistics.quantiles(values, n=4)
+    return q1, q2, q3
+
+
+def spread(values) -> float:
+    """Inter-quartile distance as a share of the median."""
+    q1, q2, q3 = quartiles(values)
+    return (q3 - q1) / q2 if q2 else float("inf")
