@@ -31,16 +31,8 @@ def knots_to_mps(kn: Column | str) -> Column:
     return _c(kn) / F.lit(KNOTS_PER_MPS)
 
 
-def mps_to_knots(mps: Column | str) -> Column:
-    return _c(mps) * F.lit(KNOTS_PER_MPS)
-
-
 def nm_to_meters(nm: Column | str) -> Column:
     return _c(nm) * F.lit(METERS_PER_NM)
-
-
-def meters_to_nm(m: Column | str) -> Column:
-    return _c(m) / F.lit(METERS_PER_NM)
 
 
 # --- O16/O17: heading & angle normalization -----------------------------
@@ -110,8 +102,3 @@ def true_wind_direction(twa: Column | str, hdg: Column | str) -> Column:
 def vmg(boat_speed: Column | str, twa: Column | str) -> Column:
     """Velocity made good to windward: bs · cos(twa)."""
     return _c(boat_speed) * F.cos(F.radians(_c(twa)))
-
-
-def vmc(sog: Column | str, cog: Column | str, bearing_to_mark: Column | str) -> Column:
-    """Velocity made good on course toward a mark."""
-    return _c(sog) * F.cos(F.radians(angle_diff(cog, bearing_to_mark)))

@@ -35,15 +35,3 @@ def haversine_m(
         + F.cos(la1) * F.cos(la2) * F.pow(F.sin(dlon / 2), 2)
     )
     return F.lit(2.0 * EARTH_RADIUS_M) * F.asin(F.sqrt(h))
-
-
-def initial_bearing_deg(
-    lat1: Column | str, lon1: Column | str, lat2: Column | str, lon2: Column | str
-) -> Column:
-    """Initial great-circle bearing from fix 1 to fix 2, [0, 360)."""
-    la1, lo1 = F.radians(_c(lat1)), F.radians(_c(lon1))
-    la2, lo2 = F.radians(_c(lat2)), F.radians(_c(lon2))
-    dlon = lo2 - lo1
-    y = F.sin(dlon) * F.cos(la2)
-    x = F.cos(la1) * F.sin(la2) - F.sin(la1) * F.cos(la2) * F.cos(dlon)
-    return F.pmod(F.degrees(F.atan2(y, x)), F.lit(360.0))

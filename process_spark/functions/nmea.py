@@ -153,75 +153,3 @@ def extract_rmc(long_df: DataFrame) -> DataFrame:
         dfield(f, 8).alias("cog"),
         F.col("valid"),
     )
-
-
-def extract_vhw(long_df: DataFrame) -> DataFrame:
-    """VHW: heading true/magnetic, speed through water (kn)."""
-    f = F.col("fields")
-    return long_df.filter(F.col("sentence") == "VHW").select(
-        dfield(f, 1).alias("hdg_true"),
-        dfield(f, 3).alias("hdg_mag"),
-        dfield(f, 5).alias("speed"),
-        F.col("valid"),
-    )
-
-
-def extract_mwv(long_df: DataFrame) -> DataFrame:
-    """MWV: wind angle, reference (R=relative/T=true), speed, units."""
-    f = F.col("fields")
-    return long_df.filter(F.col("sentence") == "MWV").select(
-        dfield(f, 1).alias("wind_angle"),
-        field(f, 2).alias("reference"),
-        dfield(f, 3).alias("wind_speed"),
-        field(f, 4).alias("units"),
-        F.col("valid"),
-    )
-
-
-def extract_hdg(long_df: DataFrame) -> DataFrame:
-    """HDG: magnetic heading, deviation, variation (+E/-W)."""
-    f = F.col("fields")
-    dev_sign = F.when(field(f, 3) == "W", -1.0).otherwise(1.0)
-    var_sign = F.when(field(f, 5) == "W", -1.0).otherwise(1.0)
-    return long_df.filter(F.col("sentence") == "HDG").select(
-        dfield(f, 1).alias("hdg_mag"),
-        (dfield(f, 2) * dev_sign).alias("deviation"),
-        (dfield(f, 4) * var_sign).alias("variation"),
-        F.col("valid"),
-    )
-
-
-def extract_gga(long_df: DataFrame) -> DataFrame:
-    """GGA: fix time, lat, lon, quality, satellites, altitude."""
-    f = F.col("fields")
-    return long_df.filter(F.col("sentence") == "GGA").select(
-        field(f, 1).alias("fix_time"),
-        nmea_coord_to_deg(dfield(f, 2), field(f, 3)).alias("lat"),
-        nmea_coord_to_deg(dfield(f, 4), field(f, 5)).alias("lon"),
-        field(f, 6).cast("int").alias("quality"),
-        field(f, 7).cast("int").alias("num_sats"),
-        dfield(f, 9).alias("altitude_m"),
-        F.col("valid"),
-    )
-
-
-def extract_vtg(long_df: DataFrame) -> DataFrame:
-    """VTG: course true/magnetic, speed knots / km/h."""
-    f = F.col("fields")
-    return long_df.filter(F.col("sentence") == "VTG").select(
-        dfield(f, 1).alias("cog_true"),
-        dfield(f, 3).alias("cog_mag"),
-        dfield(f, 5).alias("sog_kn"),
-        dfield(f, 7).alias("sog_kmh"),
-        F.col("valid"),
-    )
-
-
-def extract_dpt(long_df: DataFrame) -> DataFrame:
-    """DPT: depth below transducer (m), transducer offset."""
-    f = F.col("fields")
-    return long_df.filter(F.col("sentence") == "DPT").select(
-        dfield(f, 1).alias("depth_m"),
-        dfield(f, 2).alias("offset_m"),
-        F.col("valid"),
-    )

@@ -48,20 +48,6 @@ def tokens(text: Column | str) -> Column:
     )
 
 
-def token_count(text: Column | str) -> Column:
-    """Whitespace-ish token count — the cheap 'how many words' signal."""
-    return F.size(tokens(text))
-
-
-def char_ngrams(text: Column | str, n: int = 5) -> Column:
-    """Character n-gram shingles (for MinHash / Jaccard dedup, O63/O75)."""
-    t = F.lower(_c(text))
-    return F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(t) - F.lit(n - 1), F.lit(1))),
-        lambda i: t.substr(i, F.lit(n)),
-    )
-
-
 def word_ngrams(toks: Column | str, n: int = 3) -> Column:
     """Word n-grams from a token array (O75). Shorter-than-window docs
     yield their whole text as the single shingle; EMPTY token lists
@@ -169,18 +155,6 @@ def language_guess(
         scores.append(F.struct(score.alias("score"), F.lit(lang).alias("lang")))
     best = F.array_max(F.array(*scores))
     return F.when(has_cjk, F.lit("zh")).otherwise(best.getField("lang"))
-
-
-def rolling_fingerprint(text: Column | str, modulus: int = 2**31 - 1) -> Column:
-    """O86-adjacent — deterministic document fingerprint: polynomial
-    rolling hash of the lowercased text (base 31, mod 2³¹−1), as a
-    Column expression via aggregate()."""
-    chars = F.filter(F.split(F.lower(_c(text)), ""), lambda c: F.length(c) > 0)
-    return F.aggregate(
-        chars,
-        F.lit(0).cast("long"),
-        lambda acc, ch: F.pmod(acc * F.lit(31) + F.ascii(ch), F.lit(modulus)),
-    )
 
 
 def simhash64(toks: Column | str, base_hash: str = "xxhash64") -> Column:

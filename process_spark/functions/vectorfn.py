@@ -122,21 +122,6 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     return F.when(den > 0, dot(a, b) / den)
 
 
-def elementwise_avg(a: Column | str) -> Column:
-    """Per-group centroid helper — used with posexplode path in the
-    operators; this HOF form averages an array *of arrays* collected
-    per group (small-group use only)."""
-    arrs = _c(a)
-    dim = F.size(F.element_at(arrs, 1))
-    return F.transform(
-        F.sequence(F.lit(1), dim),
-        lambda i: F.aggregate(
-            arrs, F.lit(0.0), lambda acc, v: acc + F.element_at(v, i)
-        )
-        / F.size(arrs),
-    )
-
-
 # --- Arrow-vectorized throughput path (SURVEY.md O97) ---------------------
 
 def cosine_to_query_udf():

@@ -19,6 +19,12 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from process_spark.functions.textfn import simhash64, tokens
+from process_spark.operators.execution import cut
+from process_spark.operators.relational import (
+    attach_census,
+    cap_blocks,
+    cap_blocks_with_census,
+)
 
 
 def exact_dedup(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
@@ -38,15 +44,6 @@ def keep_latest(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def content_hash_dedup(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Exact near-trivial text dedup: normalize whitespace+case, keep
-    one doc per xxhash64 of the normalized text."""
-    norm = F.lower(F.regexp_replace(F.col(text_col), r"\s+", " "))
-    return keep_latest(
-        df.withColumn("__h", F.xxhash64(norm)), ["__h"], df.columns[0], desc=False
-    ).drop("__h")
 
 
 #: 31-bit prime from the universal-hash family ``(a*h + b) mod p`` —
@@ -87,37 +84,6 @@ def _fast_shingles(text: Column, n: int = 3) -> Column:
         .when(size > 0, F.array(F.concat_ws(" ", a)))
         .otherwise(F.array().cast("array<string>"))
     )
-
-
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    num_hashes: int = 64,
-    shingle_n: int = 3,
-    base_hash: str = "xxhash64",
-) -> DataFrame:
-    """MinHash signature per document, as pure expressions.
-
-    Shingle (word n-grams) → base hash → ``num_hashes`` universal-hash
-    permutations ``(a_i*h + b_i) mod p`` with p a 31-bit prime — the
-    same public hash family Spark MLlib's MinHashLSH uses; min over the
-    shingle set approximates Jaccard (MinHash, Broder '97). The 31-bit
-    prime keeps ``a_i*h`` inside signed-64 arithmetic, and hashing the
-    shingle STRING once (then permuting the integer) is ~num_hashes×
-    cheaper than seeded re-hashes of the bytes per permutation
-    (measured: 1.6 s → sub-second signature stage at sf0.1).
-
-    Physical shape: explode shingles → one hash-aggregate computing all
-    ``num_hashes`` mins at once. Array-HOF per-permutation transforms
-    re-evaluate the tokenize+shingle pipeline per permutation (Catalyst
-    collapses projections back into the consumer — measured 9 s at
-    sf0.1); the explode+agg form is whole-stage-codegen'd, combines
-    map-side, and shuffles only (id, 64×8 bytes) — the same plan shape
-    scales to 100 TB of documents.
-    """
-    mins = _minhash_mins(df, id_col, text_col, num_hashes, shingle_n, base_hash)
-    return mins.select(F.col(id_col), F.col("__mins").alias("minhash"))
 
 
 def _minhash_mins(
@@ -206,37 +172,17 @@ def minhash_lsh_pairs(
     generation and the result carries an ``n_skipped_buckets`` column
     (constant per run — no silent truncation; a pipeline routes the
     skipped buckets' members to the next tier, e.g. exact Jaccard over
-    a per-bucket sample or a re-band with more bands). The bucket-size
-    window partitions by the SAME key the self-join shuffles on, its
-    output is checkpointed so the census is computed once for all
-    three consumers — and the guard bounds every join task at
-    ≤ max_bucket_size² intermediate rows by construction.
+    a per-bucket sample or a re-band with more bands). See
+    :func:`~process_spark.operators.relational.cap_blocks_with_census`
+    and :func:`~process_spark.operators.relational.attach_census`.
     """
     banded = _minhash_banded(
         df, id_col, text_col, num_hashes, bands, shingle_n, base_hash, band_key
     )
-    extra_cols: list[Column] = []
     if max_bucket_size is not None:
-        # One count-over-window partitioned by the join key sizes every
-        # bucket; buckets over the cap are cut BEFORE the join, so no
-        # task ever materializes a hot bucket's quadratic pair set.
-        # The sized relation is checkpointed because THREE consumers
-        # read it (both join sides + the skipped-count branch) and
-        # Catalyst/AQE does not reuse the window's exchange across
-        # them — without the cut the posexplode+window would run three
-        # times (verified in the physical plan).
-        wb = Window.partitionBy("band_idx", "band_hash")
-        sized = banded.withColumn(
-            "__bn", F.count(F.lit(1)).over(wb)
-        ).localCheckpoint(eager=False)
-        banded = sized.filter(F.col("__bn") <= max_bucket_size).drop("__bn")
-        skipped = (
-            sized.filter(F.col("__bn") > max_bucket_size)
-            .select("band_idx", "band_hash")
-            .distinct()
-            .agg(F.count(F.lit(1)).alias("n_skipped_buckets"))
+        banded, skipped = cap_blocks_with_census(
+            banded, ["band_idx", "band_hash"], max_bucket_size, "n_skipped_buckets"
         )
-        extra_cols = [F.col("n_skipped_buckets")]
     a = banded.alias("a")
     b = banded.alias("b")
     pairs = (
@@ -253,35 +199,7 @@ def minhash_lsh_pairs(
     )
     if max_bucket_size is None:
         return pairs
-    # Checkpoint: pairs feeds TWO branches below (the output rows and
-    # the all-skipped sentinel's emptiness probe) and Catalyst does not
-    # reuse the join subplan across them — without the cut the banded
-    # self-join would run twice.
-    pairs = pairs.localCheckpoint(eager=False)
-    # 1-row broadcast cross join: every pair row carries the skipped-
-    # bucket count, so truncation is visible in the OUTPUT, not a log.
-    out = pairs.join(F.broadcast(skipped)).select(
-        "id_a", "id_b", "n_shared_bands", *extra_cols
-    )
-    # All-skipped observability: when EVERY bucket exceeds the cap the
-    # pair set is empty and a cross join alone would erase the skipped
-    # count — the contract ("truncation is visible in the OUTPUT")
-    # would fail exactly in the most-truncated case. Emit one sentinel
-    # row (NULL ids, the count) iff buckets were skipped AND no pair
-    # survived: a left-anti against the (≤1-row, broadcast) head of
-    # pairs keeps the whole probe data-independent and in-plan.
-    id_type = dict(pairs.dtypes)["id_a"]
-    sentinel = (
-        skipped.filter(F.col("n_skipped_buckets") > 0)
-        .join(F.broadcast(pairs.select("id_a").limit(1)), F.lit(True), "left_anti")
-        .select(
-            F.lit(None).cast(id_type).alias("id_a"),
-            F.lit(None).cast(id_type).alias("id_b"),
-            F.lit(None).cast("long").alias("n_shared_bands"),
-            F.col("n_skipped_buckets"),
-        )
-    )
-    return out.unionByName(sentinel)
+    return attach_census(pairs, skipped)
 
 
 def _minhash_banded(
@@ -510,16 +428,10 @@ def simhash_dedup_candidates(
     reproducible variant backing the oracle query."""
     banded = _simhash_banded(df, id_col, text_col, band_bits, base_hash)
     if max_bucket_size is not None:
-        # checkpoint: both join sides read the sized relation and the
-        # window's exchange is not reused across them (see
-        # minhash_lsh_pairs).
-        wb = Window.partitionBy("band_idx", "band_val")
-        banded = (
-            banded.withColumn("__bn", F.count(F.lit(1)).over(wb))
-            .filter(F.col("__bn") <= max_bucket_size)
-            .drop("__bn")
-            .localCheckpoint(eager=False)
-        )
+        # pinned: both join sides read the kept rows
+        banded = cap_blocks(
+            banded, ["band_idx", "band_val"], max_bucket_size
+        ).localCheckpoint(eager=False)
     a, b = banded.alias("a"), banded.alias("b")
     pairs = a.join(
         b,
@@ -606,15 +518,7 @@ def jaccard_pairs(
         .localCheckpoint(eager=False)  # tokenize once, not per join side
     )
     if max_block_size is not None:
-        # Census partitioned on the SAME key the self-join shuffles
-        # on. The skipped-block COUNT is not computed here — use
-        # jaccard_pairs_with_census for the observable variant.
-        wb = Window.partitionBy(block_col)
-        toks = (
-            toks.withColumn("__bn", F.count(F.lit(1)).over(wb))
-            .filter(F.col("__bn") <= max_block_size)
-            .drop("__bn")
-        )
+        toks = cap_blocks(toks, [block_col], max_block_size)
     a, b = toks.alias("a"), toks.alias("b")
     cond = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
     if block_col:
@@ -670,20 +574,8 @@ def jaccard_pairs_with_census(
         )
         .localCheckpoint(eager=False)
     )
-    # Census partitioned on the SAME key the self-join shuffles on;
-    # checkpointed because three consumers read it (two join sides +
-    # the skipped-count branch) and Catalyst does not reuse the window
-    # exchange across them.
-    wb = Window.partitionBy(block_col)
-    sized = toks.withColumn(
-        "__bn", F.count(F.lit(1)).over(wb)
-    ).localCheckpoint(eager=False)
-    kept = sized.filter(F.col("__bn") <= max_block_size).drop("__bn")
-    census = (
-        sized.filter(F.col("__bn") > max_block_size)
-        .select(block_col)
-        .distinct()
-        .agg(F.count(F.lit(1)).alias("n_skipped_blocks"))
+    kept, census = cap_blocks_with_census(
+        toks, [block_col], max_block_size, "n_skipped_blocks"
     )
     a, b = kept.alias("a"), kept.alias("b")
     cond = (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")) & (
@@ -724,7 +616,7 @@ def connected_components(
 
     Scale shape: one shuffle per iteration (edge⋈label hash join +
     groupBy min), label state is (vertex, long) only, and lineage is
-    cut per iteration with localCheckpoint so plans don't grow. The
+    cut per iteration so plans don't grow. The
     driver only sees one count per iteration (convergence check) —
     never the data. For graphs with huge diameter (not dedup graphs),
     switch to alternating small-star/large-star; for dedup workloads
@@ -734,22 +626,10 @@ def connected_components(
     component; singleton vertices (if ``vertices`` given) map to
     themselves.
 
-    ``checkpoint_dir``: directory for RELIABLE checkpoints
-    (HDFS/object-store path on a real cluster). localCheckpoint blocks
-    live in executor memory/disk and die with the executor — fine on
-    local[n], but an 8-iteration propagation at 100 TB that loses one
-    executor would restart from zero. With a dir set, each iteration's
-    label state goes through ``checkpoint()`` instead and survives
-    executor loss.
+    ``checkpoint_dir``: reliable-checkpoint directory for the
+    per-iteration label state (see
+    :func:`~process_spark.operators.execution.cut`).
     """
-    spark = edges.sparkSession
-
-    def cut(df: DataFrame, eager: bool = False) -> DataFrame:
-        if checkpoint_dir is not None:
-            spark.sparkContext.setCheckpointDir(checkpoint_dir)
-            return df.checkpoint(eager=eager)
-        return df.localCheckpoint(eager=eager)
-
     e = edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
     sym = e.union(e.select(F.col("__d").alias("__s"), F.col("__s").alias("__d")))
     # Pin the symmetrized edges PRE-PARTITIONED on the join key (__d):
@@ -760,8 +640,8 @@ def connected_components(
     # is (vertex, long) only). Explicit partition count: the pinned
     # partitioning must stay stable across iterations for the reuse to
     # hold.
-    n_part = spark.sparkContext.defaultParallelism
-    sym = cut(sym.repartition(n_part, F.col("__d")))
+    n_part = edges.sparkSession.sparkContext.defaultParallelism
+    sym = cut(sym.repartition(n_part, F.col("__d")), checkpoint_dir)
 
     if vertices is None:
         verts = sym.select(F.col("__s").alias("id")).distinct()
@@ -787,14 +667,8 @@ def connected_components(
                 ).alias("__changed"),
             )
         )
-        # Cut lineage each iteration, LAZILY: the convergence count is
-        # the checkpoint's materializing action, so each iteration runs
-        # ONE job (materialize-and-count) instead of two (eager pin,
-        # then a count over the pinned blocks) — one driver barrier per
-        # round saved (guide §1.5/§5: per-iteration jobs are
-        # cluster-wide barriers; the count reads the same pinned rows
-        # either way).
-        new_labels = cut(new_labels, eager=False)
+        # Lazy cut: the convergence count materializes it (see cut).
+        new_labels = cut(new_labels, checkpoint_dir)
         n_changed = new_labels.filter(F.col("__changed")).count()
         labels = new_labels.drop("__changed")
         if n_changed == 0:
@@ -832,23 +706,14 @@ def connected_components_star(
     ((``id_col``, component), singletons map to themselves), so the
     two are drop-in interchangeable — same oracle, same consumers.
     Convergence is detected by edge-set fixpoint (two bounded counts
-    per round); lineage is cut per round (localCheckpoint, or
-    ``checkpoint_dir`` for executor-loss-proof state at cluster
-    scale — same contract as the propagation twin)."""
-    spark = edges.sparkSession
-
-    def cut(df: DataFrame, eager: bool = False) -> DataFrame:
-        if checkpoint_dir is not None:
-            spark.sparkContext.setCheckpointDir(checkpoint_dir)
-            return df.checkpoint(eager=eager)
-        return df.localCheckpoint(eager=eager)
-
+    per round); lineage is cut per round, with the same
+    ``checkpoint_dir`` contract as the propagation twin."""
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    e = cut(e, eager=True)
+    e = cut(e, checkpoint_dir, eager=True)
 
     converged = e.limit(1).count() == 0  # no edges → trivially a forest
     for _ in range(max_iter):
@@ -878,7 +743,7 @@ def connected_components_star(
             .filter(F.col("u") != F.col("v"))
             .distinct()
         )
-        small = cut(small, eager=True)
+        small = cut(small, checkpoint_dir, eager=True)
         # fixpoint: the edge SET is unchanged (two bounded counts —
         # the driver never sees edges, only the two scalars)
         if (

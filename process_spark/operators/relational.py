@@ -28,6 +28,80 @@ def topk_per_group(
     return out if keep_rank else out.drop(rank_col)
 
 
+def cap_blocks(df: DataFrame, keys: list[str], cap: int) -> DataFrame:
+    """Hot-block guard: keep only the rows of blocks (rows sharing
+    ``keys``) with at most ``cap`` rows.
+
+    A blocked self-join is O(|block|²) per block, so one boilerplate-
+    heavy block (templated pages in one LSH bucket, near-identical
+    vectors in one IVF cell) is a single quadratic task at scale. The
+    block size is a count over a window partitioned on the same keys
+    the self-join shuffles on, and over-cap blocks are cut before the
+    join, so every join task is bounded at ``cap²`` rows."""
+    wb = Window.partitionBy(*keys)
+    return (
+        df.withColumn("__bn", F.count(F.lit(1)).over(wb))
+        .filter(F.col("__bn") <= cap)
+        .drop("__bn")
+    )
+
+
+def cap_blocks_with_census(
+    df: DataFrame, keys: list[str], cap: int, census_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """:func:`cap_blocks` plus its census: ``(kept, census)`` where
+    ``census`` is exactly one row, ``census_col`` bigint, counting the
+    blocks that were cut (0 when none were).
+
+    The sized relation is pinned: the kept rows and the census both
+    read it (the kept rows often twice, as the two sides of a
+    self-join), and Catalyst does not reuse the window's exchange
+    across them. The census counts distinct key tuples, so a block
+    whose key is NULL counts too."""
+    wb = Window.partitionBy(*keys)
+    sized = df.withColumn("__bn", F.count(F.lit(1)).over(wb)).localCheckpoint(
+        eager=False
+    )
+    kept = sized.filter(F.col("__bn") <= cap).drop("__bn")
+    census = (
+        sized.filter(F.col("__bn") > cap)
+        .select(*keys)
+        .distinct()
+        .agg(F.count(F.lit(1)).alias(census_col))
+    )
+    return kept, census
+
+
+def attach_census(pairs: DataFrame, census: DataFrame) -> DataFrame:
+    """Carry a 1-row ``census`` (from :func:`cap_blocks_with_census`)
+    on every row of ``pairs``, so truncation is part of the result, not
+    a log line.
+
+    When every block was cut, ``pairs`` is empty and a cross join alone
+    would erase the census in exactly the most-truncated case. One
+    sentinel row is added then: NULL in every ``pairs`` column, plus the
+    census. It is emitted iff the census is positive and no pair
+    survived: a left-anti join against the ≤1-row head of ``pairs``
+    keeps that probe in-plan. ``pairs`` is pinned because both
+    branches read it."""
+    pairs = pairs.localCheckpoint(eager=False)
+    (census_col,) = census.columns
+    out = pairs.join(F.broadcast(census))
+    sentinel = (
+        census.filter(F.col(census_col) > 0)
+        .join(
+            F.broadcast(pairs.select(pairs.columns[0]).limit(1)),
+            F.lit(True),
+            "left_anti",
+        )
+        .select(
+            *[F.lit(None).cast(t).alias(c) for c, t in pairs.dtypes],
+            F.col(census_col),
+        )
+    )
+    return out.unionByName(sentinel)
+
+
 def interval_join(
     points: DataFrame,
     intervals: DataFrame,

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from process_spark.functions.textfn import tokens
+from process_spark.operators.execution import overlap
 
 #: Lucene-default BM25 parameters; inlined identically into oracles.
 K1 = 1.2
@@ -631,15 +632,7 @@ def write_postings_index(
         # load-bearing — run the three component writes CONCURRENTLY
         # (guide §2.6); all consume the eagerly pinned pidx blocks, so
         # nothing recomputes.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            for f in [
-                pool.submit(_write_docs),
-                pool.submit(_write_data),
-                pool.submit(_write_stats),
-            ]:
-                f.result()
+        overlap(_write_docs, _write_data, _write_stats)
 
 
 def bm25_probe_postings(
@@ -688,8 +681,6 @@ def bm25_probe_postings(
     (:func:`postings_skew_report` / ``text_postings_skew_report``)
     keeps the cap observable; the per-query dropped-term count rides
     :func:`bm25_scores_max_df` for the kernel path."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from process_spark.operators.fsutil import fs_exists
 
     # Pinned lazily: the bucket collect below materializes the query-
@@ -751,14 +742,7 @@ def bm25_probe_postings(
         n, sdl = int(trow["n"] or 0), int(trow["sdl"] or 0)
         return n, sdl, (tomb.select("doc_id") if n else None)
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_b, f_s, f_t = (
-            pool.submit(_buckets),
-            pool.submit(_stats),
-            pool.submit(_tomb),
-        )
-        buckets, stats = f_b.result(), f_s.result()
-        n_del, sdl_del, tomb_ids = f_t.result()
+    buckets, stats, (n_del, sdl_del, tomb_ids) = overlap(_buckets, _stats, _tomb)
 
     # Bucket-count mismatch = silently wrong pruning (query terms would
     # be looked up in partitions the writer never used) — fail loudly.

@@ -90,29 +90,6 @@ def linear_interpolate(
     return out
 
 
-def moving_average(
-    df: DataFrame,
-    col: str,
-    alias: str,
-    ts_col: str = "ts",
-    partition_by: Sequence[str] = (),
-    before: int = 2,
-    after: int = 2,
-    time_based_seconds: int | None = None,
-) -> DataFrame:
-    """O27 — centered moving average (row frame) or trailing time-range
-    frame when ``time_based_seconds`` is given."""
-    if time_based_seconds is not None:
-        w = (
-            Window.partitionBy(*partition_by)
-            .orderBy(F.unix_timestamp(F.col(ts_col)))
-            .rangeBetween(-time_based_seconds, 0)
-        )
-    else:
-        w = _w(partition_by, ts_col).rowsBetween(-before, after)
-    return df.withColumn(alias, F.avg(col).over(w))
-
-
 def ewma(
     df: DataFrame,
     col: str,

@@ -14,6 +14,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from process_spark.functions.vectorfn import dot, l2_norm, unit_with
+from process_spark.operators.execution import cut
+from process_spark.operators.relational import (
+    cap_blocks,
+    cap_blocks_with_census,
+    topk_per_group,
+)
 
 
 def brute_force_knn(
@@ -223,13 +229,14 @@ def ivf_build(
     scorer: str = "expr",
     seed_hash: str = "xxhash64",
 ) -> tuple[DataFrame, DataFrame]:
-    """O68 scale path — IVF index: deterministic seed vectors (every
-    ``hash(id) % (n/n_cells)``-th vector) act as coarse centroids; one
-    Lloyd refinement; each vector assigned to its nearest cell.
+    """O68 scale path — IVF index: one round of :func:`kmeans` (the
+    deterministic seed vectors refined once, every vector assigned to
+    its nearest refined cell).
 
     Returns (cells, assignments). ``cells`` is small (n_cells rows) —
-    always broadcastable; ``assignments`` adds a ``cell_id`` to every
-    corpus row, ready to be written bucketed/partitioned by cell.
+    always broadcastable, and pinned, so both outputs read the same
+    centroid bits; ``assignments`` adds a ``cell_id`` to every corpus
+    row, ready to be written bucketed/partitioned by cell.
 
     ``scorer``: "expr" (default — bit-reproducible HOF dots) or
     "arrow" (BLAS matmul assignment, the throughput path at scale —
@@ -240,71 +247,16 @@ def ivf_build(
     which is what lets the WHOLE build→assign→refine→search chain carry
     a cross-engine oracle; same base-hash trade as minhash_lsh_pairs).
     """
-    assign_fn = _pick_assigner(scorer)
-    # Fan out + pin the corpus once: it is scanned three times (seed
-    # pick, assign, refined assign), each with per-row interpreted-HOF
-    # scoring, so the exchange parallelizes the CPU-bound stages and the
-    # lazy localCheckpoint stops the rescan+reshuffle per reuse.
-    n_part = corpus.sparkSession.sparkContext.defaultParallelism
-    corpus = corpus.repartition(n_part, F.col(corpus_id)).localCheckpoint(
-        eager=False
+    return kmeans(
+        corpus,
+        n_cells,
+        n_iter=1,
+        corpus_id=corpus_id,
+        vec_col=vec_col,
+        seed_mod=seed_mod,
+        scorer=scorer,
+        seed_hash=seed_hash,
     )
-    # Deterministic sample of n_cells seeds (no Math.random — stable
-    # runs). orderBy().limit() is a distributed TakeOrdered (per-
-    # partition top-k, k-row merge on the driver) — never the
-    # unpartitioned-window single-partition sort of the whole corpus;
-    # the row_number window then runs over the n_cells-row result only.
-    if seed_hash == "md5":
-        base = F.conv(
-            F.substring(F.md5(F.col(corpus_id).cast("string")), 1, 8), 16, 10
-        ).cast("long")
-    else:
-        base = F.xxhash64(F.col(corpus_id))
-    key = F.pmod(base, F.lit(seed_mod))
-    topk = (
-        corpus.select(F.col(corpus_id), F.col(vec_col), key.alias("__key"))
-        .orderBy("__key", corpus_id)
-        .limit(n_cells)
-    )
-    w = Window.orderBy("__key", corpus_id)
-    seeds = topk.select(
-        (F.row_number().over(w) - 1).alias("cell_id"),
-        F.col(vec_col).alias("centroid"),
-    )
-    # One refinement pass: recompute cell means, reassign.
-    if scorer == "arrow":
-        refined = _refine_cells_arrow(corpus, seeds, vec_col)
-    else:
-        assign = assign_fn(corpus, seeds, corpus_id, vec_col)
-        refined = (
-            assign.select(
-                "cell_id", F.posexplode(F.col(vec_col)).alias("pos", "v")
-            )
-            .groupBy("cell_id", "pos")
-            .agg(F.avg("v").alias("m"))
-            .groupBy("cell_id")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("__p")
-            )
-            .select(
-                "cell_id",
-                F.transform("__p", lambda p: p.getField("m").cast("float")).alias(
-                    "centroid"
-                ),
-            )
-        )
-    # Lazy pin on the n_cells-row refined cell table: BOTH outputs
-    # consume it (the returned cells relation and the assignments'
-    # broadcast build) — unpinned, the whole seed → assign → refine
-    # chain re-executed inside the assignments job even when a caller
-    # pinned the returned cells (the assignments' lineage pointed at
-    # the un-pinned subtree). One refinement per build also removes a
-    # latent ULP hazard: two executions of the float avg could in
-    # principle reduce in different orders; the pin makes every
-    # consumer read the identical centroid bits.
-    refined = refined.localCheckpoint(eager=False)
-    assignments = assign_fn(corpus, refined, corpus_id, vec_col)
-    return refined, assignments
 
 
 def _refine_cells_arrow(
@@ -914,12 +866,7 @@ def near_dup_embeddings(
     if max_block_size is not None and block_col is None:
         raise ValueError("max_block_size requires block_col (the guard caps blocks)")
     if max_block_size is not None:
-        wb = Window.partitionBy(block_col)
-        emb = (
-            emb.withColumn("__bn", F.count(F.lit(1)).over(wb))
-            .filter(F.col("__bn") <= max_block_size)
-            .drop("__bn")
-        )
+        emb = cap_blocks(emb, [block_col], max_block_size)
     sel = [F.col(id_col), F.col(vec_col)]
     if block_col:
         sel.append(F.col(block_col))
@@ -1053,16 +1000,9 @@ def near_dup_embeddings_arrow(
         F.col(block_col).isNotNull()
     )
     if max_block_size is not None:
-        # Sized on the SAME key the grouped map shuffles on; over-cap
-        # blocks never reach the Python worker at all (the guard is a
-        # JVM-side window + filter, so the cut costs one count, not a
-        # partial pair scan).
-        wb = Window.partitionBy(block_col)
-        base = (
-            base.withColumn("__bn", F.count(F.lit(1)).over(wb))
-            .filter(F.col("__bn") <= max_block_size)
-            .drop("__bn")
-        )
+        # Over-cap blocks never reach the Python worker: the guard is a
+        # JVM-side window + filter on the grouped map's own key.
+        base = cap_blocks(base, [block_col], max_block_size)
     return base.groupBy(block_col).applyInPandas(
         pairs,
         schema=f"block {blk_t}, id_a {id_t}, id_b {id_t}, cosine_sim double",
@@ -1095,19 +1035,8 @@ def near_dup_embeddings_arrow_with_census(
     base = emb.select(id_col, vec_col, block_col).filter(
         F.col(block_col).isNotNull()
     )
-    # Checkpointed: two consumers (kept branch + census branch) read
-    # the sized relation, and the window exchange is not reused across
-    # them (same rationale as jaccard_pairs_with_census).
-    wb = Window.partitionBy(block_col)
-    sized = base.withColumn(
-        "__bn", F.count(F.lit(1)).over(wb)
-    ).localCheckpoint(eager=False)
-    kept = sized.filter(F.col("__bn") <= max_block_size).drop("__bn")
-    census = (
-        sized.filter(F.col("__bn") > max_block_size)
-        .select(block_col)
-        .distinct()
-        .agg(F.count(F.lit(1)).alias("n_skipped_blocks"))
+    kept, census = cap_blocks_with_census(
+        base, [block_col], max_block_size, "n_skipped_blocks"
     )
     pairs = near_dup_embeddings_arrow(
         kept,
@@ -1118,6 +1047,42 @@ def near_dup_embeddings_arrow_with_census(
         chunk=chunk,
     )
     return pairs, census
+
+
+def _seed_cells(
+    corpus: DataFrame,
+    k: int,
+    corpus_id: str,
+    vec_col: str,
+    seed_mod: int,
+    seed_hash: str,
+) -> DataFrame:
+    """Deterministic k-means/IVF seeds ``(cell_id, centroid)``: the k
+    vectors with the smallest ``hash(id) % seed_mod`` (ties by id), no
+    RNG so replays are bit-stable. ``seed_hash="md5"`` is the first 8
+    hex chars of md5(id) as a 32-bit int, which DuckDB reproduces.
+
+    ``orderBy().limit()`` is a distributed TakeOrdered (per-partition
+    top-k, k-row merge on the driver), never a single-partition sort
+    of the whole corpus; the row_number window then runs over the
+    k-row result only."""
+    if seed_hash == "md5":
+        base = F.conv(
+            F.substring(F.md5(F.col(corpus_id).cast("string")), 1, 8), 16, 10
+        ).cast("long")
+    else:
+        base = F.xxhash64(F.col(corpus_id))
+    key = F.pmod(base, F.lit(seed_mod))
+    topk = (
+        corpus.select(F.col(corpus_id), F.col(vec_col), key.alias("__key"))
+        .orderBy("__key", corpus_id)
+        .limit(k)
+    )
+    w = Window.orderBy("__key", corpus_id)
+    return topk.select(
+        (F.row_number().over(w) - 1).alias("cell_id"),
+        F.col(vec_col).alias("centroid"),
+    )
 
 
 def kmeans(
@@ -1133,62 +1098,29 @@ def kmeans(
 ) -> tuple[DataFrame, DataFrame]:
     """Lloyd's k-means over an embedding column, fully distributed.
 
-    Deterministic init (same seeding as :func:`ivf_build` — every
-    ``hash(id) % seed_mod``-th vector, no RNG so replays are
-    bit-stable), then ``n_iter`` rounds of assign → recompute means.
-    Each round is one broadcast join (centroids are k rows — always
-    broadcastable) plus one hash aggregate over (cluster, dim); no
-    driver-side data movement, so the same plan runs at any corpus
-    scale. Iterations are unrolled into the lineage with a
-    localCheckpoint per round to keep plans bounded.
+    Deterministic init (:func:`_seed_cells`), then ``n_iter`` rounds of
+    assign → recompute means. Each round is one broadcast join
+    (centroids are k rows — always broadcastable) plus one hash
+    aggregate over (cluster, dim); no driver-side data movement, so the
+    same plan runs at any corpus scale. Each round's centroids are cut
+    from the lineage (:func:`~process_spark.operators.execution.cut`,
+    reliable when ``checkpoint_dir`` is set) to keep plans bounded.
 
     Returns (centroids, assignments): centroids(cell_id, centroid),
     assignments(corpus_id, vec_col, cell_id).
-
-    ``checkpoint_dir``: reliable-checkpoint directory (HDFS/object
-    store on a real cluster) for the per-iteration centroid state —
-    localCheckpoint blocks die with their executor, and a lost block
-    mid-loop restarts the whole fixpoint (same rationale as
-    operators.dedup.connected_components).
     """
-    spark = corpus.sparkSession
-
-    def cut(df: DataFrame) -> DataFrame:
-        if checkpoint_dir is not None:
-            spark.sparkContext.setCheckpointDir(checkpoint_dir)
-            return df.checkpoint(eager=False)
-        return df.localCheckpoint(eager=False)
-
-    # Same fan-out + pin as ivf_build, amortized across the whole loop:
-    # n_iter+1 assignment passes each score every (vector, centroid)
-    # pair with interpreted HOF folds — parallelize once, rescan never.
+    # Fan out + pin the corpus once: every assignment pass scores each
+    # (vector, centroid) pair with interpreted HOF folds, so the
+    # exchange parallelizes the CPU-bound stages and the pin stops a
+    # rescan+reshuffle per pass.
     n_part = corpus.sparkSession.sparkContext.defaultParallelism
-    corpus = cut(corpus.repartition(n_part, F.col(corpus_id)))
-    # Same distributed TakeOrdered seed pick as ivf_build: top-k first
-    # (per-partition top-k + k-row merge), tiny-window row_number after.
-    # seed_hash="md5" = the DuckDB-reproducible key (see ivf_build).
-    if seed_hash == "md5":
-        base = F.conv(
-            F.substring(F.md5(F.col(corpus_id).cast("string")), 1, 8), 16, 10
-        ).cast("long")
-    else:
-        base = F.xxhash64(F.col(corpus_id))
-    key = F.pmod(base, F.lit(seed_mod))
-    topk = (
-        corpus.select(F.col(corpus_id), F.col(vec_col), key.alias("__key"))
-        .orderBy("__key", corpus_id)
-        .limit(k)
-    )
-    w = Window.orderBy("__key", corpus_id)
-    cents = topk.select(
-        (F.row_number().over(w) - 1).alias("cell_id"),
-        F.col(vec_col).alias("centroid"),
-    )
+    corpus = cut(corpus.repartition(n_part, F.col(corpus_id)), checkpoint_dir)
+    cents = _seed_cells(corpus, k, corpus_id, vec_col, seed_mod, seed_hash)
     assign_fn = _pick_assigner(scorer)
     for _ in range(n_iter):
         if scorer == "arrow":
             # Fused pass: assignment rows never materialize mid-loop.
-            cents = cut(_refine_cells_arrow(corpus, cents, vec_col))
+            cents = _refine_cells_arrow(corpus, cents, vec_col)
         else:
             assign = assign_fn(corpus, cents, corpus_id, vec_col)
             cents = (
@@ -1210,7 +1142,11 @@ def kmeans(
                     ).alias("centroid"),
                 )
             )
-            cents = cut(cents)
+        # The pin also gives every consumer of a round (the next
+        # round's broadcast, the returned centroids, the assignments'
+        # broadcast) the identical centroid bits: two executions of
+        # the float avg could reduce in different orders.
+        cents = cut(cents, checkpoint_dir)
     assignments = assign_fn(corpus, cents, corpus_id, vec_col)
     return cents, assignments
 
@@ -1541,8 +1477,6 @@ def sq8_search(
     recall-critical use, exact re-rank of the top-C composes exactly
     like pq_search's phase 2; to prune pairs as well as bytes, compose
     with IVF cell probing."""
-    from process_spark.operators.relational import topk_per_group
-
     qq = queries.select(
         query_id, l2_norm(query_vec).alias("__qn"), F.col(query_vec)
     ).filter(F.col("__qn") > 0).select(

@@ -33,6 +33,7 @@ from process_spark.operators.retrieval import (
     write_postings_index,
 )
 from process_spark.functions.textfn import tokens
+from process_spark.operators.execution import overlap
 from process_spark.operators.similarity import brute_force_knn
 from process_spark.queries._util import t
 from process_spark.queries.registry import register
@@ -337,7 +338,15 @@ def vec_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
 
-    lex, vec = _eager_channels(lex_ch, vec_ch)
+    # The channels share no state, so they run concurrently. Each pins
+    # its ≤ k-rows-per-query top-k eagerly: the fuse (and, in the MMR
+    # composites, the pair join that reads its candidates twice) then
+    # consumes two small materialized relations instead of re-planning
+    # and re-executing both channels' subtrees — ~0.5-1.8 s of tail
+    # planning on the e2e composite. The rank tables are exact
+    # integers, so the pin changes when they materialize, not what
+    # they contain.
+    lex, vec = overlap(lex_ch, vec_ch)
     fused = rrf_fuse([lex, vec])
     return topk_ranked(fused, "rrf_e9", k=10)
 
@@ -523,29 +532,6 @@ def _scratch() -> str:
     return _SCRATCH
 
 
-def _eager_channels(*thunks):
-    """Evaluate the independent retrieval channels CONCURRENTLY
-    (optimization guide §2.6: Spark happily runs several jobs at once
-    inside one application — actions are sequential only because the
-    driver calls them sequentially; the lexical and vector chains
-    share no state, so their index builds, probes and eager collects
-    overlap instead of queueing). Each thunk returns its channel's
-    bounded per-query top-k relation pinned with an EAGER
-    localCheckpoint (≤ k rows per query by construction), so the fuse
-    consumes two tiny materialized relations instead of duplicating
-    both channels' whole subtrees into the tail plan (the MMR pair
-    join references its candidate input twice — unpinned, that
-    re-planned and re-executed the full fuse chain per reference and
-    made the tail's Catalyst planning alone a measurable cost:
-    ~0.5-1.8 s on the e2e composite). Results are bit-identical: the
-    channel relations are exact-integer rank tables; pinning changes
-    when they materialize, not what they contain."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        return [f.result() for f in [pool.submit(t) for t in thunks]]
-
-
 def _o_mmr(k_sel: int, k_pool: int = 10, cand_sql: str | None = None) -> str:
     """Generate the unrolled MMR selection as a CTE chain (the
     vec_kmeans_md5_assignments precedent: an iterative algorithm
@@ -689,7 +675,7 @@ def _stored_lex_channel(
             .localCheckpoint(eager=True)
         )
 
-    _, qt = _eager_channels(_build, _qt)
+    _, qt = overlap(_build, _qt)
     return (
         topk_ranked(
             bm25_probe_postings(spark, ppath, qt, query_terms_prepared=True),
@@ -833,7 +819,7 @@ def _stored_ivf_knn(
             .collect()
         )
 
-    _, probed = _eager_channels(_write, _probe)
+    _, probed = overlap(_write, _probe)
     stored = spark.read.parquet(path)
     pruned = stored.filter(F.col("cell_id").isin(probed))
     return ivf_search(q, cells, pruned, k=k, n_probe=2)
@@ -949,7 +935,7 @@ def _register_hybrid_ann() -> None:
                 "rank",
             ).localCheckpoint(eager=True)
 
-        lex, vec = _eager_channels(lex_ch, vec_ch)
+        lex, vec = overlap(lex_ch, vec_ch)
         return topk_ranked(rrf_fuse([lex, vec]), "rrf_e9", k=10)
 
 
@@ -1059,7 +1045,7 @@ def _register_retrieval_e2e() -> None:
                 "rank",
             ).localCheckpoint(eager=True)
 
-        lex, vec = _eager_channels(lex_ch, vec_ch)
+        lex, vec = overlap(lex_ch, vec_ch)
         pool = topk_ranked(rrf_fuse([lex, vec]), "rrf_e9", k=10)
         cands = pool.select(
             "query_id",
@@ -1139,7 +1125,7 @@ def _register_hybrid_ann_fixedq() -> None:
                 "rank",
             ).localCheckpoint(eager=True)
 
-        lex, vec = _eager_channels(lex_ch, vec_ch)
+        lex, vec = overlap(lex_ch, vec_ch)
         return topk_ranked(rrf_fuse([lex, vec]), "rrf_e9", k=10)
 
 
@@ -1467,7 +1453,7 @@ def _register_retrieval_e2e_fixedq() -> None:
                 "rank",
             ).localCheckpoint(eager=True)
 
-        lex, vec = _eager_channels(lex_ch, vec_ch)
+        lex, vec = overlap(lex_ch, vec_ch)
         pool = topk_ranked(rrf_fuse([lex, vec]), "rrf_e9", k=10)
         cands = pool.select(
             "query_id",

@@ -15,6 +15,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from process_spark.operators.relational import attach_census, cap_blocks_with_census
 from process_spark.queries._util import t
 from process_spark.queries.registry import register
 from process_spark.queries.text import _O_HEAVY_HITTERS, _minhash_md5_ctes
@@ -699,8 +700,6 @@ def incremental_dedup_sink(
     silent drop. None (the unguarded registered queries' setting)
     keeps exact oracle parity with the whole-corpus band join;
     stream_dedup_index_probe_guarded registers the guarded form."""
-    from pyspark.sql import Window
-
     from process_spark.operators.dedup import minhash_band_index
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -710,12 +709,8 @@ def incremental_dedup_sink(
         ).localCheckpoint(eager=False)  # bands once: self-join + probe + append
         join_side = bidx
         if max_bucket_size is not None:
-            wb = Window.partitionBy("band_idx", "band_hash")
-            sized = bidx.withColumn(
-                "__bn", F.count(F.lit(1)).over(wb)
-            ).localCheckpoint(eager=False)
-            join_side = sized.filter(F.col("__bn") <= max_bucket_size).drop(
-                "__bn"
+            join_side, census = cap_blocks_with_census(
+                bidx, ["band_idx", "band_hash"], max_bucket_size, "n_cut_buckets"
             )
         # (2) same-batch pairs — bands-equi self-join, already id-ordered
         a, b = join_side.alias("a"), join_side.alias("b")
@@ -803,32 +798,8 @@ def incremental_dedup_sink(
         )
         if max_bucket_size is not None:
             # guarded mode: the batch's cut-bucket census rides every
-            # pair row, with the NULL-id sentinel when everything was
-            # cut — the minhash_lsh_pairs contract (truncation is part
-            # of the hash-checked result, never a silent drop)
-            census = sized.filter(F.col("__bn") > max_bucket_size).agg(
-                F.countDistinct("band_idx", "band_hash")
-                .cast("long")
-                .alias("n_cut_buckets")
-            )
-            pairs = pairs.localCheckpoint(eager=False)  # 2 consumers
-            out = pairs.crossJoin(F.broadcast(census))
-            id_type = dict(pairs.dtypes)["id_a"]
-            sentinel = (
-                census.filter(F.col("n_cut_buckets") > 0)
-                .join(
-                    F.broadcast(pairs.select("id_a").limit(1)),
-                    F.lit(True),
-                    "left_anti",
-                )
-                .select(
-                    F.lit(None).cast(id_type).alias("id_a"),
-                    F.lit(None).cast(id_type).alias("id_b"),
-                    F.lit(None).cast("long").alias("n_shared_bands"),
-                    F.col("n_cut_buckets"),
-                )
-            )
-            pairs = out.unionByName(sentinel)
+            # pair row (the minhash_lsh_pairs contract)
+            pairs = attach_census(pairs, census)
         pairs = pairs.withColumn("batch_id", F.lit(batch_id))
         # Both writes are IDEMPOTENT per batch_id (foreachBatch is
         # at-least-once: a mid-batch failure replays the whole batch).
@@ -1405,8 +1376,6 @@ def incremental_vector_sink(
     setting) keeps exact oracle parity with the whole-corpus cell
     join; the guarded twin stream_semantic_dedup_probe_guarded
     replays the per-batch census in its oracle."""
-    from pyspark.sql import Window
-
     from process_spark.functions.vectorfn import cosine as _cos
     from process_spark.operators.similarity import (
         ivf_assign,
@@ -1420,12 +1389,8 @@ def incremental_vector_sink(
         )  # assign once: self-join + probe + append
         join_side = assigned
         if max_block_size is not None:
-            wb = Window.partitionBy("cell_id")
-            sized = assigned.withColumn(
-                "__bn", F.count(F.lit(1)).over(wb)
-            ).localCheckpoint(eager=False)
-            join_side = sized.filter(F.col("__bn") <= max_block_size).drop(
-                "__bn"
+            join_side, census = cap_blocks_with_census(
+                assigned, ["cell_id"], max_block_size, "n_cut_cells"
             )
         within = near_dup_embeddings(
             join_side, threshold=threshold, block_col="cell_id"
@@ -1487,34 +1452,8 @@ def incremental_vector_sink(
         pairs = within.unionByName(cross).distinct()
         if max_block_size is not None:
             # the skip census rides EVERY output row (the
-            # minhash_lsh_pairs guard shape): truncation is part of
-            # the result the oracle hash-checks, never a silent drop.
-            # One broadcast 1-row aggregate — no driver collect.
-            census = sized.filter(F.col("__bn") > max_block_size).agg(
-                F.countDistinct("cell_id").cast("long").alias("n_cut_cells")
-            )
-            pairs = pairs.localCheckpoint(eager=False)  # 2 consumers
-            out = pairs.crossJoin(F.broadcast(census))
-            # All-skipped observability (minhash_lsh_pairs' sentinel
-            # contract): a hostile batch whose EVERY cell is cut emits
-            # no pairs, and a cross join alone would erase the census
-            # exactly in the most-truncated case — emit one NULL-id
-            # sentinel row iff cells were cut AND no pair survived.
-            id_type = dict(pairs.dtypes)["id_a"]
-            sentinel = (
-                census.filter(F.col("n_cut_cells") > 0)
-                .join(
-                    F.broadcast(pairs.select("id_a").limit(1)),
-                    F.lit(True),
-                    "left_anti",
-                )
-                .select(
-                    F.lit(None).cast(id_type).alias("id_a"),
-                    F.lit(None).cast(id_type).alias("id_b"),
-                    F.col("n_cut_cells"),
-                )
-            )
-            pairs = out.unionByName(sentinel)
+            # minhash_lsh_pairs guard shape)
+            pairs = attach_census(pairs, census)
         pairs = pairs.withColumn("batch_id", F.lit(batch_id))
         pairs.write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
@@ -1680,8 +1619,6 @@ def incremental_srp_sink(
     with the whole-corpus band join — the text sink's
     ``max_bucket_size`` contract verbatim;
     stream_srp_index_probe_guarded registers the guarded form."""
-    from pyspark.sql import Window
-
     from process_spark.queries.vectors import _ann_banded
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -1691,12 +1628,8 @@ def incremental_srp_sink(
         )  # band once: self-join + probe + append
         join_side = bidx
         if max_bucket_size is not None:
-            wb = Window.partitionBy("band_idx", "bucket")
-            sized = bidx.withColumn(
-                "__bn", F.count(F.lit(1)).over(wb)
-            ).localCheckpoint(eager=False)
-            join_side = sized.filter(F.col("__bn") <= max_bucket_size).drop(
-                "__bn"
+            join_side, census = cap_blocks_with_census(
+                bidx, ["band_idx", "bucket"], max_bucket_size, "n_cut_buckets"
             )
         a, b = join_side.alias("a"), join_side.alias("b")
         within = a.join(
@@ -1744,31 +1677,8 @@ def incremental_srp_sink(
             .agg(F.count(F.lit(1)).alias("n_shared_bands"))
         )
         if max_bucket_size is not None:
-            # same census + all-cut sentinel contract as the text and
-            # vector sinks (see incremental_dedup_sink)
-            census = sized.filter(F.col("__bn") > max_bucket_size).agg(
-                F.countDistinct("band_idx", "bucket")
-                .cast("long")
-                .alias("n_cut_buckets")
-            )
-            pairs = pairs.localCheckpoint(eager=False)  # 2 consumers
-            out = pairs.crossJoin(F.broadcast(census))
-            id_type = dict(pairs.dtypes)["id_a"]
-            sentinel = (
-                census.filter(F.col("n_cut_buckets") > 0)
-                .join(
-                    F.broadcast(pairs.select("id_a").limit(1)),
-                    F.lit(True),
-                    "left_anti",
-                )
-                .select(
-                    F.lit(None).cast(id_type).alias("id_a"),
-                    F.lit(None).cast(id_type).alias("id_b"),
-                    F.lit(None).cast("long").alias("n_shared_bands"),
-                    F.col("n_cut_buckets"),
-                )
-            )
-            pairs = out.unionByName(sentinel)
+            # same census contract as the text and vector sinks
+            pairs = attach_census(pairs, census)
         pairs = pairs.withColumn("batch_id", F.lit(batch_id))
         pairs.write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"

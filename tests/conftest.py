@@ -53,9 +53,19 @@ def pytest_collection_modifyitems(config, items):
     skip = pytest.mark.skip(
         reason="slow profile: run with --runslow or SPARK_GRAFT_SLOW=1"
     )
-    for item in items:
-        if "slow" in item.keywords:
-            item.add_marker(skip)
+    slow = [item for item in items if "slow" in item.keywords]
+    for item in slow:
+        item.add_marker(skip)
+    config._slow_skipped = len(slow)
+
+
+def pytest_terminal_summary(terminalreporter, config):
+    n = getattr(config, "_slow_skipped", 0)
+    if n:
+        terminalreporter.write_line(
+            f"{n} slow tests skipped; run with --runslow (or SPARK_GRAFT_SLOW=1)",
+            yellow=True,
+        )
 
 
 def pytest_sessionstart(session):

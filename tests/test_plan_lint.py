@@ -395,11 +395,11 @@ BROADCAST_SITES = {
         "hitters pass 2; bounded-group-domain contract in the "
         "docstrings)",
     ),
-    "operators/dedup.py": (
+    "operators/relational.py": (
         2,
-        "1-row skipped-count + ≤1-row sentinel probe (LSH bucket guard; "
-        "jaccard_pairs' in-band census/sentinel removed in r8 — its "
-        "census is out-of-band now, no broadcast inside the operator)",
+        "attach_census: the 1-row cut-block census + the ≤1-row "
+        "sentinel head probe (the hot-block guard of minhash_lsh_pairs "
+        "and the three guarded streaming sinks)",
     ),
     "operators/similarity.py": (
         12,
@@ -422,16 +422,15 @@ BROADCAST_SITES = {
     "queries/relational.py": (2, "nation/region dims"),
     "queries/tpch.py": (1, "nation dim"),
     "queries/streaming.py": (
-        19,
+        13,
         "constant event-type weights table + grouped-sketch pass-2 "
         "candidate/threshold tables (≤ capacity×|langs| / |langs| rows) "
         "+ 3 incremental-dedup-sink crash-compaction hygiene "
         "broadcasts (bounded per-micro-batch doc-id set and its "
         "≤|batch| sealed-own subset, probe + append sides) + 3 each "
         "for the vector and SRP sinks' round-10 sealed-own hygiene "
-        "(same bounds) + each guarded sink's 1-row cut-group census "
-        "and its ≤1-row sentinel head probe (vector, text, SRP — 2 "
-        "sites per sink)",
+        "(same bounds); the guarded sinks' census broadcasts live in "
+        "operators/relational.py attach_census",
     ),
     "queries/text.py": (1, "constant in-code lexicon table"),
     "operators/retrieval.py": (

@@ -172,11 +172,11 @@ def test_contamination_check_is_equi_join(spark):
 def test_ivf_seed_pick_is_take_ordered(spark):
     """The IVF/k-means seed pick must be a distributed TakeOrdered,
     not a single-partition sort of the whole corpus."""
-    from process_spark.operators.similarity import ivf_build
+    from process_spark.operators.similarity import _seed_cells
     from process_spark.sources.io import load
 
     corpus = load(spark, SF, "embeddings")
-    seeds, _ = ivf_build(corpus, n_cells=8)
+    seeds = _seed_cells(corpus, 8, "vec_id", "embedding", 9973, "xxhash64")
     plan = seeds._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
 
