@@ -104,7 +104,7 @@ HEADLINE = [
 
 def main() -> None:
     from process_spark.queries import REGISTRY
-    from process_spark.session import get_spark
+    from process_spark.session import codegen_compiles, get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
@@ -129,6 +129,7 @@ def main() -> None:
     # rep of many queries instead of every rep of one query.
     samples: dict[str, list[float]] = {name: [] for name in names}
     rows: dict[str, int] = {}
+    compiles0 = codegen_compiles(spark)
     for _ in range(reps):
         for name in names:
             fn = REGISTRY[name].fn
@@ -136,6 +137,7 @@ def main() -> None:
             df = fn(spark, sf_dir)
             rows[name] = df.count()  # full materialization of the result
             samples[name].append(time.perf_counter() - t0)
+    compiles = codegen_compiles(spark) - compiles0
     for name in names:
         s = sorted(samples[name])
         timings[name] = round(s[len(s) // 2], 4)
@@ -170,6 +172,9 @@ def main() -> None:
                 "master": spark.sparkContext.master,
                 "default_parallelism": spark.sparkContext.defaultParallelism,
                 "cpus_env": os.environ.get("SPARK_GRAFT_CPUS"),
+                # Janino compiles during the timed reps: codegen cache
+                # misses (process_spark.session.CODEGEN_CACHE_ENTRIES).
+                "codegen_compiles": compiles,
             }
         )
     )

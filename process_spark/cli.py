@@ -53,14 +53,18 @@ def _cmd_process(args) -> int:
         .partitionBy("day")
         .parquet(f"{args.out}/series.parquet")
     )
-    summary = sail_summary_from(sess)
+    # The summary plan runs once: the JSON write and the printed rows
+    # both read the pinned, still-sorted result.
+    summary = sail_summary_from(sess).localCheckpoint(eager=True)
     write_json_docs(summary, f"{args.out}/summary.json")
     write_json_docs(race_docs_from(sess), f"{args.out}/races.json")
     write_json_docs(maneuver_metrics_from(sess), f"{args.out}/maneuvers.json")
 
     rows = summary.collect()
     n_man = sum(r["n_maneuvers"] or 0 for r in rows)
-    print(f"{n_lines} sentences -> {sess.count()} points, "
+    # session_stats counts each point into exactly one race.
+    n_points = sum(r["n_seconds"] for r in rows)
+    print(f"{n_lines} sentences -> {n_points} points, "
           f"{len(rows)} races, {n_man} maneuvers")
     for r in rows:
         print(f"  race {r['session_id']}: {r['n_seconds']}s, "

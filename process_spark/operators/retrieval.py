@@ -139,22 +139,21 @@ def bm25_contrib_e6(
     Python-evaluated and repr-inlined with the D suffix (repr
     round-trips exactly; a bare SQL float literal would parse as
     DECIMAL), so the parsed literals are bit-identical to the
-    F.lit doubles of the Column form."""
+    F.lit doubles of the Column form. Column names are backtick-quoted
+    with any backtick inside them doubled."""
     if not isinstance(n_docs, Column) and not isinstance(avgdl, Column):
-        n_s = (
-            f"`{n_docs}`"
-            if isinstance(n_docs, str)
-            else f"{float(n_docs)!r}D"
-        )
-        avg_s = (
-            f"`{avgdl}`" if isinstance(avgdl, str) else f"{float(avgdl)!r}D"
-        )
+        def q(name: str) -> str:
+            return "`" + name.replace("`", "``") + "`"
+
+        n_s = q(n_docs) if isinstance(n_docs, str) else f"{float(n_docs)!r}D"
+        avg_s = q(avgdl) if isinstance(avgdl, str) else f"{float(avgdl)!r}D"
+        tf_s, df_s, dl_s = q(tf), q(df), q(dl)
         return F.expr(
             f"CAST(FLOOR(("
-            f"ln((((({n_s} - `{df}`) + 0.5D) / (`{df}` + 0.5D)) + 1.0D))"
-            f" * ((`{tf}` * {k1 + 1.0!r}D)"
-            f" / (`{tf}` + {float(k1)!r}D"
-            f" * ({1.0 - b!r}D + {float(b)!r}D * (`{dl}` / {avg_s}))))"
+            f"ln((((({n_s} - {df_s}) + 0.5D) / ({df_s} + 0.5D)) + 1.0D))"
+            f" * (({tf_s} * {k1 + 1.0!r}D)"
+            f" / ({tf_s} + {float(k1)!r}D"
+            f" * ({1.0 - b!r}D + {float(b)!r}D * ({dl_s} / {avg_s}))))"
             f") * {float(SCORE_SCALE)!r}D + 0.5D) AS BIGINT)"
         )
     n_c = n_docs if isinstance(n_docs, Column) else F.lit(float(n_docs))

@@ -318,10 +318,11 @@ def nmea_export_json_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def maneuver_metrics_from(sess: DataFrame) -> DataFrame:
     """O55: per-tack entry/exit dynamics — join each detected maneuver
     back to the 1 Hz series over [t−20 s, t−5 s] (entry) and
-    [t+15 s, t+30 s] (exit) windows and compare speed/VMG. The join is
-    a time-bucketed interval join: both sides key on a minute bucket
-    first, so at scale it is an equi-join with a residual range
-    predicate, never a nested loop."""
+    [t+15 s, t+30 s] (exit) windows and compare speed/VMG. Each window
+    is an equi-join on ``day`` followed by a ``capture_ts`` range
+    filter, which the optimizer folds into the join as a residual
+    predicate: every maneuver meets every 1 Hz point of its own day,
+    and only the points inside the window survive."""
     man = detect_maneuvers(
         sess, hdg_col="hdg", ts_col="capture_ts",
         partition_by=["day", "session_id"], lookback=15, threshold_deg=45.0,

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from process_spark.operators.retrieval import (
     SCORE_SCALE,
+    bm25_contrib_e6,
     bm25_probe_postings,
     bm25_scores,
     postings_index,
@@ -36,6 +37,27 @@ def _expected_contrib(tf, df, dl, n, avgdl, k1=1.2, b=0.75):
     idf = math.log(((float(n) - df + 0.5) / (df + 0.5)) + 1.0)
     denom = tf + k1 * ((1.0 - b) + b * (dl / avgdl))
     return math.floor(idf * ((tf * (k1 + 1.0)) / denom) * SCORE_SCALE + 0.5)
+
+
+def test_bm25_contrib_sql_path_quotes_backticks(spark):
+    """Column names containing a backtick go through the SQL-string
+    fast path (scalar and column-name stats) and score exactly like the
+    Column-form path over the same values under plain names."""
+    plain = spark.createDataFrame(
+        [(0, 2, 1, 3), (1, 1, 2, 2), (2, 3, 1, 4)],
+        "id int, tf long, df long, dl long",
+    ).select("*", F.lit(3.0).alias("n"), F.lit(3.0).alias("avgdl"))
+    ticked = plain.toDF("id", "t`f", "`df", "dl`", "n``", "avg`dl")
+    names = ("t`f", "`df", "dl`")
+
+    def scores(df, contrib):
+        return dict(df.select("id", contrib.alias("s")).collect())
+
+    want = scores(
+        plain, bm25_contrib_e6("tf", "df", "dl", F.col("n"), F.col("avgdl"))
+    )
+    assert scores(ticked, bm25_contrib_e6(*names, 3.0, 3.0)) == want
+    assert scores(ticked, bm25_contrib_e6(*names, "n``", "avg`dl")) == want
 
 
 def test_bm25_hand_computed(spark):
