@@ -7,7 +7,8 @@ Spark job so the same command line scales from one day log to a
         raw logger-prefixed NMEA text -> parse -> 1 Hz wide series ->
         LOCF -> true wind/VMG -> gap sessionization -> per-race
         summaries + nested JSON race docs + maneuver metrics.
-        Outputs under DIR:
+        Outputs under DIR, written concurrently from one eager pin of
+        the series:
           series.parquet/    1 Hz wide series, partitioned by day
           races.json/        one nested JSON doc per race (D6)
           summary.json/      per-race stats (D4)
@@ -31,6 +32,7 @@ def _cmd_process(args) -> int:
     from pyspark.sql import functions as F
 
     from process_spark.functions.nmea import split_capture_prefix
+    from process_spark.operators.execution import overlap
     from process_spark.queries.nmea import (
         maneuver_metrics_from,
         pipeline_from_log,
@@ -48,19 +50,29 @@ def _cmd_process(args) -> int:
         return 2
     sess = pipeline_from_log(split_capture_prefix(raw), gap=args.gap)
 
-    (
-        sess.write.mode("overwrite")
-        .partitionBy("day")
-        .parquet(f"{args.out}/series.parquet")
-    )
-    # The summary plan runs once: the JSON write and the printed rows
-    # both read the pinned, still-sorted result.
-    summary = sail_summary_from(sess).localCheckpoint(eager=True)
-    write_json_docs(summary, f"{args.out}/summary.json")
-    write_json_docs(race_docs_from(sess), f"{args.out}/races.json")
-    write_json_docs(maneuver_metrics_from(sess), f"{args.out}/maneuvers.json")
+    # The four output chains share only the eager series pin, so they
+    # run concurrently; most of their jobs have one task each.
+    def _series() -> None:
+        (
+            sess.write.mode("overwrite")
+            .partitionBy("day")
+            .parquet(f"{args.out}/series.parquet")
+        )
 
-    rows = summary.collect()
+    def _summary() -> list:
+        # The summary plan runs once: the JSON write and the printed
+        # rows both read the pinned, still-sorted result.
+        summary = sail_summary_from(sess).localCheckpoint(eager=True)
+        write_json_docs(summary, f"{args.out}/summary.json")
+        return summary.collect()
+
+    def _races() -> None:
+        write_json_docs(race_docs_from(sess), f"{args.out}/races.json")
+
+    def _maneuvers() -> None:
+        write_json_docs(maneuver_metrics_from(sess), f"{args.out}/maneuvers.json")
+
+    _, rows, _, _ = overlap(_series, _summary, _races, _maneuvers)
     n_man = sum(r["n_maneuvers"] or 0 for r in rows)
     # session_stats counts each point into exactly one race.
     n_points = sum(r["n_seconds"] for r in rows)

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from process_spark.functions import angles
@@ -149,31 +149,21 @@ def pipeline_from_log(log: DataFrame, gap: str = "5 minutes") -> DataFrame:
     (capture_ts, raw) — see split_capture_prefix. Also the engine
     behind the ``python -m process_spark process`` CLI."""
     long = parse_long(log, keep=("capture_ts",))
-    # Lineage cut: the four signal branches below and every downstream
-    # consumer (summary, maneuver join, export) would otherwise each
-    # re-run generate→checksum→parse from scratch (no cross-branch
-    # subplan reuse in Catalyst). At warehouse scale this cut is "the
-    # parsed log is a table"; locally localCheckpoint is the same.
-    ok = long.filter(F.col("valid")).localCheckpoint(eager=False)
-    f = F.col("fields")
-    sig = (
-        ok.filter(F.col("sentence") == "VHW")
-        .select("capture_ts", F.lit("hdg").alias("sig"), dfield(f, 1).alias("val"))
-        .unionAll(
-            ok.filter(F.col("sentence") == "VHW").select(
-                "capture_ts", F.lit("speed").alias("sig"), dfield(f, 5).alias("val")
-            )
-        )
-        .unionAll(
-            ok.filter(F.col("sentence") == "MWV").select(
-                "capture_ts", F.lit("awa").alias("sig"), dfield(f, 1).alias("val")
-            )
-        )
-        .unionAll(
-            ok.filter(F.col("sentence") == "MWV").select(
-                "capture_ts", F.lit("aws").alias("sig"), dfield(f, 3).alias("val")
-            )
-        )
+    # One scan: each sentence yields both of its (sig, val) pairs, so
+    # the parse runs once and needs no pin before the pivot.
+    def pair(sig: str, i: int) -> Column:
+        return F.struct(F.lit(sig).alias("sig"), dfield("fields", i).alias("val"))
+
+    sig = long.filter(
+        F.col("valid") & F.col("sentence").isin("VHW", "MWV")
+    ).select(
+        "capture_ts",
+        F.inline(
+            F.when(
+                F.col("sentence") == "VHW",
+                F.array(pair("hdg", 1), pair("speed", 5)),
+            ).otherwise(F.array(pair("awa", 1), pair("aws", 3)))
+        ),
     )
     wide = pivot_signals(
         sig, ts_col="capture_ts", signal_col="sig", value_col="val",
@@ -191,13 +181,17 @@ def pipeline_from_log(log: DataFrame, gap: str = "5 minutes") -> DataFrame:
         .withColumn("twd", angles.true_wind_direction("twa", "hdg"))
         .withColumn("vmg", angles.vmg("speed", "twa"))
     )
-    # Second cut: consumers fan the wide series into 2-4 branches
+    # Pin: consumers fan the wide series into 2-4 branches
     # (maneuvers + stats; entry/exit interval joins), each of which
-    # would re-run pivot→LOCF→wind math without it. ~29k rows × 12
-    # cols — trivially sized for a checkpoint at any scale factor.
+    # would re-run parse→pivot→LOCF→wind math without it. ~29k rows ×
+    # 12 cols — trivially sized for a checkpoint at any scale factor.
+    # Eager because the CLI's four output chains read it concurrently:
+    # Spark has no compute lock for a block not stored yet, so a lazy
+    # pin would let their tasks race to compute the same partitions
+    # (write_postings_index pins before its concurrent writes likewise).
     return sessionize(
         derived, ts_col="capture_ts", gap=gap, partition_by=["day"]
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=True)
 
 
 def sail_summary_from(sess: DataFrame) -> DataFrame:

@@ -713,7 +713,13 @@ def _mmr_pairs(cands: DataFrame, unit: DataFrame) -> DataFrame:
     window) each executed twice per plan (guide §2.4 — the duplicated
     subtrees are full corpus passes at scale). Same rows: join and
     column pruning commute with the self-join, and the dot runs on the
-    identical nemb operands."""
+    identical nemb operands.
+
+    Precondition: the broadcast side holds queries × pool rows, each
+    with its embedding, so it grows with the query workload, not only
+    with the pool. Callers must bound the queries (every caller here
+    samples them with a query filter, ``_Q_FILTER`` or ``_QF_FIXED``);
+    an unbounded query set would broadcast the whole candidate table."""
     from process_spark.functions.vectorfn import dot as _dot
 
     cwe = (
