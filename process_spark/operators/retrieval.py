@@ -51,7 +51,7 @@ B = 0.75
 SCORE_SCALE = 1_000_000
 
 
-def doc_term_freqs(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def doc_term_freqs(docs: DataFrame) -> DataFrame:
     """Per-(doc, token) term frequencies + per-doc token length:
     ``(doc_id, tok, tf, dl)``. One explode + one hash agg (map-side
     combine); dl rides the groupBy as a first() of a per-row constant
@@ -63,9 +63,7 @@ def doc_term_freqs(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     isnotnull/size pre-filter below the projection and re-inline the
     tokenize into it (measured: 3 evaluations per row)."""
     tk = (
-        docs.select(
-            F.col(id_col).alias("doc_id"), tokens(text_col).alias("__toks")
-        )
+        docs.select("doc_id", tokens("text").alias("__toks"))
         .select(
             "doc_id",
             F.explode_outer("__toks").alias("tok"),
@@ -78,7 +76,7 @@ def doc_term_freqs(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def _corpus_stats_rel(docs: DataFrame, text_col: str) -> DataFrame:
+def _corpus_stats_rel(docs: DataFrame) -> DataFrame:
     """1-row ``(__n, __avgdl)`` corpus-stats relation, broadcast-cross-
     joined into the scoring plan instead of collected to the driver.
 
@@ -109,23 +107,21 @@ def _corpus_stats_rel(docs: DataFrame, text_col: str) -> DataFrame:
     (doc, term) hit row exists to score."""
     agg = docs.agg(
         F.count(F.lit(1)).cast("double").alias("__n"),
-        F.coalesce(F.sum(F.size(tokens(text_col))), F.lit(0))
+        F.coalesce(F.sum(F.size(tokens("text"))), F.lit(0))
         .cast("double")
         .alias("__sdl"),
     )
     return agg.select("__n", (F.col("__sdl") / F.col("__n")).alias("__avgdl"))
 
 
-def bm25_contrib_e6(
-    tf, df, dl, n_docs, avgdl, k1: float = K1, b: float = B
-):
+def bm25_contrib_e6(tf, df, dl, n_docs, avgdl):
     """Half-up-scaled int64 BM25 contribution of one (query, doc, term)
     match. Expression order is pinned — the DuckDB oracle replays the
     identical parenthesization (queries/retrieval.py `_O_CONTRIB`):
 
         idf    = ln(((N - df + 0.5) / (df + 0.5)) + 1.0)   # Lucene BM25
-        denom  = tf + k1 * ((1 - b) + b * (dl / avgdl))
-        contrib = idf * ((tf * (k1 + 1)) / denom)
+        denom  = tf + K1 * ((1 - B) + B * (dl / avgdl))
+        contrib = idf * ((tf * (K1 + 1)) / denom)
 
     ``n_docs`` / ``avgdl`` are Python scalars (the stored-probe path,
     where they come from the ``_stats`` sidecar), bare column NAMES
@@ -151,28 +147,20 @@ def bm25_contrib_e6(
         return F.expr(
             f"CAST(FLOOR(("
             f"ln((((({n_s} - {df_s}) + 0.5D) / ({df_s} + 0.5D)) + 1.0D))"
-            f" * (({tf_s} * {k1 + 1.0!r}D)"
-            f" / ({tf_s} + {float(k1)!r}D"
-            f" * ({1.0 - b!r}D + {float(b)!r}D * ({dl_s} / {avg_s}))))"
+            f" * (({tf_s} * {K1 + 1.0!r}D)"
+            f" / ({tf_s} + {float(K1)!r}D"
+            f" * ({1.0 - B!r}D + {float(B)!r}D * ({dl_s} / {avg_s}))))"
             f") * {float(SCORE_SCALE)!r}D + 0.5D) AS BIGINT)"
         )
     n_c = n_docs if isinstance(n_docs, Column) else F.lit(float(n_docs))
     avg_c = avgdl if isinstance(avgdl, Column) else F.lit(float(avgdl))
     idf = F.log(((n_c - F.col(df) + 0.5) / (F.col(df) + 0.5)) + 1.0)
-    denom = F.col(tf) + k1 * ((1.0 - b) + b * (F.col(dl) / avg_c))
-    contrib = idf * ((F.col(tf) * (k1 + 1.0)) / denom)
+    denom = F.col(tf) + K1 * ((1.0 - B) + B * (F.col(dl) / avg_c))
+    contrib = idf * ((F.col(tf) * (K1 + 1.0)) / denom)
     return F.floor(contrib * float(SCORE_SCALE) + 0.5).cast("long")
 
 
-def bm25_scores(
-    docs: DataFrame,
-    query_terms: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k1: float = K1,
-    b: float = B,
-    max_df_fraction: float | None = None,
-) -> DataFrame:
+def bm25_scores(docs: DataFrame, query_terms: DataFrame) -> DataFrame:
     """BM25 score of every document against every query:
     ``(query_id, doc_id, score_e6)`` — only (query, doc) pairs sharing
     at least one term appear (score 0 pairs are implicit, as in any
@@ -183,14 +171,11 @@ def bm25_scores(
     are computed AFTER the semi-join restriction to query terms, so
     nothing vocabulary-sized ever shuffles.
 
-    ``max_df_fraction`` is the hot-term guard (Lucene's stopword /
-    maxDocFreq idiom): terms with ``df > max_df_fraction · N`` are
-    dropped from scoring — ``tokens()`` keeps stopwords, so at 100 TB
-    the Zipf head ("the", "of") matches most of the corpus per term
-    and a query containing one drags a near-full hit set through the
-    aggregation for a ~0 idf contribution. The census twin
-    (:func:`bm25_scores_max_df` / :func:`postings_skew_report`) keeps
-    the truncation loud."""
+    Every matching term scores. The hot-term guard (Lucene's stopword /
+    maxDocFreq idiom — ``tokens()`` keeps stopwords, so at 100 TB the
+    Zipf head matches most of the corpus per term for a ~0 idf
+    contribution) is :func:`bm25_scores_max_df`, which also carries the
+    per-query census of the terms it drops."""
     # Lazy pin on the query-term relation: it feeds TWO broadcast
     # builds (the term semi-join and the contrib join) whose subtrees
     # would otherwise each re-derive it — in the query-by-example
@@ -210,23 +195,13 @@ def bm25_scores(
     # CONCURRENTLY inside the one job (measured: pinning them behind a
     # localCheckpoint serializes the stages and loses ~15% wall-clock
     # on idle cores), so the relation is deliberately NOT pinned.
-    dtf = doc_term_freqs(docs, id_col, text_col)
+    dtf = doc_term_freqs(docs)
     # restrict to query terms BEFORE df aggregation — the whole corpus
     # vocabulary never aggregates.
     hit = dtf.join(F.broadcast(terms), "tok", "left_semi")
     df_t = hit.groupBy("tok").agg(F.countDistinct("doc_id").alias("df"))
 
-    stats = _corpus_stats_rel(docs, text_col)
-    if max_df_fraction is not None:
-        # the guard compares against the SAME N the broadcast carries —
-        # one IEEE multiply of identical operands on both engines
-        df_t = (
-            df_t.join(F.broadcast(stats))
-            .filter(
-                F.col("df") <= F.lit(float(max_df_fraction)) * F.col("__n")
-            )
-            .select("tok", "df")
-        )
+    stats = _corpus_stats_rel(docs)
     contrib = (
         hit.join(F.broadcast(qt), "tok")
         .join(F.broadcast(df_t), "tok")
@@ -234,9 +209,9 @@ def bm25_scores(
         .select(
             "query_id",
             "doc_id",
-            bm25_contrib_e6(
-                "tf", "df", "dl", "__n", "__avgdl", k1, b
-            ).alias("contrib_e6"),
+            bm25_contrib_e6("tf", "df", "dl", "__n", "__avgdl").alias(
+                "contrib_e6"
+            ),
         )
     )
     return contrib.groupBy("query_id", "doc_id").agg(
@@ -245,13 +220,7 @@ def bm25_scores(
 
 
 def bm25_scores_max_df(
-    docs: DataFrame,
-    query_terms: DataFrame,
-    max_df_fraction: float,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k1: float = K1,
-    b: float = B,
+    docs: DataFrame, query_terms: DataFrame, max_df_fraction: float
 ) -> DataFrame:
     """:func:`bm25_scores` under the hot-term guard WITH the census
     column the truncation-never-silent rule requires:
@@ -273,7 +242,7 @@ def bm25_scores_max_df(
     )
     terms = qt.select("tok").distinct()
 
-    dtf = doc_term_freqs(docs, id_col, text_col)
+    dtf = doc_term_freqs(docs)
     hit = dtf.join(F.broadcast(terms), "tok", "left_semi")
     # bounded (≤ |workload terms| rows) and consumed twice (guarded
     # scoring + census) — pin it so the semi-join runs once.
@@ -282,7 +251,7 @@ def bm25_scores_max_df(
         .agg(F.countDistinct("doc_id").alias("df"))
         .localCheckpoint(eager=False)  # lazy: no standalone driver job
     )
-    stats = _corpus_stats_rel(docs, text_col)
+    stats = _corpus_stats_rel(docs)
     # threshold rides the 1-row stats broadcast — one IEEE multiply of
     # identical operands per comparison, same drop set on both engines
     df_thr = df_all.join(F.broadcast(stats)).select(
@@ -321,9 +290,9 @@ def bm25_scores_max_df(
         .select(
             "query_id",
             "doc_id",
-            bm25_contrib_e6(
-                "tf", "df", "dl", "__n", "__avgdl", k1, b
-            ).alias("contrib_e6"),
+            bm25_contrib_e6("tf", "df", "dl", "__n", "__avgdl").alias(
+                "contrib_e6"
+            ),
         )
     )
     scores = contrib.groupBy("query_id", "doc_id").agg(
@@ -332,15 +301,12 @@ def bm25_scores_max_df(
     return scores.join(F.broadcast(census), "query_id")
 
 
-def topk_ranked(
-    scored: DataFrame, score_col: str, k: int, part_col: str = "query_id",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def topk_ranked(scored: DataFrame, score_col: str, k: int) -> DataFrame:
     """Deterministic per-query top-k: rank on the SCALED INTEGER score
     (desc) then id (asc) — rank ties cannot flip on float ULP seams
     because the ordering key is already an exact integer."""
-    w = Window.partitionBy(part_col).orderBy(
-        F.col(score_col).desc(), F.col(id_col)
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score_col).desc(), F.col("doc_id")
     )
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("int"))
@@ -354,12 +320,7 @@ def topk_ranked(
 # ---------------------------------------------------------------------------
 
 
-def postings_index(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 16,
-) -> DataFrame:
+def postings_index(docs: DataFrame, n_buckets: int = 16) -> DataFrame:
     """Inverted-index rows ``(term_bucket, tok, doc_id, tf, dl)``.
 
     ``dl`` is denormalized onto every posting (Lucene's norms file does
@@ -368,7 +329,7 @@ def postings_index(
     the partition key: all postings for a term co-locate in one dir,
     probe reads prune to the query's buckets via PartitionFilters, and
     per-term df is exact within the pruned read."""
-    return doc_term_freqs(docs, id_col, text_col).select(
+    return doc_term_freqs(docs).select(
         F.pmod(F.hash("tok"), F.lit(n_buckets)).cast("int").alias("term_bucket"),
         "tok",
         "doc_id",
@@ -378,12 +339,7 @@ def postings_index(
 
 
 def write_postings_index(
-    docs: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    mode: str = "overwrite",
-    n_buckets: int = 16,
+    docs: DataFrame, path: str, mode: str = "overwrite", n_buckets: int = 16
 ) -> None:
     """Write ``postings_index(docs)`` partitioned by term_bucket (one
     file per dir per batch — the compactable layout) plus the
@@ -513,12 +469,12 @@ def write_postings_index(
     # three component writes below can consume the pinned blocks
     # concurrently; append mode stays lazy — its validation collects
     # materialize the pin on their own first action.
-    pidx = postings_index(docs, id_col, text_col, n_buckets).localCheckpoint(
+    pidx = postings_index(docs, n_buckets).localCheckpoint(
         eager=(mode != "append")
     )
     docs_path = posixpath.join(path, "_docs")
     bids = (
-        docs.select(F.col(id_col).alias("doc_id"))
+        docs.select("doc_id")
         .distinct()
         .localCheckpoint(eager=False)  # validation + membership below
     )
@@ -639,8 +595,6 @@ def bm25_probe_postings(
     path: str,
     query_terms: DataFrame,
     n_buckets: int = 16,
-    k1: float = K1,
-    b: float = B,
     max_df_fraction: float | None = None,
     query_terms_prepared: bool = False,
 ) -> DataFrame:
@@ -782,7 +736,7 @@ def bm25_probe_postings(
         .select(
             "query_id",
             "doc_id",
-            bm25_contrib_e6("tf", "df", "dl", n_docs, avgdl, k1, b).alias(
+            bm25_contrib_e6("tf", "df", "dl", n_docs, avgdl).alias(
                 "contrib_e6"
             ),
         )
@@ -804,14 +758,14 @@ RRF_K = 60
 RRF_SCALE = 1_000_000_000
 
 
-def rrf_contrib_e9(rank_col, k: int = RRF_K):
+def rrf_contrib_e9(rank_col):
     """int64 RRF contribution of one channel's rank."""
     return F.floor(
-        F.lit(float(RRF_SCALE)) / (F.lit(float(k)) + F.col(rank_col)) + 0.5
+        F.lit(float(RRF_SCALE)) / (F.lit(float(RRF_K)) + F.col(rank_col)) + 0.5
     ).cast("long")
 
 
-def rrf_fuse(channels: list[DataFrame], k: int = RRF_K) -> DataFrame:
+def rrf_fuse(channels: list[DataFrame]) -> DataFrame:
     """Fuse per-channel rankings ``(query_id, doc_id, rank)`` into
     ``(query_id, doc_id, rrf_e9)``. A doc missing from a channel's
     top-k contributes nothing for that channel (the standard RRF
@@ -821,7 +775,7 @@ def rrf_fuse(channels: list[DataFrame], k: int = RRF_K) -> DataFrame:
         raise ValueError("rrf_fuse requires at least one channel")
     contribs = [
         ch.select(
-            "query_id", "doc_id", rrf_contrib_e9("rank", k).alias("c_e9")
+            "query_id", "doc_id", rrf_contrib_e9("rank").alias("c_e9")
         )
         for ch in channels
     ]
@@ -843,10 +797,7 @@ def rrf_fuse(channels: list[DataFrame], k: int = RRF_K) -> DataFrame:
 
 
 def postings_membership(
-    docs: DataFrame,
-    pidx: DataFrame,
-    id_col: str = "doc_id",
-    n_buckets: int = 16,
+    docs: DataFrame, pidx: DataFrame, n_buckets: int = 16
 ) -> DataFrame:
     """Membership-sidecar rows ``(doc_bucket, doc_id, dl)`` for the
     ``_docs`` table: one row per distinct doc, partitioned by
@@ -862,7 +813,7 @@ def postings_membership(
     across content-dependent term buckets."""
     per_doc_dl = pidx.groupBy("doc_id").agg(F.first("dl").alias("dl"))
     return (
-        docs.select(F.col(id_col).alias("doc_id"))
+        docs.select("doc_id")
         .distinct()
         .join(per_doc_dl, "doc_id", "left")
         .select(
@@ -1437,7 +1388,7 @@ MMR_LAM = 0.7
 MMR_ONE_MINUS_LAM = 1.0 - MMR_LAM
 
 
-def mmr_rerank(pairs: DataFrame, k: int, lam: float = MMR_LAM) -> DataFrame:
+def mmr_rerank(pairs: DataFrame, k: int) -> DataFrame:
     """Maximal-marginal-relevance selection of ``k`` items per query
     from a candidate pool: ``(query_id, doc_id, mmr_rank, obj)``.
 
@@ -1455,14 +1406,12 @@ def mmr_rerank(pairs: DataFrame, k: int, lam: float = MMR_LAM) -> DataFrame:
     algorithm be hash-checked end to end.
 
     Selection contract (mirrored by queries/retrieval._o_mmr):
-    step 1 picks argmax(lam * rel) (no diversity term — the standard
-    MMR initialization); step t>1 picks argmax over unselected c of
-    ``lam * rel(c) - (1 - lam) * max_{s in S} sim(c, s)``; all
-    argmaxes tie-break on ascending doc_id.
+    step 1 picks argmax(MMR_LAM * rel) (no diversity term — the
+    standard MMR initialization); step t>1 picks argmax over unselected
+    c of ``MMR_LAM * rel(c) - MMR_ONE_MINUS_LAM * max_{s in S} sim(c, s)``;
+    all argmaxes tie-break on ascending doc_id.
     """
     import pandas as pd
-
-    one_minus_lam = 1.0 - lam
 
     def select(g: pd.DataFrame) -> pd.DataFrame:
         qid = g["query_id"].iloc[0]
@@ -1485,9 +1434,9 @@ def mmr_rerank(pairs: DataFrame, k: int, lam: float = MMR_LAM) -> DataFrame:
             for c in remaining:
                 if selected:
                     maxsim = max(sim[(c, s)] for s in selected)
-                    obj = lam * rel[c] - one_minus_lam * maxsim
+                    obj = MMR_LAM * rel[c] - MMR_ONE_MINUS_LAM * maxsim
                 else:
-                    obj = lam * rel[c]
+                    obj = MMR_LAM * rel[c]
                 # strict > : on obj ties the FIRST (smallest id) wins
                 if best_obj is None or obj > best_obj:
                     best_id, best_obj = c, obj

@@ -434,7 +434,7 @@ BROADCAST_SITES = {
     ),
     "queries/text.py": (1, "constant in-code lexicon table"),
     "operators/retrieval.py": (
-        19,
+        18,
         "BM25's query-term table (a query workload, small by "
         "contract), the per-query-term df table (≤ |workload terms| "
         "rows), 3 sites each in bm25_scores and bm25_probe_postings; "
@@ -446,11 +446,11 @@ BROADCAST_SITES = {
         "anti-join — the same bounds as the other three sinks); +5 in "
         "bm25_scores_max_df (the same workload/df-table bounds plus "
         "the pre-guard df table, its dropped subset, and the ≤|queries|"
-        "-row census — all capped by the query workload); +4 r13 "
+        "-row census — all capped by the query workload); +3 r13 "
         "1-row _corpus_stats_rel broadcasts (the in-plan N/avgdl "
         "relation that replaced the eager per-call stats collect: "
-        "contrib cross-join + max_df threshold in bm25_scores, "
-        "threshold + contrib in bm25_scores_max_df)",
+        "contrib cross-join in bm25_scores, threshold + contrib in "
+        "bm25_scores_max_df)",
     ),
     "queries/retrieval.py": (
         2,

@@ -6,6 +6,8 @@ the stored-index stats accumulation the oracles can't see directly."""
 from __future__ import annotations
 
 import math
+import threading
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -1266,3 +1268,50 @@ def test_batch_append_legacy_no_docs_best_effort(spark, tmp_path):
         ).collect()
     }
     assert got == want
+
+
+def test_composite_vector_failure_cancels_lexical_channel(
+    spark, monkeypatch, tmp_path
+):
+    """The hybrid composites run their two channels through one overlap
+    (``_fused_top10``). A vector channel that fails while the lexical
+    channel's nested postings writes run must surface its own error,
+    not a cancellation, and leave no Spark job running."""
+    from process_spark.queries import retrieval
+    from process_spark.queries.registry import REGISTRY
+
+    sc = spark.sparkContext
+    monkeypatch.setattr(retrieval, "_SCRATCH", str(tmp_path))
+    writing = threading.Event()
+    lex_returned = []
+    write_index = retrieval.write_postings_index
+    stored_lex = retrieval._stored_lex_channel
+
+    def traced_write(*args, **kwargs):
+        writing.set()
+        return write_index(*args, **kwargs)
+
+    def traced_lex(*args, **kwargs):
+        out = stored_lex(*args, **kwargs)
+        lex_returned.append(True)
+        return out
+
+    def failing_ivf(*args, **kwargs):
+        if not writing.wait(timeout=60):
+            raise TimeoutError("the postings write never started")
+        time.sleep(0.2)
+        raise ValueError("injected vector-channel failure")
+
+    monkeypatch.setattr(retrieval, "write_postings_index", traced_write)
+    monkeypatch.setattr(retrieval, "_stored_lex_channel", traced_lex)
+    monkeypatch.setattr(retrieval, "_stored_ivf_knn", failing_ivf)
+
+    with pytest.raises(ValueError, match="injected vector-channel failure"):
+        REGISTRY["retrieval_e2e_stored"].fn(spark, SF_SMALL)
+    assert not lex_returned, "the lexical channel ran to completion"
+    # the status store is fed by the listener bus: a cancelled job can
+    # stay listed for a moment after its action has failed
+    deadline = time.monotonic() + 5
+    while sc.statusTracker().getActiveJobsIds():
+        assert time.monotonic() < deadline, "a channel job is still running"
+        time.sleep(0.05)
