@@ -35,6 +35,8 @@ Policy (applied identically on BOTH sides):
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -46,6 +48,13 @@ __all__ = ["load", "dsum", "davg", "o_dsum", "o_davg", "fscaled", "o_fscaled", "
 # in the testdata (prices ~1e5, quantities ~1e2) with room for 100 TB
 # row counts in the summed magnitude via the wider sum type.
 _PREC, _SCALE = 18, 6
+
+#: Root of the scratch tree the stored-index and IO queries write
+#: under (``<repo>/.scratch``). It lives here, in a module that
+#: registers no queries, so any query module can import it at module
+#: level without changing ``REGISTRY`` order.
+_SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__)))), ".scratch")
 
 
 def dsum(col: str | Column, alias: str) -> Column:

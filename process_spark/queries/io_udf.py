@@ -13,7 +13,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from process_spark.queries._util import o_dsum, t
+from process_spark.queries._util import _SCRATCH, o_dsum, t
 from process_spark.queries.registry import register
 from process_spark.schemas import TABLES
 from process_spark.sources.io import (
@@ -23,9 +23,6 @@ from process_spark.sources.io import (
     write_json_docs,
     write_parquet,
 )
-
-_SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(
-    os.path.abspath(__file__)))), ".scratch")
 
 
 @register("io_csv_roundtrip", oracle="SELECT * FROM customer")

@@ -16,6 +16,7 @@ per term instead of per aggregate).
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,17 +29,20 @@ from process_spark.operators.retrieval import (
     SCORE_SCALE,
     bm25_probe_postings,
     bm25_scores,
+    compact_postings_index,
+    incremental_postings_sink,
     mmr_rerank,
     rrf_fuse,
+    tombstone_postings_docs,
     topk_ranked,
     write_postings_index,
 )
 from process_spark.functions.textfn import tokens
 from process_spark.operators.execution import overlap
 from process_spark.operators.similarity import brute_force_knn
-from process_spark.queries._util import t
-from process_spark.queries.io_udf import _SCRATCH
+from process_spark.queries._util import _SCRATCH, t
 from process_spark.queries.registry import register
+from process_spark.queries.streaming import replay
 from process_spark.queries.text import _O_TOKS
 from process_spark.queries.vectors import _o_dot, _o_unit_cte
 
@@ -432,23 +436,36 @@ def _bootstrap_postings(spark: SparkSession, path: str, hist: DataFrame) -> None
     )
 
 
-def _run_postings_wave(spark: SparkSession, base: str, docs_schema) -> None:
-    from process_spark.operators.retrieval import incremental_postings_sink
-
-    stream = (
-        spark.readStream.schema(docs_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(base, "incoming"))
+def _stream_postings(
+    spark: SparkSession, sf_dir: str, name: str, compacted: bool
+) -> DataFrame:
+    """stream_bm25_index_probe and its compacted twin: bootstrap the
+    even doc_ids, stream the odd ones as two files (``doc_id % 4 == 1``
+    then ``== 3``) through incremental_postings_sink — one wave, or two
+    with compact_postings_index between them — and probe the stored
+    index with the BM25 workload."""
+    base = os.path.join(_SCRATCH, name)
+    shutil.rmtree(base, ignore_errors=True)
+    index = os.path.join(base, "index")
+    docs = t(spark, sf_dir, "documents").select("doc_id", "text")
+    _bootstrap_postings(spark, index, docs.filter(F.col("doc_id") % 2 == 0))
+    odd = docs.filter(F.col("doc_id") % 2 == 1)
+    first, second = (odd.filter(F.col("doc_id") % 4 == r) for r in (1, 3))
+    # The maintenance pass: one file per dir, seal history (postings +
+    # membership sidecar), fold the stats deltas. The compactor passes
+    # only NON-batch partition keys down — the sealing branch requires
+    # batch_id to be a rewritable column, not a partition key it must
+    # preserve (operators/dedup.py `has_batch`).
+    replay(
+        spark, base, [[first], [second]] if compacted else [[first, second]],
+        incremental_postings_sink(index),
+        between=lambda: compact_postings_index(spark, index),
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            incremental_postings_sink(os.path.join(base, "index"))
-        )
-        .trigger(availableNow=True)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .start()
+    return topk_ranked(
+        bm25_probe_postings(spark, index, _workload_df(spark)),
+        "score_e6",
+        k=10,
     )
-    q.awaitTermination()
 
 
 @register("stream_bm25_index_probe", oracle=_O_STREAM_BM25)
@@ -466,31 +483,8 @@ def stream_bm25_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     the right streaming story for a query-time operator (no per-batch
     emission to keep invariant). Replay and sealed-own crash hygiene
     are pinned in tests/test_retrieval.py."""
-    import shutil
-
-    base = os.path.join(_SCRATCH, "stream_postings_index")
-    shutil.rmtree(base, ignore_errors=True)
-    d = t(spark, sf_dir, "documents")
-    docs = d.select("doc_id", "text")
-    _bootstrap_postings(spark, os.path.join(base, "index"),
-                        docs.filter(F.col("doc_id") % 2 == 0))
-
-    src = os.path.join(base, "incoming")
-    odd = docs.filter(F.col("doc_id") % 2 == 1)
-    odd.filter(F.col("doc_id") % 4 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src)
-    odd.filter(F.col("doc_id") % 4 == 3).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    _run_postings_wave(spark, base, docs.schema)
-
-    return topk_ranked(
-        bm25_probe_postings(
-            spark, os.path.join(base, "index"), _workload_df(spark)
-        ),
-        "score_e6",
-        k=10,
+    return _stream_postings(
+        spark, sf_dir, "stream_postings_index", compacted=False
     )
 
 
@@ -509,42 +503,8 @@ def stream_bm25_index_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     sealed-own hygiene invariant, now covering all three postings
     components). Final probe = whole-corpus BM25, same oracle as the
     probe twin."""
-    import shutil
-
-    from process_spark.operators.retrieval import compact_postings_index
-
-    base = os.path.join(_SCRATCH, "stream_postings_compacted")
-    shutil.rmtree(base, ignore_errors=True)
-    d = t(spark, sf_dir, "documents")
-    docs = d.select("doc_id", "text")
-    _bootstrap_postings(spark, os.path.join(base, "index"),
-                        docs.filter(F.col("doc_id") % 2 == 0))
-
-    src = os.path.join(base, "incoming")
-    odd = docs.filter(F.col("doc_id") % 2 == 1)
-    # wave 1, then "driver stops"
-    odd.filter(F.col("doc_id") % 4 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src)
-    _run_postings_wave(spark, base, docs.schema)
-    # offline maintenance between waves: one file per dir, seal history
-    # (postings + membership sidecar), fold the stats deltas. The
-    # compactor passes only NON-batch partition keys down — the sealing
-    # branch requires batch_id to be a rewritable column, not a
-    # partition key it must preserve (operators/dedup.py `has_batch`).
-    compact_postings_index(spark, os.path.join(base, "index"))
-    # wave 2: rest of the stream, same checkpoint (resume)
-    odd.filter(F.col("doc_id") % 4 == 3).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    _run_postings_wave(spark, base, docs.schema)
-
-    return topk_ranked(
-        bm25_probe_postings(
-            spark, os.path.join(base, "index"), _workload_df(spark)
-        ),
-        "score_e6",
-        k=10,
+    return _stream_postings(
+        spark, sf_dir, "stream_postings_compacted", compacted=True
     )
 
 
@@ -1143,46 +1103,37 @@ def stream_bm25_index_updated(spark: SparkSession, sf_dir: str) -> DataFrame:
     the append-only validation accepts them because the purge removed
     the old identity. Probe B must equal plain BM25 over the UPDATED
     corpus — the entire delete/update machinery is storage detail."""
-    import shutil
-
-    from process_spark.operators.retrieval import (
-        compact_postings_index,
-        tombstone_postings_docs,
-    )
-
     base = os.path.join(_SCRATCH, "stream_postings_updated")
     shutil.rmtree(base, ignore_errors=True)
     index = os.path.join(base, "index")
-    d = t(spark, sf_dir, "documents")
-    docs = d.select("doc_id", "text")
+    docs = t(spark, sf_dir, "documents").select("doc_id", "text")
     _bootstrap_postings(spark, index,
                         docs.filter(F.col("doc_id") % 2 == 0))
-
-    src = os.path.join(base, "incoming")
-    # wave 1: the odd half arrives as a stream
-    docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src)
-    _run_postings_wave(spark, base, docs.schema)
-
-    # the re-crawl: every 10th doc is tombstoned...
-    tombstone_postings_docs(
-        spark, index, docs.filter(F.expr(_UPD_FILTER)).select("doc_id")
-    )
-    spark.catalog.refreshByPath(os.path.join(index, "data"))
     qt = _workload_df(spark)
-    ra = topk_ranked(
-        bm25_probe_postings(spark, index, qt), "score_e6", k=10
-    ).localCheckpoint(eager=True)  # materialize BEFORE the purge
+    ra = None
 
-    # ...purged at the maintenance pass (tombstones dropped last)...
-    compact_postings_index(spark, index)
-    # ...and the updated versions re-ingest through the same checkpoint
+    def recrawl() -> None:
+        nonlocal ra
+        # the re-crawl: every 10th doc is tombstoned...
+        tombstone_postings_docs(
+            spark, index, docs.filter(F.expr(_UPD_FILTER)).select("doc_id")
+        )
+        spark.catalog.refreshByPath(os.path.join(index, "data"))
+        ra = topk_ranked(
+            bm25_probe_postings(spark, index, qt), "score_e6", k=10
+        ).localCheckpoint(eager=True)  # materialize BEFORE the purge
+        # ...purged at the maintenance pass (tombstones dropped last)...
+        compact_postings_index(spark, index)
+
+    # wave 1: the odd half arrives as a stream; wave 2: the updated
+    # versions re-ingest through the same sink and checkpoint
     updated = docs.filter(F.expr(_UPD_FILTER)).select(
         "doc_id", F.concat(F.col("text"), F.lit(_UPDATE_SUFFIX)).alias("text")
     )
-    updated.coalesce(1).write.mode("append").parquet(src)
-    _run_postings_wave(spark, base, docs.schema)
+    replay(
+        spark, base, [[docs.filter(F.col("doc_id") % 2 == 1)], [updated]],
+        incremental_postings_sink(index), between=recrawl,
+    )
 
     rb = topk_ranked(bm25_probe_postings(spark, index, qt), "score_e6", k=10)
     return ra.select(F.lit(1).cast("int").alias("phase"), "*").unionByName(
@@ -1230,13 +1181,7 @@ def text_postings_stats_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle); a crash between a batch append and its stats delta, or a
     legacy index predating the validation sidecar, flips it FALSE and
     the repair is the stats-recomputing compaction."""
-    import shutil
-
-    from process_spark.operators.retrieval import (
-        incremental_postings_sink,
-        postings_stats_audit,
-        tombstone_postings_docs,
-    )
+    from process_spark.operators.retrieval import postings_stats_audit
 
     base = os.path.join(_SCRATCH, "postings_stats_audit")
     shutil.rmtree(base, ignore_errors=True)

@@ -1,32 +1,54 @@
 """Structured Streaming queries over the ``events`` stream table
 (SURVEY.md §2.13 O88-O95).
 
-Batch-first grading: each streaming query runs availableNow → memory
-sink and returns the drained result as a batch DataFrame; where the
-semantics are SQL-expressible the oracle is the batch twin (SURVEY.md
-§2.13 "oracle = batch twin"). At production scale the same plans run
-against a live file/Kafka source with watermarks bounding state.
+Batch-first grading: every streaming query runs ``availableNow`` and
+returns a batch DataFrame. They come in two shapes:
+
+- **memory-sink drains** (:func:`_drain`): a streaming plan over the
+  events table runs into a memory sink and the drained table is the
+  result; where the semantics are SQL-expressible the oracle is the
+  batch twin (SURVEY.md §2.13 "oracle = batch twin");
+- **stored-index foreachBatch replays** (:func:`replay`): staged files
+  stream one per micro-batch through a ``foreachBatch`` sink that
+  maintains a stored relation (band/cell/postings index, MG state),
+  optionally in two resumed waves with offline maintenance between
+  them; the result is read back from what the sink stored.
+  :func:`_stream_index` is the whole lifecycle of the three pair
+  indexes (MinHash, IVF, SRP).
+
+At production scale the same plans run against a live file/Kafka
+source with watermarks bounding state.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from process_spark.operators.relational import attach_census, cap_blocks_with_census
-from process_spark.queries._util import t
-from process_spark.queries.registry import register
-from process_spark.queries.text import _O_HEAVY_HITTERS, _minhash_md5_ctes
-from process_spark.queries.vectors import (
-    _ANN_BAND_VALUES,
-    _ANN_POOL_VALUES,
-    _O_ANN_BUCKET,
-    _ivf_md5_ctes,
-    _o_dot,
+from process_spark.functions.textfn import tokens
+from process_spark.operators.dedup import (
+    compact_partitioned_index,
+    minhash_band_index,
 )
-from process_spark.schemas import TABLES
+from process_spark.operators.relational import attach_census, cap_blocks_with_census
+from process_spark.operators.similarity import ivf_build
+from process_spark.queries._util import _SCRATCH, t
+from process_spark.queries.registry import register
+from process_spark.queries.text import (
+    _HH_CAPACITY,
+    _O_HEAVY_HITTERS,
+    _minhash_md5_ctes,
+)
+from process_spark.queries.vectors import (
+    _O_SRP_BB,
+    _ann_banded,
+    _ivf_md5_ctes,
+    _t32,
+)
 
 _MEM_SEQ = 0
 
@@ -36,8 +58,6 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     footer-sniffed µs/ns handling lives in sources.io.read_events —
     one copy shared with the batch scan, so a future layout drift is
     fixed in one place."""
-    import os
-
     from process_spark.sources.io import read_events
 
     return read_events(
@@ -77,6 +97,135 @@ def _drain(df: DataFrame, mode: str = "complete") -> DataFrame:
     finally:
         spark.conf.set(conf_key, old)
     return spark.table(name)
+
+
+def replay(
+    spark: SparkSession,
+    base: str,
+    waves: list[list[DataFrame]],
+    sink: Callable[[DataFrame, int], None],
+    between: Callable[[], None] | None = None,
+) -> None:
+    """O95 — replay staged rows through a ``foreachBatch`` sink as a
+    file stream, the one stream skeleton of the stored-index queries.
+
+    Each DataFrame of each wave is written as ONE parquet file under
+    ``base/incoming`` (the first write overwrites, the rest append) and
+    the source reads one file per trigger, so each DataFrame is one
+    micro-batch. Each wave is one ``availableNow`` run on the
+    checkpoint ``base/ckpt``; a later wave RESUMES it — batch ids
+    continue, as after a driver stop and restart. ``between()`` runs
+    before every wave after the first: the offline maintenance
+    (compaction, tombstones) done while the driver is stopped. The
+    stream schema is the first staged DataFrame's, so a later wave
+    re-ingests rows of the same shape. The checkpoint is removed at
+    the end; ``incoming`` and whatever the sink wrote stay."""
+    src = os.path.join(base, "incoming")
+    ckpt = os.path.join(base, "ckpt")
+    mode = "overwrite"
+    for i, wave in enumerate(waves):
+        if i and between is not None:
+            between()
+        for df in wave:
+            df.coalesce(1).write.mode(mode).parquet(src)
+            mode = "append"
+        (
+            spark.readStream.schema(waves[0][0].schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+            .writeStream.foreachBatch(sink)
+            .trigger(availableNow=True)
+            .option("checkpointLocation", ckpt)
+            .start()
+            .awaitTermination()
+        )
+    shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def _write_batch(
+    df: DataFrame,
+    path: str,
+    batch_id: int,
+    cols: tuple[str, ...] = (),
+    n: int | None = None,
+) -> None:
+    """Store ``df`` as batch ``batch_id`` of the relation at ``path``:
+    partitioned by ``cols`` and then ``batch_id`` LAST, with dynamic
+    partition overwrite, then refresh the path for the next reader.
+
+    This is the exactly-once-by-batch_id layout of every stored-index
+    sink. foreachBatch is at-least-once (a mid-batch failure replays
+    the whole batch); overwriting exactly the batch's own leaf dirs
+    makes a replay REWRITE its rows instead of appending duplicates
+    that would double pair counts and permanently inflate the index.
+    batch_id last keeps pruning on ``cols`` untouched, and the index
+    rows a batch writes are deterministic, so a replay lands in the
+    same dirs. History is seeded with the same call at batch_id = -1,
+    so partition discovery sees one scheme. ``n`` hash-repartitions on
+    ``cols`` first: one file per touched dir."""
+    out = df.withColumn("batch_id", F.lit(batch_id))
+    if n is not None:
+        out = out.repartition(n, *cols)
+    out.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy(*cols, "batch_id").parquet(path)
+    df.sparkSession.catalog.refreshByPath(path)
+
+
+#: Stored layouts ``(partition columns, write tasks)`` of the three
+#: pair indexes, shared by each sink's append and its history seed.
+_MINHASH_LAYOUT = (("band_idx", "band_bucket"), 64)
+_IVF_LAYOUT = (("cell_id",), 8)
+_SRP_LAYOUT = (("band_idx",), 64)
+
+#: The MinHash banding of the text index (the dedup_band_index_probe
+#: relation): 64 md5 hashes in 16 concat-keyed bands over 16 buckets.
+_BAND_KW = dict(
+    num_hashes=64, bands=16, base_hash="md5", band_key="concat", n_buckets=16
+)
+
+
+def _stream_index(
+    spark: SparkSession,
+    sf_dir: str,
+    kind: Callable,
+    name: str,
+    compacted: bool = False,
+    cap: int | None = None,
+) -> DataFrame:
+    """The stored-index streaming lifecycle of the MinHash, IVF and
+    SRP pair indexes under ``_SCRATCH/name``.
+
+    ``kind(spark, sf_dir, index, pairs, cap)`` (:func:`_minhash_stream`,
+    :func:`_ivf_stream`, :func:`_srp_stream`) returns ``(rows, id_col,
+    history, layout, sink)``. The history (even ids) is seeded at
+    batch_id = -1 in the sink's layout; the odd ids stream as two
+    files, ``id % 4 == 1`` then ``== 3``: one wave, or, when
+    ``compacted``, two waves with the offline compaction between them
+    (one file per index dir, batch ids sealed to -1). ``cap`` is the
+    sink's hot-block guard (None = unguarded). Returns the sink's
+    stored pairs."""
+    base = os.path.join(_SCRATCH, name)
+    index, pairs = os.path.join(base, "index"), os.path.join(base, "pairs")
+    shutil.rmtree(base, ignore_errors=True)
+    rows, id_col, history, (cols, n), sink = kind(
+        spark, sf_dir, index, pairs, cap
+    )
+    _write_batch(history, index, -1, cols, n)
+    first, second = (rows.filter(F.col(id_col) % 4 == r) for r in (1, 3))
+    replay(
+        spark, base, [[first], [second]] if compacted else [[first, second]],
+        sink, between=lambda: compact_partitioned_index(spark, index, cols),
+    )
+    return spark.read.parquet(pairs)
+
+
+def _summed_bands(pairs: DataFrame) -> DataFrame:
+    """Read-back of a banded pair sink: shared-band counts summed per
+    pair over the batches that emitted it."""
+    return pairs.groupBy("id_a", "id_b").agg(
+        F.sum("n_shared_bands").alias("n_shared_bands")
+    )
 
 
 @register(
@@ -373,10 +522,7 @@ def stream_foreach_batch_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the read-back aggregate is batch-count-invariant and carries a
     plain batch oracle (exactly-once: the checkpoint prevents an
     interrupted run from double-appending a batch)."""
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__)))), ".scratch", "stream_batches")
-    import shutil
-
+    out_dir = os.path.join(_SCRATCH, "stream_batches")
     shutil.rmtree(out_dir, ignore_errors=True)
     shutil.rmtree(out_dir + "_ckpt", ignore_errors=True)
     s = _stream_events(spark, sf_dir)
@@ -700,7 +846,6 @@ def incremental_dedup_sink(
     silent drop. None (the unguarded registered queries' setting)
     keeps exact oracle parity with the whole-corpus band join;
     stream_dedup_index_probe_guarded registers the guarded form."""
-    from process_spark.operators.dedup import minhash_band_index
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         ss = batch_df.sparkSession
@@ -800,49 +945,38 @@ def incremental_dedup_sink(
             # guarded mode: the batch's cut-bucket census rides every
             # pair row (the minhash_lsh_pairs contract)
             pairs = attach_census(pairs, census)
-        pairs = pairs.withColumn("batch_id", F.lit(batch_id))
-        # Both writes are IDEMPOTENT per batch_id (foreachBatch is
-        # at-least-once: a mid-batch failure replays the whole batch).
-        # Dynamic partition overwrite keyed on batch_id — the
-        # documented exactly-once-via-batchId pattern — makes a replay
-        # REWRITE its own partitions instead of appending duplicates
-        # that would double n_shared_bands and permanently inflate the
-        # stored index for all future probes.
-        pairs.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("batch_id").parquet(out_dir)
+        # Both writes are idempotent per batch_id (_write_batch).
+        _write_batch(pairs, out_dir, batch_id)
         # (4) history accretes: next batch's probe must see this one —
-        # the FULL band set, even under the guard. batch_id is the
-        # LAST partition level, so bucket pruning on probes is
-        # untouched while a replayed batch overwrites exactly its own
-        # leaf dirs (banding is deterministic → same dirs).
-        # Docs whose bands were already SEALED into batch_id = -1 by a
-        # compaction that raced a mid-batch crash are skipped here —
-        # re-appending them under batch_id = B would duplicate index
-        # rows permanently (the -1 copy survives every future
-        # batch_id < current probe).
-        bidx.join(F.broadcast(sealed_own), "doc_id", "left_anti").withColumn(
-            "batch_id", F.lit(batch_id)
-        ).repartition(
-            64, F.col("band_idx"), F.col("band_bucket")
-        ).write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("band_idx", "band_bucket", "batch_id").parquet(idx_dir)
-        ss.catalog.refreshByPath(idx_dir)
+        # the FULL band set, even under the guard. Docs whose bands
+        # were already SEALED into batch_id = -1 by a compaction that
+        # raced a mid-batch crash are skipped here — re-appending them
+        # under batch_id = B would duplicate index rows permanently
+        # (the -1 copy survives every future batch_id < current probe).
+        _write_batch(
+            bidx.join(F.broadcast(sealed_own), "doc_id", "left_anti"),
+            idx_dir, batch_id, *_MINHASH_LAYOUT,
+        )
 
     return sink
 
 
-@register(
-    "stream_dedup_index_probe",
-    # Batch-twin oracle = the WHOLE-CORPUS band join (the same relation
-    # dedup_band_index_probe's oracle checks), restricted to pairs with
-    # at least one streamed (odd) member and normalized (id_a < id_b).
-    # Batch boundaries are source-dependent, but the emitted pair UNION
-    # is batch-count-INVARIANT by construction: a same-batch pair is
-    # found by the batch self-join, a cross-batch pair by the later
-    # batch's probe of the appended index — each exactly once.
-    oracle="""
+def _minhash_stream(spark, sf_dir, index, pairs, cap):
+    """The MinHash text kind of :func:`_stream_index`: documents
+    banded through ``_BAND_KW``, history = the even doc_ids' bands."""
+    d = t(spark, sf_dir, "documents")
+    history = minhash_band_index(
+        d.filter(F.col("doc_id") % 2 == 0), "doc_id", "text", **_BAND_KW
+    )
+    sink = incremental_dedup_sink(index, pairs, _BAND_KW, max_bucket_size=cap)
+    return d.select("doc_id", "text"), "doc_id", history, _MINHASH_LAYOUT, sink
+
+
+#: Batch-twin oracle of the unguarded MinHash streams = the
+#: WHOLE-CORPUS band join (the same relation dedup_band_index_probe's
+#: oracle checks), restricted to pairs with at least one streamed (odd)
+#: member and normalized (id_a < id_b).
+_O_STREAM_MINHASH = """
     WITH {ctes}
     SELECT a.doc_id AS id_a, b.doc_id AS id_b,
            CAST(COUNT(*) AS BIGINT) AS n_shared_bands
@@ -851,7 +985,16 @@ def incremental_dedup_sink(
      AND a.doc_id < b.doc_id
     WHERE a.doc_id % 2 = 1 OR b.doc_id % 2 = 1
     GROUP BY 1, 2
-    """.format(ctes=_minhash_md5_ctes(where="TRUE")),
+    """.format(ctes=_minhash_md5_ctes(where="TRUE"))
+
+
+@register(
+    "stream_dedup_index_probe",
+    # Batch boundaries are source-dependent, but the emitted pair UNION
+    # is batch-count-INVARIANT by construction: a same-batch pair is
+    # found by the batch self-join, a cross-batch pair by the later
+    # batch's probe of the appended index — each exactly once.
+    oracle=_O_STREAM_MINHASH,
 )
 def stream_dedup_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O63+O95 — INCREMENTAL near-dup dedup as a STREAM: the composition
@@ -874,64 +1017,8 @@ def stream_dedup_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     band join — the same relation the batch lifecycle queries check —
     which the streamed pair union must equal regardless of how the
     source happened to batch the files."""
-    import shutil
-
-    from process_spark.operators.dedup import minhash_band_index
-    from process_spark.queries.io_udf import _SCRATCH
-
-    kw = dict(
-        num_hashes=64, bands=16, base_hash="md5", band_key="concat",
-        n_buckets=16,
-    )
-    base = os.path.join(_SCRATCH, "stream_dedup_index")
-    idx_dir = os.path.join(base, "index")
-    src_dir = os.path.join(base, "incoming")
-    out_dir = os.path.join(base, "pairs")
-    ckpt = os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
-
-    d = t(spark, sf_dir, "documents")
-    hist = minhash_band_index(
-        d.filter(F.col("doc_id") % 2 == 0), "doc_id", "text", **kw
-    )
-    # Bootstrap under the same 3-level layout the sink appends with
-    # (batch_id = -1 marks the pre-stream history) so partition
-    # discovery sees one consistent scheme.
-    hist.withColumn("batch_id", F.lit(-1)).repartition(
-        64, F.col("band_idx"), F.col("band_bucket")
-    ).write.mode("overwrite").partitionBy(
-        "band_idx", "band_bucket", "batch_id"
-    ).parquet(idx_dir)
-
-    # Stage the stream: odd docs as two files → two micro-batches.
-    docs = d.select("doc_id", "text")
-    docs.filter(F.col("doc_id") % 4 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src_dir)
-    docs.filter(F.col("doc_id") % 4 == 3).coalesce(1).write.mode(
-        "append"
-    ).parquet(src_dir)
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-
-    q = (
-        stream.writeStream.foreachBatch(
-            incremental_dedup_sink(idx_dir, out_dir, kw)
-        )
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return (
-        spark.read.parquet(out_dir)
-        .groupBy("id_a", "id_b")
-        .agg(F.sum("n_shared_bands").alias("n_shared_bands"))
+    return _summed_bands(
+        _stream_index(spark, sf_dir, _minhash_stream, "stream_dedup_index")
     )
 
 
@@ -946,7 +1033,6 @@ def mg_state_sink(state_dir: str, capacity: int):
     between batches — kill the driver at any point and the next run
     reconstructs the exact cross-batch state from the table
     (mg_load_state), because MG summaries are mergeable."""
-    from process_spark.functions.textfn import tokens
     from process_spark.operators.sketch import (
         mg_partition_summaries,
         mg_save_batch_summary,
@@ -961,6 +1047,39 @@ def mg_state_sink(state_dir: str, capacity: int):
         )
 
     return sink
+
+
+def _stream_heavy_hitters(
+    spark: SparkSession, sf_dir: str, name: str, compacted: bool
+) -> DataFrame:
+    """stream_heavy_hitters and its compacted twin: the even and then
+    the odd documents stream through :func:`mg_state_sink` (one wave,
+    or two with mg_compact_state sealing the state between them), then
+    the state reloads from the table and one exact-verify pass over
+    the full corpus restores true counts."""
+    from process_spark.operators.sketch import (
+        exact_verify,
+        mg_compact_state,
+        mg_load_state,
+    )
+
+    base = os.path.join(_SCRATCH, name)
+    state_dir = os.path.join(base, "mg_state")
+    shutil.rmtree(base, ignore_errors=True)
+    d = t(spark, sf_dir, "documents")
+    even, odd = (
+        d.select("doc_id", "text").filter(F.col("doc_id") % 2 == r)
+        for r in (0, 1)
+    )
+    replay(
+        spark, base, [[even], [odd]] if compacted else [[even, odd]],
+        mg_state_sink(state_dir, _HH_CAPACITY),
+        between=lambda: mg_compact_state(spark, state_dir, _HH_CAPACITY),
+    )
+    counters, total = mg_load_state(spark, state_dir, _HH_CAPACITY)
+    tk_all = d.select(F.explode(tokens("text")).alias("tok"))
+    return exact_verify(tk_all, "tok", list(counters.keys()), total,
+                        _HH_CAPACITY)
 
 
 @register(
@@ -994,46 +1113,9 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the emitted rows equal the batch query's exactly, no matter how
     the source happened to batch the files — the oracle is
     text_heavy_hitters' statement verbatim."""
-    import shutil
-
-    from process_spark.functions.textfn import tokens
-    from process_spark.operators.sketch import exact_verify, mg_load_state
-    from process_spark.queries.io_udf import _SCRATCH
-    from process_spark.queries.text import _HH_CAPACITY
-
-    base = os.path.join(_SCRATCH, "stream_heavy_hitters")
-    src_dir = os.path.join(base, "incoming")
-    ckpt = os.path.join(base, "ckpt")
-    state_dir = os.path.join(base, "mg_state")
-    shutil.rmtree(base, ignore_errors=True)
-
-    d = t(spark, sf_dir, "documents")
-    docs = d.select("doc_id", "text")
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src_dir)
-    docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(src_dir)
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
+    return _stream_heavy_hitters(
+        spark, sf_dir, "stream_heavy_hitters", compacted=False
     )
-    q = (
-        stream.writeStream.foreachBatch(mg_state_sink(state_dir, _HH_CAPACITY))
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
-
-    counters, total = mg_load_state(spark, state_dir, _HH_CAPACITY)
-    tk_all = d.select(F.explode(tokens("text")).alias("tok"))
-    return exact_verify(tk_all, "tok", list(counters.keys()), total,
-                        _HH_CAPACITY)
 
 
 @register(
@@ -1062,60 +1144,9 @@ def stream_heavy_hitters_compacted(
     so maintenance moved files, never counts. File-count collapse and
     kill-resume-across-compaction are asserted in
     tests/test_streaming_semantics.py."""
-    import shutil
-
-    from process_spark.functions.textfn import tokens
-    from process_spark.operators.sketch import (
-        exact_verify,
-        mg_compact_state,
-        mg_load_state,
+    return _stream_heavy_hitters(
+        spark, sf_dir, "stream_heavy_hitters_compacted", compacted=True
     )
-    from process_spark.queries.io_udf import _SCRATCH
-    from process_spark.queries.text import _HH_CAPACITY
-
-    base = os.path.join(_SCRATCH, "stream_heavy_hitters_compacted")
-    src_dir = os.path.join(base, "incoming")
-    ckpt = os.path.join(base, "ckpt")
-    state_dir = os.path.join(base, "mg_state")
-    shutil.rmtree(base, ignore_errors=True)
-
-    d = t(spark, sf_dir, "documents")
-    docs = d.select("doc_id", "text")
-
-    def run_wave() -> None:
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(
-                mg_state_sink(state_dir, _HH_CAPACITY)
-            )
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-
-    # wave 1: even docs, then "driver stops"
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src_dir)
-    run_wave()
-    # offline maintenance between waves: seal state to batch_id = -1
-    mg_compact_state(spark, state_dir, _HH_CAPACITY)
-    # wave 2: odd docs, same checkpoint (resume)
-    docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(src_dir)
-    run_wave()
-    shutil.rmtree(ckpt, ignore_errors=True)
-
-    counters, total = mg_load_state(spark, state_dir, _HH_CAPACITY)
-    tk_all = d.select(F.explode(tokens("text")).alias("tok"))
-    return exact_verify(tk_all, "tok", list(counters.keys()), total,
-                        _HH_CAPACITY)
 
 
 @register(
@@ -1127,16 +1158,7 @@ def stream_heavy_hitters_compacted(
     # wave's probe of the sealed index are all storage/lifecycle
     # details the emitted pair union is invariant to — which is
     # exactly what this hash checks.
-    oracle="""
-    WITH {ctes}
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           CAST(COUNT(*) AS BIGINT) AS n_shared_bands
-    FROM banded a JOIN banded b
-      ON a.band_idx = b.band_idx AND a.band_key = b.band_key
-     AND a.doc_id < b.doc_id
-    WHERE a.doc_id % 2 = 1 OR b.doc_id % 2 = 1
-    GROUP BY 1, 2
-    """.format(ctes=_minhash_md5_ctes(where="TRUE")),
+    oracle=_O_STREAM_MINHASH,
 )
 def stream_dedup_index_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O63+O95 — the FULL incremental-dedup production lifecycle in one
@@ -1152,70 +1174,11 @@ def stream_dedup_index_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs. This is the weekly-compaction rhythm a continuous-ingest
     deployment actually runs; without it, probes open one file per
     ingested batch per partition forever."""
-    import shutil
-
-    from process_spark.operators.dedup import (
-        compact_band_index,
-        minhash_band_index,
-    )
-    from process_spark.queries.io_udf import _SCRATCH
-
-    kw = dict(
-        num_hashes=64, bands=16, base_hash="md5", band_key="concat",
-        n_buckets=16,
-    )
-    base = os.path.join(_SCRATCH, "stream_dedup_index_compacted")
-    idx_dir = os.path.join(base, "index")
-    src_dir = os.path.join(base, "incoming")
-    out_dir = os.path.join(base, "pairs")
-    ckpt = os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
-
-    d = t(spark, sf_dir, "documents")
-    hist = minhash_band_index(
-        d.filter(F.col("doc_id") % 2 == 0), "doc_id", "text", **kw
-    )
-    hist.withColumn("batch_id", F.lit(-1)).repartition(
-        64, F.col("band_idx"), F.col("band_bucket")
-    ).write.mode("overwrite").partitionBy(
-        "band_idx", "band_bucket", "batch_id"
-    ).parquet(idx_dir)
-
-    docs = d.select("doc_id", "text")
-
-    def run_wave() -> None:
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
+    return _summed_bands(
+        _stream_index(
+            spark, sf_dir, _minhash_stream, "stream_dedup_index_compacted",
+            compacted=True,
         )
-        q = (
-            stream.writeStream.foreachBatch(
-                incremental_dedup_sink(idx_dir, out_dir, kw)
-            )
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-
-    # wave 1: first half of the odd docs, then "driver stops"
-    docs.filter(F.col("doc_id") % 4 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src_dir)
-    run_wave()
-    # offline maintenance between waves: one file per dir, seal history
-    compact_band_index(spark, idx_dir)
-    # wave 2: rest of the odd docs, same checkpoint (resume)
-    docs.filter(F.col("doc_id") % 4 == 3).coalesce(1).write.mode(
-        "append"
-    ).parquet(src_dir)
-    run_wave()
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return (
-        spark.read.parquet(out_dir)
-        .groupBy("id_a", "id_b")
-        .agg(F.sum("n_shared_bands").alias("n_shared_bands"))
     )
 
 
@@ -1251,32 +1214,16 @@ def stream_heavy_hitters_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     mergeability makes the output batch-count-invariant, so the oracle
     is text_heavy_hitters_by_lang's statement verbatim — the grouped
     composition of the stream_heavy_hitters durability story."""
-    import shutil
-
-    from process_spark.functions.textfn import tokens
     from process_spark.operators.sketch import (
-        frequent_items_by_group,
         mg_load_state_by_group,
         mg_partition_summaries_by_group,
         mg_save_batch_summary_by_group,
     )
-    from process_spark.queries.io_udf import _SCRATCH
 
     cap = 48
     base = os.path.join(_SCRATCH, "stream_heavy_hitters_by_lang")
-    src_dir = os.path.join(base, "incoming")
-    ckpt = os.path.join(base, "ckpt")
     state_dir = os.path.join(base, "mg_state")
     shutil.rmtree(base, ignore_errors=True)
-
-    d = t(spark, sf_dir, "documents")
-    docs = d.select("doc_id", "lang", "text")
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src_dir)
-    docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(src_dir)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         tk = batch_df.select(
@@ -1289,19 +1236,10 @@ def stream_heavy_hitters_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
             batch_df.sparkSession, state_dir, batch_id, counters, totals
         )
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
+    d = t(spark, sf_dir, "documents")
+    docs = d.select("doc_id", "lang", "text")
+    even_odd = [docs.filter(F.col("doc_id") % 2 == r) for r in (0, 1)]
+    replay(spark, base, [even_odd], sink)
 
     counters, totals = mg_load_state_by_group(spark, state_dir, cap)
     # exact verify, per group: bounded candidate + threshold tables
@@ -1454,40 +1392,40 @@ def incremental_vector_sink(
             # the skip census rides EVERY output row (the
             # minhash_lsh_pairs guard shape)
             pairs = attach_census(pairs, census)
-        pairs = pairs.withColumn("batch_id", F.lit(batch_id))
-        pairs.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("batch_id").parquet(out_dir)
-        # history accretes, one file per touched cell dir per batch;
-        # batch_id LAST so cell pruning is untouched while a replay
-        # overwrites exactly its own leaf dirs (assignment to fixed
-        # cells is deterministic → same dirs). Vectors already SEALED
-        # into batch_id = -1 by a compaction that raced a mid-batch
-        # crash are skipped — re-appending them under batch_id = B
-        # would duplicate index rows permanently.
-        assigned.join(
-            F.broadcast(sealed_own), "vec_id", "left_anti"
-        ).withColumn("batch_id", F.lit(batch_id)).repartition(
-            8, F.col("cell_id")
-        ).write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("cell_id", "batch_id").parquet(idx_dir)
-        ss.catalog.refreshByPath(idx_dir)
+        _write_batch(pairs, out_dir, batch_id)
+        # history accretes, one file per touched cell dir per batch.
+        # Vectors already SEALED into batch_id = -1 by a compaction
+        # that raced a mid-batch crash are skipped — re-appending them
+        # under batch_id = B would duplicate index rows permanently.
+        _write_batch(
+            assigned.join(F.broadcast(sealed_own), "vec_id", "left_anti"),
+            idx_dir, batch_id, *_IVF_LAYOUT,
+        )
 
     return sink
 
 
-@register(
-    "stream_semantic_dedup_probe",
-    # Batch-twin oracle = the WHOLE-CORPUS cell-blocked threshold pair
-    # join under the md5 IVF chain (cells trained on the even half —
-    # the bootstrap history — assignment over everything), restricted
-    # to pairs with at least one streamed (odd) member. Batch
-    # boundaries are source-dependent, but the emitted pair UNION is
-    # batch-count-INVARIANT by construction: a same-batch pair is
-    # found by the batch self-join, a cross-batch pair by the later
-    # batch's probe of the appended index — each exactly once.
-    oracle=f"""
+def _ivf_stream(spark, sf_dir, index, pairs, cap):
+    """The IVF vector kind of :func:`_stream_index`: cells trained
+    ONCE on the even vec_ids (md5 seeds), history = their assignment;
+    the odd vectors stream against the fixed cells."""
+    e = t(spark, sf_dir, "embeddings").select(
+        "vec_id", F.array(F.lit(1.0), _t32()).alias("embedding")
+    )
+    cells, history = ivf_build(
+        e.filter(F.col("vec_id") % 2 == 0), n_cells=8, seed_hash="md5"
+    )
+    sink = incremental_vector_sink(index, pairs, cells, max_block_size=cap)
+    rows = e.filter(F.col("vec_id") % 2 == 1)
+    return rows, "vec_id", history, _IVF_LAYOUT, sink
+
+
+#: Batch-twin oracle of the unguarded IVF streams = the WHOLE-CORPUS
+#: cell-blocked threshold pair join under the md5 IVF chain (cells
+#: trained on the even half — the bootstrap history — assignment over
+#: everything), restricted to pairs with at least one streamed (odd)
+#: member.
+_O_STREAM_IVF = f"""
     WITH {_ivf_md5_ctes(build_where="vec_id % 2 = 0")},
     pairs AS (
       SELECT a.vec_id AS id_a, b.vec_id AS id_b
@@ -1498,7 +1436,16 @@ def incremental_vector_sink(
         AND (a.vec_id % 2 = 1 OR b.vec_id % 2 = 1)
     )
     SELECT id_a, id_b FROM pairs
-    """,
+    """
+
+
+@register(
+    "stream_semantic_dedup_probe",
+    # Batch boundaries are source-dependent, but the emitted pair UNION is
+    # batch-count-INVARIANT by construction: a same-batch pair is
+    # found by the batch self-join, a cross-batch pair by the later
+    # batch's probe of the appended index — each exactly once.
+    oracle=_O_STREAM_IVF,
 )
 def stream_semantic_dedup_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O64+O95 — INCREMENTAL semantic dedup as a STREAM: the brief's
@@ -1522,58 +1469,11 @@ def stream_semantic_dedup_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell-blocked threshold join in one statement; the streamed pair
     union must equal it no matter how the source batched the files.
     Replay safety is pinned in tests/test_streaming_semantics.py."""
-    import shutil
-
-    from process_spark.operators.similarity import ivf_build
-    from process_spark.queries.io_udf import _SCRATCH
-    from process_spark.queries.vectors import _t32
-
-    base = os.path.join(_SCRATCH, "stream_vec_index")
-    idx_dir = os.path.join(base, "index")
-    src_dir = os.path.join(base, "incoming")
-    out_dir = os.path.join(base, "pairs")
-    ckpt = os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
-
-    e = t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.array(F.lit(1.0), _t32()).alias("embedding")
+    return (
+        _stream_index(spark, sf_dir, _ivf_stream, "stream_vec_index")
+        .select("id_a", "id_b")
+        .distinct()
     )
-    cells, assign_even = ivf_build(
-        e.filter(F.col("vec_id") % 2 == 0), n_cells=8, seed_hash="md5"
-    )
-    # Bootstrap under the same (cell_id, batch_id) layout the sink
-    # appends with (batch_id = -1 marks pre-stream history).
-    assign_even.withColumn("batch_id", F.lit(-1)).repartition(
-        8, F.col("cell_id")
-    ).write.mode("overwrite").partitionBy("cell_id", "batch_id").parquet(
-        idx_dir
-    )
-
-    # Stage the stream: odd vectors as two files → two micro-batches.
-    vecs = e.filter(F.col("vec_id") % 2 == 1)
-    vecs.filter(F.col("vec_id") % 4 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src_dir)
-    vecs.filter(F.col("vec_id") % 4 == 3).coalesce(1).write.mode(
-        "append"
-    ).parquet(src_dir)
-
-    stream = (
-        spark.readStream.schema(vecs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            incremental_vector_sink(idx_dir, out_dir, cells)
-        )
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.read.parquet(out_dir).select("id_a", "id_b").distinct()
 
 
 def incremental_srp_sink(
@@ -1619,7 +1519,6 @@ def incremental_srp_sink(
     with the whole-corpus band join — the text sink's
     ``max_bucket_size`` contract verbatim;
     stream_srp_index_probe_guarded registers the guarded form."""
-    from process_spark.queries.vectors import _ann_banded
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         ss = batch_df.sparkSession
@@ -1679,51 +1578,34 @@ def incremental_srp_sink(
         if max_bucket_size is not None:
             # same census contract as the text and vector sinks
             pairs = attach_census(pairs, census)
-        pairs = pairs.withColumn("batch_id", F.lit(batch_id))
-        pairs.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("batch_id").parquet(out_dir)
+        _write_batch(pairs, out_dir, batch_id)
         # append skips vectors already sealed into batch_id = -1 —
         # re-appending them under batch_id = B would duplicate index
         # rows (and double future shared-band counts) permanently
-        bidx.join(F.broadcast(sealed_own), "vec_id", "left_anti").withColumn(
-            "batch_id", F.lit(batch_id)
-        ).repartition(64, F.col("band_idx")).write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("band_idx", "batch_id").parquet(idx_dir)
-        ss.catalog.refreshByPath(idx_dir)
+        _write_batch(
+            bidx.join(F.broadcast(sealed_own), "vec_id", "left_anti"),
+            idx_dir, batch_id, *_SRP_LAYOUT,
+        )
 
     return sink
 
 
-@register(
-    "stream_srp_index_probe",
-    # Batch-twin oracle = the whole-corpus SRP band-collision join
-    # (vec_ann_srp_bucketed's bb relation self-joined with shared-band
-    # counts), restricted to pairs with at least one streamed (odd)
-    # member — the same batch-count-invariance argument as the MinHash
-    # and IVF streaming sinks: same-batch pairs from the self-join,
-    # cross-batch pairs from the later batch's probe, each exactly
-    # once, so the summed counts equal the static join's.
-    oracle="""
-    WITH planes(p_idx, w) AS (VALUES
-      {pool}
-    ),
-    bands(band_idx, sel) AS (VALUES
-      {bandsel}
-    ),
-    sig AS (
-      SELECT e.vec_id,
-             SUM(CASE WHEN {odot} > 0
-                      THEN (CAST(1 AS BIGINT) << p.p_idx) ELSE 0 END) AS sig
-      FROM embeddings e CROSS JOIN planes p
-      GROUP BY e.vec_id
-    ),
-    bb AS (
-      SELECT s.vec_id, b.band_idx,
-             CAST({obucket} AS BIGINT) AS bucket
-      FROM sig s CROSS JOIN bands b
-    )
+def _srp_stream(spark, sf_dir, index, pairs, cap):
+    """The SRP vector kind of :func:`_stream_index`: history = the
+    even vec_ids banded through the shared 112-band pool."""
+    e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    history = _ann_banded(e.filter(F.col("vec_id") % 2 == 0))
+    sink = incremental_srp_sink(index, pairs, max_bucket_size=cap)
+    rows = e.filter(F.col("vec_id") % 2 == 1)
+    return rows, "vec_id", history, _SRP_LAYOUT, sink
+
+
+#: Batch-twin oracle of the unguarded SRP streams = the whole-corpus
+#: SRP band-collision join (vec_ann_srp_bucketed's bb relation
+#: self-joined with shared-band counts), restricted to pairs with at
+#: least one streamed (odd) member.
+_O_STREAM_SRP = f"""
+    WITH {_O_SRP_BB}
     SELECT a.vec_id AS id_a, b.vec_id AS id_b,
            CAST(COUNT(*) AS BIGINT) AS n_shared_bands
     FROM bb a JOIN bb b
@@ -1731,12 +1613,16 @@ def incremental_srp_sink(
      AND a.vec_id < b.vec_id
     WHERE a.vec_id % 2 = 1 OR b.vec_id % 2 = 1
     GROUP BY 1, 2
-    """.format(
-        pool=_ANN_POOL_VALUES,
-        bandsel=_ANN_BAND_VALUES,
-        odot=_o_dot("e.embedding", "p.w"),
-        obucket=_O_ANN_BUCKET,
-    ),
+    """
+
+
+@register(
+    "stream_srp_index_probe",
+    # The same batch-count-invariance argument as the MinHash and IVF
+    # streaming sinks: same-batch pairs from the self-join, cross-batch
+    # pairs from the later batch's probe, each exactly once, so the
+    # summed counts equal the static join's.
+    oracle=_O_STREAM_SRP,
 )
 def stream_srp_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O68+O95 — the SRP ANN index under CONTINUOUS ingestion: history
@@ -1751,50 +1637,8 @@ def stream_srp_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact same theorem the MinHash streaming sink is graded on, now
     holding for the SRP family too. Signatures are computed once per
     INGESTED vector; a probe never re-bands history."""
-    import shutil
-
-    from process_spark.queries.io_udf import _SCRATCH
-    from process_spark.queries.vectors import _ann_banded
-
-    base = os.path.join(_SCRATCH, "stream_srp_index")
-    idx_dir = os.path.join(base, "index")
-    src_dir = os.path.join(base, "incoming")
-    out_dir = os.path.join(base, "pairs")
-    ckpt = os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
-
-    e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    _ann_banded(e.filter(F.col("vec_id") % 2 == 0)).withColumn(
-        "batch_id", F.lit(-1)
-    ).repartition(64, F.col("band_idx")).write.mode("overwrite").partitionBy(
-        "band_idx", "batch_id"
-    ).parquet(idx_dir)
-
-    vecs = e.filter(F.col("vec_id") % 2 == 1)
-    vecs.filter(F.col("vec_id") % 4 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src_dir)
-    vecs.filter(F.col("vec_id") % 4 == 3).coalesce(1).write.mode(
-        "append"
-    ).parquet(src_dir)
-
-    stream = (
-        spark.readStream.schema(vecs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(incremental_srp_sink(idx_dir, out_dir))
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return (
-        spark.read.parquet(out_dir)
-        .groupBy("id_a", "id_b")
-        .agg(F.sum("n_shared_bands").alias("n_shared_bands"))
+    return _summed_bands(
+        _stream_index(spark, sf_dir, _srp_stream, "stream_srp_index")
     )
 
 
@@ -1873,57 +1717,9 @@ def stream_semantic_dedup_probe_guarded(
     probe vectors per batch over 8 cells → the hot cells exceed 20;
     3 cells cut per batch) while the pair output stays oracle-exact —
     the x10 probe in SCALE.md shows the bound doing its job."""
-    import shutil
-
-    from process_spark.operators.similarity import ivf_build
-    from process_spark.queries.io_udf import _SCRATCH
-    from process_spark.queries.vectors import _t32
-
-    base = os.path.join(_SCRATCH, "stream_vec_index_guarded")
-    idx_dir = os.path.join(base, "index")
-    src_dir = os.path.join(base, "incoming")
-    out_dir = os.path.join(base, "pairs")
-    ckpt = os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
-
-    e = t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.array(F.lit(1.0), _t32()).alias("embedding")
-    )
-    cells, assign_even = ivf_build(
-        e.filter(F.col("vec_id") % 2 == 0), n_cells=8, seed_hash="md5"
-    )
-    assign_even.withColumn("batch_id", F.lit(-1)).repartition(
-        8, F.col("cell_id")
-    ).write.mode("overwrite").partitionBy("cell_id", "batch_id").parquet(
-        idx_dir
-    )
-
-    vecs = e.filter(F.col("vec_id") % 2 == 1)
-    vecs.filter(F.col("vec_id") % 4 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src_dir)
-    vecs.filter(F.col("vec_id") % 4 == 3).coalesce(1).write.mode(
-        "append"
-    ).parquet(src_dir)
-
-    stream = (
-        spark.readStream.schema(vecs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            incremental_vector_sink(
-                idx_dir, out_dir, cells, max_block_size=20
-            )
-        )
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.read.parquet(out_dir).select("id_a", "id_b", "n_cut_cells")
+    return _stream_index(
+        spark, sf_dir, _ivf_stream, "stream_vec_index_guarded", cap=20
+    ).select("id_a", "id_b", "n_cut_cells")
 
 
 @register(
@@ -1935,18 +1731,7 @@ def stream_semantic_dedup_probe_guarded(
     # file, batch_ids sealed to -1) and the resumed wave's probe of the
     # sealed index are storage/lifecycle details the pair union is
     # invariant to — which is exactly what this hash checks.
-    oracle=f"""
-    WITH {_ivf_md5_ctes(build_where="vec_id % 2 = 0")},
-    pairs AS (
-      SELECT a.vec_id AS id_a, b.vec_id AS id_b
-      FROM assign1 a JOIN assign1 b
-        ON a.cell_id = b.cell_id AND a.vec_id < b.vec_id
-      WHERE (1 + a.tv * b.tv)
-              / (sqrt(1 + a.tv * a.tv) * sqrt(1 + b.tv * b.tv)) >= 0.9995
-        AND (a.vec_id % 2 = 1 OR b.vec_id % 2 = 1)
-    )
-    SELECT id_a, id_b FROM pairs
-    """,
+    oracle=_O_STREAM_IVF,
 )
 def stream_semantic_dedup_compacted(
     spark: SparkSession, sf_dir: str
@@ -1964,61 +1749,14 @@ def stream_semantic_dedup_compacted(
     Completes the compacted-resume column of the lifecycle matrix for
     the IVF family (the text family has stream_dedup_index_compacted;
     SRP gets its twin below)."""
-    import shutil
-
-    from process_spark.operators.dedup import compact_partitioned_index
-    from process_spark.operators.similarity import ivf_build
-    from process_spark.queries.io_udf import _SCRATCH
-    from process_spark.queries.vectors import _t32
-
-    base = os.path.join(_SCRATCH, "stream_vec_index_compacted")
-    idx_dir = os.path.join(base, "index")
-    src_dir = os.path.join(base, "incoming")
-    out_dir = os.path.join(base, "pairs")
-    ckpt = os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
-
-    e = t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.array(F.lit(1.0), _t32()).alias("embedding")
-    )
-    cells, assign_even = ivf_build(
-        e.filter(F.col("vec_id") % 2 == 0), n_cells=8, seed_hash="md5"
-    )
-    assign_even.withColumn("batch_id", F.lit(-1)).repartition(
-        8, F.col("cell_id")
-    ).write.mode("overwrite").partitionBy("cell_id", "batch_id").parquet(
-        idx_dir
-    )
-
-    vecs = e.filter(F.col("vec_id") % 2 == 1)
-
-    def run_wave() -> None:
-        stream = (
-            spark.readStream.schema(vecs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
+    return (
+        _stream_index(
+            spark, sf_dir, _ivf_stream, "stream_vec_index_compacted",
+            compacted=True,
         )
-        q = (
-            stream.writeStream.foreachBatch(
-                incremental_vector_sink(idx_dir, out_dir, cells)
-            )
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-
-    vecs.filter(F.col("vec_id") % 4 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src_dir)
-    run_wave()
-    compact_partitioned_index(spark, idx_dir, ["cell_id"])
-    vecs.filter(F.col("vec_id") % 4 == 3).coalesce(1).write.mode(
-        "append"
-    ).parquet(src_dir)
-    run_wave()
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.read.parquet(out_dir).select("id_a", "id_b").distinct()
+        .select("id_a", "id_b")
+        .distinct()
+    )
 
 
 @register(
@@ -2026,38 +1764,7 @@ def stream_semantic_dedup_compacted(
     # stream_srp_index_probe's whole-corpus band-collision relation
     # verbatim — the restart + compaction between waves must not move
     # a single shared-band count.
-    oracle="""
-    WITH planes(p_idx, w) AS (VALUES
-      {pool}
-    ),
-    bands(band_idx, sel) AS (VALUES
-      {bandsel}
-    ),
-    sig AS (
-      SELECT e.vec_id,
-             SUM(CASE WHEN {odot} > 0
-                      THEN (CAST(1 AS BIGINT) << p.p_idx) ELSE 0 END) AS sig
-      FROM embeddings e CROSS JOIN planes p
-      GROUP BY e.vec_id
-    ),
-    bb AS (
-      SELECT s.vec_id, b.band_idx,
-             CAST({obucket} AS BIGINT) AS bucket
-      FROM sig s CROSS JOIN bands b
-    )
-    SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           CAST(COUNT(*) AS BIGINT) AS n_shared_bands
-    FROM bb a JOIN bb b
-      ON a.band_idx = b.band_idx AND a.bucket = b.bucket
-     AND a.vec_id < b.vec_id
-    WHERE a.vec_id % 2 = 1 OR b.vec_id % 2 = 1
-    GROUP BY 1, 2
-    """.format(
-        pool=_ANN_POOL_VALUES,
-        bandsel=_ANN_BAND_VALUES,
-        odot=_o_dot("e.embedding", "p.w"),
-        obucket=_O_ANN_BUCKET,
-    ),
+    oracle=_O_STREAM_SRP,
 )
 def stream_srp_index_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O68+O95 — the SRP family's compacted-resume lifecycle (the last
@@ -2069,58 +1776,11 @@ def stream_srp_index_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec_ids (round-10 hygiene); the oracle — the whole-corpus
     band-collision join with summed shared-band counts — proves the
     maintenance moved bytes, never candidates."""
-    import shutil
-
-    from process_spark.operators.dedup import compact_partitioned_index
-    from process_spark.queries.io_udf import _SCRATCH
-    from process_spark.queries.vectors import _ann_banded
-
-    base = os.path.join(_SCRATCH, "stream_srp_index_compacted")
-    idx_dir = os.path.join(base, "index")
-    src_dir = os.path.join(base, "incoming")
-    out_dir = os.path.join(base, "pairs")
-    ckpt = os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
-
-    e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    _ann_banded(e.filter(F.col("vec_id") % 2 == 0)).withColumn(
-        "batch_id", F.lit(-1)
-    ).repartition(64, F.col("band_idx")).write.mode("overwrite").partitionBy(
-        "band_idx", "batch_id"
-    ).parquet(idx_dir)
-
-    vecs = e.filter(F.col("vec_id") % 2 == 1)
-
-    def run_wave() -> None:
-        stream = (
-            spark.readStream.schema(vecs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
+    return _summed_bands(
+        _stream_index(
+            spark, sf_dir, _srp_stream, "stream_srp_index_compacted",
+            compacted=True,
         )
-        q = (
-            stream.writeStream.foreachBatch(
-                incremental_srp_sink(idx_dir, out_dir)
-            )
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-
-    vecs.filter(F.col("vec_id") % 4 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src_dir)
-    run_wave()
-    compact_partitioned_index(spark, idx_dir, ["band_idx"])
-    vecs.filter(F.col("vec_id") % 4 == 3).coalesce(1).write.mode(
-        "append"
-    ).parquet(src_dir)
-    run_wave()
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return (
-        spark.read.parquet(out_dir)
-        .groupBy("id_a", "id_b")
-        .agg(F.sum("n_shared_bands").alias("n_shared_bands"))
     )
 
 
@@ -2213,57 +1873,9 @@ def stream_dedup_index_probe_guarded(
     capping is batch-composition-dependent, so the batch-count-
     invariance theorem of the unguarded twin deliberately does NOT
     apply."""
-    import shutil
-
-    from process_spark.operators.dedup import minhash_band_index
-    from process_spark.queries.io_udf import _SCRATCH
-
-    kw = dict(
-        num_hashes=64, bands=16, base_hash="md5", band_key="concat",
-        n_buckets=16,
-    )
-    base = os.path.join(_SCRATCH, "stream_dedup_index_guarded")
-    idx_dir = os.path.join(base, "index")
-    src_dir = os.path.join(base, "incoming")
-    out_dir = os.path.join(base, "pairs")
-    ckpt = os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
-
-    d = t(spark, sf_dir, "documents")
-    minhash_band_index(
-        d.filter(F.col("doc_id") % 2 == 0), "doc_id", "text", **kw
-    ).withColumn("batch_id", F.lit(-1)).repartition(
-        64, F.col("band_idx"), F.col("band_bucket")
-    ).write.mode("overwrite").partitionBy(
-        "band_idx", "band_bucket", "batch_id"
-    ).parquet(idx_dir)
-
-    docs = d.select("doc_id", "text")
-    docs.filter(F.col("doc_id") % 4 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src_dir)
-    docs.filter(F.col("doc_id") % 4 == 3).coalesce(1).write.mode(
-        "append"
-    ).parquet(src_dir)
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            incremental_dedup_sink(idx_dir, out_dir, kw, max_bucket_size=3)
-        )
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.read.parquet(out_dir).select(
-        "id_a", "id_b", "n_shared_bands", "n_cut_buckets"
-    )
+    return _stream_index(
+        spark, sf_dir, _minhash_stream, "stream_dedup_index_guarded", cap=3
+    ).select("id_a", "id_b", "n_shared_bands", "n_cut_buckets")
 
 
 @register(
@@ -2274,25 +1886,8 @@ def stream_dedup_index_probe_guarded(
     # census rides every row, all-cut batches emit the sentinel. The
     # cap ENGAGES at sf0.01 (hot buckets hold 10-11 of a ~125-vector
     # batch).
-    oracle="""
-    WITH planes(p_idx, w) AS (VALUES
-      {pool}
-    ),
-    bands(band_idx, sel) AS (VALUES
-      {bandsel}
-    ),
-    sig AS (
-      SELECT e.vec_id,
-             SUM(CASE WHEN {odot} > 0
-                      THEN (CAST(1 AS BIGINT) << p.p_idx) ELSE 0 END) AS sig
-      FROM embeddings e CROSS JOIN planes p
-      GROUP BY e.vec_id
-    ),
-    bb AS (
-      SELECT s.vec_id, b.band_idx,
-             CAST({obucket} AS BIGINT) AS bucket
-      FROM sig s CROSS JOIN bands b
-    ),
+    oracle=f"""
+    WITH {_O_SRP_BB},
     hist0 AS (SELECT * FROM bb WHERE vec_id % 2 = 0),
     b1 AS (SELECT * FROM bb WHERE vec_id % 4 = 1),
     b2 AS (SELECT * FROM bb WHERE vec_id % 4 = 3),
@@ -2346,12 +1941,7 @@ def stream_dedup_index_probe_guarded(
     SELECT CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
            CAST(NULL AS BIGINT), cut2.n_cut
     FROM cut2 WHERE cut2.n_cut > 0 AND NOT EXISTS (SELECT 1 FROM p2)
-    """.format(
-        pool=_ANN_POOL_VALUES,
-        bandsel=_ANN_BAND_VALUES,
-        odot=_o_dot("e.embedding", "p.w"),
-        obucket=_O_ANN_BUCKET,
-    ),
+    """,
 )
 def stream_srp_index_probe_guarded(
     spark: SparkSession, sf_dir: str
@@ -2367,48 +1957,6 @@ def stream_srp_index_probe_guarded(
     of 10-11 vectors, so several hundred groups are cut per batch and
     the candidate set visibly shrinks vs the unguarded twin — all of
     it replayed exactly by the pinned-two-batch oracle."""
-    import shutil
-
-    from process_spark.queries.io_udf import _SCRATCH
-    from process_spark.queries.vectors import _ann_banded
-
-    base = os.path.join(_SCRATCH, "stream_srp_index_guarded")
-    idx_dir = os.path.join(base, "index")
-    src_dir = os.path.join(base, "incoming")
-    out_dir = os.path.join(base, "pairs")
-    ckpt = os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
-
-    e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    _ann_banded(e.filter(F.col("vec_id") % 2 == 0)).withColumn(
-        "batch_id", F.lit(-1)
-    ).repartition(64, F.col("band_idx")).write.mode("overwrite").partitionBy(
-        "band_idx", "batch_id"
-    ).parquet(idx_dir)
-
-    vecs = e.filter(F.col("vec_id") % 2 == 1)
-    vecs.filter(F.col("vec_id") % 4 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src_dir)
-    vecs.filter(F.col("vec_id") % 4 == 3).coalesce(1).write.mode(
-        "append"
-    ).parquet(src_dir)
-
-    stream = (
-        spark.readStream.schema(vecs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            incremental_srp_sink(idx_dir, out_dir, max_bucket_size=8)
-        )
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.read.parquet(out_dir).select(
-        "id_a", "id_b", "n_shared_bands", "n_cut_buckets"
-    )
+    return _stream_index(
+        spark, sf_dir, _srp_stream, "stream_srp_index_guarded", cap=8
+    ).select("id_a", "id_b", "n_shared_bands", "n_cut_buckets")

@@ -295,6 +295,27 @@ _ANN_BAND_VALUES = ",\n      ".join(
 _O_ANN_BUCKET = " + ".join(
     f"(((s.sig >> b.sel[{j + 1}]) & 1) << {j})" for j in range(6)
 )
+#: The oracle preamble of the 112-band SRP relation: pool planes →
+#: band selections → 63-bit signatures → ``bb(vec_id, band_idx,
+#: bucket)``, the DuckDB twin of :func:`_ann_banded`.
+_O_SRP_BB = f"""planes(p_idx, w) AS (VALUES
+      {_ANN_POOL_VALUES}
+    ),
+    bands(band_idx, sel) AS (VALUES
+      {_ANN_BAND_VALUES}
+    ),
+    sig AS (
+      SELECT e.vec_id,
+             SUM(CASE WHEN {_o_dot('e.embedding', 'p.w')} > 0
+                      THEN (CAST(1 AS BIGINT) << p.p_idx) ELSE 0 END) AS sig
+      FROM embeddings e CROSS JOIN planes p
+      GROUP BY e.vec_id
+    ),
+    bb AS (
+      SELECT s.vec_id, b.band_idx,
+             CAST({_O_ANN_BUCKET} AS BIGINT) AS bucket
+      FROM sig s CROSS JOIN bands b
+    )"""
 
 
 def _ann_banded(e: DataFrame) -> DataFrame:
@@ -518,24 +539,7 @@ def ann_srp_tune(
 @register(
     "vec_ann_srp_bucketed",
     oracle=f"""
-    WITH planes(p_idx, w) AS (VALUES
-      {_ANN_POOL_VALUES}
-    ),
-    bands(band_idx, sel) AS (VALUES
-      {_ANN_BAND_VALUES}
-    ),
-    sig AS (
-      SELECT e.vec_id,
-             SUM(CASE WHEN {_o_dot('e.embedding', 'p.w')} > 0
-                      THEN (CAST(1 AS BIGINT) << p.p_idx) ELSE 0 END) AS sig
-      FROM embeddings e CROSS JOIN planes p
-      GROUP BY e.vec_id
-    ),
-    bb AS (
-      SELECT s.vec_id, b.band_idx,
-             CAST({_O_ANN_BUCKET} AS BIGINT) AS bucket
-      FROM sig s CROSS JOIN bands b
-    ),
+    WITH {_O_SRP_BB},
     qb AS (
       SELECT vec_id AS q_id, band_idx, bucket FROM bb WHERE vec_id % 100 = 0
     ),
@@ -2281,24 +2285,7 @@ _SRP_STORED_PROBE_BANDS = 56
     # semantics-free: however many appends and compactions produced
     # the files, the probe equals the plain in-memory band join.
     oracle=f"""
-    WITH planes(p_idx, w) AS (VALUES
-      {_ANN_POOL_VALUES}
-    ),
-    bands(band_idx, sel) AS (VALUES
-      {_ANN_BAND_VALUES}
-    ),
-    sig AS (
-      SELECT e.vec_id,
-             SUM(CASE WHEN {_o_dot('e.embedding', 'p.w')} > 0
-                      THEN (CAST(1 AS BIGINT) << p.p_idx) ELSE 0 END) AS sig
-      FROM embeddings e CROSS JOIN planes p
-      GROUP BY e.vec_id
-    ),
-    bb AS (
-      SELECT s.vec_id, b.band_idx,
-             CAST({_O_ANN_BUCKET} AS BIGINT) AS bucket
-      FROM sig s CROSS JOIN bands b
-    ),
+    WITH {_O_SRP_BB},
     qb AS (
       SELECT vec_id AS q_id, band_idx, bucket FROM bb WHERE vec_id % 100 = 0
     ),

@@ -1270,3 +1270,32 @@ def test_mg_compact_state_crash_ordering(spark, tmp_path):
     # recovery: rename back, state intact
     assert fs.rename(HPath(sd + "__precompact"), HPath(sd))
     assert mg_load_state(spark, sd, cap) == before
+
+
+def test_replay_resumes_batch_ids_across_waves(spark, tmp_path):
+    """``streaming.replay``'s contract: each staged DataFrame is one
+    micro-batch, a later wave RESUMES the checkpoint (batch ids
+    continue), ``between`` runs once, after the first wave's last
+    batch, and the checkpoint is gone afterwards."""
+    import os
+
+    from process_spark.queries.streaming import replay
+
+    a, b, c = (
+        spark.createDataFrame([(i, tag)], "doc_id long, text string")
+        for i, tag in ((1, "a"), (2, "b"), (3, "c"))
+    )
+    seen = []
+    between_after = []
+
+    def sink(batch_df, batch_id):
+        seen.append((batch_id, [r["text"] for r in batch_df.collect()]))
+
+    def between():
+        between_after.append([bid for bid, _ in seen])
+
+    base = str(tmp_path)
+    replay(spark, base, [[a, b], [c]], sink, between=between)
+    assert seen == [(0, ["a"]), (1, ["b"]), (2, ["c"])]
+    assert between_after == [[0, 1]]
+    assert not os.path.exists(os.path.join(base, "ckpt"))
