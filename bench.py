@@ -78,19 +78,6 @@ HEADLINE = [
 #: 0.17s run-to-run — the r5/r6 delta sits well inside ambient
 #: variance. Named cause: measurement noise, no code change.
 #:
-#: Round-10 anchor A/B (scripts/bench_ab.py, BENCH_AB_r10.json): the
-#: headline total climbed three rounds running (r7 14.62s → r8 15.79s
-#: → r9 17.36s) with only r8's one-off A/B as evidence, so the control
-#: is now a per-round artifact: the FROZEN r8-grade snapshot (9fca1d3)
-#: re-benched in the same window as the current tree. Result: the
-#: anchor itself measures 19.73s on the common 19-query set today
-#: (vs 15.79s in its own round-8 window — that gap IS the host drift),
-#: while the current tree measures 16.77s on the same set in the same
-#: window: ratio 0.85, per-query ratios 0.70-1.06, no query above
-#: 1.06. Named cause for the cumulative "+19%": ambient host drift;
-#: current code is measurably FASTER than the r8 snapshot, not slower.
-#: Rerun each round: python scripts/bench_ab.py <anchor> r{N}.
-#:
 #: Round-8 audit of the MinHash-family drift (text_minhash_lsh_pairs
 #: 1.25→1.3-1.8s, text_lsh_hot_bucket_guard 2.01→2.2-2.7s across three
 #: r8 runs): A/B-tested by checking out the UNCHANGED r7 snapshot

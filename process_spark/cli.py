@@ -61,7 +61,8 @@ def _cmd_process(args) -> int:
 
     def _summary() -> list:
         # The summary plan runs once: the JSON write and the printed
-        # rows both read the pinned, still-sorted result.
+        # rows both read the pinned result, whose single partition
+        # sail_summary_from already sorted.
         summary = sail_summary_from(sess).localCheckpoint(eager=True)
         write_json_docs(summary, f"{args.out}/summary.json")
         return summary.collect()

@@ -168,7 +168,7 @@ def session_stats(
     )
 
 
-def detect_maneuvers(
+def tack_runs(
     df: DataFrame,
     hdg_col: str = "hdg",
     ts_col: str = "ts",
@@ -176,12 +176,13 @@ def detect_maneuvers(
     lookback: int = 5,
     threshold_deg: float = 60.0,
 ) -> DataFrame:
-    """O54 — tack/gybe detection: sustained heading change beyond
-    ``threshold_deg`` within ``lookback`` samples, deduped to one event
-    per flag run (flag-run dedup via the sessionize pattern).
-
-    Emits one row per maneuver with entry ts/hdg and the turn size.
-    """
+    """O54's window chain, without the groupBy: every row gains
+    ``__delta`` (signed heading change over ``lookback`` samples),
+    ``__flag`` (1 when ``|__delta|`` reaches ``threshold_deg``, else 0)
+    and ``__run`` (how many flag runs have started up to this row, the
+    sessionize pattern); both are NULL inside the lookback prefix. A
+    flagged row's ``__run`` is its run's id, 1..k in ts order, so
+    ``max`` over the flagged rows is the run count."""
     w = _w(partition_by, ts_col)
     prev_hdg = F.lag(F.col(hdg_col), lookback).over(w)
     # smallest signed angular difference (SURVEY.md O17)
@@ -189,15 +190,38 @@ def detect_maneuvers(
     flagged = df.withColumn("__delta", delta).withColumn(
         "__flag", (F.abs(F.col("__delta")) >= threshold_deg).cast("int")
     )
-    # run-id: new run when flag turns on
-    prev_flag = F.lag("__flag", 1, 0).over(w)
+    # run-id: new run when flag turns on. lag's default covers only the
+    # partition's first row; the lookback prefix's NULL flags must read
+    # as "off" too, or a run starting on the first flagged row gets a
+    # NULL start and splits in two.
+    prev_flag = F.coalesce(F.lag("__flag", 1).over(w), F.lit(0))
     run_start = ((F.col("__flag") == 1) & (prev_flag == 0)).cast("bigint")
     cum = Window.partitionBy(*partition_by).orderBy(ts_col).rowsBetween(
         Window.unboundedPreceding, 0
     )
-    runs = flagged.withColumn("__run", F.sum(run_start).over(cum)).filter(
-        F.col("__flag") == 1
-    )
+    return flagged.withColumn("__run", F.sum(run_start).over(cum))
+
+
+def detect_maneuvers(
+    df: DataFrame,
+    hdg_col: str = "hdg",
+    ts_col: str = "ts",
+    partition_by: Sequence[str] = (),
+    lookback: int = 5,
+    threshold_deg: float = 60.0,
+    carry: Sequence[str] = (),
+) -> DataFrame:
+    """O54 — tack/gybe detection: sustained heading change beyond
+    ``threshold_deg`` within ``lookback`` samples, deduped to one event
+    per flag run (:func:`tack_runs`).
+
+    Emits one row per maneuver with entry ts/hdg and the turn size,
+    plus each ``carry`` column's value at the run's first row (the row
+    at ``maneuver_ts``).
+    """
+    runs = tack_runs(
+        df, hdg_col, ts_col, partition_by, lookback, threshold_deg
+    ).filter(F.col("__flag") == 1)
     return runs.groupBy(*partition_by, "__run").agg(
         F.min(ts_col).alias("maneuver_ts"),
         # Peak signed turn in the run — deterministic argmax on
@@ -206,6 +230,7 @@ def detect_maneuvers(
             "__delta", F.struct(F.abs(F.col("__delta")), F.col(ts_col))
         ).alias("turn_deg"),
         F.count(F.lit(1)).alias("n_samples"),
+        *[F.min_by(c, ts_col).alias(c) for c in carry],
     ).withColumnRenamed("__run", "maneuver_id")
 
 

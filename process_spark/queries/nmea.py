@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from process_spark.functions import angles
@@ -34,6 +34,7 @@ from process_spark.operators.series import (
     pivot_signals,
     session_stats,
     sessionize,
+    tack_runs,
 )
 from process_spark.queries._util import t
 from process_spark.queries.registry import register
@@ -181,39 +182,48 @@ def pipeline_from_log(log: DataFrame, gap: str = "5 minutes") -> DataFrame:
         .withColumn("twd", angles.true_wind_direction("twa", "hdg"))
         .withColumn("vmg", angles.vmg("speed", "twa"))
     )
-    # Pin: consumers fan the wide series into 2-4 branches
-    # (maneuvers + stats; entry/exit interval joins), each of which
-    # would re-run parse→pivot→LOCF→wind math without it. ~29k rows ×
-    # 12 cols — trivially sized for a checkpoint at any scale factor.
-    # Eager because the CLI's four output chains read it concurrently:
-    # Spark has no compute lock for a block not stored yet, so a lazy
-    # pin would let their tasks race to compute the same partitions
+    # Pin: the CLI fans the wide series into four output chains
+    # (series parquet, race docs, summary, maneuver metrics), each of
+    # which would re-run parse→pivot→LOCF→wind math without it. One
+    # row per logged second — a quarter of the log's sentence count.
+    # Eager because those chains read it concurrently: Spark has no
+    # compute lock for a block not stored yet, so a lazy pin would let
+    # their tasks race to compute the same partitions
     # (write_postings_index pins before its concurrent writes likewise).
     return sessionize(
         derived, ts_col="capture_ts", gap=gap, partition_by=["day"]
     ).localCheckpoint(eager=True)
 
 
+def _sorted_tail(df: DataFrame, *cols: str) -> DataFrame:
+    """Total order for a bounded result (one row per race or tack): one
+    single-partition shuffle plus a local sort, where a global orderBy
+    would add a range-partition sample job. Not coalesce(1), which
+    would pull the window stage above it into one task."""
+    return df.repartition(1).sortWithinPartitions(*cols)
+
+
 def sail_summary_from(sess: DataFrame) -> DataFrame:
-    """Per-race summary (D4/D6) over a sessionized wide series."""
-    man = detect_maneuvers(
+    """Per-race summary (D4/D6) over a sessionized wide series. The
+    tack count is the highest flagged run id of :func:`tack_runs`, so it
+    comes out of the same ``(day, session_id)`` aggregate as the session
+    stats, behind one exchange; a race without a tack reads NULL."""
+    runs = tack_runs(
         sess, hdg_col="hdg", ts_col="capture_ts",
         partition_by=["day", "session_id"], lookback=15, threshold_deg=45.0,
     )
-    man_counts = man.groupBy("day", "session_id").agg(
-        F.count(F.lit(1)).alias("n_maneuvers"),
-    )
     summary = session_stats(
-        sess, ts_col="capture_ts", partition_by=["day"],
+        runs, ts_col="capture_ts", partition_by=["day"],
         aggs=(
             F.round(F.avg("speed"), 3).alias("avg_speed"),
             F.round(F.avg("vmg"), 3).alias("avg_vmg"),
             F.round(F.max("tws"), 3).alias("max_tws"),
+            F.max(F.when(F.col("__flag") == 1, F.col("__run"))).alias(
+                "n_maneuvers"
+            ),
         ),
     ).withColumnRenamed("n_rows", "n_seconds")
-    return summary.join(man_counts, ["day", "session_id"], "left").orderBy(
-        "day", "session_id"
-    )
+    return _sorted_tail(summary, "day", "session_id")
 
 
 @register(
@@ -310,41 +320,42 @@ def nmea_export_json_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def maneuver_metrics_from(sess: DataFrame) -> DataFrame:
-    """O55: per-tack entry/exit dynamics — join each detected maneuver
-    back to the 1 Hz series over [t−20 s, t−5 s] (entry) and
-    [t+15 s, t+30 s] (exit) windows and compare speed/VMG. Each window
-    is an equi-join on ``day`` followed by a ``capture_ts`` range
-    filter, which the optimizer folds into the join as a residual
-    predicate: every maneuver meets every 1 Hz point of its own day,
-    and only the points inside the window survive."""
-    man = detect_maneuvers(
-        sess, hdg_col="hdg", ts_col="capture_ts",
-        partition_by=["day", "session_id"], lookback=15, threshold_deg=45.0,
-    ).select("day", "session_id", "maneuver_id", "maneuver_ts", "turn_deg")
-    series = sess.select("day", "capture_ts", "speed", "vmg")
+    """O55: per-tack entry/exit dynamics — mean speed/VMG over
+    [t−20 s, t−5 s] (entry) and [t+15 s, t+30 s] (exit) around each
+    detected maneuver, and the speed lost across it. Each mean is a
+    range frame over the day's 1 Hz series ordered by epoch second,
+    computed on every row; :func:`detect_maneuvers` carries the values
+    of the run's first row (``maneuver_ts``). Frames span the whole
+    day, are inclusive at both ends and read NULL when empty. The day
+    partitioning also clusters the ``(day, session_id)`` windows and the
+    run groupBy, so the chain has one exchange.
 
-    def window_avg(off0: int, off1: int, prefix: str) -> DataFrame:
-        lo = F.col("maneuver_ts") + F.expr(f"INTERVAL {off0} SECOND")
-        hi = F.col("maneuver_ts") + F.expr(f"INTERVAL {off1} SECOND")
-        j = man.join(series, "day").filter(
-            F.col("capture_ts").between(lo, hi)
-        )
-        return j.groupBy("day", "session_id", "maneuver_id").agg(
-            F.round(F.avg("speed"), 3).alias(f"{prefix}_speed"),
-            F.round(F.avg("vmg"), 3).alias(f"{prefix}_vmg"),
-        )
+    Precondition: one series row per ``(day, capture_ts)``
+    (pipeline_from_log pivots to the truncated second), so a frame in
+    seconds is a frame in rows of distinct instants."""
+    day = Window.partitionBy("day").orderBy(F.unix_seconds("capture_ts"))
 
-    entry = window_avg(-20, -5, "entry")
-    exit_ = window_avg(15, 30, "exit")
-    return (
-        man.join(entry, ["day", "session_id", "maneuver_id"], "left")
-        .join(exit_, ["day", "session_id", "maneuver_id"], "left")
-        .withColumn(
-            "speed_loss",
-            F.round(F.col("entry_speed") - F.col("exit_speed"), 3),
-        )
-        .orderBy("day", "session_id", "maneuver_id")
+    def frame_avg(col: str, lo: int, hi: int) -> Column:
+        return F.round(F.avg(col).over(day.rangeBetween(lo, hi)), 3)
+
+    framed = sess.select(
+        "day", "session_id", "capture_ts", "hdg",
+        frame_avg("speed", -20, -5).alias("entry_speed"),
+        frame_avg("vmg", -20, -5).alias("entry_vmg"),
+        frame_avg("speed", 15, 30).alias("exit_speed"),
+        frame_avg("vmg", 15, 30).alias("exit_vmg"),
     )
+    man = detect_maneuvers(
+        framed, hdg_col="hdg", ts_col="capture_ts",
+        partition_by=["day", "session_id"], lookback=15, threshold_deg=45.0,
+        carry=["entry_speed", "entry_vmg", "exit_speed", "exit_vmg"],
+    ).select(
+        "day", "session_id", "maneuver_id", "maneuver_ts", "turn_deg",
+        "entry_speed", "entry_vmg", "exit_speed", "exit_vmg",
+    ).withColumn(
+        "speed_loss", F.round(F.col("entry_speed") - F.col("exit_speed"), 3)
+    )
+    return _sorted_tail(man, "day", "session_id", "maneuver_id")
 
 
 @register(
@@ -376,5 +387,5 @@ def maneuver_metrics_from(sess: DataFrame) -> DataFrame:
 )
 def nmea_maneuver_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O55: per-tack entry/exit dynamics over the generated day log —
-    see maneuver_metrics_from for the join shape; golden-pinned."""
+    see maneuver_metrics_from for the range-frame shape; golden-pinned."""
     return maneuver_metrics_from(_pipeline_wide(spark))

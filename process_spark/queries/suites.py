@@ -901,8 +901,8 @@ def vec_norm_dup_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT *, CAST(ABS(delta) >= 150.0 AS INT) AS flag FROM d
     ),
     p AS (
-      SELECT *, lag(flag, 1, 0) OVER (PARTITION BY user_id ORDER BY ts)
-                  AS prev_flag
+      SELECT *, coalesce(lag(flag, 1) OVER (PARTITION BY user_id ORDER BY ts),
+                         0) AS prev_flag
       FROM f
     ),
     r AS (

@@ -4,6 +4,9 @@ exact, not fuzzy."""
 
 from __future__ import annotations
 
+import contextlib
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -96,3 +99,105 @@ def test_maneuver_metrics(spark):
         assert abs(abs(r.turn_deg) - 90.0) <= 1e-9
         assert 5.9 <= r.entry_speed <= 7.0
         assert 5.9 <= r.exit_speed <= 7.0
+
+
+@pytest.fixture(scope="module")
+def fixture_series(spark):
+    """The golden day's sessionized series, pinned once for the module."""
+    from process_spark.queries.nmea import _pipeline_wide
+
+    return _pipeline_wide(spark)
+
+
+def _assert_one_row_per_instant(sess):
+    dups = sess.groupBy("day", "capture_ts").count().filter(F.col("count") > 1)
+    assert sess.count() > 0
+    assert dups.count() == 0
+
+
+def test_series_one_row_per_instant_fixture(fixture_series):
+    # maneuver_metrics_from's entry/exit frames are ranges in seconds:
+    # they count rows only if no (day, capture_ts) repeats.
+    _assert_one_row_per_instant(fixture_series)
+
+
+def test_series_one_row_per_instant_seeded_log(spark, tmp_path):
+    from perfbench import inputs
+    from process_spark.functions.nmea import split_capture_prefix
+    from process_spark.queries.nmea import pipeline_from_log
+
+    inputs.write_day_logs(inputs.day_params(1), str(tmp_path))
+    raw = spark.read.text(str(tmp_path)).select(F.col("value").alias("raw"))
+    _assert_one_row_per_instant(pipeline_from_log(split_capture_prefix(raw)))
+
+
+def _tack_at_first_flag_row(spark):
+    """A 200 s race whose first tack starts on sample 15, the first row
+    the 15-sample lookback can flag, and whose second starts on 100."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 6, 1, 10, 0, 0)
+    rows = [
+        (
+            dt.datetime(2024, 6, 1), 1, t0 + dt.timedelta(seconds=s),
+            135.0 if 15 <= s < 100 else 45.0,
+            6.0 + (s % 10) / 10, 2.5, 10.0,
+        )
+        for s in range(200)
+    ]
+    return spark.createDataFrame(
+        rows,
+        "day timestamp, session_id bigint, capture_ts timestamp, "
+        "hdg double, speed double, vmg double, tws double",
+    )
+
+
+def test_tack_on_first_flag_row_is_one_maneuver(spark):
+    from process_spark.queries.nmea import maneuver_metrics_from, sail_summary_from
+
+    sess = _tack_at_first_flag_row(spark)
+    man = maneuver_metrics_from(sess).collect()
+    assert [r.maneuver_id for r in man] == [1, 2]
+    assert [str(r.maneuver_ts)[11:] for r in man] == ["10:00:15", "10:01:40"]
+    for r in man:
+        for c in ("entry_speed", "entry_vmg", "exit_speed", "exit_vmg"):
+            assert r[c] is not None, (r.maneuver_id, c)
+    assert [r.n_maneuvers for r in sail_summary_from(sess).collect()] == [2]
+
+
+@contextlib.contextmanager
+def _jobs(spark):
+    """Collects the ids of the Spark jobs the block launches on this
+    thread."""
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex}"
+    ids: list[int] = []
+    sc.setJobGroup(group, "job budget")
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        # The status store fills from the listener bus asynchronously.
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_output_chains_job_budget(spark, fixture_series, tmp_path):
+    # Each chain is one hash exchange on day plus a one-partition sort
+    # tail (3 and 5 jobs); a join or a second exchange per chain, as in
+    # an equi-join for the entry/exit averages, breaks the budget.
+    from process_spark.queries.nmea import maneuver_metrics_from, sail_summary_from
+    from process_spark.sources.io import write_json_docs
+
+    with _jobs(spark) as man_jobs:
+        write_json_docs(
+            maneuver_metrics_from(fixture_series), str(tmp_path / "maneuvers")
+        )
+    with _jobs(spark) as summary_jobs:
+        summary = sail_summary_from(fixture_series).localCheckpoint(eager=True)
+        write_json_docs(summary, str(tmp_path / "summary"))
+        rows = summary.collect()
+    assert [r.n_maneuvers for r in rows] == [5, 4]
+    assert 0 < len(man_jobs) <= 4, man_jobs
+    assert 0 < len(summary_jobs) <= 6, summary_jobs
