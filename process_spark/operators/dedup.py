@@ -602,169 +602,93 @@ def connected_components(
     dst: str = "dst",
     vertices: DataFrame | None = None,
     id_col: str = "id",
-    max_iter: int = 20,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """Connected components by iterative min-label propagation.
-
-    The cluster-formation step of a near-dup pipeline: candidate pairs
-    (MinHash/Jaccard edges) → one component id per document, so a
-    keeper can be chosen per component. Each vertex starts labeled with
-    its own id; every iteration each vertex takes the min of its label
-    and its neighbors' labels, until a fixpoint (≤ graph diameter
-    iterations — near-dup graphs are dense and shallow, typically 2-4).
-
-    Scale shape: one shuffle per iteration (edge⋈label hash join +
-    groupBy min), label state is (vertex, long) only, and lineage is
-    cut per iteration so plans don't grow. The
-    driver only sees one count per iteration (convergence check) —
-    never the data. For graphs with huge diameter (not dedup graphs),
-    switch to alternating small-star/large-star; for dedup workloads
-    plain propagation converges faster in wall-clock.
-
-    Returns (``id_col``, component) — component = min vertex id in the
-    component; singleton vertices (if ``vertices`` given) map to
-    themselves.
-
-    ``checkpoint_dir``: reliable-checkpoint directory for the
-    per-iteration label state (see
-    :func:`~process_spark.operators.execution.cut`).
-    """
-    e = edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
-    sym = e.union(e.select(F.col("__d").alias("__s"), F.col("__s").alias("__d")))
-    # Pin the symmetrized edges PRE-PARTITIONED on the join key (__d):
-    # the checkpoint preserves the hash partitioning, so every
-    # iteration's edge⋈label join reuses it instead of re-shuffling the
-    # edge relation once per round (guide §2.4 — the edge set is the
-    # big side of a dedup graph; the label side still shuffles, but it
-    # is (vertex, long) only). Explicit partition count: the pinned
-    # partitioning must stay stable across iterations for the reuse to
-    # hold.
-    n_part = edges.sparkSession.sparkContext.defaultParallelism
-    sym = cut(sym.repartition(n_part, F.col("__d")), checkpoint_dir)
-
-    if vertices is None:
-        verts = sym.select(F.col("__s").alias("id")).distinct()
-    else:
-        verts = vertices.select(F.col(id_col).alias("id")).distinct()
-    labels = verts.withColumn("label", F.col("id"))
-
-    for _ in range(max_iter):
-        nbr_min = (
-            sym.join(labels, sym["__d"] == labels["id"])
-            .groupBy("__s")
-            .agg(F.min("label").alias("__nbr_min"))
-        )
-        new_labels = (
-            labels.join(nbr_min, labels["id"] == nbr_min["__s"], "left")
-            .select(
-                F.col("id"),
-                F.least(
-                    F.col("label"), F.coalesce(F.col("__nbr_min"), F.col("label"))
-                ).alias("label"),
-                (
-                    F.coalesce(F.col("__nbr_min"), F.col("label")) < F.col("label")
-                ).alias("__changed"),
-            )
-        )
-        # Lazy cut: the convergence count materializes it (see cut).
-        new_labels = cut(new_labels, checkpoint_dir)
-        n_changed = new_labels.filter(F.col("__changed")).count()
-        labels = new_labels.drop("__changed")
-        if n_changed == 0:
-            break
-    return labels.select(F.col("id"), F.col("label").alias("component"))
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    vertices: DataFrame | None = None,
-    id_col: str = "id",
     max_iter: int = 30,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
-    """Connected components by ALTERNATING large-star / small-star
-    (Kiveris, Lattanzi, Mirrokni, Rastogi, Vassilvitskii, "Connected
-    Components in MapReduce and Beyond", SoCC 2014 — public method):
-    the O(log n)-round twin of :func:`connected_components` for graphs
-    whose DIAMETER is large. Min-label propagation needs one round per
-    hop of the longest shortest path — fine for dedup graphs (dense,
-    shallow, converge in 2-4), hopeless for a 10k-link chain. The star
-    operations instead contract the graph geometrically:
+    """Connected components by alternating large-star / small-star
+    contraction (Kiveris, Lattanzi, Mirrokni, Rastogi, Vassilvitskii,
+    "Connected Components in MapReduce and Beyond", SoCC 2014).
+
+    The cluster-formation step of a near-dup pipeline: candidate pairs
+    (MinHash/Jaccard edges) → one component id per document, so a
+    keeper can be chosen per component. Each round contracts the graph
+    geometrically, so the round count is O(log n) whatever the
+    diameter: a dense, shallow dedup graph takes a few rounds, and so
+    does a long near-dup chain from sliding boilerplate.
 
       large-star: every node's HIGHER neighbors re-attach to the
       minimum of its closed neighborhood;
       small-star: every node and its LOWER neighbors re-attach to
       that minimum.
 
-    Each is one groupBy-min + one join over the current edge set; the
-    edge count never grows, and the alternation provably converges to
-    a forest of stars whose centers are the component minima. Result
-    schema matches :func:`connected_components` exactly
-    ((``id_col``, component), singletons map to themselves), so the
-    two are drop-in interchangeable — same oracle, same consumers.
-    Convergence is detected by edge-set fixpoint (two bounded counts
-    per round); lineage is cut per round, with the same
-    ``checkpoint_dir`` contract as the propagation twin."""
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    e = cut(e, checkpoint_dir, eager=True)
+    Each star step is a window min per node, and the edge count never
+    grows. Small-star edges point from high id to low id, so the edge
+    set is at its fixpoint exactly when it is a forest of stars, each
+    centered on its component's minimum. A round is one Spark action:
+    the check that no star-forest violation exists (a node with two
+    edges, or an edge into a node that has one of its own) also fills
+    the round's lineage cut. The driver sees at most one violation
+    row.
 
-    converged = e.limit(1).count() == 0  # no edges → trivially a forest
-    for _ in range(max_iter):
-        # large-star: m(u) = min(N(u) ∪ {u}); emit (v, m(u)) for v > u
-        sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = sym.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
+    Returns (``id``, component): component = min vertex id in the
+    component; singleton vertices (if ``vertices`` given) map to
+    themselves. Raises when ``max_iter`` rounds do not reach the
+    fixpoint: short of it a node can still carry edges to different
+    centers, and its labels would be wrong. Rounds grow with log n: in
+    a plain-Python model of these two steps a 100,000-link chain takes
+    17, so the default 30 leaves headroom.
+
+    ``checkpoint_dir``: reliable-checkpoint directory for the
+    per-round edge set (see
+    :func:`~process_spark.operators.execution.cut`).
+    """
+
+    def pairs(*cols: tuple[str, str]) -> Column:
+        return F.inline(
+            F.array(
+                *(F.struct(F.col(a).alias("u"), F.col(b).alias("v")) for a, b in cols)
+            )
         )
+
+    by_u = Window.partitionBy("u")
+    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).filter(
+        F.col("u") != F.col("v")
+    )
+    for _ in range(max_iter):
+        # large-star: m(u) = min(N(u) ∪ {u}); (v, m(u)) for every v > u
         large = (
-            sym.join(mins, "u")
+            e.select(pairs(("u", "v"), ("v", "u")))
+            .withColumn("m", F.least("u", F.min("v").over(by_u)))
             .filter(F.col("v") > F.col("u"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
         )
-        # small-star over hi→lo directed edges: m(u) = min of the
-        # lower neighborhood; emit (v, m) for every lower neighbor v
-        # and (u, m) for the center
-        d = large.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        ).distinct()
-        smins = d.groupBy("u").agg(F.min("v").alias("m"))
+        # small-star: m(u) = min of u's lower neighbors; (v, m) for
+        # each of them and (u, m) for u itself
         small = (
-            d.join(smins, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(smins.select(F.col("u"), F.col("m").alias("v")))
+            large.withColumn("m", F.min("v").over(by_u))
+            .select(pairs(("v", "m"), ("u", "m")))
             .filter(F.col("u") != F.col("v"))
             .distinct()
         )
-        small = cut(small, checkpoint_dir, eager=True)
-        # fixpoint: the edge SET is unchanged (two bounded counts —
-        # the driver never sees edges, only the two scalars)
-        if (
-            small.exceptAll(e).limit(1).count() == 0
-            and e.exceptAll(small).limit(1).count() == 0
-        ):
-            e = small
-            converged = True
-            break
-        e = small
-
-    if not converged:
-        # On a non-fixpoint edge set a node can still carry several
-        # edges with CONFLICTING labels — emitting them would produce
-        # duplicate (id, component) rows silently. Fail loudly instead
-        # of returning a wrong labeling: max_iter=30 covers any graph
-        # a 2^30-node cluster could hold (rounds are O(log n)).
-        raise RuntimeError(
-            "connected_components_star did not reach the star-forest "
-            f"fixpoint within max_iter={max_iter} rounds; raise max_iter"
+        e = cut(small, checkpoint_dir)
+        # a star forest: no node with an edge to a lower one has a
+        # second edge
+        violations = (
+            e.select(pairs(("u", "v"), ("v", "u")))
+            .groupBy("u")
+            .agg(F.min("v").alias("lo"), F.count("*").alias("deg"))
+            .filter((F.col("lo") < F.col("u")) & (F.col("deg") > 1))
         )
+        # not limit(1).count(): a count over a limit compiles four
+        # generated classes again on every warm run
+        if violations.isEmpty():
+            break
+    else:
+        raise RuntimeError(
+            "connected_components did not reach the star-forest fixpoint "
+            f"within max_iter={max_iter} rounds; raise max_iter"
+        )
+
     labels = e.select(F.col("u").alias("id"), F.col("v").alias("component"))
     if vertices is None:
         verts = (

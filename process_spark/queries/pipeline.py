@@ -108,6 +108,29 @@ def pipeline_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KEEPER_BLOCK_CAP = 64
 
 
+def _keepers(edges: DataFrame, docs: DataFrame) -> DataFrame:
+    """Components of the (id_a, id_b) near-dup ``edges`` over ``docs``
+    and one keeper per component by (longest text, lowest doc_id):
+    (doc_id, component, keeper_id, is_keeper)."""
+    comp = connected_components(
+        edges, src="id_a", dst="id_b", vertices=docs, id_col="doc_id"
+    ).withColumnRenamed("id", "doc_id")
+    w = Window.partitionBy("component").orderBy(
+        F.col("n_chars").desc(), F.col("doc_id")
+    )
+    return (
+        comp.join(docs.select("doc_id", "n_chars"), "doc_id")
+        .withColumn("rn", F.row_number().over(w))
+        .withColumn("keeper_id", F.first("doc_id").over(w))
+        .select(
+            "doc_id",
+            "component",
+            "keeper_id",
+            (F.col("rn") == 1).alias("is_keeper"),
+        )
+    )
+
+
 @register(
     "pipeline_dedup_keeper",
     oracle=f"""
@@ -194,24 +217,7 @@ def pipeline_dedup_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
         min_jaccard=0.2,
         max_block_size=_KEEPER_BLOCK_CAP,
     )
-    comp = connected_components(
-        edges, src="id_a", dst="id_b", vertices=d, id_col="doc_id"
-    ).withColumnRenamed("id", "doc_id")
-    w = Window.partitionBy("component").orderBy(
-        F.col("n_chars").desc(), F.col("doc_id")
-    )
-    return (
-        comp.join(d.select("doc_id", "n_chars"), "doc_id")
-        .withColumn("rn", F.row_number().over(w))
-        .withColumn("keeper_id", F.first("doc_id").over(w))
-        .select(
-            "doc_id",
-            "component",
-            "keeper_id",
-            (F.col("rn") == 1).alias("is_keeper"),
-        )
-        .crossJoin(F.broadcast(skipcnt))  # 1-row skip census on every row
-    )
+    return _keepers(edges, d).crossJoin(F.broadcast(skipcnt))  # 1-row census
 
 
 def _keeper_lsh_oracle(max_bucket_size: int) -> str:
@@ -277,13 +283,13 @@ def pipeline_dedup_keeper_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     guarded banded MinHash LSH candidate pairs (equi-join on
     (band_idx, band_key), per-task work bounded at cap² by
     construction — NOT per-block all-pairs Jaccard, whose O(n²)
-    blocks grow with the corpus) → distributed min-label connected
-    components → one canonical keeper per component by (longest text,
-    lowest doc_id). This is the chain a 100 TB dedup pass actually
-    writes out: every stage is the registered scale path, and DuckDB
-    replays all three (guard census included) as one unit.
-    pipeline_dedup_keeper stays as the exact-Jaccard oracle anchor on
-    a sampled population."""
+    blocks grow with the corpus) → distributed connected components
+    (star contraction) → one canonical keeper per component by
+    (longest text, lowest doc_id). This is the chain a 100 TB dedup
+    pass actually writes out: every stage is the registered scale
+    path, and DuckDB replays all three (guard census included) as one
+    unit. pipeline_dedup_keeper stays as the exact-Jaccard oracle
+    anchor on a sampled population."""
     d = t(spark, sf_dir, "documents").filter(F.col("doc_id") % 2 == 0)
     edges = minhash_lsh_pairs(
         d,
@@ -295,23 +301,7 @@ def pipeline_dedup_keeper_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         band_key="concat",
         max_bucket_size=_KEEPER_LSH_CAP,
     ).filter(F.col("id_a").isNotNull())  # drop the all-skipped sentinel
-    comp = connected_components(
-        edges, src="id_a", dst="id_b", vertices=d, id_col="doc_id"
-    ).withColumnRenamed("id", "doc_id")
-    w = Window.partitionBy("component").orderBy(
-        F.col("n_chars").desc(), F.col("doc_id")
-    )
-    return (
-        comp.join(d.select("doc_id", "n_chars"), "doc_id")
-        .withColumn("rn", F.row_number().over(w))
-        .withColumn("keeper_id", F.first("doc_id").over(w))
-        .select(
-            "doc_id",
-            "component",
-            "keeper_id",
-            (F.col("rn") == 1).alias("is_keeper"),
-        )
-    )
+    return _keepers(edges, d)
 
 
 @register(
@@ -973,7 +963,7 @@ def pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     feeding the offsets) — the places where real pipelines silently
     lose or duplicate documents. Scale shape: no stage introduces
     anything beyond its standalone plan (guarded equi-join, per-
-    iteration bounded CC shuffles, one per-source window; the sharded
+    round bounded CC shuffles, one per-source window; the sharded
     pack variant is the drop-in when one source stream outgrows a
     task)."""
     d = t(spark, sf_dir, "documents")
@@ -998,18 +988,7 @@ def pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
         band_key="concat",
         max_bucket_size=_KEEPER_LSH_CAP,
     ).filter(F.col("id_a").isNotNull())  # drop the all-skipped sentinel
-    comp = connected_components(
-        edges, src="id_a", dst="id_b", vertices=kept, id_col="doc_id"
-    ).withColumnRenamed("id", "doc_id")
-    w = Window.partitionBy("component").orderBy(
-        F.col("n_chars").desc(), F.col("doc_id")
-    )
-    keepers = (
-        comp.join(kept.select("doc_id", "n_chars"), "doc_id")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("doc_id")
-    )
+    keepers = _keepers(edges, kept).filter("is_keeper").select("doc_id")
     ktk = keepers.join(d, "doc_id").select(
         "doc_id",
         "source",

@@ -635,9 +635,10 @@ def dedup_simhash_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs
 
 
-@register(
-    "dedup_connected_components",
-    oracle=f"""
+#: Connected components of the sampled Jaccard near-dup graph, as the
+#: minimum label a recursive walk reaches along the edges. Shared by
+#: the two registrations of :func:`_jaccard_components`.
+_JACCARD_CC_ORACLE = f"""
     WITH RECURSIVE tk AS (
       SELECT doc_id, lang, source, list_distinct({_O_TOKS}) AS toks
       FROM documents WHERE doc_id % 5 = 0
@@ -662,15 +663,13 @@ def dedup_simhash_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT e.d, w.label FROM walk w JOIN edges e ON e.s = w.node
     )
     SELECT node AS doc_id, MIN(label) AS component FROM walk GROUP BY node
-    """,
-)
-def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O63 cluster formation: near-dup pairs → connected components via
-    distributed min-label propagation (operators.dedup). Each sampled
-    doc gets the min doc_id of its similarity cluster — the id a
-    keeper-selection pass would group on. The oracle computes the same
-    components with a recursive CTE (min label reachable along
-    edges)."""
+    """
+
+
+def _jaccard_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-dup pairs (Jaccard >= 0.2 within (lang, source) blocks of
+    every fifth doc) → (doc_id, component = min doc_id of its
+    cluster)."""
     from process_spark.operators.dedup import connected_components
 
     d = t(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0)
@@ -687,65 +686,27 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(F.col("id").alias("doc_id"), "component")
 
 
-@register(
-    "dedup_components_star",
-    # EXACTLY dedup_connected_components' oracle: connected components
-    # are implementation-independent, so the alternating-star algorithm
-    # must produce the identical (doc_id, component) relation the
-    # recursive min-label walk defines — two algorithms, one truth.
-    oracle=f"""
-    WITH RECURSIVE tk AS (
-      SELECT doc_id, lang, source, list_distinct({_O_TOKS}) AS toks
-      FROM documents WHERE doc_id % 5 = 0
-    ),
-    pairs AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM tk a JOIN tk b
-        ON a.lang = b.lang AND a.source = b.source AND a.doc_id < b.doc_id
-      WHERE CASE WHEN len(list_distinct(a.toks || b.toks)) > 0 THEN
-              CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
-                / len(list_distinct(a.toks || b.toks))
-            ELSE 0.0 END >= 0.2
-    ),
-    edges AS (
-      SELECT id_a AS s, id_b AS d FROM pairs
-      UNION ALL
-      SELECT id_b AS s, id_a AS d FROM pairs
-    ),
-    walk(node, label) AS (
-      SELECT doc_id, doc_id FROM tk
-      UNION
-      SELECT e.d, w.label FROM walk w JOIN edges e ON e.s = w.node
-    )
-    SELECT node AS doc_id, MIN(label) AS component FROM walk GROUP BY node
-    """,
-)
-def dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O63 cluster formation, the LOG-ROUND twin: the same near-dup
-    edges through alternating large-star/small-star contraction
-    (Kiveris et al., SoCC 2014) instead of min-label propagation.
-    Propagation pays one round per hop of the component diameter —
-    the right trade for dedup graphs (dense, shallow) but a scale
-    trap if a pathological near-dup CHAIN appears (A~B~C~... from
-    sliding boilerplate); the star alternation converges in O(log n)
-    rounds regardless of diameter (a 200-link chain: 5 star rounds vs
-    200 propagation rounds, pinned in tests/test_properties.py). Both
-    implementations must produce the identical component relation —
-    the oracle is dedup_connected_components' statement verbatim."""
-    from process_spark.operators.dedup import connected_components_star
+@register("dedup_connected_components", oracle=_JACCARD_CC_ORACLE)
+def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """O63 cluster formation: near-dup pairs → connected components via
+    distributed star contraction (operators.dedup). Each sampled doc
+    gets the min doc_id of its similarity cluster — the id a
+    keeper-selection pass would group on. The oracle computes the same
+    components with a recursive CTE (min label reachable along
+    edges)."""
+    return _jaccard_components(spark, sf_dir)
 
-    d = t(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0)
-    blocked = d.withColumn("__blk", F.concat_ws("|", "lang", "source"))
-    edges = jaccard_pairs(
-        blocked, "doc_id", "text", block_col="__blk", min_jaccard=0.2
-    )
-    return connected_components_star(
-        edges,
-        src="id_a",
-        dst="id_b",
-        vertices=d,
-        id_col="doc_id",
-    ).select(F.col("id").alias("doc_id"), "component")
+
+@register("dedup_components_star", oracle=_JACCARD_CC_ORACLE)
+def dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """O63 cluster formation under the name of the alternating-star
+    contraction (Kiveris et al., SoCC 2014), which
+    ``connected_components`` is: the same query and oracle as
+    dedup_connected_components. Its rounds are O(log n) whatever the
+    component diameter, so a pathological near-dup CHAIN (A~B~C~...
+    from sliding boilerplate) costs a few rounds, not one per hop
+    (chain cases pinned in tests/test_properties.py)."""
+    return _jaccard_components(spark, sf_dir)
 
 
 def _minhash_md5_ctes(
@@ -913,10 +874,10 @@ def _minhash_cc_oracle() -> str:
 def pipeline_minhash_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O63 end-to-end (oracle-backed): the production near-dup pipeline
     at its full depth — banded MinHash LSH candidate pairs (md5 chain)
-    feeding distributed min-label connected components, one cluster id
-    per document (the id a keeper-selection pass groups on). DuckDB
-    replays BOTH stages: the signature/band algebra and the
-    reachability fixpoint (recursive CTE) — so the whole
+    feeding distributed connected components (star contraction), one
+    cluster id per document (the id a keeper-selection pass groups
+    on). DuckDB replays BOTH stages: the signature/band algebra and
+    the reachability fixpoint (recursive CTE) — so the whole
     shingle→signature→band→pair→cluster path that dedups a 100 TB
     corpus is hash-checked as one unit, not as isolated stages."""
     from process_spark.operators.dedup import (

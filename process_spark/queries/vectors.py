@@ -2003,7 +2003,7 @@ def vec_ivf_sq8_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # those edges (the dedup_connected_components oracle shape), and
     # the keeper verdict. Components are CELL-LOCAL by construction
     # (every edge joins same-cell vectors), so the walk is bounded per
-    # cell and min-label propagation converges in a few hops.
+    # cell.
     oracle=f"""
     WITH RECURSIVE h AS (
       SELECT vec_id,
@@ -2068,14 +2068,14 @@ def pipeline_semantic_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O64+O68 composite, completed to the KEEP-ONE policy — the
     semantic twin of pipeline_dedup_keeper: label-free IVF-blocked
     near-dup pairs (the pipeline_semantic_dedup_ivf chain verbatim) →
-    distributed min-label connected components → one canonical vector
-    per cluster (the min vec_id — with min-label propagation the
-    component id IS that keeper, so the verdict is one comparison, no
-    extra window). This is the query that decides which EMBEDDED
-    documents a 100 TB semantic-dedup pass actually keeps. Scale
+    distributed connected components → one canonical vector per
+    cluster (the min vec_id — the component id IS that keeper, so
+    the verdict is one comparison, no extra window). This is the
+    query that decides which EMBEDDED documents a 100 TB
+    semantic-dedup pass actually keeps. Scale
     shape: every stage is blocked — cells PARTITION the pair join and
     components are CELL-LOCAL by construction (edges never cross
-    cells), so propagation converges in a few iterations and no
+    cells), so the star contraction converges in a few rounds and no
     corpus-sized window exists anywhere. One honest caveat: with a
     FIXED n_cells each cell is ~|corpus|/n_cells, so per-cell pair
     scoring is still quadratic in corpus size and a boilerplate-heavy
@@ -2218,18 +2218,11 @@ def pipeline_semantic_keeper_guarded(
     members degrade to component SINGLETONS — kept, never silently
     dropped, exactly ``pipeline_dedup_keeper``'s semantics. The oracle
     replays the full chain including the guard: sized/kept/skip CTEs
-    between assignment and the pair join.
-
-    Components run on the ALTERNATING-STAR implementation
-    (connected_components_star): near-dup chains are exactly where
-    min-label propagation degenerates (a sliding-boilerplate chain of
-    length L needs L rounds; the star contraction needs O(log L) —
-    measured 2.4x vs 4.1x at x10 on the replica graph, and the
-    200-link-chain round bound is pinned in tests). Both
-    implementations label components by their minimum id, so the
-    oracle — a recursive min-label walk — is UNCHANGED; the swap is
-    physical only."""
-    from process_spark.operators.dedup import connected_components_star
+    between assignment and the pair join. The star contraction behind
+    the components takes O(log L) rounds on a near-dup chain of length
+    L (sliding boilerplate), and labels each component by its minimum
+    id, as the oracle's recursive walk does."""
+    from process_spark.operators.dedup import connected_components
     from process_spark.operators.similarity import (
         near_dup_embeddings_arrow_with_census,
     )
@@ -2244,7 +2237,7 @@ def pipeline_semantic_keeper_guarded(
         block_col="cell_id",
         max_block_size=_SEM_KEEPER_CELL_CAP,
     )
-    comp = connected_components_star(
+    comp = connected_components(
         pairs.select("id_a", "id_b"),
         src="id_a",
         dst="id_b",

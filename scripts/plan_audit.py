@@ -177,9 +177,9 @@ NOTES = {
     ),
     "pipeline_minhash_dedup_components": (
         "Banded MinHash LSH pairs (md5/concat oracle chain) feeding "
-        "min-label propagation: band equi-join for edges, one "
-        "edge-join+min-agg shuffle per CC iteration, lineage cut per "
-        "iteration; label state is (vertex, long) only."
+        "star contraction: band equi-join for edges, window-min star "
+        "shuffles per CC round, O(log n) rounds, lineage cut per "
+        "round; state is the contracted edge set only."
     ),
     "text_lsh_hot_bucket_guard": (
         "The guarded LSH pair join: windowed bucket census partitioned "

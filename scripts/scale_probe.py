@@ -264,10 +264,9 @@ QUADRATIC_BY_DESIGN = {
     "dedup_connected_components": "replicated docs are true near-dups; "
     "the edge set (exact Jaccard pairs within blocks) grows "
     "~quadratically per duplicated doc before components form",
-    "dedup_components_star": "same quadratic-by-replica edge set as "
-    "dedup_connected_components (identical pair stage); the star "
-    "alternation changes the round count (O(log n) vs diameter), not "
-    "the edge volume",
+    "dedup_components_star": "the same query as "
+    "dedup_connected_components (one body, one oracle): the same "
+    "quadratic-by-replica edge set",
     "dedup_simhash_index_probe": "replicated docs share every SimHash "
     "band, so the cross-population candidate set grows ~quadratically "
     "per duplicated doc (the band-join shape of "

@@ -16,8 +16,10 @@ keeps the graded window + every sub-15s query in the default run)."""
 
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -107,6 +109,29 @@ def spark():
 
     spark = get_spark("process-spark-tests", shuffle_partitions=8)
     yield spark
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``with spark_jobs() as ids:`` collects the ids of the Spark jobs
+    the block launches on this thread."""
+
+    @contextlib.contextmanager
+    def jobs():
+        sc = spark.sparkContext
+        group = f"job-budget-{uuid.uuid4().hex}"
+        ids: list[int] = []
+        sc.setJobGroup(group, "job budget")
+        try:
+            yield ids
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            # The status store fills from the listener bus asynchronously.
+            sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+            ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+    return jobs
 
 
 @pytest.fixture(scope="session")

@@ -4,9 +4,6 @@ exact, not fuzzy."""
 
 from __future__ import annotations
 
-import contextlib
-import uuid
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -165,36 +162,18 @@ def test_tack_on_first_flag_row_is_one_maneuver(spark):
     assert [r.n_maneuvers for r in sail_summary_from(sess).collect()] == [2]
 
 
-@contextlib.contextmanager
-def _jobs(spark):
-    """Collects the ids of the Spark jobs the block launches on this
-    thread."""
-    sc = spark.sparkContext
-    group = f"job-budget-{uuid.uuid4().hex}"
-    ids: list[int] = []
-    sc.setJobGroup(group, "job budget")
-    try:
-        yield ids
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-        # The status store fills from the listener bus asynchronously.
-        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_output_chains_job_budget(spark, fixture_series, tmp_path):
+def test_output_chains_job_budget(spark_jobs, fixture_series, tmp_path):
     # Each chain is one hash exchange on day plus a one-partition sort
     # tail (3 and 5 jobs); a join or a second exchange per chain, as in
     # an equi-join for the entry/exit averages, breaks the budget.
     from process_spark.queries.nmea import maneuver_metrics_from, sail_summary_from
     from process_spark.sources.io import write_json_docs
 
-    with _jobs(spark) as man_jobs:
+    with spark_jobs() as man_jobs:
         write_json_docs(
             maneuver_metrics_from(fixture_series), str(tmp_path / "maneuvers")
         )
-    with _jobs(spark) as summary_jobs:
+    with spark_jobs() as summary_jobs:
         summary = sail_summary_from(fixture_series).localCheckpoint(eager=True)
         write_json_docs(summary, str(tmp_path / "summary"))
         rows = summary.collect()

@@ -352,8 +352,9 @@ def test_no_unbounded_broadcast_hints(analyzed_plans):
     KNOWN BLIND SPOT: this sees only ResolvedHint nodes in the FINAL
     analyzed plan. A hint upstream of a lineage cut
     (localCheckpoint/checkpoint) is invisible here — e.g. the guard
-    broadcasts inside minhash_lsh_pairs vanish behind
-    connected_components' checkpoint. test_broadcast_call_sites_reviewed
+    broadcasts inside minhash_lsh_pairs vanish behind the per-round
+    cut of connected_components' edge set, which the final labels are
+    read from. test_broadcast_call_sites_reviewed
     below closes that hole at the SOURCE level: every ``F.broadcast(``
     call site in process_spark/ must be accounted for per-file, lineage
     cuts notwithstanding."""

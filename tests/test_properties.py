@@ -633,82 +633,120 @@ def test_pq_codebook_store_lifecycle(spark, tmp_path):
     assert direct == stored
 
 
-@pytest.mark.slow  # measured >8s (r14 durations); full profile via --runslow
-def test_star_components_long_chain(spark):
-    """The scale case alternating-star exists for: a 200-link CHAIN
-    (diameter 200 — the pathological sliding-boilerplate near-dup
-    shape). Min-label propagation needs one round per hop, so at its
-    dedup-tuned default iteration budget it must NOT have converged;
-    the star alternation contracts geometrically and must return the
-    exact single component well inside its default budget. On a
-    branchy random graph both implementations agree row-for-row."""
-    from process_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
-
-    n = 200
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(n)], "src long, dst long"
-    )
-    star = connected_components_star(chain, "src", "dst")
-    got = {(r["id"], r["component"]) for r in star.collect()}
-    assert got == {(i, 0) for i in range(n + 1)}  # one component, min 0
-
-    # propagation at its default budget (20 rounds) walks 20 hops —
-    # far short of diameter 200: the far end cannot have label 0 yet
-    prop = connected_components(chain, "src", "dst")
-    labels = {r["id"]: r["component"] for r in prop.collect()}
-    assert labels[n] != 0, "propagation converged suspiciously fast"
-
-    # branchy random graph: identical components from both algorithms
+def _chain(spark, n, seed=None):
+    """An ``n``-link path; with ``seed``, its n + 1 ids are shuffled, so
+    id order says nothing about the path."""
     import random
 
+    ids = list(range(n + 1))
+    if seed is not None:
+        random.Random(seed).shuffle(ids)
+    edges = list(zip(ids, ids[1:]))
+    return edges, spark.createDataFrame(edges, "src long, dst long")
+
+
+def _union_find_components(n, edges):
+    """{vertex: min vertex of its component} over vertices 0..n-1."""
+    parent = list(range(n))
+
+    def root(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = root(a), root(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {v: root(v) for v in range(n)}
+
+
+def test_components_shuffled_chain_default_budget(spark):
+    """A 40-link chain with shuffled ids is one component at the
+    default max_iter. Vertex 0 sits 33 links from one end, so a
+    one-hop-per-round labelling stopped at 20 rounds would leave the
+    far end on another label."""
+    from process_spark.operators.dedup import connected_components
+
+    _, chain = _chain(spark, 40, seed=3)
+    got = {(r["id"], r["component"]) for r in connected_components(chain).collect()}
+    assert got == {(i, 0) for i in range(41)}
+
+
+@pytest.mark.slow  # measured >8s (r14 durations); full profile via --runslow
+def test_star_components_long_chain(spark):
+    """Long chains, the shape star contraction exists for, and a
+    branchy random graph with isolated vertices: the labelling equals
+    a plain-Python union-find's."""
+    import random
+
+    from process_spark.operators.dedup import connected_components
+
     rnd = random.Random(9973)
-    edges = [(rnd.randrange(120), rnd.randrange(120)) for _ in range(90)]
-    g = spark.createDataFrame(edges, "src long, dst long")
-    verts = spark.range(120).withColumnRenamed("id", "vid")
-    a = {
-        (r["id"], r["component"])
-        for r in connected_components(
-            g, "src", "dst", vertices=verts, id_col="vid"
-        ).collect()
-    }
-    b = {
-        (r["id"], r["component"])
-        for r in connected_components_star(
-            g, "src", "dst", vertices=verts, id_col="vid"
-        ).collect()
-    }
-    assert a == b
+    branchy = [(rnd.randrange(120), rnd.randrange(120)) for _ in range(90)]
+    cases = [
+        (201, _chain(spark, 200)),
+        (1001, _chain(spark, 1000, seed=11)),
+        (120, (branchy, spark.createDataFrame(branchy, "src long, dst long"))),
+    ]
+    for n, (edges, g) in cases:
+        verts = spark.range(n).withColumnRenamed("id", "vid")
+        got = {
+            r["id"]: r["component"]
+            for r in connected_components(
+                g, "src", "dst", vertices=verts, id_col="vid"
+            ).collect()
+        }
+        assert got == _union_find_components(n, edges), n
 
 
 def test_star_components_nonconvergence_raises(spark):
     """An exhausted max_iter must FAIL LOUDLY, not return a labeling:
-    on a non-fixpoint edge set a node can still carry conflicting
-    component labels, so silent early termination would emit duplicate
-    (id, component) rows. A 40-link chain cannot reach the star forest
-    in one round; an edgeless graph is trivially converged at
-    max_iter=0 and must still label every vertex a singleton."""
+    short of the star-forest fixpoint a node can still carry edges to
+    different centers. A 40-link chain cannot reach it in one round;
+    an edgeless graph reaches it in its first round and must still
+    label every vertex a singleton."""
     import pytest as _pytest
 
-    from process_spark.operators.dedup import connected_components_star
+    from process_spark.operators.dedup import connected_components
 
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(40)], "src long, dst long"
-    )
+    _, chain = _chain(spark, 40, seed=3)
     with _pytest.raises(RuntimeError, match="max_iter"):
-        connected_components_star(chain, "src", "dst", max_iter=1)
+        connected_components(chain, "src", "dst", max_iter=1)
 
     verts = spark.range(5).withColumnRenamed("id", "vid")
     empty = spark.createDataFrame([], "src long, dst long")
     got = {
         (r["id"], r["component"])
-        for r in connected_components_star(
-            empty, "src", "dst", vertices=verts, id_col="vid", max_iter=0
+        for r in connected_components(
+            empty, "src", "dst", vertices=verts, id_col="vid", max_iter=1
         ).collect()
     }
     assert got == {(i, i) for i in range(5)}
+
+
+def test_connected_components_job_budget(spark, spark_jobs):
+    # A dedup-shaped graph, shallow and dense: disjoint pairs and
+    # triangles plus isolated vertices, a star forest after one round.
+    # That round and the labelling's collect run 9 jobs; a second
+    # action per round, or a join per star step, breaks the budget.
+    from process_spark.operators.dedup import connected_components
+
+    edges = [(i, i + 1) for i in range(0, 40, 4)]
+    edges += [
+        e for i in range(100, 160, 6) for e in [(i, i + 1), (i + 1, i + 2), (i, i + 2)]
+    ]
+    g = spark.createDataFrame(edges, "src long, dst long")
+    verts = spark.range(200).withColumnRenamed("id", "vid")
+    with spark_jobs() as jobs:
+        got = {
+            r["id"]: r["component"]
+            for r in connected_components(
+                g, vertices=verts, id_col="vid"
+            ).collect()
+        }
+    assert got == _union_find_components(200, edges)
+    assert 0 < len(jobs) <= 9, jobs
 
 
 def test_pq_quantization_error_monitors_drift(spark):
