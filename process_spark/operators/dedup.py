@@ -679,7 +679,7 @@ def connected_components(
             .agg(F.min("v").alias("lo"), F.count("*").alias("deg"))
             .filter((F.col("lo") < F.col("u")) & (F.col("deg") > 1))
         )
-        # not limit(1).count(): a count over a limit compiles four
+        # isEmpty, not a count over limit(1): that form compiles four
         # generated classes again on every warm run
         if violations.isEmpty():
             break
@@ -703,122 +703,3 @@ def connected_components(
         F.coalesce(F.col("component"), F.col("id")).alias("component"),
     )
 
-
-def compact_partitioned_index(
-    spark,
-    path: str,
-    part_cols: Sequence[str],
-    n_write_tasks: int = 64,
-    row_filter=None,
-) -> dict:
-    """Maintenance op for any STORED partitioned index: rewrite every
-    partition directory to ONE file.
-
-    Appends accrete one file per touched dir per batch (the
-    one-file-per-write discipline), so after N ingest batches a probe
-    reads N files per pruned partition — the classic streaming-ingest
-    small-files decay. Compaction rewrites the whole index with the
-    rows hash-repartitioned on exactly the partition keys (each dir
-    written by one task → one file per dir) into a sibling directory,
-    then atomically swaps it in (rename, rename, remove). Probe
-    results are invariant by construction — the rows are untouched,
-    only the file layout changes (the lifecycle oracles already prove
-    storage-layout independence; invariance is also asserted directly
-    in tests/test_plan_shapes.py).
-
-    If the index carries a ``batch_id`` partition level (the
-    idempotent streaming layout — see incremental_dedup_sink), the
-    compacted history is SEALED as ``batch_id = -1``: future appends
-    keep their replay-overwrite semantics and future probes'
-    ``batch_id < current`` history filter still sees every sealed row.
-    Run it offline (between streaming runs / behind a catalog swap) —
-    the directory swap is not transactional against in-flight readers.
-
-    Crash-ordering caveat: prefer running compaction only after a
-    CLEANLY terminated stream (last batch committed to the
-    checkpoint). If the stream died mid-batch and compaction sealed
-    the orphaned batch's rows into ``batch_id = -1``, a naive restart
-    would probe the batch against its own sealed bands and re-append
-    duplicates; the engine's three streaming sinks
-    (``incremental_dedup_sink``, ``incremental_vector_sink``,
-    ``incremental_srp_sink``) all defend against exactly this (each
-    detects and skips its own sealed ids), but third-party sinks over
-    the same layout must either replicate that hygiene or observe the
-    clean-termination ordering.
-
-    Filesystem-agnostic: the census and the swap go through the
-    Hadoop FileSystem API (``Path.getFileSystem`` on the active Hadoop
-    conf), so local paths, HDFS, and any configured ``hadoop-*``
-    connector all work — not just the local OS rename this op shipped
-    with first. One object-store caveat: on S3-like stores "rename"
-    is copy+delete (O(index bytes), not O(1)) — there, prefer
-    compacting into a NEW prefix and flipping a catalog pointer; on
-    HDFS and local filesystems the swap is a metadata op.
-
-    Returns ``{"files_before", "files_after", "rows"}``."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    HPath = jvm.org.apache.hadoop.fs.Path
-
-    def _hpath(p: str):
-        return HPath(p)
-
-    fs = _hpath(path).getFileSystem(hconf)
-
-    def _count_files(p: str) -> int:
-        hp = _hpath(p)
-        if not fs.exists(hp):
-            return 0
-        it = fs.listFiles(hp, True)
-        n = 0
-        while it.hasNext():
-            if it.next().getPath().getName().endswith(".parquet"):
-                n += 1
-        return n
-
-    files_before = _count_files(path)
-    df = spark.read.parquet(path)
-    if row_filter is not None:
-        # Purge hook (DataFrame -> DataFrame): compaction is the ONE
-        # moment the whole index is rewritten anyway, so logically
-        # deleted rows (tombstones — see retrieval.tombstone_postings
-        # _docs) ride out for free. Identity when absent.
-        df = row_filter(df)
-    part_cols = list(part_cols)
-    has_batch = "batch_id" in df.columns and "batch_id" not in part_cols
-    if has_batch:
-        df = df.withColumn("batch_id", F.lit(-1))
-    n_rows = df.count()
-    tmp = path.rstrip("/") + "__compacting"
-    old = path.rstrip("/") + "__precompact"
-    fs.delete(_hpath(tmp), True)
-    fs.delete(_hpath(old), True)
-    df.repartition(n_write_tasks, *[F.col(c) for c in part_cols]).write.mode(
-        "overwrite"
-    ).partitionBy(*(part_cols + (["batch_id"] if has_batch else []))).parquet(
-        tmp
-    )
-    if not fs.rename(_hpath(path), _hpath(old)):
-        raise IOError(f"compaction swap failed: rename {path} -> {old}")
-    if not fs.rename(_hpath(tmp), _hpath(path)):
-        # restore the original index before failing — never leave the
-        # path empty with the only copy under a scratch suffix
-        fs.rename(_hpath(old), _hpath(path))
-        raise IOError(f"compaction swap failed: rename {tmp} -> {path}")
-    fs.delete(_hpath(old), True)
-    spark.catalog.refreshByPath(path)
-    return {
-        "files_before": files_before,
-        "files_after": _count_files(path),
-        "rows": n_rows,
-    }
-
-
-def compact_band_index(spark, path: str, n_write_tasks: int = 64) -> dict:
-    """:func:`compact_partitioned_index` specialized to the MinHash
-    band index's (band_idx, band_bucket) layout — see that docstring
-    for the contract. The IVF cell index compacts with the same op on
-    ``["cell_id"]`` (queries/vectors.py:vec_ivf_stored_compact)."""
-    return compact_partitioned_index(
-        spark, path, ["band_idx", "band_bucket"], n_write_tasks
-    )

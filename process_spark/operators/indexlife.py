@@ -1,10 +1,13 @@
-"""Generic DELETE/UPDATE lifecycle for STORED partitioned indexes —
-the tombstone → purge-at-compaction → re-ingest rhythm the postings
-family ships in operators/retrieval.py, factored out so every other
-stored family (the IVF cell index, the SRP/MinHash/SimHash band
-indexes) gets the same answer from ONE implementation instead of four
-ports (SURVEY.md §2 contract extension "deduplication" / "similarity
-search" — the maintenance story those stored layouts need at 100 TB).
+"""One lifecycle for every BATCH stored index: write, append,
+tombstone, compact, audit and repair. Four families run through it —
+the IVF cell index (``vec_ivf_stored_*``), the MinHash band index
+(``dedup_band_index_*``), the SRP band index
+(``vec_srp_stored_lifecycle``) and the SimHash band index
+(``dedup_simhash_index_probe``) — and this module owns compaction for
+every partitioned index in the engine (:func:`compact_partitioned_index`
+also serves the streaming sinks' ``batch_id`` layouts and the postings
+compactor). The postings index keeps its own writer and tombstones in
+operators/retrieval.py.
 
 Why this exists: deleting a document updates the text index
 (queries/retrieval.stream_bm25_index_updated) but its EMBEDDING stayed
@@ -41,11 +44,12 @@ so a delete is complete once the row is invisible.
 from __future__ import annotations
 
 import posixpath
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from process_spark.operators.fsutil import fs_exists, fs_path
+from process_spark.operators.fsutil import fs_exists, fs_path, swap_in
 
 
 def _ids_membership(
@@ -259,13 +263,93 @@ def live_index_rows(spark: SparkSession, path: str) -> DataFrame:
     return stored
 
 
+def compact_partitioned_index(
+    spark: SparkSession,
+    path: str,
+    part_cols: Sequence[str],
+    n_write_tasks: int = 64,
+    row_filter=None,
+) -> dict:
+    """Maintenance op for any STORED partitioned index: rewrite every
+    partition directory to ONE file.
+
+    Appends accrete one file per touched dir per batch (the
+    one-file-per-write discipline), so after N ingest batches a probe
+    reads N files per pruned partition — the classic streaming-ingest
+    small-files decay. Compaction rewrites the whole index with the
+    rows hash-repartitioned on exactly the partition keys (each dir
+    written by one task → one file per dir) into a ``__compacting``
+    sibling, then swaps it in (:func:`fsutil.swap_in`: rename aside,
+    rename in, restore on failure). Probe results are invariant by
+    construction — the rows are untouched, only the file layout
+    changes. ``row_filter`` (DataFrame → DataFrame) is the purge hook:
+    compaction is the one moment the whole index is rewritten anyway,
+    so tombstoned rows ride out for free.
+
+    If the index carries a ``batch_id`` partition level (the
+    idempotent streaming layout — see incremental_dedup_sink), the
+    compacted history is SEALED as ``batch_id = -1``: future appends
+    keep their replay-overwrite semantics and future probes'
+    ``batch_id < current`` history filter still sees every sealed row.
+    Run it offline (between streaming runs / behind a catalog swap) —
+    the directory swap is not transactional against in-flight readers.
+
+    Crash-ordering caveat: prefer running compaction only after a
+    CLEANLY terminated stream (last batch committed to the
+    checkpoint). If the stream died mid-batch and compaction sealed
+    the orphaned batch's rows into ``batch_id = -1``, a naive restart
+    would probe the batch against its own sealed bands and re-append
+    duplicates; the engine's three streaming sinks
+    (``incremental_dedup_sink``, ``incremental_vector_sink``,
+    ``incremental_srp_sink``) all detect and skip their own sealed
+    ids, but third-party sinks over the same layout must either
+    replicate that hygiene or observe the clean-termination ordering.
+
+    Returns ``{"files_before", "files_after", "rows"}``."""
+    fs, HPath = fs_path(spark, path)
+
+    def _count_files(p: str) -> int:
+        if not fs.exists(HPath(p)):
+            return 0
+        it = fs.listFiles(HPath(p), True)
+        n = 0
+        while it.hasNext():
+            if it.next().getPath().getName().endswith(".parquet"):
+                n += 1
+        return n
+
+    files_before = _count_files(path)
+    df = spark.read.parquet(path)
+    if row_filter is not None:
+        df = row_filter(df)
+    part_cols = list(part_cols)
+    has_batch = "batch_id" in df.columns and "batch_id" not in part_cols
+    if has_batch:
+        df = df.withColumn("batch_id", F.lit(-1))
+    n_rows = df.count()
+    tmp = path.rstrip("/") + "__compacting"
+    fs.delete(HPath(tmp), True)
+    df.repartition(n_write_tasks, *[F.col(c) for c in part_cols]).write.mode(
+        "overwrite"
+    ).partitionBy(*(part_cols + (["batch_id"] if has_batch else []))).parquet(
+        tmp
+    )
+    swap_in(spark, path, tmp, label="compaction")
+    spark.catalog.refreshByPath(path)
+    return {
+        "files_before": files_before,
+        "files_after": _count_files(path),
+        "rows": n_rows,
+    }
+
+
 def compact_stored_index(
     spark: SparkSession, path: str, n_write_tasks: int = 8
 ) -> dict:
     """Offline maintenance pass: rewrite ``data/`` (one file per
     partition dir) and ``_ids/`` with tombstoned ids PURGED (the
     deletes ride the rewrite compaction does anyway —
-    compact_partitioned_index's ``row_filter`` hook), then drop the
+    :func:`compact_partitioned_index`'s ``row_filter`` hook), then drop the
     tombstones LAST — after which the ids are free to re-ingest.
 
     Crash ordering: every component swaps whole; a crash anywhere
@@ -281,8 +365,6 @@ def compact_stored_index(
     tombstone count. Run between ingest runs, like every compactor
     (the directory swaps are not transactional against in-flight
     readers)."""
-    from process_spark.operators.dedup import compact_partitioned_index
-
     meta = index_meta(spark, path)
     id_col = meta["id_col"]
     data_dir = posixpath.join(path, "data")
@@ -301,7 +383,7 @@ def compact_stored_index(
         )
         idx_ids = spark.read.parquet(ids_dir).select(id_col)
         n_purged = idx_ids.join(tomb_ids, id_col, "left_semi").count()
-        if idx_ids.join(tomb_ids, id_col, "left_anti").limit(1).count() == 0:
+        if idx_ids.join(tomb_ids, id_col, "left_anti").isEmpty():
             raise ValueError(
                 f"compact_stored_index: tombstones at {path} cover the "
                 "ENTIRE index — purging would leave empty data/_ids dirs "
@@ -486,8 +568,6 @@ def repair_stored_index(spark: SparkSession, path: str) -> dict:
     self-consistent with what ``data`` holds — a batch whose rows
     never landed is simply forgotten (re-ingest it afterwards; the
     rebuilt ``_ids`` no longer blocks it)."""
-    from process_spark.operators.fsutil import swap_in
-
     meta = index_meta(spark, path)
     id_col, nb = meta["id_col"], meta["n_id_buckets"]
     data_dir = posixpath.join(path, "data")

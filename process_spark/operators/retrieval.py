@@ -41,6 +41,7 @@ from pyspark.sql.window import Window
 
 from process_spark.functions.textfn import tokens
 from process_spark.operators.execution import overlap
+from process_spark.operators.indexlife import compact_partitioned_index
 
 #: Lucene-default BM25 parameters; inlined identically into oracles.
 K1 = 1.2
@@ -1288,7 +1289,6 @@ def compact_postings_index(
     layout, and on a tombstone set that covers the entire corpus (the
     purge would leave empty parquet dirs that fail schema inference —
     drop the index directory instead)."""
-    from process_spark.operators.dedup import compact_partitioned_index
     from process_spark.operators.fsutil import fs_exists, fs_path
 
     data_dir = posixpath.join(path, "data")
@@ -1335,7 +1335,7 @@ def compact_postings_index(
         ids_dir = docs_dir if fs_exists(spark, docs_dir) else data_dir
         idx_ids = spark.read.parquet(ids_dir).select("doc_id").distinct()
         n_purged = idx_ids.join(tomb_ids, "doc_id", "left_semi").count()
-        if idx_ids.join(tomb_ids, "doc_id", "left_anti").limit(1).count() == 0:
+        if idx_ids.join(tomb_ids, "doc_id", "left_anti").isEmpty():
             raise ValueError(
                 f"compact_postings_index: tombstones at {path} cover the "
                 "ENTIRE corpus — purging would leave empty data/_docs "

@@ -56,6 +56,13 @@ _PREC, _SCALE = 18, 6
 _SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__)))), ".scratch")
 
+#: The MinHash banding of the stored text indexes (the
+#: dedup_band_index_probe relation, batch and streaming): 64 md5
+#: hashes in 16 concat-keyed bands over 16 buckets.
+_BAND_KW = dict(
+    num_hashes=64, bands=16, base_hash="md5", band_key="concat", n_buckets=16
+)
+
 
 def dsum(col: str | Column, alias: str) -> Column:
     """Order-independent, engine-exact sum of a double column → double."""

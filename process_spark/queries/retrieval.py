@@ -204,10 +204,10 @@ def text_postings_stored_lifecycle(spark: SparkSession, sf_dir: str) -> DataFram
     sidecar accumulates), probe the BM25 workload reading ONLY the
     query terms' ``term_bucket`` dirs (PartitionFilters — asserted in
     tests/test_plan_shapes.py), append the other half, COMPACT every
-    bucket dir to one file (operators.dedup.compact_partitioned_index),
+    bucket dir to one file (operators.indexlife.compact_partitioned_index),
     and re-probe the full pool. Both phases must reproduce plain
     in-memory BM25 over their corpus slice exactly."""
-    from process_spark.operators.dedup import compact_partitioned_index
+    from process_spark.operators.indexlife import compact_partitioned_index
 
     d = t(spark, sf_dir, "documents")
     qt = _workload_df(spark)
@@ -765,11 +765,8 @@ def _stored_ivf_knn(
     the channel a 100 TB hybrid stack feeds from."""
     import os as _os
 
-    from process_spark.operators.similarity import (
-        ivf_build,
-        ivf_probe_cells,
-        ivf_search,
-    )
+    from process_spark.operators.similarity import ivf_build, ivf_search
+    from process_spark.queries.vectors import _probed_cells
 
     cells, assignments = ivf_build(e2, n_cells=8, seed_hash="md5")
     # 8-row cell table, consumed three times (probe IN-set, search's
@@ -790,13 +787,7 @@ def _stored_ivf_knn(
         ).partitionBy("cell_id").parquet(path)
 
     def _probe() -> list[int]:
-        return sorted(  # bounded: cell domain is n_cells=8
-            r["cell_id"]
-            for r in ivf_probe_cells(cells, q, n_probe=2)
-            .select("cell_id")
-            .distinct()
-            .collect()
-        )
+        return _probed_cells(cells, q)
 
     _, probed = overlap(_write, _probe)
     stored = spark.read.parquet(path)

@@ -30,13 +30,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from process_spark.functions.textfn import tokens
-from process_spark.operators.dedup import (
-    compact_partitioned_index,
-    minhash_band_index,
-)
+from process_spark.operators.dedup import minhash_band_index
+from process_spark.operators.indexlife import compact_partitioned_index
 from process_spark.operators.relational import attach_census, cap_blocks_with_census
 from process_spark.operators.similarity import ivf_build
-from process_spark.queries._util import _SCRATCH, t
+from process_spark.queries._util import _BAND_KW, _SCRATCH, t
 from process_spark.queries.registry import register
 from process_spark.queries.text import (
     _HH_CAPACITY,
@@ -177,12 +175,6 @@ def _write_batch(
 _MINHASH_LAYOUT = (("band_idx", "band_bucket"), 64)
 _IVF_LAYOUT = (("cell_id",), 8)
 _SRP_LAYOUT = (("band_idx",), 64)
-
-#: The MinHash banding of the text index (the dedup_band_index_probe
-#: relation): 64 md5 hashes in 16 concat-keyed bands over 16 buckets.
-_BAND_KW = dict(
-    num_hashes=64, bands=16, base_hash="md5", band_key="concat", n_buckets=16
-)
 
 
 def _stream_index(
@@ -1163,8 +1155,9 @@ def stream_heavy_hitters_compacted(
 def stream_dedup_index_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O63+O95 — the FULL incremental-dedup production lifecycle in one
     query: ingest wave 1 (availableNow), STOP the driver, run the
-    offline maintenance pass (compact_band_index — every partition dir
-    rewritten to one file, batch_ids sealed to -1), then RESUME wave 2
+    offline maintenance pass (indexlife.compact_partitioned_index on
+    the (band_idx, band_bucket) layout — every partition dir rewritten to
+    one file, batch_ids sealed to -1), then RESUME wave 2
     against the same checkpoint. Wave 2's probe reads the compacted,
     sealed index (its ``batch_id < current`` history filter sees every
     sealed row because -1 < everything) and must find wave-1 and
@@ -1739,8 +1732,8 @@ def stream_semantic_dedup_compacted(
     """O64+O95 — the semantic family's production lifecycle, now
     REGISTERABLE because round 10 made the vector sink sealed-own
     hygienic: ingest wave 1 (availableNow), STOP the driver, run the
-    offline maintenance pass (compact_partitioned_index on the cell
-    layout — one file per cell dir, batch_ids sealed to -1), RESUME
+    offline maintenance pass (indexlife.compact_partitioned_index on
+    the cell layout — one file per cell dir, batch_ids sealed to -1), RESUME
     wave 2 on the same checkpoint. Wave 2's probe reads the compacted
     sealed index (batch_id = -1 < everything) and must find wave-1 and
     historical near-dups exactly as if no maintenance ran — the oracle

@@ -9,6 +9,9 @@ that passes the sf0.01 oracle runs unchanged over 100 TB of documents.
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -21,10 +24,26 @@ from process_spark.functions.textfn import (
 )
 from process_spark.operators.dedup import (
     jaccard_pairs,
+    minhash_band_index,
     minhash_lsh_pairs,
+    simhash_band_index,
     simhash_dedup_candidates,
 )
-from process_spark.queries._util import davg, fscaled, o_davg, o_fscaled, t
+from process_spark.operators.indexlife import (
+    compact_stored_index,
+    live_index_rows,
+    tombstone_index_ids,
+    write_stored_index,
+)
+from process_spark.queries._util import (
+    _BAND_KW,
+    _SCRATCH,
+    davg,
+    fscaled,
+    o_davg,
+    o_fscaled,
+    t,
+)
 from process_spark.queries.registry import register
 
 #: DuckDB twin of functions.textfn.tokens — keep in sync.
@@ -580,30 +599,28 @@ def dedup_simhash_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O63 STORED-index lifecycle for the SIMHASH family — the fourth
     and last banded family gets the persisted form the other three
     have (MinHash bands, IVF cells, SRP bands): the historical (even)
-    half's (doc, band, signature) rows are WRITTEN
-    ``partitionBy(band_idx, band_bucket)`` with the one-file-per-dir
-    discipline; a probing batch (the odd half) bands itself in memory,
-    collects its ≤ n_buckets bucket IN-set into a partition-pruning
-    filter (PartitionFilters on the stored scan — history is a point
+    half's (doc, band, signature) rows are WRITTEN through
+    indexlife.write_stored_index, partitioned by (band_idx,
+    band_bucket) with the one-file-per-dir discipline; a probing batch
+    (the odd half) bands itself in memory, collects its ≤ n_buckets
+    bucket IN-set into a partition-pruning filter (PartitionFilters
+    on the stored scan — history is a point
     lookup, never a re-hash or a full scan), equi-joins on
     (band_idx, band_bucket, band_val), and computes Hamming distances
     from the STORED signatures — documents are never re-read for
     history. The oracle replays the full md5 vote chain over the whole
     corpus restricted to cross-population pairs, so the storage layout
     is proven semantics-free."""
-    import os as _os
-
-    from process_spark.operators.dedup import simhash_band_index
-    from process_spark.queries.io_udf import _SCRATCH
-
     kw = dict(band_bits=15, base_hash="md5", n_buckets=16)
     d = t(spark, sf_dir, "documents")
-    path = _os.path.join(_SCRATCH, "simhash_band_index")
-    simhash_band_index(
-        d.filter(F.col("doc_id") % 2 == 0), "doc_id", "text", **kw
-    ).repartition(64, F.col("band_idx"), F.col("band_bucket")).write.mode(
-        "overwrite"
-    ).partitionBy("band_idx", "band_bucket").parquet(path)
+    path = os.path.join(_SCRATCH, "simhash_band_index")
+    shutil.rmtree(path, ignore_errors=True)
+    write_stored_index(
+        simhash_band_index(
+            d.filter(F.col("doc_id") % 2 == 0), "doc_id", "text", **kw
+        ),
+        path, _BAND_COLS, "doc_id", n_write_tasks=64,
+    )
 
     probe = simhash_band_index(
         d.filter(F.col("doc_id") % 2 == 1), "doc_id", "text", **kw
@@ -618,7 +635,7 @@ def dedup_simhash_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         r["band_bucket"]
         for r in probe.select("band_bucket").distinct().collect()
     )
-    stored = spark.read.parquet(path).filter(
+    stored = live_index_rows(spark, path).filter(
         F.col("band_bucket").isin(buckets)
     )
     pairs = (
@@ -923,16 +940,15 @@ def text_lsh_hot_bucket_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "dedup_band_index_probe",
-    # The incremental-dedup lifecycle in SQL: bands for the WHOLE
-    # corpus off the shared md5 chain, split into the historical half
-    # (what the stored index holds) and the new batch (what probes it);
-    # candidates = the plain band equi-join. The engine's parquet
-    # round-trip and partition layout are storage details the result
-    # must be invariant to — which is exactly what this oracle checks.
-    oracle=f"""
-    WITH {{ctes}},
+#: The incremental-dedup lifecycle in SQL: bands for the WHOLE corpus
+#: off the shared md5 chain, split into the historical half (what the
+#: stored index holds) and the new batch (what probes it); candidates =
+#: the plain band equi-join. The parquet round-trip, the partition
+#: layout, and any appends and compactions that produced the stored
+#: files are storage details the result must be invariant to — exactly
+#: what this oracle checks (dedup_band_index_probe and _compact).
+_O_BAND_PROBE = """
+    WITH {ctes},
     hist AS (SELECT doc_id, band_idx, band_key FROM banded
              WHERE doc_id % 2 = 0),
     probe AS (SELECT doc_id AS probe_id, band_idx, band_key FROM banded
@@ -941,11 +957,105 @@ def text_lsh_hot_bucket_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM probe p JOIN hist h
       ON h.band_idx = p.band_idx AND h.band_key = p.band_key
     GROUP BY 1, 2
-    """.format(ctes=_minhash_md5_ctes(where="TRUE")),
-)
+    """.format(ctes=_minhash_md5_ctes(where="TRUE"))
+
+#: Partition layout of the stored band indexes (MinHash and SimHash).
+_BAND_COLS = ["band_idx", "band_bucket"]
+
+#: Band-index update fixture: every 10th doc (a subset of the indexed
+#: even half) is "re-crawled" with this suffix — its shingle set, and
+#: therefore some of its 64 minhashes and band keys, genuinely move.
+_BAND_UPD_FILTER = "doc_id % 10 = 0"
+_BAND_UPDATE_SUFFIX = " spark merge fast update"
+
+
+def _band_index(
+    spark: SparkSession,
+    sf_dir: str,
+    index: str,
+    hist: tuple[str, ...] = ("doc_id % 2 = 0",),
+    batches: tuple[str, ...] = ("doc_id % 2 = 1",),
+    compact: bool = False,
+    update: bool = False,
+) -> DataFrame:
+    """The stored MinHash band index lifecycle under ``_SCRATCH/index``,
+    every step through operators/indexlife.py (``data/`` partitioned by
+    (band_idx, band_bucket), ``_ids``, ``_meta``; 64 write tasks, one
+    file per dir per write), banded with ``_BAND_KW``:
+
+    - write the ``hist`` document filters as ingest batches (the first
+      overwrites, the rest append); ``compact`` then rewrites every dir
+      to one file;
+    - ``update``: tombstone every 10th doc (probes exclude it at once);
+    - probe: the first of ``batches`` bands once, collects its
+      ≤ n_buckets bucket IN-set (PartitionFilters on the live stored
+      scan) and equi-joins → ``(probe_id, doc_id, n_shared_bands)``;
+    - a second phase — two ``batches`` (the first is appended, then
+      the second probes) or ``update`` (compaction purges the
+      tombstoned docs, their re-crawled text re-ingests through the
+      validated append, then the same batch probes again) — pins
+      phase 1 before the index mutates and adds a ``phase`` 1|2
+      column."""
+    d = t(spark, sf_dir, "documents")
+    recrawl = d.filter(F.expr(_BAND_UPD_FILTER))
+    path = os.path.join(_SCRATCH, index)
+    shutil.rmtree(path, ignore_errors=True)
+
+    def bands(docs: DataFrame) -> DataFrame:
+        return minhash_band_index(docs, "doc_id", "text", **_BAND_KW)
+
+    def write(rows: DataFrame, mode: str) -> None:
+        write_stored_index(
+            rows, path, _BAND_COLS, "doc_id", mode=mode, n_write_tasks=64
+        )
+
+    def batch(where: str) -> tuple[DataFrame, list]:
+        probe = bands(d.filter(F.expr(where))).withColumnRenamed(
+            "doc_id", "probe_id"
+        ).localCheckpoint(eager=False)  # bands once: bucket collect + join
+        buckets = sorted(  # bounded: bucket domain ≤ n_buckets=16
+            r["band_bucket"]
+            for r in probe.select("band_bucket").distinct().collect()
+        )
+        return probe, buckets
+
+    def candidates(probe: DataFrame, buckets: list) -> DataFrame:
+        pruned = live_index_rows(spark, path).filter(
+            F.col("band_bucket").isin(buckets)
+        )
+        return (
+            pruned.join(probe, ["band_idx", "band_bucket", "band_hash"])
+            .groupBy("probe_id", "doc_id")
+            .agg(F.count(F.lit(1)).alias("n_shared_bands"))
+        )
+
+    for i, where in enumerate(hist):
+        write(bands(d.filter(F.expr(where))), "append" if i else "overwrite")
+    if compact:
+        compact_stored_index(spark, path, n_write_tasks=64)
+    if update:
+        tombstone_index_ids(spark, path, recrawl.select("doc_id"))
+    probe, buckets = batch(batches[0])
+    if len(batches) == 1 and not update:
+        return candidates(probe, buckets)
+    c1 = candidates(probe, buckets).withColumn("phase", F.lit(1))
+    c1 = c1.localCheckpoint(eager=True)  # before the index mutates
+    if update:
+        compact_stored_index(spark, path, n_write_tasks=64)
+        new_text = F.concat("text", F.lit(_BAND_UPDATE_SUFFIX)).alias("text")
+        write(bands(recrawl.select("doc_id", new_text)), "append")
+    else:
+        write(probe.withColumnRenamed("probe_id", "doc_id"), "append")
+        probe, buckets = batch(batches[1])
+    c2 = candidates(probe, buckets).withColumn("phase", F.lit(2))
+    return c1.unionByName(c2)
+
+
+@register("dedup_band_index_probe", oracle=_O_BAND_PROBE)
 def dedup_band_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O63 STORED-INDEX lifecycle (oracle-backed): write the historical
-    corpus's MinHash band index ``partitionBy(band_idx, band_bucket)``
+    corpus's MinHash band index partitioned by (band_idx, band_bucket)
+    through indexlife.write_stored_index
     (operators.dedup.minhash_band_index — the layout that turns
     incremental dedup into a point lookup), compute a NEW batch's
     bands, and probe the stored index reading ONLY the batch's bucket
@@ -957,45 +1067,7 @@ def dedup_band_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions are read. Candidates = (probe_id, historical doc_id,
     n_shared_bands) — invariant to the storage layout, which is what
     DuckDB verifies."""
-    import os as _os
-
-    from process_spark.operators.dedup import minhash_band_index
-    from process_spark.queries.io_udf import _SCRATCH
-
-    kw = dict(
-        num_hashes=64, bands=16, base_hash="md5", band_key="concat",
-        n_buckets=16,
-    )
-    d = t(spark, sf_dir, "documents")
-    hist = d.filter(F.col("doc_id") % 2 == 0)
-    path = _os.path.join(_SCRATCH, "minhash_band_index")
-    # Repartition on the partition columns BEFORE the partitioned
-    # write: otherwise every one of the 32 write tasks opens a file in
-    # every (band_idx, band_bucket) dir it holds rows for (up to
-    # 32×256 small files — measured 30 s of write overhead); hashed on
-    # the partition keys, each dir is written by exactly one task →
-    # 256 files total. Same small-files discipline a 100 TB index
-    # build needs, just visible earlier.
-    idx = minhash_band_index(hist, "doc_id", "text", **kw)
-    idx.repartition(64, F.col("band_idx"), F.col("band_bucket")).write.mode(
-        "overwrite"
-    ).partitionBy("band_idx", "band_bucket").parquet(path)
-    stored = spark.read.parquet(path)
-
-    batch = d.filter(F.col("doc_id") % 2 == 1)
-    probe = minhash_band_index(batch, "doc_id", "text", **kw).withColumnRenamed(
-        "doc_id", "probe_id"
-    ).localCheckpoint(eager=False)  # bands once: bucket collect + join
-    buckets = sorted(
-        r["band_bucket"]
-        for r in probe.select("band_bucket").distinct().collect()
-    )
-    pruned = stored.filter(F.col("band_bucket").isin(buckets))
-    return (
-        pruned.join(probe, ["band_idx", "band_bucket", "band_hash"])
-        .groupBy("probe_id", "doc_id")
-        .agg(F.count(F.lit(1)).alias("n_shared_bands"))
-    )
+    return _band_index(spark, sf_dir, "minhash_band_index")
 
 
 @register(
@@ -1038,94 +1110,28 @@ def dedup_band_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O63 STORED-INDEX lifecycle COMPLETED — write → probe → APPEND →
     re-probe. ``dedup_band_index_probe`` proved the point-lookup read;
     this registers the other half of "incremental": after batch 1
-    probes the historical index, its own bands are appended
-    partitionBy-consistent (same repartition-on-partition-keys
-    discipline → one new file per touched dir, asserted in
-    tests/test_plan_shapes.py), and batch 2's probe — against the
+    probes the historical index, its own bands are appended through
+    indexlife.write_stored_index (same partition layout, one new file
+    per touched dir, asserted in tests/test_plan_shapes.py, and the
+    append-only id check), and batch 2's probe — against the
     refreshed index, bucket IN-set pushed as PartitionFilters — finds
     candidates in BOTH the historical corpus and batch 1. That
     batch-2-sees-batch-1 edge is the property that makes continuous
     ingestion dedup-complete without ever re-banding history. Output:
     (probe_id, doc_id, n_shared_bands, phase 1|2)."""
-    import os as _os
-
-    from process_spark.operators.dedup import minhash_band_index
-    from process_spark.queries.io_udf import _SCRATCH
-
-    kw = dict(
-        num_hashes=64, bands=16, base_hash="md5", band_key="concat",
-        n_buckets=16,
+    return _band_index(
+        spark, sf_dir, "minhash_band_index_append", hist=("doc_id % 3 = 0",),
+        batches=("doc_id % 3 = 1", "doc_id % 3 = 2"),
     )
-    d = t(spark, sf_dir, "documents")
-    path = _os.path.join(_SCRATCH, "minhash_band_index_append")
-
-    def write(df: DataFrame, mode: str) -> None:
-        # One file per (band_idx, band_bucket) dir per write — the
-        # small-files discipline of dedup_band_index_probe, held
-        # ACROSS appends (dirs accrete one file per batch, not one per
-        # shuffle task).
-        df.repartition(64, F.col("band_idx"), F.col("band_bucket")).write.mode(
-            mode
-        ).partitionBy("band_idx", "band_bucket").parquet(path)
-
-    def probe_candidates(stored: DataFrame, batch_idx: DataFrame, phase: int
-                         ) -> DataFrame:
-        probe = batch_idx.withColumnRenamed("doc_id", "probe_id")
-        buckets = sorted(  # bounded: bucket domain ≤ n_buckets=16
-            r["band_bucket"]
-            for r in probe.select("band_bucket").distinct().collect()
-        )
-        pruned = stored.filter(F.col("band_bucket").isin(buckets))
-        return (
-            pruned.join(probe, ["band_idx", "band_bucket", "band_hash"])
-            .groupBy("probe_id", "doc_id")
-            .agg(F.count(F.lit(1)).alias("n_shared_bands"))
-            .withColumn("phase", F.lit(phase))
-        )
-
-    write(minhash_band_index(d.filter(F.col("doc_id") % 3 == 0),
-                             "doc_id", "text", **kw), "overwrite")
-    b1_idx = minhash_band_index(
-        d.filter(F.col("doc_id") % 3 == 1), "doc_id", "text", **kw
-    ).localCheckpoint(eager=False)  # bands once: probe join + append write
-    stored1 = spark.read.parquet(path)
-    # Materialize phase-1 candidates BEFORE the append mutates the
-    # index (lazy plans must not see batch 1's own bands in "history").
-    cand1 = probe_candidates(stored1, b1_idx, 1).localCheckpoint(eager=True)
-    write(b1_idx, "append")
-    spark.catalog.refreshByPath(path)  # drop cached file listing
-    stored2 = spark.read.parquet(path)
-    b2_idx = minhash_band_index(
-        d.filter(F.col("doc_id") % 3 == 2), "doc_id", "text", **kw
-    ).localCheckpoint(eager=False)
-    return cand1.unionByName(probe_candidates(stored2, b2_idx, 2))
 
 
-@register(
-    "dedup_band_index_compact",
-    # Identical relation to dedup_band_index_probe's oracle: history =
-    # even docs (however many appends and compactions produced the
-    # stored files), probe = odd docs. Compaction is a pure storage-
-    # layout rewrite, so the probe result MUST equal the plain band
-    # equi-join — that invariance is exactly what the hash checks.
-    oracle=f"""
-    WITH {{ctes}},
-    hist AS (SELECT doc_id, band_idx, band_key FROM banded
-             WHERE doc_id % 2 = 0),
-    probe AS (SELECT doc_id AS probe_id, band_idx, band_key FROM banded
-              WHERE doc_id % 2 = 1)
-    SELECT p.probe_id, h.doc_id, CAST(COUNT(*) AS BIGINT) AS n_shared_bands
-    FROM probe p JOIN hist h
-      ON h.band_idx = p.band_idx AND h.band_key = p.band_key
-    GROUP BY 1, 2
-    """.format(ctes=_minhash_md5_ctes(where="TRUE")),
-)
+@register("dedup_band_index_compact", oracle=_O_BAND_PROBE)
 def dedup_band_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O63 STORED-INDEX lifecycle, MAINTENANCE phase — the op a
     continuous-ingest deployment runs weekly: the historical index
     accretes one file per partition dir per appended batch (three
     ingest batches here → 3 files/dir), then
-    ``compact_band_index`` (operators/dedup.py) rewrites every
+    ``compact_stored_index`` (operators/indexlife.py) rewrites every
     (band_idx, band_bucket) dir to ONE file and swaps it in. Without
     it, a year of hourly micro-batches makes every pruned probe open
     ~8,760 files per partition — the small-files decay that kills
@@ -1133,51 +1139,12 @@ def dedup_band_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exactly the plain band equi-join (the oracle) — compaction
     moves bytes, never rows. File-count collapse (3 → 1 per dir) and
     probe invariance are asserted in tests/test_plan_shapes.py."""
-    import os as _os
-
-    from process_spark.operators.dedup import (
-        compact_band_index,
-        minhash_band_index,
-    )
-    from process_spark.queries.io_udf import _SCRATCH
-
-    kw = dict(
-        num_hashes=64, bands=16, base_hash="md5", band_key="concat",
-        n_buckets=16,
-    )
-    d = t(spark, sf_dir, "documents")
-    path = _os.path.join(_SCRATCH, "minhash_band_index_compact")
-
-    # three ingest batches of the historical (even) half
-    for i, mode in [(0, "overwrite"), (2, "append"), (4, "append")]:
-        minhash_band_index(
-            d.filter(F.col("doc_id") % 6 == i), "doc_id", "text", **kw
-        ).repartition(64, F.col("band_idx"), F.col("band_bucket")).write.mode(
-            mode
-        ).partitionBy("band_idx", "band_bucket").parquet(path)
-    compact_band_index(spark, path)
-
-    stored = spark.read.parquet(path)
-    probe = minhash_band_index(
-        d.filter(F.col("doc_id") % 2 == 1), "doc_id", "text", **kw
-    ).withColumnRenamed("doc_id", "probe_id").localCheckpoint(eager=False)
-    buckets = sorted(  # bounded: bucket domain ≤ n_buckets=16
-        r["band_bucket"]
-        for r in probe.select("band_bucket").distinct().collect()
-    )
-    pruned = stored.filter(F.col("band_bucket").isin(buckets))
-    return (
-        pruned.join(probe, ["band_idx", "band_bucket", "band_hash"])
-        .groupBy("probe_id", "doc_id")
-        .agg(F.count(F.lit(1)).alias("n_shared_bands"))
+    return _band_index(
+        spark, sf_dir, "minhash_band_index_compact",
+        hist=("doc_id % 6 = 0", "doc_id % 6 = 2", "doc_id % 6 = 4"),
+        compact=True,
     )
 
-
-#: Band-index update fixture: every 10th doc (a subset of the indexed
-#: even half) is "re-crawled" with this suffix — its shingle set, and
-#: therefore some of its 64 minhashes and band keys, genuinely move.
-_BAND_UPD_FILTER = "doc_id % 10 = 0"
-_BAND_UPDATE_SUFFIX = " spark merge fast update"
 
 #: The updated corpus relation the oracle bands: survivors keep their
 #: text, re-crawled docs carry the new version (phase 1 never needs the
@@ -1242,72 +1209,9 @@ def dedup_band_index_updated(spark: SparkSession, sf_dir: str) -> DataFrame:
     the append-only-validated path. Phase 2 must equal the equi-join
     against survivors ∪ updated bands — the delete/update machinery is
     storage detail, hash-checked end to end under the md5 chain."""
-    import os as _os
-    import shutil as _shutil
-
-    from process_spark.operators.dedup import minhash_band_index
-    from process_spark.operators.indexlife import (
-        compact_stored_index,
-        live_index_rows,
-        tombstone_index_ids,
-        write_stored_index,
+    return _band_index(
+        spark, sf_dir, "minhash_band_index_updated", update=True
     )
-    from process_spark.queries.io_udf import _SCRATCH
-
-    kw = dict(
-        num_hashes=64, bands=16, base_hash="md5", band_key="concat",
-        n_buckets=16,
-    )
-    d = t(spark, sf_dir, "documents")
-    path = _os.path.join(_SCRATCH, "minhash_band_index_updated")
-    _shutil.rmtree(path, ignore_errors=True)
-
-    write_stored_index(
-        minhash_band_index(
-            d.filter(F.col("doc_id") % 2 == 0), "doc_id", "text", **kw
-        ),
-        path, ["band_idx", "band_bucket"], "doc_id", mode="overwrite",
-        n_write_tasks=64,
-    )
-    tombstone_index_ids(
-        spark, path, d.filter(F.expr(_BAND_UPD_FILTER)).select("doc_id")
-    )
-
-    probe = minhash_band_index(
-        d.filter(F.col("doc_id") % 2 == 1), "doc_id", "text", **kw
-    ).withColumnRenamed("doc_id", "probe_id").localCheckpoint(
-        eager=False
-    )  # bands once: bucket collect + both phase joins
-    buckets = sorted(  # bounded: bucket domain ≤ n_buckets=16
-        r["band_bucket"]
-        for r in probe.select("band_bucket").distinct().collect()
-    )
-
-    def candidates(phase: int) -> DataFrame:
-        pruned = live_index_rows(spark, path).filter(
-            F.col("band_bucket").isin(buckets)
-        )
-        return (
-            pruned.join(probe, ["band_idx", "band_bucket", "band_hash"])
-            .groupBy("probe_id", "doc_id")
-            .agg(F.count(F.lit(1)).alias("n_shared_bands"))
-            .withColumn("phase", F.lit(phase))
-        )
-
-    # materialize phase 1 BEFORE the purge mutates the index
-    c1 = candidates(1).localCheckpoint(eager=True)
-
-    compact_stored_index(spark, path, n_write_tasks=64)
-    updated = d.filter(F.expr(_BAND_UPD_FILTER)).select(
-        "doc_id",
-        F.concat(F.col("text"), F.lit(_BAND_UPDATE_SUFFIX)).alias("text"),
-    )
-    write_stored_index(
-        minhash_band_index(updated, "doc_id", "text", **kw),
-        path, ["band_idx", "band_bucket"], "doc_id", mode="append",
-        n_write_tasks=64,
-    )
-    return c1.unionByName(candidates(2))
 
 
 @register(
@@ -1453,18 +1357,15 @@ def text_bpe_stored_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     path (round-trip + equality pinned in tests/test_properties.py).
     Rows-only (learned merges have no SQL twin), same basis as
     text_bpe_token_budget."""
-    import os as _os
-
     from process_spark.operators.bpe import (
         bpe_doc_token_counts,
         bpe_load_merges,
         bpe_save_merges,
         bpe_train,
     )
-    from process_spark.queries.io_udf import _SCRATCH
 
     d = t(spark, sf_dir, "documents")
-    path = _os.path.join(_SCRATCH, "bpe_merge_table")
+    path = os.path.join(_SCRATCH, "bpe_merge_table")
     bpe_save_merges(spark, bpe_train(d, "text", n_merges=64), path)
     merges = bpe_load_merges(spark, path)  # the pinned artifact
     return bpe_doc_token_counts(d, merges)
@@ -1731,19 +1632,16 @@ def text_bpe_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     a bounded driver merge loop; encoding runs once per DISTINCT word
     (Heaps-law bounded) and hash-joins back; the report is a 2-row
     aggregate. Integer outputs → deterministic across runs."""
-    import os as _os
-
     from process_spark.operators.bpe import (
         bpe_encode_words,
         bpe_load_merges,
         bpe_save_merges,
         bpe_train,
     )
-    from process_spark.queries.io_udf import _SCRATCH
 
     d = t(spark, sf_dir, "documents")
     merges = bpe_train(d.filter(F.col("doc_id") % 2 == 0))
-    path = _os.path.join(_SCRATCH, "bpe_drift_merges")
+    path = os.path.join(_SCRATCH, "bpe_drift_merges")
     bpe_save_merges(spark, merges, path)
     pinned = bpe_load_merges(spark, path)
 
@@ -1805,14 +1703,8 @@ def dedup_lsh_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     monitor family: IVF/PQ/SQ8 drift, vocab/BPE OOV, and now LSH
     skew). One banding scan, one map-side-combinable GROUP BY to the
     group-size table, one census aggregation to n_bands rows."""
-    from process_spark.operators.dedup import minhash_band_index
-
     d = t(spark, sf_dir, "documents")
-    bidx = minhash_band_index(
-        d, "doc_id", "text",
-        num_hashes=64, bands=16, base_hash="md5", band_key="concat",
-        n_buckets=16,
-    )
+    bidx = minhash_band_index(d, "doc_id", "text", **_BAND_KW)
     g = bidx.groupBy("band_idx", "band_hash").agg(
         F.count(F.lit(1)).cast("long").alias("sz")
     )

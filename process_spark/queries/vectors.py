@@ -14,6 +14,9 @@ pair generation always rides a blocking key (label here, IVF cell at
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -25,13 +28,21 @@ from process_spark.functions.vectorfn import (
     srp_band_pool,
     srp_signature,
 )
+from process_spark.operators.indexlife import (
+    compact_stored_index,
+    live_index_rows,
+    tombstone_index_ids,
+    write_stored_index,
+)
 from process_spark.operators.similarity import (
     brute_force_knn,
+    ivf_assign,
     ivf_build,
+    ivf_probe_cells,
     ivf_search,
     near_dup_embeddings,
 )
-from process_spark.queries._util import t
+from process_spark.queries._util import _SCRATCH, t
 from process_spark.queries.registry import register
 
 
@@ -783,6 +794,20 @@ def _t32() -> "F.Column":
     return h / F.lit(4294967296.0)
 
 
+def _neighbor_ids(knn: DataFrame) -> DataFrame:
+    """``(q_id, neighbor_ids)``: each query's neighbour ids, sorted and
+    comma-joined — the id-set shape every idset oracle hashes."""
+    return knn.groupBy("q_id").agg(
+        F.array_join(
+            F.transform(
+                F.sort_array(F.collect_list("vec_id")),
+                lambda x: x.cast("string"),
+            ),
+            ",",
+        ).alias("neighbor_ids")
+    )
+
+
 @register(
     "vec_knn_arrow_idset",
     # score((1,tq),(1,tc)) = (1 + tq·tc) / (sqrt(1+tq²)·sqrt(1+tc²)):
@@ -831,15 +856,7 @@ def vec_knn_arrow_idset(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
     )
     knn = brute_force_knn_arrow(q, e, k=5)
-    return knn.groupBy("q_id").agg(
-        F.array_join(
-            F.transform(
-                F.sort_array(F.collect_list("vec_id")),
-                lambda x: x.cast("string"),
-            ),
-            ",",
-        ).alias("neighbor_ids")
-    )
+    return _neighbor_ids(knn)
 
 
 @register(
@@ -996,8 +1013,6 @@ def vec_ivf_knn_md5_idset(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern as text_minhash_lsh_md5_pairs. n_probe is pinned to 2 here
     (a FIXTURE setting the SQL replays verbatim — recall defaults are
     the production queries' concern, see vec_ivf_knn)."""
-    from process_spark.operators.similarity import ivf_build, ivf_search
-
     e = t(spark, sf_dir, "embeddings").select(
         "vec_id", F.array(F.lit(1.0), _t32()).alias("embedding")
     )
@@ -1006,15 +1021,7 @@ def vec_ivf_knn_md5_idset(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
     )
     knn = ivf_search(q, cells, assignments, k=5, n_probe=2)
-    return knn.groupBy("q_id").agg(
-        F.array_join(
-            F.transform(
-                F.sort_array(F.collect_list("vec_id")),
-                lambda x: x.cast("string"),
-            ),
-            ",",
-        ).alias("neighbor_ids")
-    )
+    return _neighbor_ids(knn)
 
 
 def _stored_ivf_oracle() -> str:
@@ -1027,60 +1034,134 @@ def _stored_ivf_oracle() -> str:
     return REGISTRY["vec_ivf_knn_md5_idset"].oracle
 
 
-@register("vec_ivf_stored_probe", oracle=_stored_ivf_oracle())
-def vec_ivf_stored_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O68 STORED ANN index lifecycle (oracle-backed): the IVF twin of
-    dedup_band_index_probe. Assignments are WRITTEN
-    ``partitionBy(cell_id)`` (repartitioned on the partition key first
-    — one file per cell dir, the same small-files discipline as the
-    band index), the probe's cell id-set (≤ n_cells, bounded by
-    construction) is collected into an ``isin`` filter that reaches
-    the stored scan as PartitionFilters (asserted in
-    tests/test_plan_shapes.py) — so a 100 TB corpus laid out by cell
-    reads only n_probe/n_cells of its files per query batch — and
-    ivf_search re-ranks within the pruned cells. The oracle is
-    vec_ivf_knn_md5_idset's, verbatim: identical results through the
-    parquet round-trip prove the storage layout is semantics-free."""
-    import os as _os
+#: "Re-crawled" embedding scalar for the update lifecycle: the same
+#: md5 fold as _O_T32 but over 'u' || vec_id — a DIFFERENT deterministic
+#: value per id, replayable in DuckDB, so an UPDATE genuinely moves the
+#: vector (and possibly its cell) instead of re-ingesting identical
+#: content.
+_O_T32U = (
+    "(CAST(('0x' || substr(md5('u' || CAST(vec_id AS VARCHAR)), 1, 8)) "
+    "AS BIGINT) / 4294967296.0)"
+)
 
-    from process_spark.operators.similarity import (
-        ivf_build,
-        ivf_probe_cells,
-        ivf_search,
-    )
-    from process_spark.queries.io_udf import _SCRATCH
 
-    e = t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.array(F.lit(1.0), _t32()).alias("embedding")
-    )
-    cells, assignments = ivf_build(e, n_cells=8, seed_hash="md5")
-    path = _os.path.join(_SCRATCH, "ivf_cell_index")
-    assignments.repartition(8, F.col("cell_id")).write.mode(
-        "overwrite"
-    ).partitionBy("cell_id").parquet(path)
-    stored = spark.read.parquet(path)
+def _t32u() -> "F.Column":
+    """Spark twin of :data:`_O_T32U`."""
+    h = F.conv(
+        F.substring(
+            F.md5(F.concat(F.lit("u"), F.col("vec_id").cast("string"))), 1, 8
+        ),
+        16,
+        10,
+    ).cast("long")
+    return h / F.lit(4294967296.0)
 
-    q = e.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    probed = sorted(  # bounded: cell domain is n_cells=8
+
+#: The "re-crawled" vectors: every id ending in 7 — disjoint from the
+#: every-100th-id query sample, so the query set survives the delete.
+_UPD_VEC_FILTER = "vec_id % 10 = 7"
+
+
+def _probed_cells(cells: DataFrame, q: DataFrame) -> list[int]:
+    """The queries' 2-probe cell IN-set, collected in one job — bounded
+    by the cell domain (n_cells=8), so the ``isin`` filter it feeds
+    reaches a stored cell index's scan as PartitionFilters."""
+    return sorted(
         r["cell_id"]
         for r in ivf_probe_cells(cells, q, n_probe=2)
         .select("cell_id")
         .distinct()
         .collect()
     )
-    pruned = stored.filter(F.col("cell_id").isin(probed))
-    knn = ivf_search(q, cells, pruned, k=5, n_probe=2)
-    return knn.groupBy("q_id").agg(
-        F.array_join(
-            F.transform(
-                F.sort_array(F.collect_list("vec_id")),
-                lambda x: x.cast("string"),
-            ),
-            ",",
-        ).alias("neighbor_ids")
+
+
+def _ivf_stored(
+    spark: SparkSession,
+    sf_dir: str,
+    index: str,
+    append: bool = False,
+    compact: bool = False,
+    update: bool = False,
+) -> DataFrame:
+    """The stored IVF index lifecycle under ``_SCRATCH/index``, every
+    step through operators/indexlife.py (cell-partitioned ``data/``,
+    ``_ids``, ``_meta``; 8 write tasks, one file per cell dir per
+    write) on the md5 2-d fixture:
+
+    - build cells and write assignments over the whole corpus, or with
+      ``append`` over the even half, then append the odd half assigned
+      to the EXISTING cells (no retrain);
+    - ``update``: tombstone every id ending in 7 and pin phase 1, the
+      probe over the live rows, before the purge mutates the index;
+    - ``compact`` (implied by ``update``): purge tombstones and rewrite
+      one file per cell dir;
+    - ``update``: re-ingest the re-crawled vectors (new md5-fold
+      content, possibly a new cell) through the validated append;
+    - probe: the probed-cell IN-set prunes the stored scan and
+      ivf_search re-ranks within it → ``(q_id, neighbor_ids)``, with a
+      leading ``phase`` 1|2 column under ``update``."""
+    e = t(spark, sf_dir, "embeddings").select(
+        "vec_id", F.array(F.lit(1.0), _t32()).alias("embedding")
     )
+    cells, assigned = ivf_build(
+        e.filter(F.col("vec_id") % 2 == 0) if append else e,
+        n_cells=8,
+        seed_hash="md5",
+    )
+    path = os.path.join(_SCRATCH, index)
+    shutil.rmtree(path, ignore_errors=True)
+
+    def write(rows: DataFrame, mode: str) -> None:
+        write_stored_index(rows, path, ["cell_id"], "vec_id", mode=mode)
+
+    write(assigned, "overwrite")
+    if append:
+        write(ivf_assign(e.filter(F.col("vec_id") % 2 == 1), cells), "append")
+    q = e.filter(F.col("vec_id") % 100 == 0).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
+    )
+    probed = _probed_cells(cells, q)
+
+    def probe() -> DataFrame:
+        pruned = live_index_rows(spark, path).filter(
+            F.col("cell_id").isin(probed)
+        )
+        return _neighbor_ids(ivf_search(q, cells, pruned, k=5, n_probe=2))
+
+    if update:
+        tombstone_index_ids(
+            spark, path, e.filter(F.expr(_UPD_VEC_FILTER)).select("vec_id")
+        )
+        phase1 = probe().localCheckpoint(eager=True)
+    if compact or update:
+        compact_stored_index(spark, path)
+    if not update:
+        return probe()
+    e_upd = t(spark, sf_dir, "embeddings").filter(
+        F.expr(_UPD_VEC_FILTER)
+    ).select("vec_id", F.array(F.lit(1.0), _t32u()).alias("embedding"))
+    write(ivf_assign(e_upd, cells), "append")
+    return phase1.select(
+        F.lit(1).cast("int").alias("phase"), "*"
+    ).unionByName(probe().select(F.lit(2).cast("int").alias("phase"), "*"))
+
+
+@register("vec_ivf_stored_probe", oracle=_stored_ivf_oracle())
+def vec_ivf_stored_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """O68 STORED ANN index lifecycle (oracle-backed): the IVF twin of
+    dedup_band_index_probe. Assignments are WRITTEN through
+    indexlife.write_stored_index, partitioned by cell_id (one file per
+    cell dir, the same small-files discipline as the band index, and
+    an ``_ids`` sidecar stored_index_audit reconciles), the probe's
+    cell id-set (≤ n_cells, bounded by construction) is collected
+    into an ``isin`` filter that reaches
+    the stored scan as PartitionFilters (asserted in
+    tests/test_plan_shapes.py) — so a 100 TB corpus laid out by cell
+    reads only n_probe/n_cells of its files per query batch — and
+    ivf_search re-ranks within the pruned cells. The oracle is
+    vec_ivf_knn_md5_idset's, verbatim: identical results through the
+    parquet round-trip prove the storage layout is semantics-free."""
+    return _ivf_stored(spark, sf_dir, "ivf_cell_index")
 
 
 def _kmeans_md5_oracle(n_iter: int = 2, k: int = 8, seed_mod: int = 9973) -> str:
@@ -1454,65 +1535,18 @@ def vec_sq8_knn_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
 def vec_ivf_stored_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O68 — the stored IVF index's APPEND lifecycle (the IVF twin of
     dedup_band_index_append): build cells on the even half of the
-    corpus, write its assignments partitionBy(cell_id); a second batch
-    (the odd half) arrives, is assigned to the EXISTING refined cells
-    via ivf_assign (no retrain) and APPENDED partition-consistently;
-    the probe then searches the stored, twice-written index with the
-    probed-cell IN-set pushed as PartitionFilters. The oracle replays
+    corpus, write its assignments by cell_id through indexlife; a
+    second batch (the odd half) arrives, is assigned to the EXISTING
+    refined cells via ivf_assign (no retrain) and APPENDED
+    partition-consistently; the probe then searches the stored,
+    twice-written index with the probed-cell IN-set pushed as
+    PartitionFilters. The oracle replays
     the whole thing in SQL — seeds and Lloyd over the even half only,
     assignment over everything — so the hash proves the appended batch
     lands in exactly the cells a one-shot assignment would give it,
     and storage layout stays semantics-free. One file per touched cell
     dir per write (asserted in tests/test_plan_shapes.py)."""
-    import os as _os
-    import shutil as _shutil
-
-    from process_spark.operators.similarity import (
-        ivf_assign,
-        ivf_build,
-        ivf_probe_cells,
-        ivf_search,
-    )
-    from process_spark.queries.io_udf import _SCRATCH
-
-    e = t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.array(F.lit(1.0), _t32()).alias("embedding")
-    )
-    e_even = e.filter(F.col("vec_id") % 2 == 0)
-    e_odd = e.filter(F.col("vec_id") % 2 == 1)
-    cells, assign_even = ivf_build(e_even, n_cells=8, seed_hash="md5")
-
-    path = _os.path.join(_SCRATCH, "ivf_cell_index_append")
-    _shutil.rmtree(path, ignore_errors=True)
-    assign_even.repartition(8, F.col("cell_id")).write.mode(
-        "overwrite"
-    ).partitionBy("cell_id").parquet(path)
-    ivf_assign(e_odd, cells).repartition(8, F.col("cell_id")).write.mode(
-        "append"
-    ).partitionBy("cell_id").parquet(path)
-    stored = spark.read.parquet(path)
-
-    q = e.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    probed = sorted(  # bounded: cell domain is n_cells=8
-        r["cell_id"]
-        for r in ivf_probe_cells(cells, q, n_probe=2)
-        .select("cell_id")
-        .distinct()
-        .collect()
-    )
-    pruned = stored.filter(F.col("cell_id").isin(probed))
-    knn = ivf_search(q, cells, pruned, k=5, n_probe=2)
-    return knn.groupBy("q_id").agg(
-        F.array_join(
-            F.transform(
-                F.sort_array(F.collect_list("vec_id")),
-                lambda x: x.cast("string"),
-            ),
-            ",",
-        ).alias("neighbor_ids")
-    )
+    return _ivf_stored(spark, sf_dir, "ivf_cell_index_append", append=True)
 
 
 @register(
@@ -1527,7 +1561,7 @@ def vec_ivf_stored_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O68 — the stored IVF index's MAINTENANCE phase (the IVF twin of
     dedup_band_index_compact): build on the even half, append the odd
     half (each cell dir now holds 2 files — one per write), then
-    ``compact_partitioned_index`` rewrites every cell dir to ONE file
+    ``compact_stored_index`` rewrites every cell dir to ONE file
     and swaps it in; the probe then searches the compacted index with
     the probed-cell IN-set still pushed as PartitionFilters. Same
     small-files story as the band index: a year of hourly appends
@@ -1535,85 +1569,9 @@ def vec_ivf_stored_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     op. The oracle is the append lifecycle's statement verbatim —
     compaction moves bytes, never rows. File-count collapse is
     asserted in tests/test_plan_shapes.py."""
-    import os as _os
-    import shutil as _shutil
-
-    from process_spark.operators.dedup import compact_partitioned_index
-    from process_spark.operators.similarity import (
-        ivf_assign,
-        ivf_build,
-        ivf_probe_cells,
-        ivf_search,
+    return _ivf_stored(
+        spark, sf_dir, "ivf_cell_index_compact", append=True, compact=True
     )
-    from process_spark.queries.io_udf import _SCRATCH
-
-    e = t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.array(F.lit(1.0), _t32()).alias("embedding")
-    )
-    e_even = e.filter(F.col("vec_id") % 2 == 0)
-    e_odd = e.filter(F.col("vec_id") % 2 == 1)
-    cells, assign_even = ivf_build(e_even, n_cells=8, seed_hash="md5")
-
-    path = _os.path.join(_SCRATCH, "ivf_cell_index_compact")
-    _shutil.rmtree(path, ignore_errors=True)
-    assign_even.repartition(8, F.col("cell_id")).write.mode(
-        "overwrite"
-    ).partitionBy("cell_id").parquet(path)
-    ivf_assign(e_odd, cells).repartition(8, F.col("cell_id")).write.mode(
-        "append"
-    ).partitionBy("cell_id").parquet(path)
-    compact_partitioned_index(spark, path, ["cell_id"], n_write_tasks=8)
-    stored = spark.read.parquet(path)
-
-    q = e.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    probed = sorted(  # bounded: cell domain is n_cells=8
-        r["cell_id"]
-        for r in ivf_probe_cells(cells, q, n_probe=2)
-        .select("cell_id")
-        .distinct()
-        .collect()
-    )
-    pruned = stored.filter(F.col("cell_id").isin(probed))
-    knn = ivf_search(q, cells, pruned, k=5, n_probe=2)
-    return knn.groupBy("q_id").agg(
-        F.array_join(
-            F.transform(
-                F.sort_array(F.collect_list("vec_id")),
-                lambda x: x.cast("string"),
-            ),
-            ",",
-        ).alias("neighbor_ids")
-    )
-
-
-#: "Re-crawled" embedding scalar for the update lifecycle: the same
-#: md5 fold as _O_T32 but over 'u' || vec_id — a DIFFERENT deterministic
-#: value per id, replayable in DuckDB, so an UPDATE genuinely moves the
-#: vector (and possibly its cell) instead of re-ingesting identical
-#: content.
-_O_T32U = (
-    "(CAST(('0x' || substr(md5('u' || CAST(vec_id AS VARCHAR)), 1, 8)) "
-    "AS BIGINT) / 4294967296.0)"
-)
-
-
-def _t32u() -> "F.Column":
-    """Spark twin of :data:`_O_T32U`."""
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("u"), F.col("vec_id").cast("string"))), 1, 8
-        ),
-        16,
-        10,
-    ).cast("long")
-    return h / F.lit(4294967296.0)
-
-
-#: The "re-crawled" vectors: every id ending in 7 — disjoint from the
-#: every-100th-id query sample, so the query set survives the delete.
-_UPD_VEC_FILTER = "vec_id % 10 = 7"
 
 
 def _ivf_updated_oracle() -> str:
@@ -1689,86 +1647,8 @@ def vec_ivf_stored_updated(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors assigned to the UNCHANGED cells — the whole delete/update
     machinery is storage detail, hash-checked end to end under the md5
     2-d fixture."""
-    import os as _os
-    import shutil as _shutil
-
-    from process_spark.operators.indexlife import (
-        compact_stored_index,
-        live_index_rows,
-        tombstone_index_ids,
-        write_stored_index,
-    )
-    from process_spark.operators.similarity import (
-        ivf_assign,
-        ivf_build,
-        ivf_probe_cells,
-        ivf_search,
-    )
-    from process_spark.queries.io_udf import _SCRATCH
-
-    e = t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.array(F.lit(1.0), _t32()).alias("embedding")
-    )
-    e_even = e.filter(F.col("vec_id") % 2 == 0)
-    e_odd = e.filter(F.col("vec_id") % 2 == 1)
-    cells, assign_even = ivf_build(e_even, n_cells=8, seed_hash="md5")
-    cells = cells.localCheckpoint(eager=True)  # consumed by 2 probes
-
-    path = _os.path.join(_SCRATCH, "ivf_index_updated")
-    _shutil.rmtree(path, ignore_errors=True)
-    write_stored_index(
-        assign_even, path, ["cell_id"], "vec_id", mode="overwrite"
-    )
-    write_stored_index(
-        ivf_assign(e_odd, cells), path, ["cell_id"], "vec_id", mode="append"
-    )
-
-    # the re-crawl: logical delete, probes exclude immediately
-    tombstone_index_ids(
-        spark, path, e.filter(F.expr(_UPD_VEC_FILTER)).select("vec_id")
-    )
-    q = e.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    probed = sorted(  # bounded: cell domain is n_cells=8
-        r["cell_id"]
-        for r in ivf_probe_cells(cells, q, n_probe=2)
-        .select("cell_id")
-        .distinct()
-        .collect()
-    )
-
-    def _phase(df):
-        knn = ivf_search(
-            q, cells, df.filter(F.col("cell_id").isin(probed)), k=5,
-            n_probe=2,
-        )
-        return knn.groupBy("q_id").agg(
-            F.array_join(
-                F.transform(
-                    F.sort_array(F.collect_list("vec_id")),
-                    lambda x: x.cast("string"),
-                ),
-                ",",
-            ).alias("neighbor_ids")
-        )
-
-    # materialize phase 1 BEFORE the purge mutates the index
-    ra = _phase(live_index_rows(spark, path)).localCheckpoint(eager=True)
-
-    # purge at the maintenance pass (tombstones dropped last), then the
-    # updated versions re-ingest through the validated append path
-    compact_stored_index(spark, path)
-    e_upd = t(spark, sf_dir, "embeddings").filter(
-        F.expr(_UPD_VEC_FILTER)
-    ).select("vec_id", F.array(F.lit(1.0), _t32u()).alias("embedding"))
-    write_stored_index(
-        ivf_assign(e_upd, cells), path, ["cell_id"], "vec_id", mode="append"
-    )
-    rb = _phase(live_index_rows(spark, path))
-
-    return ra.select(F.lit(1).cast("int").alias("phase"), "*").unionByName(
-        rb.select(F.lit(2).cast("int").alias("phase"), "*")
+    return _ivf_stored(
+        spark, sf_dir, "ivf_index_updated", append=True, update=True
     )
 
 
@@ -1832,11 +1712,7 @@ def vec_ivf_sq8_md5_idset(spark: SparkSession, sf_dir: str) -> DataFrame:
     as vec_ivf_knn_md5_idset / vec_sq8_knn: fixture settings n_probe=2,
     k=5, self-matches included on both sides."""
     from process_spark.operators.relational import topk_per_group
-    from process_spark.operators.similarity import (
-        _sq8_unit_code,
-        ivf_build,
-        ivf_probe_cells,
-    )
+    from process_spark.operators.similarity import _sq8_unit_code
 
     e = t(spark, sf_dir, "embeddings").select(
         "vec_id", F.array(F.lit(1.0), _t32()).alias("embedding")
@@ -1876,15 +1752,7 @@ def vec_ivf_sq8_md5_idset(spark: SparkSession, sf_dir: str) -> DataFrame:
     topk = topk_per_group(
         scored, ["q_id"], [F.desc("adc_score"), F.col("vec_id")], 5
     )
-    return topk.groupBy("q_id").agg(
-        F.array_join(
-            F.transform(
-                F.sort_array(F.collect_list("vec_id")),
-                lambda x: x.cast("string"),
-            ),
-            ",",
-        ).alias("neighbor_ids")
-    )
+    return _neighbor_ids(topk)
 
 
 @register("vec_ivf_sq8_knn", oracle=None)
@@ -1913,11 +1781,7 @@ def vec_ivf_sq8_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-rank joins."""
     from process_spark.functions.vectorfn import dot, unit_with
     from process_spark.operators.relational import topk_per_group
-    from process_spark.operators.similarity import (
-        _sq8_unit_code,
-        ivf_build,
-        ivf_probe_cells,
-    )
+    from process_spark.operators.similarity import _sq8_unit_code
 
     e = t(spark, sf_dir, "embeddings")
     cells, assignments = ivf_build(e, n_cells=8)
@@ -2320,8 +2184,9 @@ def vec_srp_stored_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O68 STORED ANN index lifecycle for the multi-band SRP family —
     the one index family that still rebuilt its hash tables per run.
     The (vec_id, band_idx, bucket) relation (the 112-band pool of
-    vec_ann_srp_bucketed, verbatim) is WRITTEN ``partitionBy(band_idx)``
-    with the one-file-per-dir discipline, then run through the full
+    vec_ann_srp_bucketed, verbatim) is WRITTEN through
+    indexlife.write_stored_index, partitioned by band_idx with the
+    one-file-per-dir discipline, then run through the full
     production lifecycle in one query:
 
       write(history = even vec_ids) → probe 1 (the TUNED
@@ -2330,7 +2195,7 @@ def vec_srp_stored_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
       PartitionFilters: a deployment that tuned to b bands reads
       b/112 of its index files) → append the odd vectors in two
       batches (dirs accrete one file per batch) → compact
-      (compact_partitioned_index on ["band_idx"], 3 files/dir → 1) →
+      (compact_stored_index, 3 files/dir → 1) →
       probe 2 (full pool over the whole corpus).
 
     Phase 2 must equal the in-memory vec_ann_srp_bucketed relation
@@ -2342,18 +2207,15 @@ def vec_srp_stored_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     once per INGESTED vector (never recomputed at probe time — the
     point of storing the index); query bands broadcast; only candidate
     dedup + re-rank shuffle."""
-    import os as _os
-
-    from process_spark.operators.dedup import compact_partitioned_index
-    from process_spark.queries.io_udf import _SCRATCH
-
     e = t(spark, sf_dir, "embeddings")
-    path = _os.path.join(_SCRATCH, "srp_band_index")
+    path = os.path.join(_SCRATCH, "srp_band_index")
+    shutil.rmtree(path, ignore_errors=True)
 
     def write(part: DataFrame, mode: str) -> None:
-        _ann_banded(part).repartition(64, F.col("band_idx")).write.mode(
-            mode
-        ).partitionBy("band_idx").parquet(path)
+        write_stored_index(
+            _ann_banded(part), path, ["band_idx"], "vec_id", mode=mode,
+            n_write_tasks=64,
+        )
 
     write(e.filter(F.col("vec_id") % 2 == 0), "overwrite")
 
@@ -2400,18 +2262,17 @@ def vec_srp_stored_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     # layout = the tuner's knob becomes file pruning). Materialized
     # BEFORE the appends mutate the index (lazy plans must not see
     # later batches).
-    stored1 = spark.read.parquet(path).filter(
+    stored1 = live_index_rows(spark, path).filter(
         F.col("band_idx") < _SRP_STORED_PROBE_BANDS
     )
     phase1 = probe(stored1, 1).localCheckpoint(eager=True)
 
     # Ingest the odd half in two batches, then weekly maintenance.
     write(e.filter(F.col("vec_id") % 4 == 1), "append")
-    spark.catalog.refreshByPath(path)
     write(e.filter(F.col("vec_id") % 4 == 3), "append")
-    compact_partitioned_index(spark, path, ["band_idx"])
+    compact_stored_index(spark, path, n_write_tasks=64)
 
-    phase2 = probe(spark.read.parquet(path), 2)
+    phase2 = probe(live_index_rows(spark, path), 2)
     return phase1.unionByName(phase2)
 
 
@@ -2452,8 +2313,6 @@ def vec_ivf_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     is scanned once. The oracle replays the whole md5 chain plus the
     drift aggregation; drift is a half-up-scaled integer over float32
     operands, so the comparison is exact."""
-    from process_spark.operators.similarity import ivf_build
-
     e = t(spark, sf_dir, "embeddings").select(
         "vec_id", F.array(F.lit(1.0), _t32()).alias("embedding")
     )
@@ -2596,14 +2455,11 @@ def vec_pq_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows. Output: (subspace, n_train, n_current, err_train_ppb,
     err_current_ppb, drift_ppb); errors are float32-snapped then
     half-up-scaled to integers, so the oracle is exact."""
-    import os as _os
-
     from process_spark.operators.similarity import (
         pq_load_codebooks,
         pq_quantization_error,
         pq_save_codebooks,
     )
-    from process_spark.queries.io_udf import _SCRATCH
 
     e = t(spark, sf_dir, "embeddings").select(
         "vec_id", F.array(F.lit(1.0), _t32()).alias("embedding")
@@ -2648,7 +2504,7 @@ def vec_pq_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         books.append(
             [[float(r["m"])] for r in refined.orderBy("cell_id").collect()]
         )
-    path = _os.path.join(_SCRATCH, "pq_drift_codebooks")
+    path = os.path.join(_SCRATCH, "pq_drift_codebooks")
     pq_save_codebooks(spark, books, path)
     loaded = pq_load_codebooks(spark, path)
 
@@ -2885,8 +2741,6 @@ def vec_ivf_rebuild_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells drift up to ~23,700 ppm vs the 10,000 ppm threshold, so the
     fixture exercises the rebuild branch; the oracle replays BOTH
     branches and picks by the same exact-integer comparison."""
-    from process_spark.operators.similarity import ivf_assign, ivf_build
-
     e = t(spark, sf_dir, "embeddings").select(
         "vec_id", F.array(F.lit(1.0), _t32()).alias("embedding")
     )
@@ -2963,16 +2817,7 @@ def vec_ivf_index_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     every count is an exact function of the embeddings table. The
     reconciliation is one distributed full-outer join on vec_id — no
     driver-side id sets — so the audit holds at any index size."""
-    import os as _os
-    import shutil as _shutil
-
-    from process_spark.operators.indexlife import (
-        stored_index_audit,
-        tombstone_index_ids,
-        write_stored_index,
-    )
-    from process_spark.operators.similarity import ivf_assign, ivf_build
-    from process_spark.queries.io_udf import _SCRATCH
+    from process_spark.operators.indexlife import stored_index_audit
 
     e = t(spark, sf_dir, "embeddings").select(
         "vec_id", F.array(F.lit(1.0), _t32()).alias("embedding")
@@ -2982,8 +2827,8 @@ def vec_ivf_index_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells, assign_even = ivf_build(e_even, n_cells=8, seed_hash="md5")
     cells = cells.localCheckpoint(eager=True)
 
-    path = _os.path.join(_SCRATCH, "ivf_index_audit")
-    _shutil.rmtree(path, ignore_errors=True)
+    path = os.path.join(_SCRATCH, "ivf_index_audit")
+    shutil.rmtree(path, ignore_errors=True)
     write_stored_index(
         assign_even, path, ["cell_id"], "vec_id", mode="overwrite"
     )
@@ -3033,25 +2878,19 @@ def vec_ivf_index_repaired(spark: SparkSession, sf_dir: str) -> DataFrame:
     tombstone; the returned row is the post-repair audit verdict plus
     the repair's own accounting, every value a closed-form integer
     over the embeddings table."""
-    import os as _os
-    import shutil as _shutil
-
     from process_spark.operators.indexlife import (
         _ids_membership,
         repair_stored_index,
         stored_index_audit,
-        write_stored_index,
     )
-    from process_spark.operators.similarity import ivf_build
-    from process_spark.queries.io_udf import _SCRATCH
 
     e = t(spark, sf_dir, "embeddings").select(
         "vec_id", F.array(F.lit(1.0), _t32()).alias("embedding")
     )
     cells, assign = ivf_build(e, n_cells=8, seed_hash="md5")
 
-    path = _os.path.join(_SCRATCH, "ivf_index_repaired")
-    _shutil.rmtree(path, ignore_errors=True)
+    path = os.path.join(_SCRATCH, "ivf_index_repaired")
+    shutil.rmtree(path, ignore_errors=True)
     write_stored_index(assign, path, ["cell_id"], "vec_id", mode="overwrite")
 
     # synthetic ids far above the corpus id range keep the seeding
@@ -3085,11 +2924,11 @@ def vec_ivf_index_repaired(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(1).write.mode("append")
         .partitionBy("id_bucket").parquet(path + "/_tombstones")
     )
-    spark.catalog.refreshByPath(_os.path.join(path, "_ids"))
-    spark.catalog.refreshByPath(_os.path.join(path, "data"))
+    spark.catalog.refreshByPath(os.path.join(path, "_ids"))
+    spark.catalog.refreshByPath(os.path.join(path, "data"))
 
     out = repair_stored_index(spark, path)
-    spark.catalog.refreshByPath(_os.path.join(path, "_ids"))
+    spark.catalog.refreshByPath(os.path.join(path, "_ids"))
     return stored_index_audit(spark, path).select(
         "*",
         F.lit(bool(out["was_consistent"])).alias("was_consistent"),

@@ -506,6 +506,65 @@ def test_broadcast_call_sites_reviewed():
     )
 
 
+#: Reviewed census of DataFrameWriter ``partitionBy(`` lines under
+#: process_spark/queries/ (``Window.partitionBy`` excluded): file →
+#: (exact matched-line count, why each survivor is not an
+#: operators/indexlife.py write). Every batch stored index is written
+#: with indexlife.write_stored_index, so a new raw index write fails
+#: here until it is routed through it or reviewed. Docstring mentions
+#: count too, as in BROADCAST_SITES.
+INDEX_WRITE_SITES = {
+    "streaming.py": (
+        5,
+        "the streaming sinks' idempotent _write_batch (dynamic "
+        "partition overwrite per batch_id — replays land in the same "
+        "dirs) + the foreachBatch export sink + 3 docstring mentions "
+        "of the batch_id-sealed stream layouts",
+    ),
+    "retrieval.py": (
+        4,
+        "_bootstrap_postings' 3 writes (postings data, _docs and "
+        "_stats seeded at batch_id = -1 for the streaming postings "
+        "sink) + _stored_ivf_knn's cell write, overlapped with the "
+        "probe-cell collect in the hybrid-retrieval channel",
+    ),
+    "vectors.py": (
+        3,
+        "vec_ivf_index_repaired's deliberate corruption writes "
+        "(orphaned _ids, a raw data row, an orphaned tombstone) that "
+        "repair_stored_index must heal",
+    ),
+}
+
+
+def test_index_write_sites_reviewed():
+    """Grep process_spark/queries/ for DataFrameWriter ``partitionBy(``
+    lines; every file's count must equal its INDEX_WRITE_SITES entry."""
+    import pathlib
+
+    root = (
+        pathlib.Path(__file__).resolve().parent.parent
+        / "process_spark"
+        / "queries"
+    )
+    actual = {}
+    for p in sorted(root.rglob("*.py")):
+        n = sum(
+            1
+            for line in p.read_text().splitlines()
+            if "partitionBy(" in line and "Window.partitionBy(" not in line
+        )
+        if n:
+            actual[str(p.relative_to(root))] = n
+    expected = {k: v[0] for k, v in INDEX_WRITE_SITES.items()}
+    assert actual == expected, (
+        "partitionBy( write census drift — route new index writes "
+        "through indexlife.write_stored_index, or review them and update "
+        f"INDEX_WRITE_SITES with a reason.\nactual={actual}\n"
+        f"expected={expected}"
+    )
+
+
 def test_allowlists_not_stale(plans):
     """Every allowlisted query must still exhibit (or at least still
     exist for) the shape it is excused for — prune dead entries."""

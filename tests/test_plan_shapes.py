@@ -302,6 +302,7 @@ def test_band_index_append_lifecycle(spark):
     from the initial write, at most one from the append)."""
     import os
 
+    from process_spark.operators.indexlife import stored_index_audit
     from process_spark.queries.io_udf import _SCRATCH
     from process_spark.queries.registry import REGISTRY
 
@@ -316,8 +317,9 @@ def test_band_index_append_lifecycle(spark):
     assert "band_bucket" in plan.split("PartitionFilters")[1].split("]")[0], plan
 
     root = os.path.join(_SCRATCH, "minhash_band_index_append")
-    for band_dir in os.listdir(root):
-        bp = os.path.join(root, band_dir)
+    assert stored_index_audit(spark, root).collect()[0]["consistent"]
+    for band_dir in os.listdir(os.path.join(root, "data")):
+        bp = os.path.join(root, "data", band_dir)
         if not os.path.isdir(bp):
             continue
         for bucket_dir in os.listdir(bp):
@@ -339,6 +341,7 @@ def test_registered_ivf_stored_probe_prunes_partitions(spark):
     (repartition-on-partition-key write discipline)."""
     import os
 
+    from process_spark.operators.indexlife import stored_index_audit
     from process_spark.queries.io_udf import _SCRATCH
     from process_spark.queries.registry import REGISTRY
 
@@ -349,8 +352,9 @@ def test_registered_ivf_stored_probe_prunes_partitions(spark):
     assert df.count() > 0
 
     root = os.path.join(_SCRATCH, "ivf_cell_index")
-    for cell_dir in os.listdir(root):
-        cp = os.path.join(root, cell_dir)
+    assert stored_index_audit(spark, root).collect()[0]["consistent"]
+    for cell_dir in os.listdir(os.path.join(root, "data")):
+        cp = os.path.join(root, "data", cell_dir)
         if not os.path.isdir(cp):
             continue
         files = [f for f in os.listdir(cp) if f.endswith(".parquet")]
@@ -403,6 +407,7 @@ def test_ivf_stored_append_prunes_and_stays_one_file_per_write(spark):
     file count proportional to append batches, not shuffle width."""
     import os
 
+    from process_spark.operators.indexlife import stored_index_audit
     from process_spark.queries.io_udf import _SCRATCH
     from process_spark.queries.registry import REGISTRY
 
@@ -413,8 +418,9 @@ def test_ivf_stored_append_prunes_and_stays_one_file_per_write(spark):
     assert df.count() > 0
 
     root = os.path.join(_SCRATCH, "ivf_cell_index_append")
-    for cell_dir in os.listdir(root):
-        cp = os.path.join(root, cell_dir)
+    assert stored_index_audit(spark, root).collect()[0]["consistent"]
+    for cell_dir in os.listdir(os.path.join(root, "data")):
+        cp = os.path.join(root, "data", cell_dir)
         if not os.path.isdir(cp):
             continue
         files = [f for f in os.listdir(cp) if f.endswith(".parquet")]
@@ -422,8 +428,11 @@ def test_ivf_stored_append_prunes_and_stays_one_file_per_write(spark):
 
 
 @pytest.mark.slow  # measured >8s (r14 durations); full profile via --runslow
-def test_compact_band_index_collapses_files_probe_invariant(spark, tmp_path):
-    """compact_band_index: (a) every (band_idx, band_bucket) dir
+def test_compact_partitioned_index_collapses_files_probe_invariant(
+    spark, tmp_path
+):
+    """compact_partitioned_index on the band layout: (a) every
+    (band_idx, band_bucket) dir
     collapses to ONE file regardless of how many appends built it;
     (b) probe candidates are IDENTICAL before and after (compaction
     moves bytes, not rows); (c) the batch_id streaming layout is
@@ -433,10 +442,8 @@ def test_compact_band_index_collapses_files_probe_invariant(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from process_spark.operators.dedup import (
-        compact_band_index,
-        minhash_band_index,
-    )
+    from process_spark.operators.dedup import minhash_band_index
+    from process_spark.operators.indexlife import compact_partitioned_index
     from process_spark.sources.io import load
 
     d = load(spark, SF, "documents")
@@ -472,7 +479,9 @@ def test_compact_band_index_collapses_files_probe_invariant(spark, tmp_path):
 
     before = candidates()
     assert max_files_per_dir() >= 3, "fixture failed to fragment dirs"
-    stats = compact_band_index(spark, path, n_write_tasks=8)
+    stats = compact_partitioned_index(
+        spark, path, ["band_idx", "band_bucket"], n_write_tasks=8
+    )
     assert stats["files_after"] < stats["files_before"]
     assert max_files_per_dir() == 1
     assert candidates() == before, "compaction changed probe results"
@@ -488,7 +497,9 @@ def test_compact_band_index_collapses_files_probe_invariant(spark, tmp_path):
             "band_idx", "band_bucket", "batch_id"
         ).parquet(path2)
     n_rows = spark.read.parquet(path2).count()
-    compact_band_index(spark, path2, n_write_tasks=8)
+    compact_partitioned_index(
+        spark, path2, ["band_idx", "band_bucket"], n_write_tasks=8
+    )
     sealed = spark.read.parquet(path2)
     assert sealed.count() == n_rows
     assert sealed.select("batch_id").distinct().collect()[0][0] == -1
@@ -511,6 +522,7 @@ def test_ivf_stored_compact_one_file_per_cell(spark):
     invariance)."""
     import os
 
+    from process_spark.operators.indexlife import stored_index_audit
     from process_spark.queries.io_udf import _SCRATCH
     from process_spark.queries.registry import REGISTRY
 
@@ -521,8 +533,9 @@ def test_ivf_stored_compact_one_file_per_cell(spark):
     assert df.count() > 0
 
     root = os.path.join(_SCRATCH, "ivf_cell_index_compact")
-    for cell_dir in os.listdir(root):
-        cp = os.path.join(root, cell_dir)
+    assert stored_index_audit(spark, root).collect()[0]["consistent"]
+    for cell_dir in os.listdir(os.path.join(root, "data")):
+        cp = os.path.join(root, "data", cell_dir)
         if not os.path.isdir(cp):
             continue
         files = [f for f in os.listdir(cp) if f.endswith(".parquet")]
@@ -539,6 +552,7 @@ def test_srp_stored_lifecycle_prunes_and_compacts(spark):
     invariance is the registered exact-hash oracle's job)."""
     import os
 
+    from process_spark.operators.indexlife import stored_index_audit
     from process_spark.queries.io_udf import _SCRATCH
     from process_spark.queries.registry import REGISTRY
 
@@ -555,7 +569,7 @@ def test_srp_stored_lifecycle_prunes_and_compacts(spark):
     from process_spark.queries.vectors import _SRP_STORED_PROBE_BANDS
 
     root = os.path.join(_SCRATCH, "srp_band_index")
-    pruned = spark.read.parquet(root).filter(
+    pruned = spark.read.parquet(os.path.join(root, "data")).filter(
         F.col("band_idx") < _SRP_STORED_PROBE_BANDS
     )
     plan = pruned._jdf.queryExecution().executedPlan().toString()
@@ -563,8 +577,9 @@ def test_srp_stored_lifecycle_prunes_and_compacts(spark):
     assert "band_idx" in plan.split("PartitionFilters")[1].split("]")[0], plan
 
     # one file per band dir after compaction
-    for band_dir in os.listdir(root):
-        bp = os.path.join(root, band_dir)
+    assert stored_index_audit(spark, root).collect()[0]["consistent"]
+    for band_dir in os.listdir(os.path.join(root, "data")):
+        bp = os.path.join(root, "data", band_dir)
         if not os.path.isdir(bp):
             continue
         files = [f for f in os.listdir(bp) if f.endswith(".parquet")]
@@ -578,6 +593,7 @@ def test_simhash_stored_index_prunes(spark):
     exactly one file (the one-file-per-dir write discipline)."""
     import os
 
+    from process_spark.operators.indexlife import stored_index_audit
     from process_spark.queries.io_udf import _SCRATCH
     from process_spark.queries.registry import REGISTRY
 
@@ -588,8 +604,9 @@ def test_simhash_stored_index_prunes(spark):
     assert df.count() > 0
 
     root = os.path.join(_SCRATCH, "simhash_band_index")
-    for band_dir in os.listdir(root):
-        bp = os.path.join(root, band_dir)
+    assert stored_index_audit(spark, root).collect()[0]["consistent"]
+    for band_dir in os.listdir(os.path.join(root, "data")):
+        bp = os.path.join(root, "data", band_dir)
         if not os.path.isdir(bp):
             continue
         for bucket_dir in os.listdir(bp):

@@ -193,7 +193,7 @@ def test_postings_sink_replay_and_sealed_own(spark, tmp_path):
     sealed the batch into batch_id = -1 (the crash-compaction race), a
     replay detects its own sealed doc_ids and appends NOTHING — no
     duplicated postings, probe still equals the in-memory kernel."""
-    from process_spark.operators.dedup import compact_partitioned_index
+    from process_spark.operators.indexlife import compact_partitioned_index
     from process_spark.operators.retrieval import incremental_postings_sink
 
     path = str(tmp_path / "pidx")
@@ -372,7 +372,7 @@ def test_compact_postings_stats_replay_watermark(spark, tmp_path):
     assert stats_sum() == before
     # crash-replay of batch 1 AFTER the fold: postings are sealed-own
     # skipped, and the stats delta must NOT double-add
-    from process_spark.operators.dedup import compact_partitioned_index
+    from process_spark.operators.indexlife import compact_partitioned_index
 
     compact_partitioned_index(spark, path + "/data", ["term_bucket"])
     spark.catalog.refreshByPath(path + "/data")

@@ -400,10 +400,8 @@ def test_incremental_dedup_sink_replay_after_compaction(spark, tmp_path):
     and produce EXACTLY the clean-run pairs and index."""
     import os
 
-    from process_spark.operators.dedup import (
-        compact_band_index,
-        minhash_band_index,
-    )
+    from process_spark.operators.dedup import minhash_band_index
+    from process_spark.operators.indexlife import compact_partitioned_index
     from process_spark.queries.streaming import incremental_dedup_sink
 
     kw = dict(num_hashes=16, bands=4, base_hash="xxhash64",
@@ -443,7 +441,7 @@ def test_incremental_dedup_sink_replay_after_compaction(spark, tmp_path):
     )
 
     # crash-after-append + maintenance: seal EVERYTHING into -1
-    compact_band_index(spark, idx_dir)
+    compact_partitioned_index(spark, idx_dir, ["band_idx", "band_bucket"])
     sealed = spark.read.parquet(idx_dir)
     assert sealed.filter(F.col("batch_id") != -1).count() == 0
 
@@ -1046,7 +1044,7 @@ def test_incremental_vector_sink_replay_after_compaction(spark, tmp_path):
     and the append would duplicate B's index rows permanently. The
     sink must detect its own sealed vec_ids and produce EXACTLY the
     clean-run pairs and index."""
-    from process_spark.operators.dedup import compact_partitioned_index
+    from process_spark.operators.indexlife import compact_partitioned_index
     from process_spark.operators.similarity import ivf_build
     from process_spark.queries.streaming import incremental_vector_sink
 
@@ -1112,7 +1110,7 @@ def test_incremental_srp_sink_replay_after_compaction(spark, tmp_path):
     shared-band COUNTS — a doubled match would inflate
     n_shared_bands, not just duplicate rows) and the index exactly at
     the clean-run state."""
-    from process_spark.operators.dedup import compact_partitioned_index
+    from process_spark.operators.indexlife import compact_partitioned_index
     from process_spark.queries.streaming import incremental_srp_sink
     from process_spark.queries.vectors import _ann_banded
 
@@ -1179,7 +1177,7 @@ def test_incremental_dedup_sink_sealed_detection_under_guard(
     ordering. Sealed-own detection must come from the UNGUARDED bands:
     the replay may not re-append the sealed docs under its own
     batch_id."""
-    from process_spark.operators.dedup import compact_band_index
+    from process_spark.operators.indexlife import compact_partitioned_index
     from process_spark.queries.streaming import incremental_dedup_sink
 
     kw = dict(num_hashes=16, bands=4, base_hash="xxhash64",
@@ -1216,7 +1214,7 @@ def test_incremental_dedup_sink_sealed_detection_under_guard(
         F.col("doc_id") >= 100
     ).count() == 6 * kw["bands"]
 
-    compact_band_index(spark, idx_dir)
+    compact_partitioned_index(spark, idx_dir, ["band_idx", "band_bucket"])
     assert spark.read.parquet(idx_dir).filter(
         F.col("batch_id") != -1
     ).count() == 0
