@@ -287,7 +287,7 @@ def compact_partitioned_index(
     so tombstoned rows ride out for free.
 
     If the index carries a ``batch_id`` partition level (the
-    idempotent streaming layout — see incremental_dedup_sink), the
+    idempotent streaming layout — see queries/streaming._pair_sink), the
     compacted history is SEALED as ``batch_id = -1``: future appends
     keep their replay-overwrite semantics and future probes'
     ``batch_id < current`` history filter still sees every sealed row.
@@ -299,10 +299,9 @@ def compact_partitioned_index(
     checkpoint). If the stream died mid-batch and compaction sealed
     the orphaned batch's rows into ``batch_id = -1``, a naive restart
     would probe the batch against its own sealed bands and re-append
-    duplicates; the engine's three streaming sinks
-    (``incremental_dedup_sink``, ``incremental_vector_sink``,
-    ``incremental_srp_sink``) all detect and skip their own sealed
-    ids, but third-party sinks over the same layout must either
+    duplicates; the engine's three streaming pair sinks share one
+    body (``queries/streaming._pair_sink``) that detects and skips its
+    own sealed ids, and the postings sink does the same, but third-party sinks over the same layout must either
     replicate that hygiene or observe the clean-termination ordering.
 
     Returns ``{"files_before", "files_after", "rows"}``."""

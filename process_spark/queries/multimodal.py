@@ -126,6 +126,79 @@ def mm_decode_image_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decode_image_meta_real(_blobs(spark, sf_dir))
 
 
+def _fixture_blobs(spark: SparkSession, sf_dir: str, blob) -> DataFrame:
+    """``(doc_id, blob)`` for every document: ``blob(encode, did, nc)``
+    builds the bytes from the media fixture encoder, ``did = |doc_id|``
+    and ``nc = |n_chars|`` (0 when NULL), one Arrow batch at a time
+    across ``defaultParallelism`` doc_id-hashed partitions."""
+    encode = _media_fixture_encoder()
+
+    def build(batches):
+        import pandas as pd  # noqa: PLC0415
+
+        for pdf in batches:
+            blobs = [
+                blob(
+                    encode,
+                    abs(int(doc_id)),
+                    0 if pd.isna(n_chars) else abs(int(n_chars)),
+                )
+                for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"])
+            ]
+            yield pd.DataFrame(
+                {"doc_id": pdf["doc_id"].to_numpy(), "blob": blobs}
+            )
+
+    d = t(spark, sf_dir, "documents").select("doc_id", "n_chars")
+    n_part = spark.sparkContext.defaultParallelism
+    return d.repartition(n_part, F.col("doc_id")).mapInPandas(
+        build, schema="doc_id bigint, blob binary"
+    )
+
+
+#: Container format of the header fixtures, cycled by doc_id.
+_HEADER_FORMATS = ("bmp", "ppm", "gif", "wav", "png")
+
+
+def _header_blob(encode, did: int, nc: int) -> bytes:
+    """A real media container whose geometry is a closed form of
+    (did, nc); every 13th payload is truncated to 6 bytes."""
+    fmt = _HEADER_FORMATS[did % 5]
+    if fmt == "wav":
+        b = encode(
+            "wav",
+            ch=1 + did % 2,
+            rate=8000 + (did % 3) * 4000,
+            n_samples=1 + nc % 1000,
+        )
+    else:
+        b = encode(
+            fmt,
+            w=1 + nc % 640,
+            h=1 + did % 480,
+            ch=4 if fmt == "png" else 3,
+        )
+    return b[:6] if did % 13 == 0 else b
+
+
+def _ppm_blob(encode, did: int, nc: int) -> bytes:
+    """A P6 PPM with a deterministic RGB raster."""
+    return encode(
+        "ppm", w=1 + nc % 12, h=1 + did % 10, body_seed=(did * 11 + 3) % 256
+    )
+
+
+def _wav_blob(encode, did: int, nc: int) -> bytes:
+    """A 16-bit mono PCM WAV with a deterministic sample body."""
+    return encode(
+        "wav",
+        ch=1,
+        rate=16000,
+        n_samples=1 + nc % 400,
+        body_seed=(did * 13 + 5) % 2003,
+    )
+
+
 @register(
     "mm_decode_real_headers",
     # The fixture kernel builds REAL container bytes (valid BMP / P6
@@ -175,43 +248,7 @@ def mm_decode_real_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
     off the BYTES. No digest stand-ins: width comes from the int32 at
     BMP offset 18, duration from the RIFF data-chunk size, and corrupt
     headers degrade to NULL rows instead of failing the sweep."""
-    encode = _media_fixture_encoder()
-    id_t = "bigint"
-
-    def build(batches):
-        import pandas as pd  # noqa: PLC0415
-
-        for pdf in batches:
-            blobs = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                did = abs(int(doc_id))
-                nc = 0 if pd.isna(n_chars) else abs(int(n_chars))
-                fmt = ("bmp", "ppm", "gif", "wav", "png")[did % 5]
-                if fmt == "wav":
-                    b = encode(
-                        "wav",
-                        ch=1 + did % 2,
-                        rate=8000 + (did % 3) * 4000,
-                        n_samples=1 + nc % 1000,
-                    )
-                else:
-                    b = encode(
-                        fmt,
-                        w=1 + nc % 640,
-                        h=1 + did % 480,
-                        ch=4 if fmt == "png" else 3,
-                    )
-                blobs.append(b[:6] if did % 13 == 0 else b)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].to_numpy(), "blob": blobs}
-            )
-
-    d = t(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    n_part = spark.sparkContext.defaultParallelism
-    blobs = d.repartition(n_part, F.col("doc_id")).mapInPandas(
-        build, schema=f"doc_id {id_t}, blob binary"
-    )
-    return decode_media_meta(blobs)
+    return decode_media_meta(_fixture_blobs(spark, sf_dir, _header_blob))
 
 
 def _o_resize2_terms() -> str:
@@ -263,34 +300,7 @@ def mm_decode_ppm_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     2×2 nearest-neighbor resize sum. This is the decode→feature-extract
     →resize chain of a multimodal preprocessing stage, hash-checked at
     the byte level."""
-    encode = _media_fixture_encoder()
-
-    def build(batches):
-        import pandas as pd  # noqa: PLC0415
-
-        for pdf in batches:
-            blobs = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                did = abs(int(doc_id))
-                nc = 0 if pd.isna(n_chars) else abs(int(n_chars))
-                blobs.append(
-                    encode(
-                        "ppm",
-                        w=1 + nc % 12,
-                        h=1 + did % 10,
-                        body_seed=(did * 11 + 3) % 256,
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].to_numpy(), "blob": blobs}
-            )
-
-    d = t(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    n_part = spark.sparkContext.defaultParallelism
-    blobs = d.repartition(n_part, F.col("doc_id")).mapInPandas(
-        build, schema="doc_id bigint, blob binary"
-    )
-    return decode_ppm_pixel_stats(blobs)
+    return decode_ppm_pixel_stats(_fixture_blobs(spark, sf_dir, _ppm_blob))
 
 
 @register(
@@ -326,35 +336,7 @@ def mm_decode_wav_pcm(spark: SparkSession, sf_dir: str) -> DataFrame:
     numpy, and reduces to exact integer loudness stats (sum|v|, sum v²,
     peak) — the audio-feature-extraction stage, hash-checked at the
     byte level."""
-    encode = _media_fixture_encoder()
-
-    def build(batches):
-        import pandas as pd  # noqa: PLC0415
-
-        for pdf in batches:
-            blobs = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                did = abs(int(doc_id))
-                nc = 0 if pd.isna(n_chars) else abs(int(n_chars))
-                blobs.append(
-                    encode(
-                        "wav",
-                        ch=1,
-                        rate=16000,
-                        n_samples=1 + nc % 400,
-                        body_seed=(did * 13 + 5) % 2003,
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].to_numpy(), "blob": blobs}
-            )
-
-    d = t(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    n_part = spark.sparkContext.defaultParallelism
-    blobs = d.repartition(n_part, F.col("doc_id")).mapInPandas(
-        build, schema="doc_id bigint, blob binary"
-    )
-    return decode_wav_pcm_stats(blobs)
+    return decode_wav_pcm_stats(_fixture_blobs(spark, sf_dir, _wav_blob))
 
 
 @register(
@@ -467,27 +449,12 @@ def mm_uri_lazy_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
             for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
                 did = abs(int(doc_id))
                 nc = 0 if pd.isna(n_chars) else abs(int(n_chars))
-                fmt = ("bmp", "ppm", "gif", "wav", "png")[did % 5]
-                path = os.path.join(store, f"{did}.{fmt}")
+                path = os.path.join(store, f"{did}.{_HEADER_FORMATS[did % 5]}")
                 uris.append("file://" + path)
                 if did % 17 == 0:
                     continue  # manifest lists it; the store never has it
-                if fmt == "wav":
-                    b = encode(
-                        "wav",
-                        ch=1 + did % 2,
-                        rate=8000 + (did % 3) * 4000,
-                        n_samples=1 + nc % 1000,
-                    )
-                else:
-                    b = encode(
-                        fmt,
-                        w=1 + nc % 640,
-                        h=1 + did % 480,
-                        ch=4 if fmt == "png" else 3,
-                    )
                 with open(path, "wb") as f:
-                    f.write(b[:6] if did % 13 == 0 else b)
+                    f.write(_header_blob(encode, did, nc))
             yield pd.DataFrame(
                 {"doc_id": pdf["doc_id"].to_numpy(), "uri": uris}
             )

@@ -18,7 +18,10 @@ the primitives in operators.dedup and functions.textfn.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from functools import reduce
+from operator import add
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from process_spark.functions.textfn import bpe_token_count, tokens, word_ngrams
@@ -2076,6 +2079,91 @@ _PII_EMAIL = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 _PII_IP = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
 
 
+def _pii_injected() -> Column:
+    """Each doc's text with one planted PII span (doc_id % 3: an email,
+    an IPv4 address, a URL) — pure string/integer arithmetic, so the
+    oracles replay it exactly (:func:`_o_injected`)."""
+    did = F.col("doc_id").cast("string")
+    return (
+        F.when(
+            F.col("doc_id") % 3 == 0,
+            F.concat(
+                F.col("text"), F.lit(" contact user"), did,
+                F.lit("@example.com now"),
+            ),
+        )
+        .when(
+            F.col("doc_id") % 3 == 1,
+            F.concat(
+                F.col("text"), F.lit(" from host 10."),
+                (F.col("doc_id") % 200).cast("string"), F.lit(".0."),
+                (F.col("doc_id") % 250).cast("string"), F.lit(" logged"),
+            ),
+        )
+        .otherwise(
+            F.concat(
+                F.col("text"), F.lit(" see https://host.example/"), did,
+                F.lit("/page for details"),
+            )
+        )
+    )
+
+
+def _pii_spans(txt: Column) -> list[Column]:
+    """Per-kind PII span counts of ``txt``: emails, IPs, URLs."""
+    return [
+        F.size(F.regexp_extract_all(txt, F.lit(p), F.lit(0)))
+        for p in (_PII_EMAIL, _PII_IP, _PII_URL)
+    ]
+
+
+def _pii_scrubbed(txt: Column) -> Column:
+    """``txt`` with every PII span replaced by its typed placeholder,
+    in the order URL → EMAIL → IP."""
+    return F.regexp_replace(
+        F.regexp_replace(
+            F.regexp_replace(txt, _PII_URL, "<URL>"), _PII_EMAIL, "<EMAIL>"
+        ),
+        _PII_IP,
+        "<IP>",
+    )
+
+
+def _o_pad(sql: str, pad: int) -> str:
+    """``sql`` with its continuation lines indented ``pad`` spaces, so
+    one shared oracle fragment splices in at any depth."""
+    return sql.replace("\n", "\n" + " " * pad)
+
+
+def _o_injected(alias: str, pad: int) -> str:
+    """DuckDB twin of :func:`_pii_injected`, aliased ``alias``."""
+    return _o_pad(
+        f"""CASE doc_id % 3
+  WHEN 0 THEN text || ' contact user' ||
+              CAST(doc_id AS VARCHAR) || '@example.com now'
+  WHEN 1 THEN text || ' from host 10.' ||
+              CAST(doc_id % 200 AS VARCHAR) || '.0.' ||
+              CAST(doc_id % 250 AS VARCHAR) || ' logged'
+  ELSE text || ' see https://host.example/' ||
+       CAST(doc_id AS VARCHAR) || '/page for details'
+END AS {alias}""",
+        pad,
+    )
+
+
+def _o_scrubbed(col: str, pad: int) -> str:
+    """DuckDB twin of :func:`_pii_scrubbed` (RE2 needs the 'g' flag
+    Spark applies implicitly)."""
+    return _o_pad(
+        f"""regexp_replace(
+  regexp_replace(
+    regexp_replace({col}, '{_PII_URL}', '<URL>', 'g'),
+    '{_PII_EMAIL}', '<EMAIL>', 'g'),
+  '{_PII_IP}', '<IP>', 'g')""",
+        pad,
+    )
+
+
 @register(
     "pipeline_pii_scrub",
     # The injection AND the redaction replayed in DuckDB: same
@@ -2086,15 +2174,7 @@ _PII_IP = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
     oracle=f"""
     WITH injected AS (
       SELECT doc_id, lang, source,
-             CASE doc_id % 3
-               WHEN 0 THEN text || ' contact user' ||
-                           CAST(doc_id AS VARCHAR) || '@example.com now'
-               WHEN 1 THEN text || ' from host 10.' ||
-                           CAST(doc_id % 200 AS VARCHAR) || '.0.' ||
-                           CAST(doc_id % 250 AS VARCHAR) || ' logged'
-               ELSE text || ' see https://host.example/' ||
-                    CAST(doc_id AS VARCHAR) || '/page for details'
-             END AS text
+             {_o_injected("text", 13)}
       FROM documents
     )
     SELECT doc_id,
@@ -2104,11 +2184,7 @@ _PII_IP = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
                 AS BIGINT) AS n_ips,
            CAST(len(regexp_extract_all(text, '{_PII_URL}'))
                 AS BIGINT) AS n_urls,
-           regexp_replace(
-             regexp_replace(
-               regexp_replace(text, '{_PII_URL}', '<URL>', 'g'),
-               '{_PII_EMAIL}', '<EMAIL>', 'g'),
-             '{_PII_IP}', '<IP>', 'g') AS scrubbed
+           {_o_scrubbed("text", 11)} AS scrubbed
     FROM injected
     """,
 )
@@ -2128,60 +2204,42 @@ def pipeline_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     one codegen'd projection per doc — no UDF, no shuffle, no joins;
     at 100 TB this is a pure map stage fused into the scan."""
     d = t(spark, sf_dir, "documents")
-    did = F.col("doc_id").cast("string")
-    injected = d.select(
-        "doc_id",
-        F.when(
-            F.col("doc_id") % 3 == 0,
-            F.concat(
-                F.col("text"), F.lit(" contact user"), did,
-                F.lit("@example.com now"),
-            ),
-        )
-        .when(
-            F.col("doc_id") % 3 == 1,
-            F.concat(
-                F.col("text"), F.lit(" from host 10."),
-                (F.col("doc_id") % 200).cast("string"), F.lit(".0."),
-                (F.col("doc_id") % 250).cast("string"), F.lit(" logged"),
-            ),
-        )
-        .otherwise(
-            F.concat(
-                F.col("text"), F.lit(" see https://host.example/"), did,
-                F.lit("/page for details"),
-            )
-        )
-        .alias("text"),
-    )
+    injected = d.select("doc_id", _pii_injected().alias("text"))
     txt = F.col("text")
     return injected.select(
         "doc_id",
-        F.size(F.regexp_extract_all(txt, F.lit(_PII_EMAIL), F.lit(0)))
-        .cast("long").alias("n_emails"),
-        F.size(F.regexp_extract_all(txt, F.lit(_PII_IP), F.lit(0)))
-        .cast("long").alias("n_ips"),
-        F.size(F.regexp_extract_all(txt, F.lit(_PII_URL), F.lit(0)))
-        .cast("long").alias("n_urls"),
-        F.regexp_replace(
-            F.regexp_replace(
-                F.regexp_replace(txt, _PII_URL, "<URL>"),
-                _PII_EMAIL, "<EMAIL>",
-            ),
-            _PII_IP, "<IP>",
-        ).alias("scrubbed"),
+        *(
+            n.cast("long").alias(a)
+            for n, a in zip(_pii_spans(txt), ("n_emails", "n_ips", "n_urls"))
+        ),
+        _pii_scrubbed(txt).alias("scrubbed"),
     )
 
 
-@register(
-    "pipeline_quality_cascade",
-    # The whole prep cascade in one statement, reusing each stage's
-    # proven oracle fragment verbatim: the repetition gate
-    # (text_repetition_filter), the shared quality CASE
-    # (pipeline_quality_filter), PII injection + redaction
-    # (pipeline_pii_scrub), and integer survivor budgets. Every output
-    # cell is an integer count or sum, so the census hash-matches.
-    oracle=f"""
+def _o_quality_cascade(dedup: bool) -> str:
+    """The cascade's oracle in one statement, reusing each stage's
+    proven fragment verbatim. ``dedup`` splices in the ``staged2``
+    CTE (quality survivors ranked within md5(text) groups, non-keepers
+    'cut_dedup'), reads it instead of ``staged`` and reports
+    ``n_cut_dedup``."""
+    src = "staged2" if dedup else "staged"
+    staged2 = """
+    staged2 AS (
+      SELECT doc_id, lang, source, text,
+             CASE WHEN rn > 1 THEN 'cut_dedup' ELSE 'keep' END AS stage
+      FROM (
+        SELECT *, ROW_NUMBER() OVER (PARTITION BY md5(text)
+                                     ORDER BY doc_id) AS rn
+        FROM staged WHERE stage = 'keep'
+      )
+      UNION ALL
+      SELECT doc_id, lang, source, text, stage
+      FROM staged WHERE stage <> 'keep'
+    ),"""
+    n_cut_dedup = """
+           CAST(SUM(CASE WHEN stage = 'cut_dedup' THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_cut_dedup,"""
+    return f"""
     WITH m AS (
       SELECT doc_id, lang, source, text,
              LENGTH(text) AS nc,
@@ -2219,7 +2277,7 @@ def pipeline_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
                  THEN 'cut_quality'
                ELSE 'keep' END AS stage
       FROM m
-    ),
+    ),{staged2 if dedup else ""}
     scrubbed AS (
       SELECT doc_id, lang, source,
              CAST(len(regexp_extract_all(inj, '{_PII_EMAIL}'))
@@ -2228,24 +2286,12 @@ def pipeline_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
                   AS BIGINT) AS n_spans,
              CAST(len(list_filter(
                string_split_regex(lower(
-                 regexp_replace(
-                   regexp_replace(
-                     regexp_replace(inj, '{_PII_URL}', '<URL>', 'g'),
-                     '{_PII_EMAIL}', '<EMAIL>', 'g'),
-                   '{_PII_IP}', '<IP>', 'g')), '[^a-z0-9]+'),
+                 {_o_scrubbed("inj", 17)}), '[^a-z0-9]+'),
                x -> len(x) > 0)) AS BIGINT) AS n_scrubbed_words
       FROM (
         SELECT doc_id, lang, source,
-               CASE doc_id % 3
-                 WHEN 0 THEN text || ' contact user' ||
-                             CAST(doc_id AS VARCHAR) || '@example.com now'
-                 WHEN 1 THEN text || ' from host 10.' ||
-                             CAST(doc_id % 200 AS VARCHAR) || '.0.' ||
-                             CAST(doc_id % 250 AS VARCHAR) || ' logged'
-                 ELSE text || ' see https://host.example/' ||
-                      CAST(doc_id AS VARCHAR) || '/page for details'
-               END AS inj
-        FROM staged WHERE stage = 'keep'
+               {_o_injected("inj", 15)}
+        FROM {src} WHERE stage = 'keep'
       )
     )
     SELECT s.lang, s.source,
@@ -2253,15 +2299,87 @@ def pipeline_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(SUM(CASE WHEN stage = 'cut_repetition' THEN 1 ELSE 0 END)
                 AS BIGINT) AS n_cut_repetition,
            CAST(SUM(CASE WHEN stage = 'cut_quality' THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_cut_quality,
+                AS BIGINT) AS n_cut_quality,{n_cut_dedup if dedup else ""}
            CAST(SUM(CASE WHEN stage = 'keep' THEN 1 ELSE 0 END)
                 AS BIGINT) AS n_kept,
            CAST(COALESCE(SUM(sc.n_spans), 0) AS BIGINT) AS n_pii_spans,
            CAST(COALESCE(SUM(sc.n_scrubbed_words), 0) AS BIGINT)
              AS total_scrubbed_words
-    FROM staged s LEFT JOIN scrubbed sc ON sc.doc_id = s.doc_id
+    FROM {src} s LEFT JOIN scrubbed sc ON sc.doc_id = s.doc_id
     GROUP BY s.lang, s.source
-    """,
+    """
+
+
+def _quality_cascade(spark: SparkSession, sf_dir: str, dedup: bool) -> DataFrame:
+    """The one body of the two cascades: repetition gate, quality gate,
+    (with ``dedup``) exact-content keep-one over quality survivors,
+    then PII injection + redaction of the final keepers, reported per
+    (lang, source)."""
+    d = t(spark, sf_dir, "documents")
+    m = _cascade_metrics(d)
+    rep_frac = F.when(
+        F.col("n_sh") > 0,
+        F.floor(
+            F.col("n_dup").cast("double") / F.col("n_sh") * 1000000.0 + 0.5
+        ).cast("long"),
+    ).otherwise(F.lit(0).cast("long"))
+    staged = m.withColumn(
+        "stage",
+        F.when(rep_frac > 20000, "cut_repetition")
+        .when(_quality_reason_expr() != "keep", "cut_quality")
+        .otherwise("keep"),
+    )
+    stages = ["cut_repetition", "cut_quality"]
+    if dedup:
+        # rank quality survivors within exact-content groups;
+        # partitioning by (stage, md5) keeps the window away from cut
+        # rows — identical to the oracle's keep-only window
+        wdup = Window.partitionBy("stage", F.md5(F.col("text"))).orderBy(
+            "doc_id"
+        )
+        staged = staged.withColumn(
+            "__rn", F.row_number().over(wdup)
+        ).withColumn(
+            "stage",
+            F.when(
+                (F.col("stage") == "keep") & (F.col("__rn") > 1), "cut_dedup"
+            ).otherwise(F.col("stage")),
+        ).drop("__rn")
+        stages.append("cut_dedup")
+    inj = _pii_injected()
+    kept = F.col("stage") == "keep"
+    kept_cols = staged.withColumn(
+        "n_spans", F.when(kept, reduce(add, _pii_spans(inj)).cast("long"))
+    ).withColumn(
+        "n_scrubbed_words",
+        F.when(kept, F.size(tokens(_pii_scrubbed(inj))).cast("long")),
+    )
+    return kept_cols.groupBy("lang", "source").agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs_in"),
+        *(
+            F.sum(F.when(F.col("stage") == s, 1).otherwise(0))
+            .cast("long")
+            .alias(a)
+            for s, a in [(s, f"n_{s}") for s in stages] + [("keep", "n_kept")]
+        ),
+        F.coalesce(F.sum("n_spans"), F.lit(0)).cast("long").alias(
+            "n_pii_spans"
+        ),
+        F.coalesce(F.sum("n_scrubbed_words"), F.lit(0))
+        .cast("long")
+        .alias("total_scrubbed_words"),
+    )
+
+
+@register(
+    "pipeline_quality_cascade",
+    # The whole prep cascade in one statement, reusing each stage's
+    # proven oracle fragment verbatim: the repetition gate
+    # (text_repetition_filter), the shared quality CASE
+    # (pipeline_quality_filter), PII injection + redaction
+    # (pipeline_pii_scrub), and integer survivor budgets. Every output
+    # cell is an integer count or sum, so the census hash-matches.
+    oracle=_o_quality_cascade(dedup=False),
 )
 def pipeline_quality_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL preprocessing cascade in one query — the per-stratum
@@ -2279,82 +2397,7 @@ def pipeline_quality_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate is map-side combined on a bounded (lang, source) domain
     — the whole report is one pass over the corpus plus one tiny
     shuffle."""
-    d = t(spark, sf_dir, "documents")
-    m = _cascade_metrics(d)
-    rep_frac = F.when(
-        F.col("n_sh") > 0,
-        F.floor(
-            F.col("n_dup").cast("double") / F.col("n_sh") * 1000000.0 + 0.5
-        ).cast("long"),
-    ).otherwise(F.lit(0).cast("long"))
-    staged = m.withColumn(
-        "stage",
-        F.when(rep_frac > 20000, "cut_repetition")
-        .when(_quality_reason_expr() != "keep", "cut_quality")
-        .otherwise("keep"),
-    )
-    did = F.col("doc_id").cast("string")
-    inj = (
-        F.when(
-            F.col("doc_id") % 3 == 0,
-            F.concat(
-                F.col("text"), F.lit(" contact user"), did,
-                F.lit("@example.com now"),
-            ),
-        )
-        .when(
-            F.col("doc_id") % 3 == 1,
-            F.concat(
-                F.col("text"), F.lit(" from host 10."),
-                (F.col("doc_id") % 200).cast("string"), F.lit(".0."),
-                (F.col("doc_id") % 250).cast("string"), F.lit(" logged"),
-            ),
-        )
-        .otherwise(
-            F.concat(
-                F.col("text"), F.lit(" see https://host.example/"), did,
-                F.lit("/page for details"),
-            )
-        )
-    )
-    scrub = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace(inj, _PII_URL, "<URL>"), _PII_EMAIL, "<EMAIL>"
-        ),
-        _PII_IP,
-        "<IP>",
-    )
-    n_spans = (
-        F.size(F.regexp_extract_all(inj, F.lit(_PII_EMAIL), F.lit(0)))
-        + F.size(F.regexp_extract_all(inj, F.lit(_PII_IP), F.lit(0)))
-        + F.size(F.regexp_extract_all(inj, F.lit(_PII_URL), F.lit(0)))
-    ).cast("long")
-    kept_cols = staged.withColumn(
-        "n_spans", F.when(F.col("stage") == "keep", n_spans)
-    ).withColumn(
-        "n_scrubbed_words",
-        F.when(
-            F.col("stage") == "keep", F.size(tokens(scrub)).cast("long")
-        ),
-    )
-    return kept_cols.groupBy("lang", "source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs_in"),
-        F.sum(F.when(F.col("stage") == "cut_repetition", 1).otherwise(0))
-        .cast("long")
-        .alias("n_cut_repetition"),
-        F.sum(F.when(F.col("stage") == "cut_quality", 1).otherwise(0))
-        .cast("long")
-        .alias("n_cut_quality"),
-        F.sum(F.when(F.col("stage") == "keep", 1).otherwise(0))
-        .cast("long")
-        .alias("n_kept"),
-        F.coalesce(F.sum("n_spans"), F.lit(0)).cast("long").alias(
-            "n_pii_spans"
-        ),
-        F.coalesce(F.sum("n_scrubbed_words"), F.lit(0))
-        .cast("long")
-        .alias("total_scrubbed_words"),
-    )
+    return _quality_cascade(spark, sf_dir, dedup=False)
 
 
 @register(
@@ -2365,101 +2408,7 @@ def pipeline_quality_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (md5(text), keeper = lowest doc_id) and non-keepers become
     # 'cut_dedup'; only final keepers flow into PII injection +
     # redaction. Every stage's fragment is its proven oracle verbatim.
-    oracle=f"""
-    WITH m AS (
-      SELECT doc_id, lang, source, text,
-             LENGTH(text) AS nc,
-             len(toks) AS n_tokens,
-             len(list_distinct(toks)) AS n_distinct,
-             CASE WHEN len(toks) > 0 THEN
-               CAST(list_sum(list_transform(toks, x -> LENGTH(x))) AS DOUBLE)
-                 / len(toks) END AS mean_token_len,
-             CAST(len(shingles) AS BIGINT) AS n_sh,
-             CAST(len(shingles) - len(list_distinct(shingles)) AS BIGINT)
-               AS n_dup
-      FROM (
-        SELECT *,
-               CASE WHEN len(toks) >= 3 THEN
-                 list_transform(range(1, len(toks) - 1),
-                                i -> array_to_string(toks[i:i+2], ' '))
-               WHEN len(toks) > 0 THEN [array_to_string(toks, ' ')]
-               ELSE CAST([] AS VARCHAR[]) END AS shingles
-        FROM (SELECT doc_id, lang, source, text, {_O_TOKS} AS toks
-              FROM documents)
-      )
-    ),
-    staged AS (
-      SELECT *,
-             CASE
-               WHEN (CASE WHEN n_sh > 0 THEN
-                       CAST(FLOOR(CAST(n_dup AS DOUBLE) / n_sh
-                                  * 1000000.0 + 0.5) AS BIGINT)
-                     ELSE 0 END) > 20000 THEN 'cut_repetition'
-               WHEN nc < 100 THEN 'cut_quality'
-               WHEN n_tokens < 20 THEN 'cut_quality'
-               WHEN mean_token_len < 2.0 OR mean_token_len > 12.0
-                 THEN 'cut_quality'
-               WHEN CAST(n_distinct AS DOUBLE) / n_tokens < 0.3
-                 THEN 'cut_quality'
-               ELSE 'keep' END AS stage
-      FROM m
-    ),
-    staged2 AS (
-      SELECT doc_id, lang, source, text,
-             CASE WHEN rn > 1 THEN 'cut_dedup' ELSE 'keep' END AS stage
-      FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY md5(text)
-                                     ORDER BY doc_id) AS rn
-        FROM staged WHERE stage = 'keep'
-      )
-      UNION ALL
-      SELECT doc_id, lang, source, text, stage
-      FROM staged WHERE stage <> 'keep'
-    ),
-    scrubbed AS (
-      SELECT doc_id, lang, source,
-             CAST(len(regexp_extract_all(inj, '{_PII_EMAIL}'))
-                  + len(regexp_extract_all(inj, '{_PII_IP}'))
-                  + len(regexp_extract_all(inj, '{_PII_URL}'))
-                  AS BIGINT) AS n_spans,
-             CAST(len(list_filter(
-               string_split_regex(lower(
-                 regexp_replace(
-                   regexp_replace(
-                     regexp_replace(inj, '{_PII_URL}', '<URL>', 'g'),
-                     '{_PII_EMAIL}', '<EMAIL>', 'g'),
-                   '{_PII_IP}', '<IP>', 'g')), '[^a-z0-9]+'),
-               x -> len(x) > 0)) AS BIGINT) AS n_scrubbed_words
-      FROM (
-        SELECT doc_id, lang, source,
-               CASE doc_id % 3
-                 WHEN 0 THEN text || ' contact user' ||
-                             CAST(doc_id AS VARCHAR) || '@example.com now'
-                 WHEN 1 THEN text || ' from host 10.' ||
-                             CAST(doc_id % 200 AS VARCHAR) || '.0.' ||
-                             CAST(doc_id % 250 AS VARCHAR) || ' logged'
-                 ELSE text || ' see https://host.example/' ||
-                      CAST(doc_id AS VARCHAR) || '/page for details'
-               END AS inj
-        FROM staged2 WHERE stage = 'keep'
-      )
-    )
-    SELECT s.lang, s.source,
-           CAST(COUNT(*) AS BIGINT) AS n_docs_in,
-           CAST(SUM(CASE WHEN stage = 'cut_repetition' THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_cut_repetition,
-           CAST(SUM(CASE WHEN stage = 'cut_quality' THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_cut_quality,
-           CAST(SUM(CASE WHEN stage = 'cut_dedup' THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_cut_dedup,
-           CAST(SUM(CASE WHEN stage = 'keep' THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_kept,
-           CAST(COALESCE(SUM(sc.n_spans), 0) AS BIGINT) AS n_pii_spans,
-           CAST(COALESCE(SUM(sc.n_scrubbed_words), 0) AS BIGINT)
-             AS total_scrubbed_words
-    FROM staged2 s LEFT JOIN scrubbed sc ON sc.doc_id = s.doc_id
-    GROUP BY s.lang, s.source
-    """,
+    oracle=_o_quality_cascade(dedup=True),
 )
 def pipeline_quality_cascade_dedup(
     spark: SparkSession, sf_dir: str
@@ -2481,97 +2430,7 @@ def pipeline_quality_cascade_dedup(
     groups — bounded state per group, no corpus-sized window); the
     scrub touches only final keepers; the report aggregate stays
     map-side combined on the bounded (lang, source) domain."""
-    d = t(spark, sf_dir, "documents")
-    m = _cascade_metrics(d)
-    rep_frac = F.when(
-        F.col("n_sh") > 0,
-        F.floor(
-            F.col("n_dup").cast("double") / F.col("n_sh") * 1000000.0 + 0.5
-        ).cast("long"),
-    ).otherwise(F.lit(0).cast("long"))
-    staged = m.withColumn(
-        "stage",
-        F.when(rep_frac > 20000, "cut_repetition")
-        .when(_quality_reason_expr() != "keep", "cut_quality")
-        .otherwise("keep"),
-    )
-    # dedup stage: rank quality survivors within exact-content groups;
-    # partitioning by (stage, md5) keeps the window away from cut rows
-    # — identical to the oracle's keep-only window
-    wdup = Window.partitionBy("stage", F.md5(F.col("text"))).orderBy(
-        "doc_id"
-    )
-    staged = staged.withColumn("__rn", F.row_number().over(wdup)).withColumn(
-        "stage",
-        F.when(
-            (F.col("stage") == "keep") & (F.col("__rn") > 1), "cut_dedup"
-        ).otherwise(F.col("stage")),
-    ).drop("__rn")
-    did = F.col("doc_id").cast("string")
-    inj = (
-        F.when(
-            F.col("doc_id") % 3 == 0,
-            F.concat(
-                F.col("text"), F.lit(" contact user"), did,
-                F.lit("@example.com now"),
-            ),
-        )
-        .when(
-            F.col("doc_id") % 3 == 1,
-            F.concat(
-                F.col("text"), F.lit(" from host 10."),
-                (F.col("doc_id") % 200).cast("string"), F.lit(".0."),
-                (F.col("doc_id") % 250).cast("string"), F.lit(" logged"),
-            ),
-        )
-        .otherwise(
-            F.concat(
-                F.col("text"), F.lit(" see https://host.example/"), did,
-                F.lit("/page for details"),
-            )
-        )
-    )
-    scrub = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace(inj, _PII_URL, "<URL>"), _PII_EMAIL, "<EMAIL>"
-        ),
-        _PII_IP,
-        "<IP>",
-    )
-    n_spans = (
-        F.size(F.regexp_extract_all(inj, F.lit(_PII_EMAIL), F.lit(0)))
-        + F.size(F.regexp_extract_all(inj, F.lit(_PII_IP), F.lit(0)))
-        + F.size(F.regexp_extract_all(inj, F.lit(_PII_URL), F.lit(0)))
-    ).cast("long")
-    kept_cols = staged.withColumn(
-        "n_spans", F.when(F.col("stage") == "keep", n_spans)
-    ).withColumn(
-        "n_scrubbed_words",
-        F.when(
-            F.col("stage") == "keep", F.size(tokens(scrub)).cast("long")
-        ),
-    )
-    return kept_cols.groupBy("lang", "source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs_in"),
-        F.sum(F.when(F.col("stage") == "cut_repetition", 1).otherwise(0))
-        .cast("long")
-        .alias("n_cut_repetition"),
-        F.sum(F.when(F.col("stage") == "cut_quality", 1).otherwise(0))
-        .cast("long")
-        .alias("n_cut_quality"),
-        F.sum(F.when(F.col("stage") == "cut_dedup", 1).otherwise(0))
-        .cast("long")
-        .alias("n_cut_dedup"),
-        F.sum(F.when(F.col("stage") == "keep", 1).otherwise(0))
-        .cast("long")
-        .alias("n_kept"),
-        F.coalesce(F.sum("n_spans"), F.lit(0)).cast("long").alias(
-            "n_pii_spans"
-        ),
-        F.coalesce(F.sum("n_scrubbed_words"), F.lit(0))
-        .cast("long")
-        .alias("total_scrubbed_words"),
-    )
+    return _quality_cascade(spark, sf_dir, dedup=True)
 
 
 @register(

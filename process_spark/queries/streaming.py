@@ -14,7 +14,8 @@ returns a batch DataFrame. They come in two shapes:
   optionally in two resumed waves with offline maintenance between
   them; the result is read back from what the sink stored.
   :func:`_stream_index` is the whole lifecycle of the three pair
-  indexes (MinHash, IVF, SRP).
+  indexes (MinHash, IVF, SRP) and :func:`_pair_sink` their one
+  per-batch sink body.
 
 At production scale the same plans run against a live file/Kafka
 source with watermarks bounding state.
@@ -30,10 +31,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from process_spark.functions.textfn import tokens
+from process_spark.functions.vectorfn import cosine
 from process_spark.operators.dedup import minhash_band_index
 from process_spark.operators.indexlife import compact_partitioned_index
 from process_spark.operators.relational import attach_census, cap_blocks_with_census
-from process_spark.operators.similarity import ivf_build
+from process_spark.operators.similarity import (
+    ivf_assign,
+    ivf_build,
+    near_dup_embeddings,
+)
 from process_spark.queries._util import _BAND_KW, _SCRATCH, t
 from process_spark.queries.registry import register
 from process_spark.queries.text import (
@@ -171,7 +177,8 @@ def _write_batch(
 
 
 #: Stored layouts ``(partition columns, write tasks)`` of the three
-#: pair indexes, shared by each sink's append and its history seed.
+#: pair indexes, shared by :func:`_pair_sink`'s append and the history
+#: seed.
 _MINHASH_LAYOUT = (("band_idx", "band_bucket"), 64)
 _IVF_LAYOUT = (("cell_id",), 8)
 _SRP_LAYOUT = (("band_idx",), 64)
@@ -190,7 +197,8 @@ def _stream_index(
 
     ``kind(spark, sf_dir, index, pairs, cap)`` (:func:`_minhash_stream`,
     :func:`_ivf_stream`, :func:`_srp_stream`) returns ``(rows, id_col,
-    history, layout, sink)``. The history (even ids) is seeded at
+    history, layout, sink)``, ``sink`` built by one of the three
+    :func:`_pair_sink` factories. The history (even ids) is seeded at
     batch_id = -1 in the sink's layout; the odd ids stream as two
     files, ``id % 4 == 1`` then ``== 3``: one wave, or, when
     ``compacted``, two waves with the offline compaction between them
@@ -218,6 +226,170 @@ def _summed_bands(pairs: DataFrame) -> DataFrame:
     return pairs.groupBy("id_a", "id_b").agg(
         F.sum("n_shared_bands").alias("n_shared_bands")
     )
+
+
+def _pair_sink(
+    idx_dir: str,
+    out_dir: str,
+    index_rows: Callable[[DataFrame], DataFrame],
+    id_col: str,
+    layout: tuple[tuple[str, ...], int],
+    pair_step: Callable[..., DataFrame],
+    blocks: list[str],
+    census_col: str,
+    cap: int | None,
+):
+    """foreachBatch sink of a stored pair index, the one body of
+    :func:`incremental_dedup_sink`, :func:`incremental_vector_sink` and
+    :func:`incremental_srp_sink`. The index lives at ``idx_dir`` in
+    ``layout`` (partition columns, write tasks), then ``batch_id``;
+    bootstrap history with ``_write_batch(rows, idx_dir, -1,
+    *layout)``. Per micro-batch:
+
+    1. ``index_rows(batch)`` computes the batch's index rows once,
+       pinned: the guard, both joins and the append read them;
+    2. with ``cap`` set, ``cap_blocks_with_census`` cuts the batch's
+       over-cap ``blocks`` groups from the join side;
+    3. the batch's own SEALED ids are looked up (below);
+    4. history is read: stored rows of strictly earlier batches
+       (``batch_id < current``) minus the sealed-own ids, pruned to
+       the join side's values of the layout's partition columns (an
+       IN-set bounded by the bucket or cell count, pushed down as
+       PartitionFilters);
+    5. ``pair_step(join_side, history, id_col, blocks)`` emits the
+       same-batch pairs (self-join) and the batch×history pairs
+       (probe), each with ``id_a < id_b``;
+    6. with ``cap`` set, the batch's cut-block census rides every
+       pair row as ``census_col`` (``attach_census``; a NULL-id
+       sentinel when a batch cuts everything): truncation is part of
+       the result, never a silent drop;
+    7. the pairs go to ``out_dir``; then the FULL index rows (the cap
+       bounds join work, not storage: history stays complete) minus
+       the sealed-own ids are appended to ``idx_dir``.
+
+    Replay. foreachBatch is at-least-once. Both writes of step 7
+    overwrite exactly the batch's own ``batch_id`` dirs
+    (:func:`_write_batch`) and step 4 never reads the batch itself, so
+    a replayed batch rewrites its pairs and index rows instead of
+    doubling pair counts or inflating the index.
+
+    Sealed own. If the stream died after the append but before its
+    checkpoint commit, and a compaction sealed the index to
+    ``batch_id = -1`` before the restart, the replayed batch's own rows
+    are in history, where ``batch_id < current`` cannot tell them
+    apart: the probe would self-match and the append would duplicate
+    them permanently. Index rows are deterministic, so any sealed copy
+    sits in the batch's own partitions. Step 3 reads the sealed slice
+    pruned to the partition values of the UNGUARDED rows (a hostile
+    batch whose every block is over the cap still finds its copies)
+    and semi-joins it against the batch's bounded id set; steps 4 and
+    7 exclude what it finds. In a banded layout (``band_idx`` among the
+    partition columns) every id has a row in every band, so the band-0
+    slice alone witnesses each sealed id. On clean runs the lookup is
+    empty and costs one pruned scan.
+
+    ``cap`` None keeps exact oracle parity with the whole-corpus pair
+    join."""
+    cols, n = layout
+
+    def pruned(df: DataFrame, where):
+        # band_idx is never pruned by value: every band holds every id
+        for c in cols:
+            if c != "band_idx":
+                vals = sorted(r[c] for r in df.select(c).distinct().collect())
+                where &= F.col(c).isin(vals)
+        return where
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        ss = batch_df.sparkSession
+        rows = index_rows(batch_df).localCheckpoint(eager=False)
+        join_side = rows
+        if cap is not None:
+            join_side, census = cap_blocks_with_census(
+                rows, blocks, cap, census_col
+            )
+        own, sealed = rows, F.col("batch_id") == -1
+        if "band_idx" in cols:
+            own = rows.filter(F.col("band_idx") == 0)
+            sealed &= F.col("band_idx") == 0
+        sealed_own = (
+            ss.read.parquet(idx_dir)
+            .filter(pruned(own, sealed))
+            .join(
+                F.broadcast(batch_df.select(id_col).distinct()),
+                id_col,
+                "left_semi",
+            )
+            .select(id_col)
+            .distinct()
+            .localCheckpoint(eager=True)  # two consumers: probe + append
+        )
+        history = (
+            ss.read.parquet(idx_dir)
+            .filter(pruned(join_side, F.col("batch_id") < F.lit(batch_id)))
+            .join(F.broadcast(sealed_own), id_col, "left_anti")
+        )
+        pairs = pair_step(join_side, history, id_col, blocks)
+        if cap is not None:
+            pairs = attach_census(pairs, census)
+        _write_batch(pairs, out_dir, batch_id)
+        _write_batch(
+            rows.join(F.broadcast(sealed_own), id_col, "left_anti"),
+            idx_dir, batch_id, cols, n,
+        )
+
+    return sink
+
+
+def _band_pairs(
+    join_side: DataFrame, history: DataFrame, id_col: str, blocks: list[str]
+) -> DataFrame:
+    """Pair step of the banded sinks (MinHash, SRP): ids that share a
+    band bucket (``blocks`` equal), with their shared-band count."""
+    a, b = join_side.alias("a"), join_side.alias("b")
+    within = a.join(
+        b,
+        [F.col(f"a.{c}") == F.col(f"b.{c}") for c in blocks]
+        + [F.col(f"a.{id_col}") < F.col(f"b.{id_col}")],
+    ).select(
+        F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
+    )
+    probe = join_side.withColumnRenamed(id_col, "probe_id")
+    cross = history.join(probe, blocks).select(
+        F.least("probe_id", id_col).alias("id_a"),
+        F.greatest("probe_id", id_col).alias("id_b"),
+    )
+    return (
+        within.unionByName(cross)
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("n_shared_bands"))
+    )
+
+
+def _cosine_pairs(threshold: float) -> Callable[..., DataFrame]:
+    """Pair step of the IVF sink: ids in one cell (``blocks``) whose
+    cosine is ≥ ``threshold``; a NaN cosine never passes."""
+
+    def step(join_side, history, id_col, blocks):
+        within = near_dup_embeddings(
+            join_side, threshold=threshold, id_col=id_col, block_col=blocks[0]
+        ).select("id_a", "id_b")
+        h, b = history.alias("h"), join_side.alias("b")
+        hid, bid = F.col(f"h.{id_col}"), F.col(f"b.{id_col}")
+        sim = cosine(F.col("h.embedding"), F.col("b.embedding"))
+        cross = (
+            h.join(b, [F.col(f"h.{c}") == F.col(f"b.{c}") for c in blocks])
+            .select(
+                F.least(hid, bid).alias("id_a"),
+                F.greatest(hid, bid).alias("id_b"),
+                sim.alias("__sim"),
+            )
+            .filter((F.col("__sim") >= threshold) & ~F.isnan("__sim"))
+            .select("id_a", "id_b")
+        )
+        return within.unionByName(cross).distinct()
+
+    return step
 
 
 @register(
@@ -804,153 +976,21 @@ def incremental_dedup_sink(
     kw: dict,
     max_bucket_size: int | None = None,
 ):
-    """foreachBatch sink of the incremental-dedup stream — exposed so
-    deployments (and tests) can compose it onto any documents stream.
-    Per micro-batch: band once (localCheckpoint), emit same-batch
-    pairs (bands self-join) + batch×history pairs (stored-index probe
-    with the bucket IN-set pushed as PartitionFilters), append the
-    batch's bands to the index partition-consistent. Both writes are
-    idempotent per batch_id (dynamic partition overwrite keyed on the
-    batch) so foreachBatch's at-least-once replay cannot duplicate
-    pairs or inflate the stored index; the index bootstrap must use
-    the same (band_idx, band_bucket, batch_id) layout — write history
-    with batch_id = -1.
-
-    Replay stays idempotent even across a COMPACTION that raced a
-    mid-batch crash: if the batch's bands were sealed into
-    batch_id = -1 before the restart, the sink detects its own sealed
-    docs (one partition-pruned point lookup on the batch's bucket
-    IN-set, semi-joined against the bounded batch id set) and excludes
-    them from both the history probe (no self/doubled pairs) and the
-    re-append (no permanently duplicated index rows). On clean runs
-    the lookup is empty and costs one pruned scan of the batch's own
-    buckets.
-
-    ``max_bucket_size`` is the hot-bucket guard for HOSTILE batches
-    (boilerplate bursts): the batch's over-cap band buckets are cut
-    from BOTH the self-join and the probe join — bounding the
-    self-join task at cap² and linearizing the probe task at
-    |stored bucket|·cap — while the APPEND still writes every band
-    (history must stay complete; the cap bounds join work, not
-    storage). When the guard is on, the batch's cut-bucket count rides
-    every pair row as ``n_cut_buckets`` (NULL-id sentinel when a batch
-    cuts everything) — truncation is part of the result, never a
-    silent drop. None (the unguarded registered queries' setting)
-    keeps exact oracle parity with the whole-corpus band join;
-    stream_dedup_index_probe_guarded registers the guarded form."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        ss = batch_df.sparkSession
-        bidx = minhash_band_index(
-            batch_df, "doc_id", "text", **kw
-        ).localCheckpoint(eager=False)  # bands once: self-join + probe + append
-        join_side = bidx
-        if max_bucket_size is not None:
-            join_side, census = cap_blocks_with_census(
-                bidx, ["band_idx", "band_hash"], max_bucket_size, "n_cut_buckets"
-            )
-        # (2) same-batch pairs — bands-equi self-join, already id-ordered
-        a, b = join_side.alias("a"), join_side.alias("b")
-        within = a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        ).select(
-            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
-        )
-        # (3) probe stored history: bucket IN-set (≤ n_buckets rows) →
-        # PartitionFilters on the index scan
-        probe = join_side.withColumnRenamed("doc_id", "probe_id")
-        buckets = sorted(
-            r["band_bucket"]
-            for r in probe.select("band_bucket").distinct().collect()
-        )
-        # History = batches STRICTLY BEFORE this one. Without the
-        # filter, a replayed batch would probe its own already-appended
-        # bands (self-pairs + doubled cross pairs); with it, the probe
-        # is deterministic no matter how many times the batch replays.
-        #
-        # Crash-compaction hygiene: the batch_id < current filter alone
-        # is blind to SEALED copies — if the stream died mid-batch
-        # (checkpoint commit unwritten) and compaction ran before
-        # restart, the replayed batch's own bands now live in history
-        # as batch_id = -1 and would self-match. Banding is
-        # deterministic, so any sealed copy of this batch's docs sits
-        # exactly in the batch's own bucket partitions: one
-        # partition-pruned point lookup semi-joined against the bounded
-        # batch id set finds them, and both the probe and the append
-        # exclude them. Empty (and nearly free) on every clean run; on
-        # the crash-compact-replay run it restores idempotence.
-        #
-        # The lookup's IN-set comes from the UNGUARDED bands (bidx),
-        # never the guarded join_side: the append writes every band, so
-        # a hostile batch whose docs land only in over-cap buckets
-        # (guarded bucket set possibly EMPTY) still has sealed copies
-        # to detect. The broadcast semi-join on doc_id is the
-        # correctness filter; the bucket predicate is pruning only —
-        # and since every doc emits a row in EVERY band_idx, the
-        # band_idx = 0 slice alone already witnesses each sealed doc,
-        # so the lookup prunes to 1/bands of the sealed partitions.
-        sealed_buckets = sorted(
-            r["band_bucket"]
-            for r in bidx.filter(F.col("band_idx") == 0)
-            .select("band_bucket")
-            .distinct()
-            .collect()
-        )
-        sealed_own = (
-            ss.read.parquet(idx_dir)
-            .filter(
-                (F.col("batch_id") == -1)
-                & (F.col("band_idx") == 0)
-                & F.col("band_bucket").isin(sealed_buckets)
-            )
-            .join(
-                F.broadcast(batch_df.select("doc_id").distinct()),
-                "doc_id",
-                "left_semi",
-            )
-            .select("doc_id")
-            .distinct()
-            .localCheckpoint(eager=True)  # two consumers: probe + append
-        )
-        stored = (
-            ss.read.parquet(idx_dir)
-            .filter(F.col("batch_id") < F.lit(batch_id))
-            .join(F.broadcast(sealed_own), "doc_id", "left_anti")
-        )
-        cross = (
-            stored.filter(F.col("band_bucket").isin(buckets))
-            .join(probe, ["band_idx", "band_bucket", "band_hash"])
-            .select(
-                F.least("probe_id", "doc_id").alias("id_a"),
-                F.greatest("probe_id", "doc_id").alias("id_b"),
-            )
-        )
-        pairs = (
-            within.unionByName(cross)
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("n_shared_bands"))
-        )
-        if max_bucket_size is not None:
-            # guarded mode: the batch's cut-bucket census rides every
-            # pair row (the minhash_lsh_pairs contract)
-            pairs = attach_census(pairs, census)
-        # Both writes are idempotent per batch_id (_write_batch).
-        _write_batch(pairs, out_dir, batch_id)
-        # (4) history accretes: next batch's probe must see this one —
-        # the FULL band set, even under the guard. Docs whose bands
-        # were already SEALED into batch_id = -1 by a compaction that
-        # raced a mid-batch crash are skipped here — re-appending them
-        # under batch_id = B would duplicate index rows permanently
-        # (the -1 copy survives every future batch_id < current probe).
-        _write_batch(
-            bidx.join(F.broadcast(sealed_own), "doc_id", "left_anti"),
-            idx_dir, batch_id, *_MINHASH_LAYOUT,
-        )
-
-    return sink
+    """foreachBatch sink of the incremental MinHash dedup stream — the
+    :func:`_pair_sink` contract, exposed so deployments (and tests) can
+    compose it onto any documents stream. Index rows: the batch's
+    MinHash bands (``minhash_band_index(..., **kw)``) stored
+    ``(band_idx, band_bucket, batch_id)``; pairs: docs sharing a band
+    signature, with their shared-band counts. ``max_bucket_size`` cuts
+    over-cap (band, signature) groups; the census rides as
+    ``n_cut_buckets``. stream_dedup_index_probe_guarded registers the
+    guarded form."""
+    return _pair_sink(
+        idx_dir, out_dir,
+        lambda df: minhash_band_index(df, "doc_id", "text", **kw),
+        "doc_id", _MINHASH_LAYOUT, _band_pairs,
+        ["band_idx", "band_hash"], "n_cut_buckets", max_bucket_size,
+    )
 
 
 def _minhash_stream(spark, sf_dir, index, pairs, cap):
@@ -1264,138 +1304,18 @@ def incremental_vector_sink(
     max_block_size: int | None = None,
 ):
     """foreachBatch sink of the incremental SEMANTIC dedup stream — the
-    vector twin of :func:`incremental_dedup_sink`, closing the
-    lifecycle asymmetry where text dedup streamed but semantic dedup
-    only batch-appended. Per micro-batch: assign the batch's vectors to
-    the FIXED pre-trained cells (ivf_assign — no retrain; centroid
-    drift is the offline rebuild's job), emit same-batch near-dup pairs
-    (cell-blocked threshold self-join) + batch×history pairs (probe of
-    the stored cell-partitioned index with the batch's cell IN-set —
-    bounded by n_cells — pushed as PartitionFilters), then append the
-    batch's cell-coded vectors to the index partition-consistent.
-
-    Both writes are IDEMPOTENT per batch_id (dynamic partition
-    overwrite keyed on the batch — the same exactly-once-via-batchId
-    pattern as the text sink), and the probe reads strictly-earlier
-    batches only (``batch_id < current``), so at-least-once replay
-    cannot duplicate pairs or inflate the index. The index bootstrap
-    must use the same (cell_id, batch_id) layout — write history with
-    batch_id = -1.
-
-    Replay stays idempotent even across a COMPACTION that raced a
-    mid-batch crash (the exact hazard compact_partitioned_index's
-    docstring names): if the batch's vectors were sealed into
-    batch_id = -1 before the restart, the sink detects its own sealed
-    vec_ids — one lookup pruned to the batch's FULL (unguarded) cell
-    IN-set, semi-joined against the bounded batch id set — and
-    excludes them from both the history probe (no self/doubled pairs)
-    and the re-append (no permanently duplicated index rows). Cell
-    assignment against fixed cells is deterministic, so any sealed
-    copy sits exactly in the batch's own cell partitions. Empty (and
-    nearly free) on every clean run.
-
-    ``max_block_size`` is the hot-cell guard for HOSTILE batches
-    (boilerplate embedding bursts — near-identical template docs all
-    landing in one cell): the batch's over-cap cells are cut from BOTH
-    the self-join (bounding that task at cap²) and the history probe
-    (linearizing it at |stored cell|·cap) — while the APPEND still
-    writes every vector (history must stay complete; the cap bounds
-    join work, not storage). When the guard is on, the count of cut
-    cells rides every emitted pair row (``n_cut_cells`` — the
-    minhash_lsh_pairs census shape), so truncation is part of the
-    result, never a silent drop. None (stream_semantic_dedup_probe's
-    setting) keeps exact oracle parity with the whole-corpus cell
-    join; the guarded twin stream_semantic_dedup_probe_guarded
-    replays the per-batch census in its oracle."""
-    from process_spark.functions.vectorfn import cosine as _cos
-    from process_spark.operators.similarity import (
-        ivf_assign,
-        near_dup_embeddings,
+    :func:`_pair_sink` contract for vectors. Index rows: the batch's
+    vectors assigned to the FIXED pre-trained ``cells`` (ivf_assign —
+    no retrain; centroid drift is the offline rebuild's job) stored
+    ``(cell_id, batch_id)``; pairs: vectors in one cell with cosine
+    ≥ ``threshold``. ``max_block_size`` cuts over-cap cells; the
+    census rides as ``n_cut_cells``. stream_semantic_dedup_probe_guarded
+    registers the guarded form."""
+    return _pair_sink(
+        idx_dir, out_dir, lambda df: ivf_assign(df, cells), "vec_id",
+        _IVF_LAYOUT, _cosine_pairs(threshold),
+        ["cell_id"], "n_cut_cells", max_block_size,
     )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        ss = batch_df.sparkSession
-        assigned = ivf_assign(batch_df, cells).localCheckpoint(
-            eager=False
-        )  # assign once: self-join + probe + append
-        join_side = assigned
-        if max_block_size is not None:
-            join_side, census = cap_blocks_with_census(
-                assigned, ["cell_id"], max_block_size, "n_cut_cells"
-            )
-        within = near_dup_embeddings(
-            join_side, threshold=threshold, block_col="cell_id"
-        ).select("id_a", "id_b")
-        # the batch's cell IN-set is bounded by n_cells — collected
-        # into an isin that reaches the stored scan as PartitionFilters
-        all_cells = sorted(
-            r["cell_id"]
-            for r in assigned.select("cell_id").distinct().collect()
-        )
-        batch_cells = (
-            all_cells
-            if max_block_size is None
-            else sorted(
-                r["cell_id"]
-                for r in join_side.select("cell_id").distinct().collect()
-            )
-        )
-        # Sealed-own crash-compaction lookup (see docstring). The cell
-        # IN-set here is the UNGUARDED one (all_cells) — the append
-        # writes every cell, so a hostile batch whose vectors land
-        # only in over-cap cells still has sealed copies to detect;
-        # the broadcast semi-join on vec_id is the correctness filter,
-        # the cell predicate is partition pruning only.
-        sealed_own = (
-            ss.read.parquet(idx_dir)
-            .filter(
-                (F.col("batch_id") == -1) & F.col("cell_id").isin(all_cells)
-            )
-            .join(
-                F.broadcast(batch_df.select("vec_id").distinct()),
-                "vec_id",
-                "left_semi",
-            )
-            .select("vec_id")
-            .distinct()
-            .localCheckpoint(eager=True)  # two consumers: probe + append
-        )
-        stored = (
-            ss.read.parquet(idx_dir)
-            .filter(
-                (F.col("batch_id") < F.lit(batch_id))
-                & F.col("cell_id").isin(batch_cells)
-            )
-            .join(F.broadcast(sealed_own), "vec_id", "left_anti")
-        )
-        h, b = stored.alias("h"), join_side.alias("b")
-        sim = _cos(F.col("h.embedding"), F.col("b.embedding"))
-        cross = (
-            h.join(b, F.col("h.cell_id") == F.col("b.cell_id"))
-            .select(
-                F.least(F.col("h.vec_id"), F.col("b.vec_id")).alias("id_a"),
-                F.greatest(F.col("h.vec_id"), F.col("b.vec_id")).alias("id_b"),
-                sim.alias("__sim"),
-            )
-            .filter((F.col("__sim") >= threshold) & ~F.isnan("__sim"))
-            .select("id_a", "id_b")
-        )
-        pairs = within.unionByName(cross).distinct()
-        if max_block_size is not None:
-            # the skip census rides EVERY output row (the
-            # minhash_lsh_pairs guard shape)
-            pairs = attach_census(pairs, census)
-        _write_batch(pairs, out_dir, batch_id)
-        # history accretes, one file per touched cell dir per batch.
-        # Vectors already SEALED into batch_id = -1 by a compaction
-        # that raced a mid-batch crash are skipped — re-appending them
-        # under batch_id = B would duplicate index rows permanently.
-        _write_batch(
-            assigned.join(F.broadcast(sealed_own), "vec_id", "left_anti"),
-            idx_dir, batch_id, *_IVF_LAYOUT,
-        )
-
-    return sink
 
 
 def _ivf_stream(spark, sf_dir, index, pairs, cap):
@@ -1473,114 +1393,20 @@ def incremental_srp_sink(
     idx_dir: str, out_dir: str, max_bucket_size: int | None = None
 ):
     """foreachBatch sink of the incremental SRP-ANN candidate stream —
-    the third column of the engine's lifecycle matrix ({MinHash text,
-    IVF vector, SRP vector} × {store, append, compact, stream}). Per
-    micro-batch: band the batch ONCE through the shared 112-band pool
-    (the vec_ann_srp_bucketed relation verbatim), emit same-batch
-    candidate pairs (bands-equi self-join with shared-band counts) +
-    batch×history pairs (probe of the stored band-partitioned index,
-    history = strictly earlier batches), then append the batch's band
-    rows partition-consistent. Both writes are idempotent per batch_id
-    (dynamic partition overwrite — the same exactly-once-via-batchId
-    pattern as the text and IVF sinks); bootstrap history with
-    batch_id = -1 under the same (band_idx, batch_id) layout.
-
-    Replay stays idempotent even across a COMPACTION that raced a
-    mid-batch crash: if the batch's band rows were sealed into
-    batch_id = -1 before the restart, the sink detects its own sealed
-    vec_ids and excludes them from both the history probe (no
-    self/doubled pairs, no inflated shared-band counts) and the
-    re-append (no permanently duplicated index rows). Banding is
-    deterministic and every vector emits one row in EVERY band_idx,
-    so the lookup prunes to the (band_idx = 0, batch_id = -1) slice —
-    1/n_bands of the sealed history — semi-joined against the bounded
-    batch id set. Empty (and nearly free) on every clean run. A
-    deployment that tuned to b bands (ann_srp_tune) filters
-    ``band_idx < b`` on BOTH sides — realized as PartitionFilters on
-    the stored scan, see vec_srp_stored_lifecycle.
-
-    ``max_bucket_size`` is the hot-bucket guard for HOSTILE batches
-    (boilerplate embedding bursts: near-identical vectors share every
-    band bucket, so an unguarded burst emits O(|batch|²) candidate
-    pairs per band): the batch's over-cap (band_idx, bucket) groups
-    are cut from BOTH the self-join and the history probe, while the
-    APPEND still writes every band row — history stays complete; the
-    cap bounds join work, not storage. When the guard is on, the
-    batch's cut-bucket count rides every pair row as ``n_cut_buckets``
-    (NULL-id sentinel when a batch cuts everything). None (the
-    unguarded registered queries' setting) keeps exact oracle parity
-    with the whole-corpus band join — the text sink's
-    ``max_bucket_size`` contract verbatim;
+    the :func:`_pair_sink` contract for the shared 112-band SRP pool
+    (the vec_ann_srp_bucketed relation verbatim). Index rows: the
+    batch's band buckets (``_ann_banded``) stored ``(band_idx,
+    batch_id)``; pairs: vectors sharing a band bucket, with their
+    shared-band counts. A deployment that tuned to b bands
+    (ann_srp_tune) filters ``band_idx < b`` on BOTH sides — realized
+    as PartitionFilters on the stored scan, see
+    vec_srp_stored_lifecycle. ``max_bucket_size`` cuts over-cap
+    (band, bucket) groups; the census rides as ``n_cut_buckets``.
     stream_srp_index_probe_guarded registers the guarded form."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        ss = batch_df.sparkSession
-        bidx = _ann_banded(batch_df).localCheckpoint(
-            eager=False
-        )  # band once: self-join + probe + append
-        join_side = bidx
-        if max_bucket_size is not None:
-            join_side, census = cap_blocks_with_census(
-                bidx, ["band_idx", "bucket"], max_bucket_size, "n_cut_buckets"
-            )
-        a, b = join_side.alias("a"), join_side.alias("b")
-        within = a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        ).select(
-            F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b")
-        )
-        # Sealed-own crash-compaction lookup (see docstring): the
-        # band_idx = 0 slice witnesses every sealed vector, and it is
-        # UNGUARDED by construction (reads the stored index, not
-        # join_side), so a hostile all-over-cap batch still detects
-        # its sealed copies. Correctness filter = the broadcast
-        # semi-join on vec_id; the band_idx predicate is pruning only.
-        sealed_own = (
-            ss.read.parquet(idx_dir)
-            .filter((F.col("batch_id") == -1) & (F.col("band_idx") == 0))
-            .join(
-                F.broadcast(batch_df.select("vec_id").distinct()),
-                "vec_id",
-                "left_semi",
-            )
-            .select("vec_id")
-            .distinct()
-            .localCheckpoint(eager=True)  # two consumers: probe + append
-        )
-        stored = (
-            ss.read.parquet(idx_dir)
-            .filter(F.col("batch_id") < F.lit(batch_id))
-            .join(F.broadcast(sealed_own), "vec_id", "left_anti")
-        )
-        probe = join_side.withColumnRenamed("vec_id", "probe_id")
-        cross = (
-            stored.join(probe, ["band_idx", "bucket"])
-            .select(
-                F.least("probe_id", "vec_id").alias("id_a"),
-                F.greatest("probe_id", "vec_id").alias("id_b"),
-            )
-        )
-        pairs = (
-            within.unionByName(cross)
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("n_shared_bands"))
-        )
-        if max_bucket_size is not None:
-            # same census contract as the text and vector sinks
-            pairs = attach_census(pairs, census)
-        _write_batch(pairs, out_dir, batch_id)
-        # append skips vectors already sealed into batch_id = -1 —
-        # re-appending them under batch_id = B would duplicate index
-        # rows (and double future shared-band counts) permanently
-        _write_batch(
-            bidx.join(F.broadcast(sealed_own), "vec_id", "left_anti"),
-            idx_dir, batch_id, *_SRP_LAYOUT,
-        )
-
-    return sink
+    return _pair_sink(
+        idx_dir, out_dir, _ann_banded, "vec_id", _SRP_LAYOUT, _band_pairs,
+        ["band_idx", "bucket"], "n_cut_buckets", max_bucket_size,
+    )
 
 
 def _srp_stream(spark, sf_dir, index, pairs, cap):

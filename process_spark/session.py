@@ -34,6 +34,15 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 CODEGEN_CACHE_ENTRIES = 4096
 
 
+def driver_memory(phys_bytes: int) -> str:
+    """Default ``spark.driver.memory`` for a host with ``phys_bytes`` of
+    RAM: a third of it in whole GiB, at most 8g. A flat 8g let three
+    engine JVMs on one 15.7 GB host (a test run, the oracle sweep and a
+    driver simulation) reach the kernel OOM killer; a third leaves room
+    for the Python workers and the page cache."""
+    return f"{max(1, min(8, phys_bytes // 3 // 2**30))}g"
+
+
 def get_spark(
     app_name: str = "process_spark",
     master: str | None = None,
@@ -69,7 +78,15 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get(
+                "SPARK_GRAFT_DRIVER_MEM",
+                driver_memory(
+                    os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+                ),
+            ),
+        )
         .config("spark.ui.enabled", "false")
     )
     spark = builder.getOrCreate()

@@ -423,15 +423,14 @@ BROADCAST_SITES = {
     "queries/relational.py": (2, "nation/region dims"),
     "queries/tpch.py": (1, "nation dim"),
     "queries/streaming.py": (
-        13,
+        7,
         "constant event-type weights table + grouped-sketch pass-2 "
         "candidate/threshold tables (≤ capacity×|langs| / |langs| rows) "
-        "+ 3 incremental-dedup-sink crash-compaction hygiene "
-        "broadcasts (bounded per-micro-batch doc-id set and its "
-        "≤|batch| sealed-own subset, probe + append sides) + 3 each "
-        "for the vector and SRP sinks' round-10 sealed-own hygiene "
-        "(same bounds); the guarded sinks' census broadcasts live in "
-        "operators/relational.py attach_census",
+        "+ 3 in _pair_sink, the one body of the MinHash, IVF and SRP "
+        "stream sinks: the sealed-own lookup's bounded per-micro-batch "
+        "id set and its ≤|batch| sealed-own subset on the history and "
+        "append anti-joins; the guarded sinks' census broadcasts live "
+        "in operators/relational.py attach_census",
     ),
     "queries/text.py": (1, "constant in-code lexicon table"),
     "operators/retrieval.py": (
@@ -563,6 +562,51 @@ def test_index_write_sites_reviewed():
         f"INDEX_WRITE_SITES with a reason.\nactual={actual}\n"
         f"expected={expected}"
     )
+
+
+#: Similarity at which two query-module functions count as one body
+#: written twice (difflib ratio over stripped source lines). The
+#: closest surviving pairs read 0.59 (the two keeper oracles, the
+#: semantic keeper and its guarded twin, the two sequence packers).
+NEAR_DUPLICATE_BOUND = 0.70
+
+
+def test_no_near_duplicate_query_bodies():
+    """No two top-level functions of ≥ 25 lines (decorator included)
+    in process_spark/queries/*.py are near-copies of each other: a
+    family of copies gets one body with its differences as values."""
+    import ast
+    import difflib
+    import itertools
+    import pathlib
+
+    root = (
+        pathlib.Path(__file__).resolve().parent.parent
+        / "process_spark"
+        / "queries"
+    )
+    bodies = {}
+    for p in sorted(root.glob("*.py")):
+        src = p.read_text().splitlines()
+        for node in ast.parse("\n".join(src)).body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            start = min([node.lineno] + [d.lineno for d in node.decorator_list])
+            if node.end_lineno - start + 1 >= 25:
+                bodies[f"{p.name}:{node.name}"] = [
+                    line.strip() for line in src[start - 1 : node.end_lineno]
+                ]
+    close = []
+    for (a, la), (b, lb) in itertools.combinations(bodies.items(), 2):
+        sm = difflib.SequenceMatcher(None, la, lb, autojunk=False)
+        # the quick ratios are upper bounds of ratio(): skip cheaply
+        if (
+            sm.real_quick_ratio() >= NEAR_DUPLICATE_BOUND
+            and sm.quick_ratio() >= NEAR_DUPLICATE_BOUND
+            and sm.ratio() >= NEAR_DUPLICATE_BOUND
+        ):
+            close.append(f"{sm.ratio():.2f} {a} {b}")
+    assert not close, "near-duplicate function bodies:\n" + "\n".join(close)
 
 
 def test_allowlists_not_stale(plans):

@@ -1168,63 +1168,126 @@ def test_incremental_srp_sink_replay_after_compaction(spark, tmp_path):
     ).count() == 0
 
 
-def test_incremental_dedup_sink_sealed_detection_under_guard(
-    spark, tmp_path
-):
-    """The coincidence case: a HOSTILE batch (every bucket over the
-    guard cap, so the guarded band set — and with it the old sealed-
-    own IN-set — is EMPTY) that also hits the crash → compact → replay
-    ordering. Sealed-own detection must come from the UNGUARDED bands:
-    the replay may not re-append the sealed docs under its own
-    batch_id."""
-    from process_spark.operators.indexlife import compact_partitioned_index
-    from process_spark.queries.streaming import incremental_dedup_sink
+def _hostile_sink_case(spark, kind, idx_dir, out_dir):
+    """One pair sink at cap 3 over a small stored history, and a
+    hostile batch of 6 identical rows that puts every block of the
+    batch over the cap: ``(sink, batch, id column, index rows per id,
+    layout partition columns, index row key)``."""
+    from process_spark.queries.streaming import (
+        incremental_dedup_sink,
+        incremental_srp_sink,
+        incremental_vector_sink,
+    )
 
-    kw = dict(num_hashes=16, bands=4, base_hash="xxhash64",
-              band_key="hash", n_buckets=8)
-    idx_dir = str(tmp_path / "idx")
-    out_dir = str(tmp_path / "pairs")
+    if kind == "minhash":
+        from process_spark.operators.dedup import minhash_band_index
+
+        kw = dict(num_hashes=16, bands=4, base_hash="xxhash64",
+                  band_key="hash", n_buckets=8)
+        hist = spark.createDataFrame(
+            [(i, f"unique document number {i} with words {i * 7}")
+             for i in range(4)],
+            "doc_id long, text string",
+        )
+        minhash_band_index(hist, "doc_id", "text", **kw).withColumn(
+            "batch_id", F.lit(-1)
+        ).repartition(8, F.col("band_idx"), F.col("band_bucket")).write.mode(
+            "overwrite"
+        ).partitionBy("band_idx", "band_bucket", "batch_id").parquet(idx_dir)
+        # 6 identical docs -> every bucket cut
+        batch = spark.createDataFrame(
+            [(100 + i, "boilerplate burst text shared by all")
+             for i in range(6)],
+            "doc_id long, text string",
+        )
+        sink = incremental_dedup_sink(idx_dir, out_dir, kw, max_bucket_size=3)
+        return (sink, batch, "doc_id", kw["bands"],
+                ["band_idx", "band_bucket"], ("doc_id", "band_idx", "band_hash"))
+    if kind == "ivf":
+        from process_spark.operators.similarity import ivf_build
+
+        hist = spark.createDataFrame(
+            [(0, [1.0, 0.0]), (2, [0.0, 1.0]), (4, [0.7071, 0.7071])],
+            "vec_id long, embedding array<float>",
+        )
+        cells, assign_h = ivf_build(hist, n_cells=2, seed_hash="md5")
+        assign_h.withColumn("batch_id", F.lit(-1)).repartition(
+            2, F.col("cell_id")
+        ).write.mode("overwrite").partitionBy("cell_id", "batch_id").parquet(
+            idx_dir
+        )
+        # 6 identical vectors -> one cell, cut
+        batch = spark.createDataFrame(
+            [(100 + i, [1.0, 0.0]) for i in range(6)],
+            "vec_id long, embedding array<float>",
+        )
+        sink = incremental_vector_sink(
+            idx_dir, out_dir, cells, threshold=0.999, max_block_size=3
+        )
+        return sink, batch, "vec_id", 1, ["cell_id"], ("vec_id", "cell_id")
+    from process_spark.queries.vectors import _ann_banded
 
     hist = spark.createDataFrame(
-        [(i, f"unique document number {i} with words {i * 7}")
-         for i in range(4)],
-        "doc_id long, text string",
+        [(2 * i, [float((i * 7 + j) % 13) - 6.0 for j in range(64)])
+         for i in range(6)],
+        "vec_id long, embedding array<float>",
     )
-    from process_spark.operators.dedup import minhash_band_index
-
-    minhash_band_index(hist, "doc_id", "text", **kw).withColumn(
-        "batch_id", F.lit(-1)
-    ).repartition(8, F.col("band_idx"), F.col("band_bucket")).write.mode(
-        "overwrite"
-    ).partitionBy("band_idx", "band_bucket", "batch_id").parquet(idx_dir)
-
-    # hostile batch: 6 identical docs, cap 3 -> every bucket cut
+    _ann_banded(hist).withColumn("batch_id", F.lit(-1)).repartition(
+        8, F.col("band_idx")
+    ).write.mode("overwrite").partitionBy("band_idx", "batch_id").parquet(
+        idx_dir
+    )
+    # 6 identical vectors -> one bucket in every band, all cut
     batch = spark.createDataFrame(
-        [(100 + i, "boilerplate burst text shared by all") for i in range(6)],
-        "doc_id long, text string",
+        [(100 + i, [1.0] * 64) for i in range(6)],
+        "vec_id long, embedding array<float>",
     )
-    sink = incremental_dedup_sink(idx_dir, out_dir, kw, max_bucket_size=3)
+    sink = incremental_srp_sink(idx_dir, out_dir, max_bucket_size=3)
+    return sink, batch, "vec_id", 112, ["band_idx"], ("vec_id", "band_idx", "bucket")
+
+
+@pytest.mark.parametrize("kind", ["minhash", "ivf", "srp"])
+def test_incremental_dedup_sink_sealed_detection_under_guard(
+    spark, tmp_path, kind
+):
+    """The coincidence case: a HOSTILE batch (every block over the
+    guard cap, so the guarded index-row set — and with it the old
+    sealed-own IN-set — is EMPTY) that also hits the crash → compact →
+    replay ordering. Sealed-own detection must come from the UNGUARDED
+    index rows: the replay may not re-append the sealed ids under its
+    own batch_id. Run for each of the three pair sinks (MinHash bands,
+    IVF cells, SRP bands), which share one sealed-own path."""
+    from process_spark.operators.indexlife import compact_partitioned_index
+
+    idx_dir = str(tmp_path / "idx")
+    out_dir = str(tmp_path / "pairs")
+    sink, batch, id_col, per_id, cols, key = _hostile_sink_case(
+        spark, kind, idx_dir, out_dir
+    )
+
+    def index_rows():
+        return sorted(
+            tuple(r[c] for c in key)
+            for r in spark.read.parquet(idx_dir).collect()
+        )
+
     sink(batch, 0)
-    clean_idx = sorted(
-        (r["doc_id"], r["band_idx"], r["band_hash"])
-        for r in spark.read.parquet(idx_dir).collect()
-    )
+    clean_idx = index_rows()
     # guard engaged (no quadratic pairs), append complete
     assert spark.read.parquet(idx_dir).filter(
-        F.col("doc_id") >= 100
-    ).count() == 6 * kw["bands"]
+        F.col(id_col) >= 100
+    ).count() == 6 * per_id
+    assert spark.read.parquet(out_dir).filter(
+        F.col("id_a").isNotNull()
+    ).count() == 0
 
-    compact_partitioned_index(spark, idx_dir, ["band_idx", "band_bucket"])
+    compact_partitioned_index(spark, idx_dir, cols)
     assert spark.read.parquet(idx_dir).filter(
         F.col("batch_id") != -1
     ).count() == 0
 
-    sink(batch, 0)  # replay, guard still on, guarded band set empty
-    replay_idx = sorted(
-        (r["doc_id"], r["band_idx"], r["band_hash"])
-        for r in spark.read.parquet(idx_dir).collect()
-    )
-    assert replay_idx == clean_idx  # sealed docs NOT re-appended
+    sink(batch, 0)  # replay, guard still on, guarded row set empty
+    assert index_rows() == clean_idx  # sealed ids NOT re-appended
     assert spark.read.parquet(idx_dir).filter(
         F.col("batch_id") == 0
     ).count() == 0
