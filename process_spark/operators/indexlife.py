@@ -1,13 +1,12 @@
-"""One lifecycle for every BATCH stored index: write, append,
-tombstone, compact, audit and repair. Four families run through it —
-the IVF cell index (``vec_ivf_stored_*``), the MinHash band index
+"""One lifecycle for every stored index: write, append, tombstone,
+compact, audit and repair. Five families run through it — the IVF
+cell index (``vec_ivf_stored_*``), the MinHash band index
 (``dedup_band_index_*``), the SRP band index
-(``vec_srp_stored_lifecycle``) and the SimHash band index
-(``dedup_simhash_index_probe``) — and this module owns compaction for
-every partitioned index in the engine (:func:`compact_partitioned_index`
-also serves the streaming sinks' ``batch_id`` layouts and the postings
-compactor). The postings index keeps its own writer and tombstones in
-operators/retrieval.py.
+(``vec_srp_stored_lifecycle``), the SimHash band index
+(``dedup_simhash_index_probe``) and the BM25 postings index
+(operators/retrieval.py) — and this module owns compaction for every
+partitioned index in the engine (:func:`compact_partitioned_index`
+also serves the streaming sinks' ``batch_id`` layouts).
 
 Why this exists: deleting a document updates the text index
 (queries/retrieval.stream_bm25_index_updated) but its EMBEDDING stayed
@@ -20,25 +19,38 @@ Layout (all under one index ``path``):
 
 - ``data/`` — the index rows, ``partitionBy(part_cols)`` (the family's
   pruning key: ``cell_id`` for IVF, ``(band_idx, band_bucket)`` for
-  band indexes). One file per touched dir per write.
+  band indexes, ``term_bucket`` for postings). One file per touched
+  dir per write.
 - ``_ids/`` — identity membership, ``partitionBy(id_bucket)`` with
   ``id_bucket = pmod(hash(id), n_id_buckets)``: the index's pruning
   key depends on CONTENT (an updated embedding lands in a different
   cell; re-tokenized text in different buckets), so "is this id in the
-  index?" needs an id-keyed sidecar to stay a pruned lookup — the
-  postings ``_docs`` precedent, minus the dl payload (no probe here
-  needs global stats corrected).
+  index?" needs an id-keyed sidecar to stay a pruned lookup.
 - ``_meta/`` — one row ``(id_col, part_cols, n_id_buckets)`` persisted
   at build time, so tombstone/append/compact derive their pruning
   config from the index instead of trusting caller-supplied values
-  (the mismatched-n_buckets bug class the postings family had to
-  validate away).
-- ``_tombstones/`` — logical deletes ``(id_bucket, id)``; probes
-  anti-join them out immediately, bytes go at the next compaction.
+  (:func:`check_index_meta` is the one comparison).
+- ``_tombstones/`` — logical deletes: the tombstoned ids' ``_ids``
+  rows, partitioned by ``id_bucket``; probes anti-join them out
+  immediately, bytes go at the next compaction.
 
-Unlike the postings index there is NO stats sidecar: BM25 needed
-(N, Σdl) corrected per delete; cosine/Jaccard probes score per-pair,
-so a delete is complete once the row is invisible.
+The postings index extends this layout in two ways. Its ``_ids`` rows
+carry a payload, ``(doc_id, dl, src_batch)`` under ``(id_bucket,
+batch_id)``: ``dl`` (the doc's token length) therefore rides every
+tombstone, so a probe can subtract a deleted doc from N/Σdl without
+hunting its postings; ``src_batch`` (the ingesting batch, kept as a
+column when compaction seals ``batch_id`` to -1) lets the streaming
+sink tell its own replayed rows from a foreign re-ingest. And it
+carries a ``_stats`` sidecar of per-batch ``(n_docs, sum_dl)`` deltas
+summed on read, which BM25 needs for N/avgdl (the other families score
+per pair, so a delete is complete once the row is invisible). The
+postings family keeps its own writers (the ``dl`` payload, an
+AQE-sized data write, and an overwrite that overlaps its component
+writes) and its own ``postings_stats_audit``.
+:func:`stored_index_audit` and :func:`repair_stored_index` stay
+batch-family only: a zero-token document legitimately holds an
+``_ids`` row with no postings, and a repair that rebuilds ``_ids``
+from ``data`` would drop the ``dl`` payload.
 """
 
 from __future__ import annotations
@@ -84,7 +96,47 @@ def index_meta(spark: SparkSession, path: str) -> dict:
     }
 
 
-def _bucket_in_set(ids: DataFrame, id_col: str, n_id_buckets: int) -> list:
+def write_index_meta(
+    spark: SparkSession,
+    path: str,
+    id_col: str,
+    part_cols: Sequence[str],
+    n_id_buckets: int,
+) -> None:
+    """Persist the one-row ``_meta`` that :func:`index_meta` reads."""
+    spark.createDataFrame(
+        [(id_col, ",".join(part_cols), n_id_buckets)],
+        "id_col string, part_cols string, n_id_buckets int",
+    ).coalesce(1).write.mode("overwrite").parquet(
+        posixpath.join(path, "_meta")
+    )
+
+
+def check_index_meta(
+    spark: SparkSession,
+    path: str,
+    id_col: str,
+    part_cols: Sequence[str],
+    n_id_buckets: int,
+) -> None:
+    """Raise unless the persisted ``_meta`` equals the caller's layout:
+    a caller config that disagrees with the bytes would prune the wrong
+    id or partition buckets (false "not in the index" answers, missed
+    re-ingests), so it fails loudly instead."""
+    meta = index_meta(spark, path)
+    want = {
+        "id_col": id_col,
+        "part_cols": list(part_cols),
+        "n_id_buckets": n_id_buckets,
+    }
+    if meta != want:
+        raise ValueError(
+            f"stored index at {path} was built with {meta}, requested "
+            f"{want}"
+        )
+
+
+def bucket_in_set(ids: DataFrame, id_col: str, n_id_buckets: int) -> list:
     """Bounded (≤ n_id_buckets ints) bucket IN-set of an id relation."""
     return sorted(
         r["b"]
@@ -94,6 +146,34 @@ def _bucket_in_set(ids: DataFrame, id_col: str, n_id_buckets: int) -> list:
         .distinct()
         .collect()
     )
+
+
+def refuse_held_ids(
+    spark: SparkSession, path: str, ids: DataFrame, id_col: str,
+    n_id_buckets: int,
+) -> None:
+    """The APPEND-ONLY identity check: raise if any of ``ids`` (one
+    column, ``id_col``) is already in ``_ids`` — live OR
+    tombstoned-but-unpurged — with the update recipe. Exact and
+    content-independent: the id-keyed sidecar sees a changed-content
+    re-ingest whose index rows share no partition with the stored copy,
+    and the bucket IN-set prunes its read. No broadcast hint on ``ids``:
+    a batch append can be corpus-scale, so AQE sizes the join."""
+    held = (
+        spark.read.parquet(posixpath.join(path, "_ids"))
+        .filter(
+            F.col("id_bucket").isin(bucket_in_set(ids, id_col, n_id_buckets))
+        )
+        .join(ids, id_col, "left_semi")
+    )
+    foreign = [r[id_col] for r in held.select(id_col).limit(5).collect()]
+    if foreign:
+        raise ValueError(
+            f"stored index at {path}: append re-ingests ids already "
+            f"in the index (sample: {foreign}) — ids are append-only."
+            " To UPDATE: tombstone_index_ids, compact the index "
+            "(purges every trace), then re-ingest the new version"
+        )
 
 
 def write_stored_index(
@@ -112,13 +192,9 @@ def write_stored_index(
     silently anti-join live ids out of every probe — the same gap the
     postings writer closed), and ``_ids``/``_meta`` are rewritten.
 
-    ``mode="append"`` validates against the persisted ``_meta`` (a
-    caller-supplied layout that disagrees with the bytes fails loudly,
-    never prunes wrong) and enforces the APPEND-ONLY identity contract:
-    any batch id already in ``_ids`` — live OR tombstoned-but-unpurged
-    — raises with the update recipe. Detection is exact and content-
-    independent (the id-keyed sidecar sees a changed-content re-ingest
-    whose index rows share no partition with the stored copy).
+    ``mode="append"`` validates against the persisted ``_meta``
+    (:func:`check_index_meta`) and enforces the APPEND-ONLY identity
+    contract (:func:`refuse_held_ids`).
 
     Crash ordering: ``_ids`` is written BEFORE ``data`` on purpose. A
     crash between the two writes leaves the batch's ids REGISTERED but
@@ -135,38 +211,14 @@ def write_stored_index(
     ``n_ids_without_data > 0``."""
     data_dir = posixpath.join(path, "data")
     ids_dir = posixpath.join(path, "_ids")
-    meta_dir = posixpath.join(path, "_meta")
     spark = rows.sparkSession
     if mode == "append":
-        meta = index_meta(spark, path)
-        if (
-            meta["id_col"] != id_col
-            or meta["part_cols"] != list(part_cols)
-            or meta["n_id_buckets"] != n_id_buckets
-        ):
-            raise ValueError(
-                f"stored index at {path} was built with {meta}, append "
-                f"requested id_col={id_col!r}, part_cols={list(part_cols)}, "
-                f"n_id_buckets={n_id_buckets}"
-            )
-        bids = rows.select(id_col).distinct().localCheckpoint(eager=True)
-        held = (
-            spark.read.parquet(ids_dir)
-            .filter(
-                F.col("id_bucket").isin(
-                    _bucket_in_set(bids, id_col, n_id_buckets)
-                )
-            )
-            .join(F.broadcast(bids), id_col, "left_semi")
+        check_index_meta(spark, path, id_col, part_cols, n_id_buckets)
+        refuse_held_ids(
+            spark, path,
+            rows.select(id_col).distinct().localCheckpoint(eager=True),
+            id_col, n_id_buckets,
         )
-        foreign = [r[id_col] for r in held.limit(5).collect()]
-        if foreign:
-            raise ValueError(
-                f"stored index at {path}: append re-ingests ids already "
-                f"in the index (sample: {foreign}) — ids are append-only."
-                " To UPDATE: tombstone_index_ids, compact_stored_index "
-                "(purges every trace), then re-ingest the new version"
-            )
     else:
         fs, HPath = fs_path(spark, path)
         fs.delete(HPath(posixpath.join(path, "_tombstones")), True)
@@ -188,10 +240,7 @@ def write_stored_index(
         .parquet(data_dir)
     )
     if mode != "append":
-        spark.createDataFrame(
-            [(id_col, ",".join(part_cols), n_id_buckets)],
-            "id_col string, part_cols string, n_id_buckets int",
-        ).coalesce(1).write.mode("overwrite").parquet(meta_dir)
+        write_index_meta(spark, path, id_col, part_cols, n_id_buckets)
     spark.catalog.refreshByPath(data_dir)
     spark.catalog.refreshByPath(ids_dir)
 
@@ -201,7 +250,10 @@ def tombstone_index_ids(
 ) -> dict:
     """Logical DELETE: record ``ids`` (a bounded maintenance request,
     single column named as the index's id_col) under
-    ``_tombstones/(id_bucket)``. Probes must exclude them immediately
+    ``_tombstones/(id_bucket)``. Each tombstone is the id's ``_ids`` row
+    minus ``batch_id`` — ``(id_bucket, <id>)`` for the batch families;
+    the postings index's rows also carry ``dl``, the stats correction
+    its probe subtracts. Probes must exclude them immediately
     (:func:`live_index_rows`); bytes are purged at the next
     :func:`compact_stored_index`, after which the ids are free to
     re-ingest (the UPDATE path). Raises on ids never ingested (deleting
@@ -214,9 +266,9 @@ def tombstone_index_ids(
     req = ids.select(id_col).distinct().localCheckpoint(eager=True)
     members = (
         spark.read.parquet(ids_dir)
-        .filter(F.col("id_bucket").isin(_bucket_in_set(req, id_col, nb)))
+        .filter(F.col("id_bucket").isin(bucket_in_set(req, id_col, nb)))
         .join(F.broadcast(req), id_col, "left_semi")
-        .select("id_bucket", id_col)
+        .drop("batch_id")
         .localCheckpoint(eager=True)
     )
     missing = [

@@ -41,7 +41,22 @@ from pyspark.sql.window import Window
 
 from process_spark.functions.textfn import tokens
 from process_spark.operators.execution import overlap
-from process_spark.operators.indexlife import compact_partitioned_index
+from process_spark.operators.fsutil import (
+    fs_exists,
+    fs_path,
+    live_batch_ids,
+    read_watermark,
+    swap_in,
+    write_watermark,
+)
+from process_spark.operators.indexlife import (
+    bucket_in_set,
+    check_index_meta,
+    compact_stored_index,
+    index_meta,
+    refuse_held_ids,
+    write_index_meta,
+)
 
 #: Lucene-default BM25 parameters; inlined identically into oracles.
 K1 = 1.2
@@ -339,6 +354,30 @@ def postings_index(docs: DataFrame, n_buckets: int = 16) -> DataFrame:
     )
 
 
+def _require_partitioned_stats(spark: SparkSession, path: str) -> None:
+    """Legacy-layout guard, run BEFORE an append or a compaction can do
+    damage: an index built before the stats sidecar was
+    batch_id-partitioned holds bare parquet files at the ``_stats``
+    root. A ``batch_id=N`` dir beside them would make every later read
+    of ``_stats`` fail partition discovery (conflicting directory
+    structures), and a compaction would rewrite data/_ids before the
+    stats seal failed — so both fail loud with the rebuild
+    instruction."""
+    stats_dir = posixpath.join(path, "_stats")
+    fs, HPath = fs_path(spark, stats_dir)
+    if not fs.exists(HPath(stats_dir)) or not any(
+        st.getPath().getName().startswith("batch_id=")
+        for st in fs.listStatus(HPath(stats_dir))
+        if st.isDirectory()
+    ):
+        raise ValueError(
+            f"postings index at {path} has no batch_id= partitioned "
+            "_stats (a legacy unpartitioned layout, or none) — rebuild "
+            "it with write_postings_index(mode='overwrite'), which "
+            "writes the batch_id-partitioned layout"
+        )
+
+
 def write_postings_index(
     docs: DataFrame, path: str, mode: str = "overwrite", n_buckets: int = 16
 ) -> None:
@@ -348,6 +387,19 @@ def write_postings_index(
     derived HERE from the same ``docs`` the stats aggregate — a
     (pidx, docs) parameter pair would let the two silently diverge.
 
+    The index is an operators/indexlife index (``id_col = doc_id``,
+    ``part_cols = term_bucket``, ``n_id_buckets = n_buckets``): both
+    modes maintain its ``_ids`` membership sidecar (``(id_bucket,
+    batch_id)`` partitions, rows ``(doc_id, dl, src_batch)`` — the
+    streaming sink's layout), and overwrite writes its ``_meta``. An
+    append validates ``n_buckets`` against ``_meta``
+    (indexlife.check_index_meta) and runs indexlife's APPEND-ONLY
+    identity check (indexlife.refuse_held_ids): re-ingesting a doc_id
+    the index already holds RAISES with the update recipe
+    (indexlife.tombstone_index_ids → :func:`compact_postings_index` →
+    re-ingest). An index whose ``_meta`` or ``_ids`` is missing fails
+    that validation before anything is written.
+
     On append, the batch's stats are APPENDED as a delta row (probes
     SUM the sidecar's rows — :func:`bm25_probe_postings` already does,
     for the streaming layout's sake), never accumulated in place: a
@@ -356,99 +408,38 @@ def write_postings_index(
     append and the stats overwrite, silently skewing idf/avgdl on
     every later probe. With delta rows the same crash window leaves a
     MISSING delta — a recoverable gap, not a corrupted accumulator.
-    ``n_buckets`` is persisted with every row so a probe (or append)
-    under a different bucket count fails loudly instead of pruning to
-    the wrong partitions.
-
-    Both modes also maintain the ``_docs`` membership sidecar
-    (``(doc_bucket, batch_id)`` partitions, rows
-    ``(doc_id, dl, src_batch)`` — the streaming sink's layout), which
-    arms the batch lifecycle with the same APPEND-ONLY identity
-    contract the sink enforces: an append re-ingesting a doc_id the
-    index already holds RAISES with the update recipe
-    (:func:`tombstone_postings_docs` → :func:`compact_postings_index`
-    → re-ingest), detected exactly and content-independently from the
-    id-bucketed sidecar. Without it a re-ingested doc double-counted
-    df in any raw census and duplicated its postings silently. On a
-    legacy index with no ``_docs`` (built before this writer
-    maintained it) the check degrades to best-effort against the live
-    postings in the batch's term buckets — which can miss a
-    changed-content re-ingest — and the membership write is SKIPPED
-    (a sidecar holding only the new batch's ids would be worse than
-    none: every consistency check would scream about the old docs);
-    rebuild with ``mode="overwrite"`` to arm exact validation.
+    ``n_buckets`` is persisted with every row so a probe under a
+    different bucket count fails loudly instead of pruning to the
+    wrong partitions.
 
     Crash ordering (the indexlife.write_stored_index contract):
-    ``_docs`` lands BEFORE the postings and the stats delta, so a
+    ``_ids`` lands BEFORE the postings and the stats delta, so a
     crash mid-append leaves the batch's ids REGISTERED but its rows
     absent/uncounted — the re-run RAISES the already-ingested error
     (fail loud), and the repair is the update recipe above (the
     compactor purges the orphaned membership and recomputes the
-    sealed stats from the surviving bytes, so the index is exact
-    again). The opposite order would let the re-run silently append
-    the same postings twice.
+    sealed stats from ``_ids``, so the index is exact again). The
+    opposite order would let the re-run silently append the same
+    postings twice.
 
     Stats deltas land under ``batch_id=`` partition dirs — the SAME
     layout the streaming sink uses, with SYNTHETIC monotone batch ids
     (overwrite → 0, each append → max(existing, watermark) + 1) — so
     ONE reader and ONE compactor (:func:`compact_postings_stats`)
-    serve both lifecycles; without this the batch lifecycle's delta
-    rows accumulated one file per append forever with no compaction
-    answer.
+    serve both lifecycles.
 
     In overwrite mode the whole path is an in-place REBUILD, so any
     stale lifecycle sidecars from a previous (streaming) life at this
     path are deleted first: leftover ``_tombstones`` would silently
     anti-join live doc_ids out of probes and subtract their
-    (count, dl) from N/avgdl; ``_docs`` is rewritten fresh for the new
+    (count, dl) from N/avgdl; ``_ids`` is rewritten fresh for the new
     corpus (a stale membership would hold foreign identities that
     block legitimate future ingests)."""
-    from process_spark.operators.fsutil import (
-        fs_exists,
-        fs_path,
-        live_batch_ids,
-        read_watermark,
-    )
-
     stats_path = posixpath.join(path, "_stats")
-    data_path = posixpath.join(path, "data")
     spark = docs.sparkSession
     if mode == "append":
-        # Legacy-layout guard (the compactor's check, applied BEFORE
-        # the append can do damage): an index built before the stats
-        # sidecar was batch_id-partitioned holds bare parquet files at
-        # the _stats root. Appending a batch_id=N partition dir
-        # alongside them would make every subsequent read of _stats
-        # fail partition discovery (conflicting directory structures)
-        # — breaking probes, audits, and the sink's n_buckets
-        # validation. Fail loud with the rebuild instruction instead.
-        fs0, HPath0 = fs_path(spark, stats_path)
-        if fs0.exists(HPath0(stats_path)) and not any(
-            st.getPath().getName().startswith("batch_id=")
-            for st in fs0.listStatus(HPath0(stats_path))
-            if st.isDirectory()
-        ):
-            raise ValueError(
-                f"postings index at {path} carries a legacy "
-                "unpartitioned _stats layout (bare parquet files at "
-                "the _stats root) — appending a batch_id= partition "
-                "alongside them would corrupt partition discovery for "
-                "every later reader. Rebuild the index with "
-                "write_postings_index(mode='overwrite'), which writes "
-                "the batch_id-partitioned layout"
-            )
-        stored_nb = [
-            int(r["n_buckets"])
-            for r in spark.read.parquet(stats_path)
-            .select("n_buckets")
-            .distinct()
-            .collect()
-        ]
-        if stored_nb != [n_buckets]:
-            raise ValueError(
-                f"postings index at {path} was written with "
-                f"n_buckets={stored_nb}, append requested {n_buckets}"
-            )
+        check_index_meta(spark, path, "doc_id", ["term_bucket"], n_buckets)
+        _require_partitioned_stats(spark, path)
         batch_no = (
             max(
                 [read_watermark(spark, stats_path)]
@@ -458,7 +449,7 @@ def write_postings_index(
         )
     else:
         fs, HPath = fs_path(spark, path)
-        for side in ("_tombstones", "_docs"):
+        for side in ("_tombstones", "_ids"):
             fs.delete(HPath(posixpath.join(path, side)), True)
         batch_no = 0
     # The write materializes the (lazily pinned) postings; the stats
@@ -467,74 +458,29 @@ def write_postings_index(
     # groupBy conserves token counts, and a zero-token doc contributes
     # 0 either way); n_docs is a tokenize-free count of ``docs``.
     # Overwrite mode pins EAGERLY (one materialization job) so the
-    # three component writes below can consume the pinned blocks
+    # component writes below can consume the pinned blocks
     # concurrently; append mode stays lazy — its validation collects
     # materialize the pin on their own first action.
     pidx = postings_index(docs, n_buckets).localCheckpoint(
         eager=(mode != "append")
     )
-    docs_path = posixpath.join(path, "_docs")
     bids = (
         docs.select("doc_id")
         .distinct()
         .localCheckpoint(eager=False)  # validation + membership below
     )
-    have_docs_sidecar = fs_exists(spark, docs_path)
     if mode == "append":
-        # Append-only identity validation (see the docstring). No
-        # broadcast hint on the batch side: unlike the sink's bounded
-        # micro-batches, a batch append can be corpus-scale — the
-        # bucket IN-set still prunes the sidecar read (≤ n_buckets
-        # ints regardless of batch size) and AQE sizes the join.
-        if have_docs_sidecar:
-            bucket_set = sorted(
-                r["b"]
-                for r in bids.select(
-                    F.pmod(F.hash("doc_id"), F.lit(n_buckets))
-                    .cast("int")
-                    .alias("b")
-                )
-                .distinct()
-                .collect()
-            )
-            held = (
-                spark.read.parquet(docs_path)
-                .filter(F.col("doc_bucket").isin(bucket_set))
-                .join(bids, "doc_id", "left_semi")
-            )
-        else:
-            # best-effort from the live postings (legacy index with no
-            # sidecar): misses a changed-content re-ingest whose new
-            # tokens share no bucket with the stored copy
-            tb_set = sorted(
-                r["term_bucket"]
-                for r in pidx.select("term_bucket").distinct().collect()
-            )
-            held = (
-                spark.read.parquet(data_path)
-                .filter(F.col("term_bucket").isin(tb_set))
-                .join(bids, "doc_id", "left_semi")
-            )
-        foreign = [
-            r["doc_id"] for r in held.select("doc_id").limit(5).collect()
-        ]
-        if foreign:
-            raise ValueError(
-                f"postings index at {path}: append re-ingests doc_ids "
-                f"already in the index (sample: {foreign}) — doc_ids "
-                "are append-only. To UPDATE a doc: "
-                "tombstone_postings_docs it, run compact_postings_index "
-                "(purges every trace), then re-ingest the new version"
-            )
-    def _write_docs() -> None:
+        refuse_held_ids(spark, path, bids, "doc_id", n_buckets)
+
+    def _write_ids() -> None:
         (
             postings_membership(bids, pidx, n_buckets=n_buckets)
             .withColumn("src_batch", F.lit(batch_no))
             .withColumn("batch_id", F.lit(batch_no))
-            .repartition(n_buckets, F.col("doc_bucket"))
+            .repartition(n_buckets, F.col("id_bucket"))
             .write.mode(mode)
-            .partitionBy("doc_bucket", "batch_id")
-            .parquet(docs_path)
+            .partitionBy("id_bucket", "batch_id")
+            .parquet(posixpath.join(path, "_ids"))
         )
 
     def _write_data() -> None:
@@ -548,7 +494,7 @@ def write_postings_index(
             pidx.repartition(F.col("term_bucket"))
             .write.mode(mode)
             .partitionBy("term_bucket")
-            .parquet(data_path)
+            .parquet(posixpath.join(path, "data"))
         )
 
     def _write_stats() -> None:
@@ -570,14 +516,13 @@ def write_postings_index(
         ).partitionBy("batch_id").parquet(stats_path)
 
     if mode == "append":
-        # Append crash-ordering contract (docstring): _docs FIRST (a
+        # Append crash-ordering contract (docstring): _ids FIRST (a
         # half-appended batch must fail loud on the re-run, never
         # silently duplicate its postings), postings second, the stats
         # delta LAST (a crash between them leaves a MISSING delta — a
         # recoverable gap — never a delta counting absent postings).
         # The ordering is load-bearing, so the writes stay sequential.
-        if have_docs_sidecar:
-            _write_docs()
+        _write_ids()
         _write_data()
         _write_stats()
     else:
@@ -585,10 +530,15 @@ def write_postings_index(
         # leaves a partially rebuilt index that needs the overwrite
         # re-run no matter which component landed first (the stale
         # sidecars were already deleted above), so no write ordering is
-        # load-bearing — run the three component writes CONCURRENTLY
+        # load-bearing — run the component writes CONCURRENTLY
         # (guide §2.6); all consume the eagerly pinned pidx blocks, so
         # nothing recomputes.
-        overlap(_write_docs, _write_data, _write_stats)
+        overlap(
+            _write_ids, _write_data, _write_stats,
+            lambda: write_index_meta(
+                spark, path, "doc_id", ["term_bucket"], n_buckets
+            ),
+        )
 
 
 def bm25_probe_postings(
@@ -617,8 +567,9 @@ def bm25_probe_postings(
     (complete by the co-location invariant); N/avgdl from the 1-row
     sidecar.
 
-    Tombstones (logical deletes — :func:`tombstone_postings_docs`) are
-    honored without touching the stored bytes: deleted doc_ids are
+    Tombstones (logical deletes — indexlife.tombstone_index_ids, whose
+    rows carry each doc's ``dl`` from ``_ids``) are honored without
+    touching the stored bytes: deleted doc_ids are
     anti-joined out of the pruned hit set BEFORE df aggregation, and
     their (count, Σdl) — carried on the tombstone rows — are
     subtracted from the sidecar's N/Σdl, so scores equal a fresh index
@@ -635,8 +586,6 @@ def bm25_probe_postings(
     (:func:`postings_skew_report` / ``text_postings_skew_report``)
     keeps the cap observable; the per-query dropped-term count rides
     :func:`bm25_scores_max_df` for the kernel path."""
-    from process_spark.operators.fsutil import fs_exists
-
     # Pinned lazily: the bucket collect below materializes the query-
     # term derivation ONCE; the two broadcast builds in the scoring
     # plan then read the pinned rows instead of re-executing it (in the
@@ -800,18 +749,18 @@ def rrf_fuse(channels: list[DataFrame]) -> DataFrame:
 def postings_membership(
     docs: DataFrame, pidx: DataFrame, n_buckets: int = 16
 ) -> DataFrame:
-    """Membership-sidecar rows ``(doc_bucket, doc_id, dl)`` for the
-    ``_docs`` table: one row per distinct doc, partitioned by
-    ``doc_bucket = pmod(hash(doc_id), n_buckets)``. Unlike the
-    postings themselves (whose term buckets depend on CONTENT), a
-    doc's membership bucket depends only on its id — so "is this
-    doc_id already in the index?" is answerable from a pruned read of
-    a single-column table no matter how the doc's text changed. ``dl``
-    (the doc's token length, taken from the already-computed postings
-    ``pidx``; 0 for zero-token docs, which have no postings rows) is
-    denormalized here so a DELETE can write its stats correction from
-    one pruned sidecar lookup instead of hunting the doc's postings
-    across content-dependent term buckets."""
+    """``_ids`` rows ``(id_bucket, doc_id, dl)`` of the postings index:
+    one row per distinct doc, partitioned by ``id_bucket =
+    pmod(hash(doc_id), n_buckets)`` (the operators/indexlife layout).
+    Unlike the postings themselves (whose term buckets depend on
+    CONTENT), a doc's membership bucket depends only on its id — so "is
+    this doc_id already in the index?" is answerable from a pruned read
+    no matter how the doc's text changed. ``dl`` (the doc's token
+    length, taken from the already-computed postings ``pidx``; 0 for
+    zero-token docs, which have no postings rows) is denormalized here
+    so a DELETE carries its stats correction on the tombstone row
+    instead of hunting the doc's postings across content-dependent
+    term buckets."""
     per_doc_dl = pidx.groupBy("doc_id").agg(F.first("dl").alias("dl"))
     return (
         docs.select("doc_id")
@@ -820,7 +769,7 @@ def postings_membership(
         .select(
             F.pmod(F.hash("doc_id"), F.lit(n_buckets))
             .cast("int")
-            .alias("doc_bucket"),
+            .alias("id_bucket"),
             "doc_id",
             F.coalesce(F.col("dl"), F.lit(0)).cast("long").alias("dl"),
         )
@@ -835,8 +784,11 @@ def incremental_postings_sink(path: str, n_buckets: int = 16):
     per-batch pair emission: BM25 retrieval is a query-time op, so the
     stream's whole job is keeping the index fresh — per micro-batch,
     append the batch's postings under ``(term_bucket, batch_id)``, its
-    membership rows under ``_docs/(doc_bucket, batch_id)``, and its
-    1-row corpus-stats delta under ``_stats/batch_id=B``.
+    membership rows under ``_ids/(id_bucket, batch_id)``, and its
+    1-row corpus-stats delta under ``_stats/batch_id=B``. ``n_buckets``
+    is validated against the index's ``_meta``
+    (indexlife.check_index_meta) before anything is pruned; the first
+    batch on a fresh path writes that ``_meta``.
 
     Idempotence: all three writes use dynamic partition overwrite
     keyed on the batch (exactly-once-via-batchId), so at-least-once
@@ -844,10 +796,9 @@ def incremental_postings_sink(path: str, n_buckets: int = 16):
     including the stats row, which is why stats are stored per batch
     and SUMMED at probe time rather than accumulated in place (an
     accumulate-on-append sidecar would double-add under replay). If
-    the ``_stats`` sidecar was compacted (:func:`compact_postings_
-    stats` — rows folded into one sealed row), a replayed batch at or
-    below its ``sealed_through`` watermark skips the stats write: its
-    delta already lives inside the sealed row.
+    the ``_stats`` sidecar was sealed (:func:`compact_postings_stats`),
+    a replayed batch at or below its ``sealed_through`` watermark skips
+    the stats write: its delta already lives inside the sealed row.
 
     Sealed-own crash-compaction hygiene (the invariant all the
     engine's streaming sinks share — see compact_partitioned_index's
@@ -869,49 +820,23 @@ def incremental_postings_sink(path: str, n_buckets: int = 16):
     would silently corrupt it — the sealed-own anti-join would drop
     the new postings while the stats row still counted the doc (stale
     index, skewed N/avgdl). The sink therefore RAISES on any batch
-    doc_id already recorded by a DIFFERENT batch, detected two ways:
-
-    - exactly, from the ``_docs`` membership sidecar: rows carry their
-      origin batch as a DATA column (``src_batch`` — compaction seals
-      the partition key to -1 but preserves the column), so a foreign
-      copy is simply ``src_batch != batch_id``, and the lookup prunes
-      to the batch's doc_id buckets (content-independent);
-    - best-effort, from the postings themselves (covers indexes
-      bootstrapped before the sidecar existed): any LIVE row of a
-      batch doc under a foreign batch_id within the batch's term
-      buckets. This leg can miss a changed-content re-ingest whose
-      tokens share no bucket with the new text, and cannot see foreign
-      SEALED copies (indistinguishable from the batch's own replay) —
-      which is exactly why the sidecar exists; bootstrap writers
-      should populate it (``_bootstrap_postings`` does).
+    doc_id already recorded by a DIFFERENT batch, detected exactly from
+    the ``_ids`` membership sidecar: rows carry their origin batch as a
+    DATA column (``src_batch`` — compaction seals the partition key to
+    -1 but preserves the column), so a foreign copy is simply
+    ``src_batch != batch_id``, and the lookup prunes to the batch's
+    doc_id buckets (content-independent).
     """
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        from process_spark.operators.fsutil import fs_exists, read_watermark
-
         ss = batch_df.sparkSession
         data_dir = posixpath.join(path, "data")
-        docs_dir = posixpath.join(path, "_docs")
+        ids_dir = posixpath.join(path, "_ids")
         stats_dir = posixpath.join(path, "_stats")
-        # bucket-count mismatch = every lookup below prunes to the
-        # WRONG partitions (false "not in the index" membership misses,
-        # silent foreign-copy blind spots) — validate against the
-        # persisted stats before pruning anything, exactly as the probe
-        # and the batch append path do.
-        if fs_exists(ss, stats_dir):
-            stored_nb = [
-                int(r["n_buckets"])
-                for r in ss.read.parquet(stats_dir)
-                .select("n_buckets")
-                .distinct()
-                .collect()
-            ]
-            if stored_nb and stored_nb != [n_buckets]:
-                raise ValueError(
-                    f"postings index at {path} was written with "
-                    f"n_buckets={stored_nb}, sink configured with "
-                    f"{n_buckets}"
-                )
+        if fs_exists(ss, posixpath.join(path, "_meta")):
+            check_index_meta(ss, path, "doc_id", ["term_bucket"], n_buckets)
+        else:
+            write_index_meta(ss, path, "doc_id", ["term_bucket"], n_buckets)
         pidx = postings_index(batch_df, n_buckets=n_buckets).localCheckpoint(
             eager=False
         )  # three consumers: bucket IN-set + append + stats delta
@@ -922,22 +847,13 @@ def incremental_postings_sink(path: str, n_buckets: int = 16):
         )
 
         # --- membership-sidecar validation (exact) ------------------
-        docs_sealed_own = None
-        if fs_exists(ss, docs_dir):
+        ids_sealed_own = None
+        if fs_exists(ss, ids_dir):
             members = (
-                ss.read.parquet(docs_dir)
+                ss.read.parquet(ids_dir)
                 .filter(
-                    F.col("doc_bucket").isin(
-                        sorted(
-                            r["b"]
-                            for r in bids.select(
-                                F.pmod(F.hash("doc_id"), F.lit(n_buckets))
-                                .cast("int")
-                                .alias("b")
-                            )
-                            .distinct()
-                            .collect()
-                        )
+                    F.col("id_bucket").isin(
+                        bucket_in_set(bids, "doc_id", n_buckets)
                     )
                 )
                 .join(F.broadcast(bids), "doc_id", "left_semi")
@@ -957,10 +873,10 @@ def incremental_postings_sink(path: str, n_buckets: int = 16):
                     f"postings index at {path}: batch {batch_id} re-ingests "
                     f"doc_ids already in the index (sample: {foreign}) — "
                     "doc_ids are append-only. To UPDATE a doc: "
-                    "tombstone_postings_docs it, run compact_postings_index "
+                    "tombstone_index_ids it, run compact_postings_index "
                     "(purges every trace), then re-ingest the new version"
                 )
-            docs_sealed_own = (
+            ids_sealed_own = (
                 members.filter(
                     (F.col("src_batch") == batch_id)
                     & (F.col("batch_id") == -1)
@@ -969,35 +885,18 @@ def incremental_postings_sink(path: str, n_buckets: int = 16):
                 .distinct()
             )
 
-        # --- postings-side lookup: sealed-own skip set + best-effort
-        #     foreign-live detection (one pruned read serves both) ----
+        # --- postings-side sealed-own lookup -------------------------
         if fs_exists(ss, data_dir):
-            data_hits = (
+            sealed_own = (
                 ss.read.parquet(data_dir)
-                .filter(F.col("term_bucket").isin(buckets))
-                .join(F.broadcast(bids), "doc_id", "left_semi")
-                .select("doc_id", "batch_id")
-                .distinct()
-                .localCheckpoint(eager=True)  # read before self-overwrite
-            )
-            foreign_live = [
-                r["doc_id"]
-                for r in data_hits.filter(
-                    ~F.col("batch_id").isin(-1, batch_id)
+                .filter(
+                    F.col("term_bucket").isin(buckets)
+                    & (F.col("batch_id") == -1)
                 )
+                .join(F.broadcast(bids), "doc_id", "left_semi")
                 .select("doc_id")
                 .distinct()
-                .limit(5)
-                .collect()
-            ]
-            if foreign_live:
-                raise ValueError(
-                    f"postings index at {path}: batch {batch_id} re-ingests "
-                    f"doc_ids already live in the index (sample: "
-                    f"{foreign_live}) — doc_ids are append-only"
-                )
-            sealed_own = data_hits.filter(F.col("batch_id") == -1).select(
-                "doc_id"
+                .localCheckpoint(eager=True)  # read before self-overwrite
             )
         else:  # fresh, never-bootstrapped index path: first batch
             sealed_own = ss.createDataFrame(
@@ -1016,19 +915,19 @@ def incremental_postings_sink(path: str, n_buckets: int = 16):
         membership = postings_membership(
             bids, pidx, n_buckets=n_buckets
         ).withColumn("src_batch", F.lit(batch_id))
-        if docs_sealed_own is not None:
+        if ids_sealed_own is not None:
             # don't re-record docs whose membership rows were already
             # sealed to -1 (the sidecar would hold two rows per doc)
             membership = membership.join(
-                F.broadcast(docs_sealed_own), "doc_id", "left_anti"
+                F.broadcast(ids_sealed_own), "doc_id", "left_anti"
             )
         (
             membership.withColumn("batch_id", F.lit(batch_id))
             .repartition(1)
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("doc_bucket", "batch_id")
-            .parquet(docs_dir)
+            .partitionBy("id_bucket", "batch_id")
+            .parquet(ids_dir)
         )
         if batch_id > read_watermark(ss, stats_dir):
             # Σdl = Σtf over the batch's pinned postings EXACTLY (the
@@ -1038,9 +937,9 @@ def incremental_postings_sink(path: str, n_buckets: int = 16):
             # batch (the interpreted-HOF double-evaluation the batch
             # writer already eliminated the same way). The delta counts
             # the FULL batch content even when the sealed-own anti-join
-            # excluded rows from the data append: those rows' only
-            # prior stats coverage is a post-crash fold at or below the
-            # watermark, which this branch already skips.
+            # excluded rows from the data append: a batch above the
+            # watermark is not in the sealed row, which counts only
+            # ``_ids`` rows with ``src_batch`` at or below it.
             (
                 pidx.agg(
                     F.coalesce(F.sum("tf"), F.lit(0))
@@ -1062,169 +961,51 @@ def incremental_postings_sink(path: str, n_buckets: int = 16):
     return sink
 
 
-def tombstone_postings_docs(
-    spark: SparkSession, path: str, doc_ids: DataFrame, n_buckets: int = 16
-) -> dict:
-    """Logical DELETE from a postings index: record ``doc_ids`` (a
-    bounded maintenance request, column ``doc_id``) as tombstones under
-    ``_tombstones/(doc_bucket)``, each row carrying the doc's token
-    length ``dl`` from the ``_docs`` membership sidecar — one pruned
-    sidecar lookup, never a content-dependent hunt across term buckets.
-    Probes exclude tombstoned docs and subtract their (count, Σdl) from
-    the corpus stats immediately; the bytes are purged at the next
-    :func:`compact_postings_index`, after which the doc_id may be
-    re-ingested (the UPDATE path: tombstone → compact → re-ingest).
+def compact_postings_stats(spark: SparkSession, path: str) -> dict:
+    """Seal the postings ``_stats`` sidecar: replace its per-batch delta
+    rows with ONE ``batch_id = -1`` row — the same small-files rhythm
+    every other durable artifact gets (without it the sidecar grows one
+    directory per batch forever, and every probe's stats read opens
+    every historical batch file).
 
-    Raises on unknown doc_ids (deleting what was never ingested is a
-    caller bug, not a no-op); re-tombstoning an already-tombstoned doc
-    is idempotent (skipped). Requires the ``_docs`` sidecar — indexes
-    bootstrapped before it existed must be re-bootstrapped (or
-    compacted with a writer that adds it) before deletes."""
-    from process_spark.operators.fsutil import fs_exists
-
-    docs_dir = posixpath.join(path, "_docs")
-    tomb_dir = posixpath.join(path, "_tombstones")
-    stats_dir = posixpath.join(path, "_stats")
-    if not fs_exists(spark, docs_dir):
-        raise ValueError(
-            f"tombstone_postings_docs: {path} has no _docs membership "
-            "sidecar — deletes need it for the dl/stats correction"
-        )
-    # A mismatched n_buckets would prune the WRONG doc_buckets below —
-    # false "not in the index" errors, or a silent membership miss.
-    # Validate against the persisted stats, as the probe/append do.
-    if fs_exists(spark, stats_dir):
-        stored_nb = [
-            int(r["n_buckets"])
-            for r in spark.read.parquet(stats_dir)
-            .select("n_buckets")
-            .distinct()
-            .collect()
-        ]
-        if stored_nb and stored_nb != [n_buckets]:
-            raise ValueError(
-                f"postings index at {path} was written with "
-                f"n_buckets={stored_nb}, tombstone requested {n_buckets}"
-            )
-    ids = doc_ids.select("doc_id").distinct().localCheckpoint(eager=True)
-    buckets = sorted(
-        r["b"]
-        for r in ids.select(
-            F.pmod(F.hash("doc_id"), F.lit(n_buckets)).cast("int").alias("b")
-        )
-        .distinct()
-        .collect()
-    )
-    members = (
-        spark.read.parquet(docs_dir)
-        .filter(F.col("doc_bucket").isin(buckets))
-        .join(ids, "doc_id", "left_semi")
-        .select("doc_bucket", "doc_id", "dl")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    missing = [
-        r["doc_id"]
-        for r in ids.join(members, "doc_id", "left_anti").limit(5).collect()
-    ]
-    if missing:
-        raise ValueError(
-            f"tombstone_postings_docs: doc_ids not in the index at {path} "
-            f"(sample: {missing})"
-        )
-    fresh = members
-    if fs_exists(spark, tomb_dir):
-        fresh = members.join(
-            spark.read.parquet(tomb_dir).select("doc_id"),
-            "doc_id",
-            "left_anti",
-        )
-    n = fresh.count()
-    if n:
-        (
-            fresh.repartition(1)
-            .write.mode("append")
-            .partitionBy("doc_bucket")
-            .parquet(tomb_dir)
-        )
-    return {"n_tombstoned": n}
-
-
-def compact_postings_stats(
-    spark: SparkSession,
-    stats_dir: str,
-    recompute_from: tuple | None = None,
-) -> dict:
-    """Maintenance op for the STREAMING postings ``_stats`` sidecar:
-    fold the one-row-per-micro-batch deltas into ONE sealed
-    ``batch_id = -1`` row — the same small-files rhythm every other
-    durable artifact gets (without it the sidecar grows one directory
-    per micro-batch forever, and every probe's stats read opens every
-    historical batch file). Summing is exact, so the folded row is
-    precisely what probe-time aggregation computes anyway.
+    The sealed row is RECOMPUTED from the index bytes, never folded
+    from the deltas: ``n_docs`` = distinct ``_ids`` doc ids, ``Σdl`` =
+    their ``dl`` (equal to Σtf over the postings — the per-doc groupBy
+    conserves token counts), counting only ``_ids`` rows whose
+    ``src_batch`` is at or below the ``sealed_through`` watermark (max
+    batch_id whose stats delta landed). So deletes purged from ``_ids``
+    drop out of N/Σdl even after their tombstones are gone (a compactor
+    re-run converges), and a batch whose bytes landed without its
+    delta (a crash before the stats write) stays out of the sealed row
+    — its replay, above the watermark, writes its full delta.
 
     Crash-safe ordering and sealed-replay safety are the MG state
     compactor's, via the shared fsutil toolkit: the sealed row is
     written COMPLETE to a ``__compacting`` scratch sibling together
-    with a ``sealed_through`` watermark (max folded batch_id), then
-    swapped in whole — and :func:`incremental_postings_sink` skips the
-    stats write for any replayed batch at or below the watermark, so a
-    crash-mid-batch → compact → restart replay cannot double-add its
-    delta. Only valid for the streaming (batch_id-partitioned) layout;
-    the batch lifecycle's unpartitioned delta rows have no batch
-    identity to seal against and stay as written.
-
-    ``recompute_from = (data_dir, docs_dir)`` switches the sealed row's
-    values from fold-the-deltas to RECOMPUTE from the (already purged)
-    index: n_docs = distinct membership ids, Σdl = Σtf over the
-    postings (exact — the per-doc groupBy conserved token counts).
-    Required after a tombstone purge: the historical deltas still count
-    the deleted docs, and once the tombstones are dropped nothing else
-    would subtract them.
+    with the watermark, then swapped in whole — and
+    :func:`incremental_postings_sink` skips the stats write for any
+    replayed batch at or below the watermark, so a crash-mid-batch →
+    compact → restart replay cannot double-add its delta. Both writers'
+    layouts are batch_id-partitioned (the batch writer's synthetic
+    ids); a legacy unpartitioned ``_stats`` is refused.
 
     Returns ``{"files_before", "files_after"}``."""
-    from process_spark.operators.fsutil import (
-        fs_path,
-        live_batch_ids,
-        read_watermark,
-        swap_in,
-        write_watermark,
+    stats_dir = posixpath.join(path, "_stats")
+    _require_partitioned_stats(spark, path)
+    wm = max(
+        [read_watermark(spark, stats_dir)] + live_batch_ids(spark, stats_dir)
     )
-
-    fs0, HPath0 = fs_path(spark, stats_dir)
-    part_dirs = [
-        st.getPath().getName()
-        for st in fs0.listStatus(HPath0(stats_dir))
-        if st.getPath().getName().startswith("batch_id=")
-    ] if fs0.exists(HPath0(stats_dir)) else []
-    if not part_dirs:
-        raise ValueError(
-            f"compact_postings_stats: {stats_dir} has no batch_id= "
-            "partitions — only the streaming stats layout is compactable"
+    row = (
+        spark.read.parquet(posixpath.join(path, "_ids"))
+        .filter(F.col("src_batch") <= wm)
+        .select("doc_id", "dl")
+        .distinct()
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("sum_dl"),
         )
-    live = live_batch_ids(spark, stats_dir)
-    wm = max([read_watermark(spark, stats_dir)] + live)
-    folded = spark.read.parquet(stats_dir).agg(
-        F.sum("n_docs").cast("long").alias("n_docs"),
-        F.sum("sum_dl").cast("long").alias("sum_dl"),
-        F.min("n_buckets").alias("nb_min"),
-        F.max("n_buckets").alias("nb_max"),
-    ).collect()[0]
-    if folded["nb_min"] != folded["nb_max"]:
-        raise ValueError(
-            f"postings stats at {stats_dir} carry mixed n_buckets "
-            f"{folded['nb_min']}..{folded['nb_max']} — refusing to seal"
-        )
-    n_docs, sum_dl = int(folded["n_docs"] or 0), int(folded["sum_dl"] or 0)
-    if recompute_from is not None:
-        data_dir, docs_dir = recompute_from
-        n_docs = (
-            spark.read.parquet(docs_dir).select("doc_id").distinct().count()
-        )
-        row = spark.read.parquet(data_dir).agg(
-            F.sum("tf").cast("long").alias("sdl")
-        ).collect()[0]
-        sum_dl = int(row["sdl"] or 0)
+        .collect()[0]
+    )
     fs, HPath = fs_path(spark, stats_dir)
 
     def _n_files(p: str) -> int:
@@ -1241,7 +1022,8 @@ def compact_postings_stats(
     fs.delete(HPath(tmp), True)
     (
         spark.createDataFrame(
-            [(n_docs, sum_dl, int(folded["nb_min"]), -1)],
+            [(row["n_docs"], row["sum_dl"],
+              index_meta(spark, path)["n_id_buckets"], -1)],
             "n_docs long, sum_dl long, n_buckets int, batch_id int",
         )
         .coalesce(1)
@@ -1251,127 +1033,46 @@ def compact_postings_stats(
     )
     write_watermark(spark, tmp, wm)
     swap_in(spark, stats_dir, tmp, label="postings stats")
+    spark.catalog.refreshByPath(stats_dir)
     return {"files_before": files_before, "files_after": _n_files(stats_dir)}
 
 
 def compact_postings_index(
     spark: SparkSession, path: str, n_write_tasks: int = 64
 ) -> dict:
-    """Full offline maintenance pass over a STREAMING-layout postings
-    index: compact the postings data (one file per term_bucket dir,
-    batch_ids sealed to -1), the ``_docs`` membership sidecar if
-    present (same, keyed on doc_bucket — ``src_batch`` survives as a
-    data column, so re-ingest validation still works on sealed rows),
-    and fold the ``_stats`` deltas into one sealed row with a
-    ``sealed_through`` watermark.
+    """Full offline maintenance pass over a postings index (batch or
+    streaming layout), in three steps: refuse a legacy unpartitioned
+    ``_stats`` before touching anything; indexlife's
+    ``compact_stored_index`` — the postings (one file per term_bucket
+    dir) and ``_ids`` (``src_batch`` survives as a data column, so
+    re-ingest validation still works on sealed rows) rewritten with
+    batch_ids sealed to -1 and tombstoned doc_ids PURGED, then the
+    tombstones dropped, after which the doc_ids are free to re-ingest
+    (the UPDATE path); then the stats seal
+    (:func:`compact_postings_stats`), recomputed from the purged
+    ``_ids``.
 
-    If tombstones exist (:func:`tombstone_postings_docs`), this pass is
-    also the PURGE: tombstoned doc_ids are anti-joined out of both the
-    postings and the membership rewrite (compaction rewrites every row
-    anyway, so the deletes ride for free), the sealed stats row is
-    RECOMPUTED from the purged index (the historical deltas still
-    count the deleted docs), and the tombstones are dropped last —
-    after which the doc_ids are free to re-ingest (the UPDATE path).
-    Crash ordering: each component swaps whole; a crash anywhere
-    before the final tombstone drop leaves probes correct (tombstones
-    still subtract, purged rows anti-join to nothing) EXCEPT the
-    window between the stats swap and the tombstone drop, where probes
-    under-count N/avgdl (scores skew slightly low) until the compactor
-    is re-run — re-running converges (purges are idempotent, the
-    recompute reproduces the same sealed row, the drop completes).
+    Crash ordering: each component swaps whole. A crash before the
+    tombstone drop leaves probes correct (tombstones still subtract,
+    purged rows anti-join to nothing); between the tombstone drop and
+    the stats swap, probes over-count N/avgdl by the purged docs until
+    the compactor is re-run — re-running converges (purges are
+    idempotent, and the seal recomputes from the bytes whether or not
+    tombstones are left).
 
     Run it between streaming runs, like every compactor (the swaps are
-    not transactional against in-flight readers). Returns per-component
-    file-count stats plus ``n_purged_docs`` — the count of tombstoned
-    docs ACTUALLY still present before the rewrite (0 on a post-crash
-    re-run whose purge already happened, not the tombstone count).
-    Raises before touching anything on a legacy unpartitioned ``_stats``
-    layout, and on a tombstone set that covers the entire corpus (the
-    purge would leave empty parquet dirs that fail schema inference —
-    drop the index directory instead)."""
-    from process_spark.operators.fsutil import fs_exists, fs_path
-
-    data_dir = posixpath.join(path, "data")
-    docs_dir = posixpath.join(path, "_docs")
-    stats_dir = posixpath.join(path, "_stats")
-    tomb_dir = posixpath.join(path, "_tombstones")
-
-    # Validate the _stats layout BEFORE touching data/_docs: the stats
-    # fold below is the pass's last component, and raising there after
-    # the data/membership rewrites would leave a wrong-layout index
-    # half-compacted. Both writers (batch + streaming) produce batch_id=
-    # partitions; only a legacy pre-unification dir can fail this.
-    fs0, HPath0 = fs_path(spark, stats_dir)
-    has_parts = fs0.exists(HPath0(stats_dir)) and any(
-        st.getPath().getName().startswith("batch_id=")
-        for st in fs0.listStatus(HPath0(stats_dir))
-    )
-    if not has_parts:
-        raise ValueError(
-            f"compact_postings_index: {stats_dir} has no batch_id= "
-            "partitions (legacy unpartitioned stats layout) — rebuild "
-            "the index with write_postings_index, which now writes the "
-            "compactable partitioned layout, before compacting"
-        )
-
-    row_filter = None
-    tomb_ids = None
-    n_purged = 0
-    if fs_exists(spark, tomb_dir):
-        tomb_ids = (
-            spark.read.parquet(tomb_dir)
-            .select("doc_id")
-            .distinct()
-            .localCheckpoint(eager=True)  # outlives the dir drop below
-        )
-        # Honest purge accounting + the all-purged guard, both from the
-        # SAME membership relation (fall back to the postings when the
-        # _docs sidecar is absent): n_purged_docs counts docs actually
-        # still present (on a post-crash re-run the rows are already
-        # gone and it reports 0, not the stale tombstone count), and a
-        # purge that would leave ZERO survivors is refused — rewriting
-        # data/_docs to empty parquet dirs would break every subsequent
-        # read (no schema to infer) with tombstones still on disk.
-        ids_dir = docs_dir if fs_exists(spark, docs_dir) else data_dir
-        idx_ids = spark.read.parquet(ids_dir).select("doc_id").distinct()
-        n_purged = idx_ids.join(tomb_ids, "doc_id", "left_semi").count()
-        if idx_ids.join(tomb_ids, "doc_id", "left_anti").isEmpty():
-            raise ValueError(
-                f"compact_postings_index: tombstones at {path} cover the "
-                "ENTIRE corpus — purging would leave empty data/_docs "
-                "dirs that fail schema inference on every later read. "
-                "Drop the whole index directory instead"
-            )
-
-    if tomb_ids is not None:
-        def row_filter(df):  # noqa: F811 — the purge hook
-            return df.join(tomb_ids, "doc_id", "left_anti")
-
-    out = {
-        "data": compact_partitioned_index(
-            spark, data_dir, ["term_bucket"], n_write_tasks,
-            row_filter=row_filter,
-        ),
-        "n_purged_docs": n_purged,
-    }
-    if fs_exists(spark, docs_dir):
-        out["docs"] = compact_partitioned_index(
-            spark, docs_dir, ["doc_bucket"], n_write_tasks,
-            row_filter=row_filter,
-        )
-        spark.catalog.refreshByPath(docs_dir)
-    out["stats"] = compact_postings_stats(
-        spark,
-        stats_dir,
-        recompute_from=(
-            (data_dir, docs_dir) if tomb_ids is not None else None
-        ),
-    )
-    if tomb_ids is not None:
-        fs, HPath = fs_path(spark, tomb_dir)
-        fs.delete(HPath(tomb_dir), True)
-    spark.catalog.refreshByPath(data_dir)
-    spark.catalog.refreshByPath(stats_dir)
+    not transactional against in-flight readers). Returns
+    ``compact_stored_index``'s per-component file counts (``data``,
+    ``ids``), ``n_purged_docs`` — the count of tombstoned docs ACTUALLY
+    still present before the rewrite (0 on a post-crash re-run whose
+    purge already happened) — and the seal's ``stats``. Raises on a
+    tombstone set that covers the entire index (the purge would leave
+    empty parquet dirs that fail schema inference — drop the index
+    directory instead)."""
+    _require_partitioned_stats(spark, path)
+    out = compact_stored_index(spark, path, n_write_tasks)
+    out["n_purged_docs"] = out.pop("n_purged_ids")
+    out["stats"] = compact_postings_stats(spark, path)
     return out
 
 
@@ -1464,34 +1165,27 @@ def postings_stats_audit(spark: SparkSession, path: str) -> DataFrame:
     *stored* = the sidecar rows summed (what probes start from);
     *effective* = stored minus tombstones (what probes actually use);
     *actual* = recounted from the index itself — n_docs from the
-    ``_docs`` membership (distinct ids, minus tombstoned), Σdl = Σtf
+    ``_ids`` membership (distinct ids, minus tombstoned), Σdl = Σtf
     over the live (non-tombstoned) postings.
 
     The two cross-component columns close the cancellation blind spot
     of pure totals: a doc present in ONE component but not the other
-    (the legacy-bootstrap hazard the sink validation's best-effort leg
-    documents) could otherwise offset an opposite drift and hide.
+    (a raw write around the membership sidecar) could otherwise offset
+    an opposite drift and hide.
     ``n_docs_without_postings`` counts live membership docs with
     ``dl > 0`` but no live posting row (zero-token docs legitimately
     have membership only — excluded); ``n_postings_docs_without_
     membership`` counts live postings doc_ids missing from the
     membership — two anti-join counts over relations the audit already
-    reads (both trivially 0 when the membership fallback IS the
-    postings). ``consistent`` requires the exact-integer equality of
+    reads. ``consistent`` requires the exact-integer equality of
     effective and actual AND both cross-component counts to be zero. A
     False means the sidecars have drifted from the bytes — the known
-    causes are a
-    crash between a batch append and its stats delta
-    (write_postings_index's documented window) or a legacy-layout
-    index that skipped the validation sidecar; the repair is
-    :func:`compact_postings_index`, whose sealed row is recomputed
-    from the bytes whenever tombstones force it (or a manual
-    :func:`compact_postings_stats` with ``recompute_from``). One scan
-    of each component; output is one row regardless of corpus size."""
-    from process_spark.operators.fsutil import fs_exists
-
+    cause is a crash between a batch append and its stats delta
+    (write_postings_index's documented window); the repair for a
+    drifted ``_stats`` is :func:`compact_postings_index`, whose sealed
+    row is recomputed from ``_ids``. One scan of each component; output
+    is one row regardless of corpus size."""
     data_dir = posixpath.join(path, "data")
-    docs_dir = posixpath.join(path, "_docs")
     stats_dir = posixpath.join(path, "_stats")
     tomb_dir = posixpath.join(path, "_tombstones")
 
@@ -1512,11 +1206,9 @@ def postings_stats_audit(spark: SparkSession, path: str) -> DataFrame:
 
     live = spark.read.parquet(data_dir)
     members = (
-        spark.read.parquet(docs_dir)
+        spark.read.parquet(posixpath.join(path, "_ids"))
         .groupBy("doc_id")
         .agg(F.max("dl").alias("dl"))
-        if fs_exists(spark, docs_dir)
-        else live.groupBy("doc_id").agg(F.first("dl").alias("dl"))
     )
     if tomb_ids is not None:
         live = live.join(tomb_ids, "doc_id", "left_anti")
@@ -1583,8 +1275,6 @@ def postings_skew_report(
     hash-free columns; per-bucket totals are pinned Spark-side in
     tests (a bucket's heat is the Σ df of its terms, so the df census
     IS the bucket census's driver)."""
-    from process_spark.operators.fsutil import fs_exists
-
     data_dir = posixpath.join(path, "data")
     stats_dir = posixpath.join(path, "_stats")
     tomb_dir = posixpath.join(path, "_tombstones")
@@ -1600,9 +1290,9 @@ def postings_skew_report(
         live = live.join(tomb, "doc_id", "left_anti")
 
     # Dedupe to one row per (tok, doc_id) BEFORE aggregating: only the
-    # streaming sink and the _docs-validated batch append enforce
+    # streaming sink and the _ids-validated batch append enforce
     # append-only doc_ids — postings appended around the validation
-    # (legacy indexes, raw data-dir writes) can hold duplicate
+    # (raw data-dir writes) can hold duplicate
     # (doc_id, tok) rows, which would double-count df/total_tf here
     # while the probe itself stays immune (it countDistincts). The
     # duplicates are byte-identical copies of one ingest, so max(tf)

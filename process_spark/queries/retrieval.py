@@ -33,12 +33,15 @@ from process_spark.operators.retrieval import (
     incremental_postings_sink,
     mmr_rerank,
     rrf_fuse,
-    tombstone_postings_docs,
     topk_ranked,
     write_postings_index,
 )
 from process_spark.functions.textfn import tokens
 from process_spark.operators.execution import overlap
+from process_spark.operators.indexlife import (
+    tombstone_index_ids,
+    write_index_meta,
+)
 from process_spark.operators.similarity import brute_force_knn
 from process_spark.queries._util import _SCRATCH, t
 from process_spark.queries.registry import register
@@ -389,14 +392,15 @@ _O_STREAM_BM25 = f"""
 
 def _bootstrap_postings(spark: SparkSession, path: str, hist: DataFrame) -> None:
     """Write the pre-stream history under the sink's streaming layout:
-    postings partitioned (term_bucket, batch_id = -1), the ``_docs``
-    membership sidecar (doc_bucket, batch_id = -1, src_batch = -1 —
-    what arms the sink's exact re-ingest validation), and the stats
-    sidecar one row per batch partitioned (batch_id = -1). A bootstrap
-    is an in-place REBUILD, so stale ``_tombstones`` from a previous
-    life at the path are deleted first — leftovers would silently
-    anti-join live docs out of every probe (data/_docs/_stats are
-    overwritten below anyway)."""
+    postings partitioned (term_bucket, batch_id = -1), the ``_ids``
+    membership sidecar (id_bucket, batch_id = -1, src_batch = -1 —
+    what arms the sink's exact re-ingest validation), the stats
+    sidecar one row per batch partitioned (batch_id = -1), and the
+    indexlife ``_meta`` row that tombstones and compaction read. A
+    bootstrap is an in-place REBUILD, so stale ``_tombstones`` from a
+    previous life at the path are deleted first — leftovers would
+    silently anti-join live docs out of every probe (data/_ids/_stats
+    are overwritten below anyway)."""
     from process_spark.operators.fsutil import fs_path
     from process_spark.operators.retrieval import postings_index as _pi
     from process_spark.operators.retrieval import postings_membership
@@ -419,9 +423,10 @@ def _bootstrap_postings(spark: SparkSession, path: str, hist: DataFrame) -> None
         .withColumn("batch_id", F.lit(-1))
         .repartition(1)
         .write.mode("overwrite")
-        .partitionBy("doc_bucket", "batch_id")
-        .parquet(os.path.join(path, "_docs"))
+        .partitionBy("id_bucket", "batch_id")
+        .parquet(os.path.join(path, "_ids"))
     )
+    write_index_meta(spark, path, "doc_id", ["term_bucket"], 16)
     (
         hist.agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -452,10 +457,10 @@ def _stream_postings(
     odd = docs.filter(F.col("doc_id") % 2 == 1)
     first, second = (odd.filter(F.col("doc_id") % 4 == r) for r in (1, 3))
     # The maintenance pass: one file per dir, seal history (postings +
-    # membership sidecar), fold the stats deltas. The compactor passes
-    # only NON-batch partition keys down — the sealing branch requires
+    # membership sidecar), seal the stats. The compactor passes only
+    # NON-batch partition keys down — the sealing branch requires
     # batch_id to be a rewritable column, not a partition key it must
-    # preserve (operators/dedup.py `has_batch`).
+    # preserve (operators/indexlife.py `has_batch`).
     replay(
         spark, base, [[first], [second]] if compacted else [[first, second]],
         incremental_postings_sink(index),
@@ -493,10 +498,10 @@ def stream_bm25_index_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O74+O95 — the postings family's full production lifecycle:
     ingest wave 1, STOP the driver, run the offline maintenance pass
     (compact_postings_index — every (term_bucket, batch_id) postings
-    dir AND every (doc_bucket, batch_id) membership dir rewritten to
+    dir AND every (id_bucket, batch_id) membership dir rewritten to
     one file with batch_ids SEALED to -1, and the per-batch ``_stats``
-    deltas folded into one sealed row under a ``sealed_through``
-    watermark), then RESUME wave 2 against the same checkpoint and
+    deltas replaced by one sealed row, recomputed from ``_ids``, under a
+    ``sealed_through`` watermark), then RESUME wave 2 against the same checkpoint and
     probe. The sealed index is safe to resume onto because the sink
     detects its own sealed doc_ids before re-appending and skips the
     stats delta of any batch at or below the watermark (the engine's
@@ -1083,8 +1088,8 @@ def stream_bm25_index_updated(spark: SparkSession, sf_dir: str) -> DataFrame:
     verdict's missing path, implemented as tombstone → purge-at-
     compaction → re-ingest, the Lucene soft-delete + merge-purge
     rhythm): bootstrap the even half, stream-ingest the odd half, then
-    "re-crawl" every 10th doc — tombstone_postings_docs records the
-    deletes (one pruned _docs lookup supplies each doc's dl, so probes
+    "re-crawl" every 10th doc — tombstone_index_ids records the
+    deletes (one pruned _ids lookup supplies each doc's dl, so probes
     immediately subtract the deleted docs from df AND from N/avgdl
     without touching the stored bytes); probe A must equal plain BM25
     over the surviving corpus. compact_postings_index then PURGES every
@@ -1106,7 +1111,7 @@ def stream_bm25_index_updated(spark: SparkSession, sf_dir: str) -> DataFrame:
     def recrawl() -> None:
         nonlocal ra
         # the re-crawl: every 10th doc is tombstoned...
-        tombstone_postings_docs(
+        tombstone_index_ids(
             spark, index, docs.filter(F.expr(_UPD_FILTER)).select("doc_id")
         )
         spark.catalog.refreshByPath(os.path.join(index, "data"))
@@ -1184,7 +1189,7 @@ def text_postings_stats_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental_postings_sink(index)(
         docs.filter(F.col("doc_id") % 2 == 1), 0
     )
-    tombstone_postings_docs(
+    tombstone_index_ids(
         spark, index, docs.filter(F.expr(_UPD_FILTER)).select("doc_id")
     )
     spark.catalog.refreshByPath(os.path.join(index, "data"))

@@ -412,13 +412,13 @@ BROADCAST_SITES = {
         "broadcasts)",
     ),
     "operators/indexlife.py": (
-        2,
-        "bounded maintenance-request id sets (append-only validation's "
-        "per-batch ids and the tombstone request), semi-joined against "
-        "the id_bucket-pruned _ids sidecar — the postings sink's "
-        "bounds; the tombstone ANTI-join in live_index_rows "
-        "deliberately has no hint (set grows until purge; AQE sizes "
-        "it)",
+        1,
+        "the bounded tombstone request id set, semi-joined against the "
+        "id_bucket-pruned _ids sidecar — the postings sink's bounds; "
+        "the append-only check (refuse_held_ids) deliberately has no "
+        "hint (a batch append can be corpus-scale) and neither has the "
+        "tombstone ANTI-join in live_index_rows (set grows until "
+        "purge); AQE sizes both",
     ),
     "queries/relational.py": (2, "nation/region dims"),
     "queries/tpch.py": (1, "nation dim"),
@@ -440,9 +440,9 @@ BROADCAST_SITES = {
         "rows), 3 sites each in bm25_scores and bm25_probe_postings; "
         "+4 in incremental_postings_sink's sealed-own hygiene and "
         "append-only validation (bounded per-micro-batch doc-id set, "
-        "semi-joined twice — _docs membership + postings lookup — its "
+        "semi-joined twice — _ids membership + postings lookup — its "
         "≤|batch| sealed subset on the append anti-join, and the "
-        "≤|batch| already-sealed membership subset on the _docs "
+        "≤|batch| already-sealed membership subset on the _ids "
         "anti-join — the same bounds as the other three sinks); +5 in "
         "bm25_scores_max_df (the same workload/df-table bounds plus "
         "the pre-guard df table, its dropped subset, and the ≤|queries|"
@@ -522,7 +522,7 @@ INDEX_WRITE_SITES = {
     ),
     "retrieval.py": (
         4,
-        "_bootstrap_postings' 3 writes (postings data, _docs and "
+        "_bootstrap_postings' 3 writes (postings data, _ids and "
         "_stats seeded at batch_id = -1 for the streaming postings "
         "sink) + _stored_ivf_knn's cell write, overlapped with the "
         "probe-cell collect in the hybrid-retrieval channel",
@@ -536,15 +536,42 @@ INDEX_WRITE_SITES = {
 }
 
 
-def test_index_write_sites_reviewed():
-    """Grep process_spark/queries/ for DataFrameWriter ``partitionBy(``
-    lines; every file's count must equal its INDEX_WRITE_SITES entry."""
+#: The same census for process_spark/operators/: every stored-index
+#: lifecycle write lives in indexlife.py, and the postings writers
+#: keep only their data, _ids and _stats writes — a raw _tombstones
+#: (or any other new) write outside indexlife fails here.
+OPERATOR_INDEX_WRITE_SITES = {
+    "dedup.py": (2, "2 docstring mentions of the band-index layout"),
+    "indexlife.py": (
+        8,
+        "write_stored_index's _ids and data writes, "
+        "tombstone_index_ids' tombstone append, "
+        "compact_partitioned_index's rewrite, repair_stored_index's "
+        "_ids rebuild and kept-tombstones rewrite + 2 docstring "
+        "mentions of the layout",
+    ),
+    "retrieval.py": (
+        8,
+        "write_postings_index's _ids, data and _stats writes, "
+        "incremental_postings_sink's idempotent per-batch data, _ids "
+        "and _stats writes (dynamic partition overwrite), "
+        "compact_postings_stats' sealed-row write + 1 comment on the "
+        "streaming _stats layout",
+    ),
+    "similarity.py": (1, "docstring mention of the stored IVF layout"),
+}
+
+
+def _assert_write_census(subdir: str, census: dict) -> None:
+    """Every file's DataFrameWriter ``partitionBy(`` line count under
+    process_spark/<subdir>/ (``Window.partitionBy`` excluded) must
+    equal its census entry."""
     import pathlib
 
     root = (
         pathlib.Path(__file__).resolve().parent.parent
         / "process_spark"
-        / "queries"
+        / subdir
     )
     actual = {}
     for p in sorted(root.rglob("*.py")):
@@ -555,13 +582,25 @@ def test_index_write_sites_reviewed():
         )
         if n:
             actual[str(p.relative_to(root))] = n
-    expected = {k: v[0] for k, v in INDEX_WRITE_SITES.items()}
+    expected = {k: v[0] for k, v in census.items()}
     assert actual == expected, (
         "partitionBy( write census drift — route new index writes "
         "through indexlife.write_stored_index, or review them and update "
-        f"INDEX_WRITE_SITES with a reason.\nactual={actual}\n"
+        f"the census with a reason.\nactual={actual}\n"
         f"expected={expected}"
     )
+
+
+def test_index_write_sites_reviewed():
+    """Grep process_spark/queries/ for DataFrameWriter ``partitionBy(``
+    lines; every file's count must equal its INDEX_WRITE_SITES entry."""
+    _assert_write_census("queries", INDEX_WRITE_SITES)
+
+
+def test_operator_index_write_sites_reviewed():
+    """The same census over process_spark/operators/
+    (OPERATOR_INDEX_WRITE_SITES)."""
+    _assert_write_census("operators", OPERATOR_INDEX_WRITE_SITES)
 
 
 #: Similarity at which two query-module functions count as one body

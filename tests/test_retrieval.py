@@ -12,6 +12,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from process_spark.operators.indexlife import index_meta, tombstone_index_ids
 from process_spark.operators.retrieval import (
     SCORE_SCALE,
     bm25_contrib_e6,
@@ -24,6 +25,12 @@ from process_spark.operators.retrieval import (
 )
 
 SF_SMALL = "/root/testdata/sf0.001"
+
+
+#: The indexlife ``_meta`` every postings writer persists.
+_POSTINGS_META = {
+    "id_col": "doc_id", "part_cols": ["term_bucket"], "n_id_buckets": 16,
+}
 
 
 def _docs(spark, rows):
@@ -142,6 +149,7 @@ def test_postings_stats_accumulate_across_appends(spark, tmp_path):
     b0 = _docs(spark, [(1, "apple banana apple"), (2, "banana cherry")])
     b1 = _docs(spark, [(3, "cherry cherry cherry durian")])
     write_postings_index(b0, path, mode="overwrite")
+    assert index_meta(spark, path) == _POSTINGS_META
     write_postings_index(b1, path, mode="append")
 
     stats = spark.read.parquet(path + "/_stats").agg(
@@ -283,8 +291,9 @@ def test_postings_sink_fresh_path_first_batch(spark, tmp_path):
     }
     assert got == want and len(got) == 2
     # membership sidecar recorded the batch with its origin
-    mem = spark.read.parquet(path + "/_docs").collect()
+    mem = spark.read.parquet(path + "/_ids").collect()
     assert {(r["doc_id"], r["src_batch"]) for r in mem} == {(1, 0), (2, 0)}
+    assert index_meta(spark, path) == _POSTINGS_META
 
 
 @pytest.mark.slow  # measured >8s (r14 durations); full profile via --runslow
@@ -292,11 +301,10 @@ def test_postings_sink_rejects_reingest(spark, tmp_path):
     """Append-only validation: a batch re-ingesting a doc_id the index
     already holds RAISES instead of silently corrupting the index (the
     sealed-own anti-join would drop the new postings while stats still
-    counted the doc). Detected exactly via the _docs membership sidecar
+    counted the doc). Detected exactly via the _ids membership sidecar
     (src_batch column) — even for a CHANGED-content re-ingest whose
     tokens share no term bucket with the stored copy, and even after
-    compaction sealed the stored copy — and best-effort from the live
-    postings when the sidecar is absent (legacy layout)."""
+    compaction sealed the stored copy."""
     from process_spark.operators.retrieval import (
         compact_postings_index,
         incremental_postings_sink,
@@ -366,7 +374,7 @@ def test_compact_postings_stats_replay_watermark(spark, tmp_path):
 
     before = stats_sum()
     assert before == (2, 5)
-    out = compact_postings_stats(spark, path + "/_stats")
+    out = compact_postings_stats(spark, path)
     assert out["files_after"] == 1 <= out["files_before"]
     assert read_watermark(spark, path + "/_stats") == 1
     assert stats_sum() == before
@@ -398,7 +406,6 @@ def test_tombstone_delete_update_lifecycle(spark, tmp_path):
     from process_spark.operators.retrieval import (
         compact_postings_index,
         incremental_postings_sink,
-        tombstone_postings_docs,
     )
     from process_spark.queries.retrieval import _bootstrap_postings
 
@@ -413,11 +420,11 @@ def test_tombstone_delete_update_lifecycle(spark, tmp_path):
 
     # unknown id → loud
     with pytest.raises(ValueError, match="not in the index"):
-        tombstone_postings_docs(spark, path, ids([99]))
+        tombstone_index_ids(spark, path, ids([99]))
     # delete doc 2 (a sealed/bootstrap doc) and doc 3 (a live one)
-    out = tombstone_postings_docs(spark, path, ids([2, 3]))
+    out = tombstone_index_ids(spark, path, ids([2, 3]))
     assert out["n_tombstoned"] == 2
-    assert tombstone_postings_docs(spark, path, ids([2]))["n_tombstoned"] == 0
+    assert tombstone_index_ids(spark, path, ids([2]))["n_tombstoned"] == 0
 
     qt = _qt(spark, [(0, "apple"), (0, "banana"), (1, "fig")])
     survivors = _docs(spark, [(0, "apple banana"), (1, "apple durian")])
@@ -435,7 +442,7 @@ def test_tombstone_delete_update_lifecycle(spark, tmp_path):
     assert probe() == want  # deleted docs out of df AND out of N/avgdl
 
     # re-ingest before the purge → loud, with the update-path recipe
-    with pytest.raises(ValueError, match="tombstone_postings_docs"):
+    with pytest.raises(ValueError, match="tombstone_index_ids"):
         sink(_docs(spark, [(2, "replacement text")]), 1)
 
     stats = compact_postings_index(spark, path)
@@ -444,7 +451,7 @@ def test_tombstone_delete_update_lifecycle(spark, tmp_path):
     data = spark.read.parquet(path + "/data")
     assert data.filter(FF.col("doc_id").isin(2, 3)).count() == 0
     assert data.filter(FF.col("batch_id") != -1).count() == 0  # sealed
-    mem = spark.read.parquet(path + "/_docs")
+    mem = spark.read.parquet(path + "/_ids")
     assert {r["doc_id"] for r in mem.collect()} == {0, 1}
     st = spark.read.parquet(path + "/_stats").collect()
     assert len(st) == 1 and (st[0]["n_docs"], st[0]["sum_dl"]) == (2, 4)
@@ -462,19 +469,19 @@ def test_tombstone_delete_update_lifecycle(spark, tmp_path):
 
 @pytest.mark.slow  # measured >8s (r14 durations); full profile via --runslow
 def test_compact_postings_rerun_converges_on_stale_tombstones(spark, tmp_path):
-    """The documented crash window (stats swapped, tombstone drop
-    crashed): probes under-count N until the compactor re-runs. Pin
-    the recovery: with a stale tombstone for an already-purged doc on
-    disk, re-running compact_postings_index converges — purge is a
-    no-op, the recomputed stats row is identical, the stale tombstone
-    is dropped, and probes are exact again."""
+    """A stale tombstone for an already-purged doc next to a sealed
+    stats row (the crash window of a compactor that swapped the stats
+    before dropping the tombstones): probes under-count N until the
+    compactor re-runs. Pin the recovery: re-running
+    compact_postings_index converges — purge is a no-op, the
+    recomputed stats row is identical, the stale tombstone is dropped,
+    and probes are exact again."""
     from pyspark.sql import functions as FF
 
     from process_spark.operators.fsutil import fs_exists
     from process_spark.operators.retrieval import (
         compact_postings_index,
         incremental_postings_sink,
-        tombstone_postings_docs,
     )
     from process_spark.queries.retrieval import _bootstrap_postings
 
@@ -483,7 +490,7 @@ def test_compact_postings_rerun_converges_on_stale_tombstones(spark, tmp_path):
         spark, path, _docs(spark, [(0, "apple banana"), (2, "cherry")])
     )
     incremental_postings_sink(path)(_docs(spark, [(1, "apple fig")]), 0)
-    tombstone_postings_docs(
+    tombstone_index_ids(
         spark, path, spark.createDataFrame([(2,)], "doc_id long")
     )
     compact_postings_index(spark, path)
@@ -494,8 +501,8 @@ def test_compact_postings_rerun_converges_on_stale_tombstones(spark, tmp_path):
     spark.createDataFrame(
         [(2, 1)], "doc_id long, dl long"
     ).withColumn(
-        "doc_bucket", FF.pmod(FF.hash("doc_id"), FF.lit(16)).cast("int")
-    ).write.mode("overwrite").partitionBy("doc_bucket").parquet(
+        "id_bucket", FF.pmod(FF.hash("doc_id"), FF.lit(16)).cast("int")
+    ).write.mode("overwrite").partitionBy("id_bucket").parquet(
         path + "/_tombstones"
     )
     qt = _qt(spark, [(0, "apple")])
@@ -520,6 +527,112 @@ def test_compact_postings_rerun_converges_on_stale_tombstones(spark, tmp_path):
     # report 0 docs removed, not the stale tombstone count
     assert out["n_purged_docs"] == 0
     assert probe() == want
+
+
+def test_compact_postings_stats_seal_crash_rerun_converges(
+    spark, tmp_path, monkeypatch
+):
+    """compact_postings_index drops the tombstones (inside
+    compact_stored_index) BEFORE the stats seal. A crash in the seal's
+    swap leaves the old deltas, which still count the purged doc, with
+    no tombstone left to subtract it; the re-run must converge because
+    the seal recomputes from the purged _ids rather than folding the
+    deltas."""
+    from process_spark.operators import retrieval as R
+    from process_spark.operators.fsutil import fs_exists
+    from process_spark.operators.retrieval import (
+        compact_postings_index,
+        incremental_postings_sink,
+        postings_stats_audit,
+    )
+    from process_spark.queries.retrieval import _bootstrap_postings
+
+    path = str(tmp_path / "pidx")
+    _bootstrap_postings(
+        spark, path, _docs(spark, [(0, "apple banana"), (2, "cherry")])
+    )
+    incremental_postings_sink(path)(_docs(spark, [(1, "apple fig")]), 0)
+    tombstone_index_ids(
+        spark, path, spark.createDataFrame([(2,)], "doc_id long")
+    )
+
+    def crashing_swap(*a, **kw):
+        raise IOError("injected crash in the stats swap")
+
+    monkeypatch.setattr(R, "swap_in", crashing_swap)
+    with pytest.raises(IOError, match="injected crash"):
+        compact_postings_index(spark, path)
+    monkeypatch.undo()
+    assert not fs_exists(spark, path + "/_tombstones")  # dropped first
+
+    qt = _qt(spark, [(0, "apple"), (1, "fig")])
+    survivors = _docs(spark, [(0, "apple banana"), (1, "apple fig")])
+    want = {
+        (r["query_id"], r["doc_id"]): r["score_e6"]
+        for r in bm25_scores(survivors, qt).collect()
+    }
+
+    def probe():
+        return {
+            (r["query_id"], r["doc_id"]): r["score_e6"]
+            for r in bm25_probe_postings(spark, path, qt).collect()
+        }
+
+    assert probe() != want  # the crash window over-counts N
+    assert not postings_stats_audit(spark, path).collect()[0]["consistent"]
+    compact_postings_index(spark, path)  # recovery: re-run
+    assert probe() == want
+    assert postings_stats_audit(spark, path).collect()[0]["consistent"]
+
+
+def test_sink_replay_after_crash_and_compaction_is_exact(
+    spark, tmp_path, monkeypatch
+):
+    """A micro-batch whose postings and _ids landed but whose stats
+    delta did not (a crash before the stats write), compacted before
+    its replay: the seal counts only _ids rows at or below the
+    sealed_through watermark, so the crashed batch stays out of the
+    sealed row and its replay (above the watermark) adds its delta
+    exactly once."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from process_spark.operators.retrieval import (
+        compact_postings_index,
+        incremental_postings_sink,
+        postings_stats_audit,
+    )
+    from process_spark.queries.retrieval import _bootstrap_postings
+
+    path = str(tmp_path / "pidx")
+    hist = _docs(spark, [(0, "apple banana"), (2, "cherry")])
+    batch = _docs(spark, [(1, "apple fig fig")])
+    _bootstrap_postings(spark, path, hist)
+    sink = incremental_postings_sink(path)
+    orig = DataFrameWriter.parquet
+
+    def crashing(self, p, *a, **kw):
+        if p.rstrip("/").endswith("/_stats"):
+            raise RuntimeError("injected crash before the stats write")
+        return orig(self, p, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", crashing)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        sink(batch, 0)
+    monkeypatch.undo()
+    compact_postings_index(spark, path)
+    sink(batch, 0)  # the restarted stream replays the batch
+
+    qt = _qt(spark, [(0, "apple"), (1, "fig")])
+    got = {
+        (r["query_id"], r["doc_id"]): r["score_e6"]
+        for r in bm25_probe_postings(spark, path, qt).collect()
+    }
+    want = {
+        (r["query_id"], r["doc_id"]): r["score_e6"]
+        for r in bm25_scores(hist.unionByName(batch), qt).collect()
+    }
+    assert got == want
+    assert postings_stats_audit(spark, path).collect()[0]["consistent"]
 
 
 @pytest.mark.slow  # measured >8s (r14 durations); full profile via --runslow
@@ -555,15 +668,10 @@ def test_stats_audit_catches_corrupt_sidecar(spark, tmp_path):
     assert not row["consistent"]
     assert row["stored_n_docs"] - row["actual_n_docs"] == 7
 
-    # repair: tombstone-free compaction folds the deltas as-is, so the
-    # phantom persists — the documented repair for a drifted sidecar is
-    # the recompute; drive it via compact_postings_stats(recompute_from)
+    # repair: the stats seal recomputes from _ids, so the phantom goes
     from process_spark.operators.retrieval import compact_postings_stats
 
-    compact_postings_stats(
-        spark, path + "/_stats",
-        recompute_from=(path + "/data", path + "/_docs"),
-    )
+    compact_postings_stats(spark, path)
     spark.catalog.refreshByPath(path + "/_stats")
     assert postings_stats_audit(spark, path).collect()[0]["consistent"]
     assert compact_postings_index(spark, path)["stats"]["files_after"] == 1
@@ -600,13 +708,12 @@ def test_overwrite_rebuild_clears_stale_sidecars(spark, tmp_path):
     held a STREAMING index with tombstones must start from a clean
     sidecar set: stale _tombstones would silently anti-join live docs
     out of probes and subtract stale (count, dl) from N/avgdl; a stale
-    _docs would block legitimate future ingests — the rebuild writes a
+    _ids would block legitimate future ingests — the rebuild writes a
     FRESH membership for the new corpus. Same contract for
     _bootstrap_postings."""
     from process_spark.operators.fsutil import fs_exists
     from process_spark.operators.retrieval import (
         incremental_postings_sink,
-        tombstone_postings_docs,
     )
     from process_spark.queries.retrieval import _bootstrap_postings
 
@@ -615,7 +722,7 @@ def test_overwrite_rebuild_clears_stale_sidecars(spark, tmp_path):
         spark, path, _docs(spark, [(0, "apple banana"), (2, "cherry")])
     )
     incremental_postings_sink(path)(_docs(spark, [(1, "apple fig")]), 0)
-    tombstone_postings_docs(
+    tombstone_index_ids(
         spark, path, spark.createDataFrame([(1,)], "doc_id long")
     )
 
@@ -628,7 +735,7 @@ def test_overwrite_rebuild_clears_stale_sidecars(spark, tmp_path):
     # corpus ids, none of the previous life's
     assert {
         r["doc_id"]
-        for r in spark.read.parquet(path + "/_docs").collect()
+        for r in spark.read.parquet(path + "/_ids").collect()
     } == {1, 4}
     qt = _qt(spark, [(0, "apple"), (0, "fig")])
     got = {
@@ -649,7 +756,7 @@ def test_overwrite_rebuild_clears_stale_sidecars(spark, tmp_path):
     path2 = str(tmp_path / "pidx2")
     _bootstrap_postings(spark, path2, _docs(spark, [(0, "apple")]))
     _sink(path2)(_docs(spark, [(1, "apple fig")]), 0)
-    tombstone_postings_docs(
+    tombstone_index_ids(
         spark, path2, spark.createDataFrame([(1,)], "doc_id long")
     )
     _bootstrap_postings(spark, path2, fresh)
@@ -692,7 +799,7 @@ def test_batch_stats_layout_unified_and_compactable(spark, tmp_path):
         (r["query_id"], r["doc_id"]): r["score_e6"]
         for r in bm25_probe_postings(spark, path, qt).collect()
     }
-    out = compact_postings_stats(spark, path + "/_stats")
+    out = compact_postings_stats(spark, path)
     assert out["files_after"] == 1 <= out["files_before"]
     spark.catalog.refreshByPath(path + "/_stats")
     sealed = spark.read.parquet(path + "/_stats").collect()
@@ -724,7 +831,7 @@ def test_compact_refuses_legacy_stats_layout_before_touching_data(
     spark, tmp_path
 ):
     """compact_postings_index must validate the _stats layout BEFORE
-    rewriting data/_docs — a wrong-layout index previously got
+    rewriting data/_ids — a wrong-layout index previously got
     half-compacted before the loud stats failure."""
     from process_spark.operators.retrieval import compact_postings_index
 
@@ -761,17 +868,16 @@ def test_compact_refuses_all_purged(spark, tmp_path):
     from process_spark.operators.retrieval import (
         compact_postings_index,
         incremental_postings_sink,
-        tombstone_postings_docs,
     )
     from process_spark.queries.retrieval import _bootstrap_postings
 
     path = str(tmp_path / "pidx")
     _bootstrap_postings(spark, path, _docs(spark, [(0, "apple banana")]))
     incremental_postings_sink(path)(_docs(spark, [(1, "cherry")]), 0)
-    tombstone_postings_docs(
+    tombstone_index_ids(
         spark, path, spark.createDataFrame([(0,), (1,)], "doc_id long")
     )
-    with pytest.raises(ValueError, match="ENTIRE corpus"):
+    with pytest.raises(ValueError, match="ENTIRE index"):
         compact_postings_index(spark, path)
     assert fs_exists(spark, path + "/_tombstones")
     qt = _qt(spark, [(0, "apple")])
@@ -779,14 +885,13 @@ def test_compact_refuses_all_purged(spark, tmp_path):
 
 
 def test_n_buckets_mismatch_raises_everywhere(spark, tmp_path):
-    """A caller-supplied n_buckets that disagrees with the persisted
-    stats must raise in the tombstone op AND the streaming sink (it
-    would prune the wrong doc_buckets — false 'not in the index'
-    errors or missed foreign-copy detection), as the probe and batch
-    append already do."""
+    """A caller-supplied n_buckets that disagrees with the index's
+    persisted _meta must raise in the streaming sink AND the batch
+    append (it would prune the wrong id_buckets — false 'not in the
+    index' errors or missed foreign-copy detection), as the probe
+    already does against _stats. The bootstrap writes that _meta."""
     from process_spark.operators.retrieval import (
         incremental_postings_sink,
-        tombstone_postings_docs,
     )
     from process_spark.queries.retrieval import _bootstrap_postings
 
@@ -794,16 +899,14 @@ def test_n_buckets_mismatch_raises_everywhere(spark, tmp_path):
     _bootstrap_postings(
         spark, path, _docs(spark, [(0, "apple banana"), (2, "cherry")])
     )
-    with pytest.raises(ValueError, match="n_buckets"):
-        tombstone_postings_docs(
-            spark,
-            path,
-            spark.createDataFrame([(0,)], "doc_id long"),
-            n_buckets=8,
-        )
-    with pytest.raises(ValueError, match="n_buckets"):
+    assert index_meta(spark, path) == _POSTINGS_META
+    with pytest.raises(ValueError, match="n_id_buckets"):
         incremental_postings_sink(path, n_buckets=8)(
             _docs(spark, [(1, "fig")]), 0
+        )
+    with pytest.raises(ValueError, match="n_id_buckets"):
+        write_postings_index(
+            _docs(spark, [(1, "fig")]), path, mode="append", n_buckets=8
         )
 
 
@@ -835,7 +938,7 @@ def test_sink_stats_delta_derived_from_postings(spark, tmp_path):
     # the zero-token doc is probe-consistent: counted in N, dl 0
     mem = {
         r["doc_id"]: r["dl"]
-        for r in spark.read.parquet(path + "/_docs").collect()
+        for r in spark.read.parquet(path + "/_ids").collect()
     }
     assert mem == {1: 3, 2: 0, 3: 1}
 
@@ -880,11 +983,11 @@ def test_audit_cross_component_divergence_columns(spark, tmp_path):
         "term_bucket", "batch_id"
     ).parquet(path + "/data")
     spark.catalog.refreshByPath(path + "/data")
-    mem = spark.read.parquet(path + "/_docs").localCheckpoint(eager=True)
+    mem = spark.read.parquet(path + "/_ids").localCheckpoint(eager=True)
     mem.filter(FF.col("doc_id") != 1).write.mode("overwrite").partitionBy(
-        "doc_bucket", "batch_id"
-    ).parquet(path + "/_docs")
-    spark.catalog.refreshByPath(path + "/_docs")
+        "id_bucket", "batch_id"
+    ).parquet(path + "/_ids")
+    spark.catalog.refreshByPath(path + "/_ids")
     row = postings_stats_audit(spark, path).collect()[0]
     assert not row["consistent"]
     assert row["n_postings_docs_without_membership"] == 1
@@ -977,19 +1080,12 @@ def test_skew_report_bucket_census(spark, tmp_path):
         }
         assert bks == {r["term_bucket"]}, (tok, bks)
     # tombstones: census reflects the LIVE index
-    from process_spark.operators.retrieval import tombstone_postings_docs
-
-    # batch writer has no _docs; re-bootstrap under the streaming layout
-    from process_spark.queries.retrieval import _bootstrap_postings
-
-    path2 = str(tmp_path / "pidx2")
-    _bootstrap_postings(spark, path2, d)
-    tombstone_postings_docs(
-        spark, path2, spark.createDataFrame([(4,)], "doc_id long")
+    tombstone_index_ids(
+        spark, path, spark.createDataFrame([(4,)], "doc_id long")
     )
     rows2 = {
         r["tok"]: r
-        for r in postings_skew_report(spark, path2, top_n=10).collect()
+        for r in postings_skew_report(spark, path, top_n=10).collect()
     }
     assert rows2["the"]["df"] == 3
     assert rows2["apple"]["df"] == 1
@@ -1083,7 +1179,7 @@ def test_skew_report_immune_to_duplicate_postings(spark, tmp_path):
 @pytest.mark.slow  # measured >8s (r14 durations); full profile via --runslow
 def test_batch_append_refuses_reingest_and_update_path(spark, tmp_path):
     """The BATCH lifecycle now enforces the same append-only identity
-    contract as the streaming sink, via the same _docs sidecar: an
+    contract as the streaming sink, via the same _ids sidecar: an
     append re-ingesting a held doc_id raises (content-independent —
     the changed-content copy shares no term bucket with the stored
     one), a tombstoned-but-unpurged id is still refused, and the full
@@ -1091,7 +1187,6 @@ def test_batch_append_refuses_reingest_and_update_path(spark, tmp_path):
     scores equal to a fresh index over the final corpus."""
     from process_spark.operators.retrieval import (
         compact_postings_index,
-        tombstone_postings_docs,
     )
 
     path = str(tmp_path / "pidx")
@@ -1107,7 +1202,7 @@ def test_batch_append_refuses_reingest_and_update_path(spark, tmp_path):
         write_postings_index(
             _docs(spark, [(2, "zebra xylophone")]), path, mode="append"
         )
-    tombstone_postings_docs(
+    tombstone_index_ids(
         spark, path, spark.createDataFrame([(2,)], "doc_id long")
     )
     # tombstoned-but-unpurged: still refused (the id is not free yet)
@@ -1146,7 +1241,7 @@ def test_batch_append_refuses_reingest_and_update_path(spark, tmp_path):
 def test_batch_append_crash_between_docs_and_data_fails_loud(
     spark, tmp_path, monkeypatch
 ):
-    """Batch-append crash ordering: _docs lands BEFORE the postings,
+    """Batch-append crash ordering: _ids lands BEFORE the postings,
     so a crash between the writes makes the re-run RAISE (loud) — the
     reverse order would silently append the same postings twice. The
     documented repair (tombstone → compact → re-ingest) converges to
@@ -1155,7 +1250,6 @@ def test_batch_append_crash_between_docs_and_data_fails_loud(
 
     from process_spark.operators.retrieval import (
         compact_postings_index,
-        tombstone_postings_docs,
     )
 
     path = str(tmp_path / "pidx")
@@ -1178,12 +1272,12 @@ def test_batch_append_crash_between_docs_and_data_fails_loud(
             _docs(spark, [(3, "elderberry fig")]), path, mode="append"
         )
     state["crash"] = False
-    spark.catalog.refreshByPath(path + "/_docs")
+    spark.catalog.refreshByPath(path + "/_ids")
     spark.catalog.refreshByPath(path + "/data")
 
     # half-appended: id registered, postings absent, stats delta absent
     assert {
-        r["doc_id"] for r in spark.read.parquet(path + "/_docs").collect()
+        r["doc_id"] for r in spark.read.parquet(path + "/_ids").collect()
     } == {1, 2, 3}
     assert {
         r["doc_id"] for r in spark.read.parquet(path + "/data").collect()
@@ -1196,7 +1290,7 @@ def test_batch_append_crash_between_docs_and_data_fails_loud(
         )
 
     # repair converges: purge the orphaned membership, re-ingest
-    tombstone_postings_docs(
+    tombstone_index_ids(
         spark, path, spark.createDataFrame([(3,)], "doc_id long")
     )
     compact_postings_index(spark, path)
@@ -1222,52 +1316,29 @@ def test_batch_append_crash_between_docs_and_data_fails_loud(
     assert got == want and (0, 3) in got
 
 
-def test_batch_append_legacy_no_docs_best_effort(spark, tmp_path):
-    """Appending to a legacy batch index (no _docs sidecar): the
-    validation degrades to best-effort against the live postings —
-    a same-content re-ingest is still caught — and the membership
-    write is SKIPPED (a sidecar holding only the new batch's ids
-    would make every old doc look foreign to later checks)."""
+def test_batch_append_without_ids_or_meta_raises(spark, tmp_path):
+    """An append onto an index whose _ids or _meta was removed raises
+    before writing anything: _meta holds the n_buckets the append is
+    validated against, and _ids is the only exact append-only check
+    (no best-effort fallback on the postings, which a changed-content
+    re-ingest would slip past)."""
     import shutil
 
-    from process_spark.operators.fsutil import fs_exists
-
-    path = str(tmp_path / "pidx")
-    write_postings_index(
-        _docs(spark, [(1, "apple banana"), (2, "cherry date")]),
-        path, mode="overwrite",
-    )
-    shutil.rmtree(path + "/_docs")  # degrade to the legacy layout
-
-    with pytest.raises(ValueError, match="append-only"):
+    for sidecar in ("_ids", "_meta"):
+        root = tmp_path / sidecar
+        path = str(root / "pidx")
         write_postings_index(
-            _docs(spark, [(2, "cherry date")]), path, mode="append"
+            _docs(spark, [(1, "apple banana"), (2, "cherry date")]),
+            path, mode="overwrite",
         )
-    write_postings_index(
-        _docs(spark, [(3, "elderberry fig")]), path, mode="append"
-    )
-    assert not fs_exists(spark, path + "/_docs")  # no partial sidecar
-    spark.catalog.refreshByPath(path + "/data")
-    qt = _qt(spark, [(0, "apple"), (0, "fig")])
-    got = {
-        (r["query_id"], r["doc_id"]): r["score_e6"]
-        for r in bm25_probe_postings(spark, path, qt).collect()
-    }
-    want = {
-        (r["query_id"], r["doc_id"]): r["score_e6"]
-        for r in bm25_scores(
-            _docs(
-                spark,
-                [
-                    (1, "apple banana"),
-                    (2, "cherry date"),
-                    (3, "elderberry fig"),
-                ],
-            ),
-            qt,
-        ).collect()
-    }
-    assert got == want
+        shutil.rmtree(path + "/" + sidecar)
+        before = sorted(p.name for p in root.rglob("*.parquet"))
+        with pytest.raises(Exception, match="PATH_NOT_FOUND"):
+            write_postings_index(
+                _docs(spark, [(3, "elderberry fig")]), path, mode="append"
+            )
+        # nothing written, data/ included
+        assert sorted(p.name for p in root.rglob("*.parquet")) == before
 
 
 def test_composite_vector_failure_cancels_lexical_channel(
